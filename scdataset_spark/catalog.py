@@ -163,7 +163,12 @@ def ingest_dir(sf_dir: str, parts: int | None = None) -> str:
     are kept separate instead of silently serving stale row_ids or a
     mis-sized layout.  ``parts`` is the SESSION CAP; per-table counts
     derive deterministically from the raw source bytes, so the same
-    key always resolves the same physical layout."""
+    key always resolves the same physical layout.
+
+    The leaf is the source's basename plus a digest of its absolute
+    normalised path: two datasets that share a basename (``a/sf0.1``,
+    ``b/sf0.1``) get separate caches instead of reading each other's
+    ingest."""
     import hashlib
 
     key = (
@@ -171,8 +176,9 @@ def ingest_dir(sf_dir: str, parts: int | None = None) -> str:
         + f":parts={parts}:target={TARGET_INGEST_FILE_BYTES}"
     )
     ver = hashlib.md5(key.encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(f"/tmp/scdataset_spark_ingest_{ver}", base)
+    src = os.path.abspath(sf_dir)
+    leaf = f"{os.path.basename(src)}-{hashlib.md5(src.encode()).hexdigest()[:12]}"
+    return os.path.join(f"/tmp/scdataset_spark_ingest_{ver}", leaf)
 
 
 def ensure_ingested(

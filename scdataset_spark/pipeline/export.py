@@ -1,12 +1,21 @@
 """Batch export to an ML trainer (S7, reference ``scdataset.py:538-561``).
 
-Two export paths:
+Three export paths:
 
 - ``iterate_batches``: driver-side iterator yielding exact
-  ``batch_size`` dicts of numpy arrays in plan order via
-  ``toLocalIterator`` (partitions stream one at a time — nothing is
-  collected whole).  The reference's DataLoader-yield analogue; fine
-  for single-consumer training loops.
+  ``batch_size`` dicts of numpy arrays in plan order — the reference's
+  DataLoader-yield analogue, for single-consumer training loops.  The
+  frame is sorted on ``order_col`` and streamed one partition at a
+  time (``toLocalIterator`` with prefetch — nothing is collected
+  whole).  Partitions cross to the driver as Arrow record batches: a
+  ``mapInArrow`` stage writes each sorted record batch as one Arrow
+  IPC blob, the driver reads it with ``pyarrow.ipc`` and decodes each
+  numeric column to numpy once per record batch.  Batches are
+  contiguous slices of those arrays; a remainder carries across
+  record-batch and partition edges.  Other columns (strings, nulls,
+  arrays, ...) are built per batch from their Python values.  The
+  arrays keep the dtypes ``np.array`` gives a ``collect()`` row's
+  values (see the function doc) and are writable.
 
 - ``write_epoch_plan``: the scale path.  Materializes one epoch as
   parquet partitioned by ``fetch_id`` with rows sorted by ``pos``
@@ -14,6 +23,9 @@ Two export paths:
   round-robin share of fetch files directly, which is exactly the
   reference's rank/worker partitioning (O13/O14) expressed as files.
   No driver bottleneck, resumable, shardable.
+
+- ``write_arrow_fetches``: the same hand-off as Arrow IPC files, one
+  per fetch, written by the executors.
 
 Torch conversion is a thin optional wrapper — torch is not a hard
 dependency of the engine.
@@ -24,8 +36,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.types import StructField, StructType
 
 
 def iterate_batches(
@@ -35,17 +50,102 @@ def iterate_batches(
     order_col: str = "pos",
     drop_last: bool = False,
 ) -> Iterator[dict[str, np.ndarray]]:
-    """Yield dicts of numpy arrays in plan order, exactly ``batch_size``
-    rows per batch (trailing partial kept unless ``drop_last``)."""
-    df = planned.select(order_col, *columns).orderBy(order_col)
-    buf: list[tuple] = []
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        buf.append(tuple(row[c] for c in columns))
-        if len(buf) == batch_size:
-            yield {c: np.array([r[i] for r in buf]) for i, c in enumerate(columns)}
-            buf = []
-    if buf and not drop_last:
-        yield {c: np.array([r[i] for r in buf]) for i, c in enumerate(columns)}
+    """Yield dicts of numpy arrays in ``order_col`` order, exactly
+    ``batch_size`` rows per batch; only the final global partial batch
+    may be shorter, and ``drop_last`` drops it.  (``with_batches``'
+    ``drop_last`` instead drops each fetch's partial batch.)
+
+    Keys are ``columns`` (duplicates collapse; ``order_col`` may be one
+    of them).  Each value is the array ``np.array(values)`` would build
+    from the batch's Python values, as a ``collect()`` row gives them:
+    integral columns are ``int64``, floating ``float64``, boolean
+    ``bool``, strings ``<U<longest in the batch>``, equal-length arrays
+    of numbers a 2-D block of those dtypes; a batch that holds a null
+    turns its column into an ``object`` array of Python values with
+    ``None``.  Every array is writable and no two batches share memory:
+    a caller may mutate a batch in place without touching another.
+
+    The frame streams one partition at a time (``toLocalIterator`` with
+    prefetch); each partition crosses as Arrow record batches (see the
+    module doc).  Columns must be types Spark can hand to Arrow;
+    ``batch_size`` must be at least 1."""
+    if batch_size < 1:
+        raise ValueError(f"batch_size must be >= 1, got {batch_size}")
+    names = list(dict.fromkeys(columns))
+    ship = names or [order_col]
+    df = planned.select(*dict.fromkeys([order_col, *ship])).orderBy(order_col).select(*ship)
+    fields = df.schema.fields
+
+    def to_ipc(batches):
+        # function-local import + def: pickled by value to the workers
+        import pyarrow as pa
+
+        for rb in batches:
+            if rb.num_rows:
+                sink = pa.BufferOutputStream()
+                with pa.ipc.new_stream(sink, rb.schema) as w:
+                    w.write_batch(rb)
+                blob = pa.array([sink.getvalue().to_pybytes()], pa.binary())
+                yield pa.RecordBatch.from_arrays([blob], ["ipc"])
+
+    seg: list[tuple[list, int, int]] = []  # ([(arrow, numeric)] per column, lo, hi)
+    held = 0
+    for row in df.mapInArrow(to_ipc, "ipc binary").toLocalIterator(prefetchPartitions=True):
+        rb = pa.ipc.open_stream(pa.py_buffer(row[0])).read_next_batch()
+        cols = [(a, _numeric(a)) for a in rb.columns]
+        lo, n = 0, rb.num_rows
+        while lo < n:
+            take = min(batch_size - held, n - lo)
+            seg.append((cols, lo, lo + take))
+            held += take
+            lo += take
+            if held == batch_size:
+                yield _assemble(seg, names, fields)
+                seg, held = [], 0
+    if seg and not drop_last:
+        yield _assemble(seg, names, fields)
+
+
+def _numeric(arr: pa.Array) -> np.ndarray | None:
+    """A null-free integral, floating or boolean column as the array
+    ``np.array`` builds from its Python values.  Every slice of it gets
+    that dtype too, so one decode per record batch serves all of its
+    batches.  None for any other column."""
+    t = arr.type
+    if arr.null_count:
+        return None
+    if pa.types.is_integer(t):
+        dtype = np.int64
+    elif pa.types.is_floating(t):
+        dtype = np.float64
+    elif pa.types.is_boolean(t):
+        dtype = np.bool_
+    else:
+        return None
+    return arr.to_numpy(zero_copy_only=False).astype(dtype)
+
+
+def _assemble(
+    seg: list[tuple[list, int, int]], names: list[str], fields: list[StructField]
+) -> dict[str, np.ndarray]:
+    """One batch from its record-batch segments: slices of the decoded
+    numeric arrays where every segment has one, else ``np.array`` of the
+    batch's Python values as ``collect()`` gives them (strings, nulls,
+    arrays and every other type, whose dtype or shape depends on the
+    batch)."""
+    out = {}
+    for j, name in enumerate(names):
+        done = [cols[j][1] for cols, _, _ in seg]
+        if all(d is not None for d in done):
+            parts = [d[lo:hi] for d, (_, lo, hi) in zip(done, seg)]
+            out[name] = parts[0] if len(parts) == 1 else np.concatenate(parts)
+            continue
+        arr = pa.concat_arrays([cols[j][0].slice(lo, hi - lo) for cols, lo, hi in seg])
+        rows = ArrowTableToRowsConversion.convert(
+            pa.table([arr], names=["v"]), StructType([fields[j]]), return_as_tuples=True
+        )
+        out[name] = np.array([r[0] for r in rows])
+    return out
 
 
 def write_epoch_plan(

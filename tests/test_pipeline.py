@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -60,6 +65,60 @@ class TestMultiIndexable:
         assert n < mi.to_df().count()
 
 
+def _row_reference(
+    planned, batch_size, columns, order_col="pos", drop_last=False
+):
+    """The row-at-a-time iterator ``iterate_batches`` replaced, kept
+    verbatim as the reference its Arrow stream must reproduce."""
+    df = planned.select(order_col, *columns).orderBy(order_col)
+    buf: list[tuple] = []
+    for row in df.toLocalIterator(prefetchPartitions=True):
+        buf.append(tuple(row[c] for c in columns))
+        if len(buf) == batch_size:
+            yield {c: np.array([r[i] for r in buf]) for i, c in enumerate(columns)}
+            buf = []
+    if buf and not drop_last:
+        yield {c: np.array([r[i] for r in buf]) for i, c in enumerate(columns)}
+
+
+@pytest.fixture
+def contract_frame(spark):
+    """1,000 rows in 5 input partitions, out of ``pos`` order.  Within
+    the fixture, Arrow record batches hold 7 rows and AQE does not
+    coalesce the sort's partitions, so 16-row batches cross both
+    record-batch and partition edges.  ``ni`` is null in some batches
+    only; ``s`` grows with ``pos``, so its ``<U`` width varies."""
+    keys = (
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "7")
+    spark.conf.set(keys[1], "false")
+    df = spark.range(0, 1000, numPartitions=5).selectExpr(
+        "(id * 7919) % 1000 AS pos",
+        "id * 3 - 500 AS big",
+        "id / 7.0 AS dbl",
+        "repeat('ab', CAST((id * 7919) % 1000 DIV 100 AS INT)) || 'é' AS s",
+        "CASE WHEN id % 97 = 0 THEN NULL ELSE CAST(id AS INT) END AS ni",
+        "array(CAST(id AS DOUBLE), id * 0.5, -1.0) AS arr",
+    )
+    assert df.orderBy("pos").rdd.getNumPartitions() > 1
+    yield df
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def _assert_same_batches(want: list[dict], got: list[dict]) -> None:
+    assert len(got) == len(want)
+    for w, g in zip(want, got):
+        assert list(g) == list(w)
+        for k in w:
+            assert g[k].dtype == w[k].dtype, k
+            assert g[k].shape == w[k].shape, k
+            assert g[k].tolist() == w[k].tolist(), k
+
+
 class TestExport:
     def test_exact_batches_in_plan_order(self, spark):
         li = load_table(spark, "lineitem", SF_DIR_SMALL)
@@ -76,6 +135,72 @@ class TestExport:
         planned = with_batches(Streaming().plan(li, seed=42), batch_size=256, fetch_factor=4)
         batches = list(iterate_batches(planned, 256, ["row_id"], drop_last=True))
         assert all(len(b["row_id"]) == 256 for b in batches)
+
+    @pytest.mark.parametrize(
+        "columns", [["big", "dbl", "s", "ni", "arr"], ["pos", "big", "s"]]
+    )
+    @pytest.mark.parametrize("drop_last", [False, True])
+    def test_matches_row_reference(self, contract_frame, columns, drop_last):
+        """Same keys, dtypes, shapes, values and order as the row
+        iterator; every array writable, and mutating a batch in place
+        leaves the batches after it intact."""
+        want = list(_row_reference(contract_frame, 16, columns, drop_last=drop_last))
+        got = []
+        for batch in iterate_batches(contract_frame, 16, columns, drop_last=drop_last):
+            got.append({k: v.copy() for k, v in batch.items()})
+            for v in batch.values():
+                assert v.flags.writeable
+                v[:] = v[::-1].copy()
+        _assert_same_batches(want, got)
+        dtypes = {k: {str(b[k].dtype) for b in got} for k in got[0]}
+        # the contract cases the row path defines are all present
+        assert dtypes["big"] == {"int64"}
+        if "ni" in dtypes:
+            assert dtypes["ni"] == {"int64", "object"}
+            assert dtypes["arr"] == {"float64"} and got[0]["arr"].shape == (16, 3)
+            assert len(dtypes["s"]) > 1 and all(d.startswith("<U") for d in dtypes["s"])
+        assert len(got[-1]["big"]) == (16 if drop_last else 1000 % 16)
+
+    def test_empty_frame(self, contract_frame):
+        empty = contract_frame.where("big < -1000")
+        cols = ["big", "s", "arr"]
+        assert list(_row_reference(empty, 16, cols)) == []
+        assert list(iterate_batches(empty, 16, cols)) == []
+
+    def test_rejects_nonpositive_batch_size(self, spark):
+        with pytest.raises(ValueError, match="batch_size"):
+            next(iterate_batches(spark.range(3).withColumnRenamed("id", "pos"), 0, ["pos"]))
+
+    def test_fresh_process_foreign_cwd(self, tmp_path):
+        """Executor-side code must pickle by value: run from a directory
+        where the package is importable only through the driver's
+        sys.path, as a user script would."""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from scdataset_spark.session import get_spark
+from scdataset_spark.pipeline.export import iterate_batches
+spark = get_spark("fresh_process_iterate", shuffle_partitions=2)
+df = spark.range(0, 100, numPartitions=3).selectExpr("99 - id AS pos", "id AS v")
+out = [b["v"].tolist() for b in iterate_batches(df, 32, ["v"])]
+print(json.dumps(out))
+spark.stop()
+"""
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env["SPARK_GRAFT_CPUS"] = "2"
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=str(tmp_path),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert [len(b) for b in out] == [32, 32, 32, 4]
+        assert sum(out, []) == list(range(99, -1, -1))
 
 
 class TestHookOrder:

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -338,3 +341,35 @@ class TestSlicedIngest:
         assert row[0] == 0
         assert served.agg({"row_id": "max"}).collect()[0][0] == n - 1
         assert served.select("row_id").distinct().count() == n
+
+
+class TestIngestCacheKey:
+    def test_key_is_the_absolute_normalised_path(self, tmp_path, monkeypatch):
+        from scdataset_spark.catalog import ingest_dir
+
+        a, b = str(tmp_path / "a" / "sf0.1"), str(tmp_path / "b" / "sf0.1")
+        assert ingest_dir(a, 8) != ingest_dir(b, 8)
+        assert ingest_dir(a, 8) == ingest_dir(str(tmp_path / "a" / "." / "sf0.1") + "/", 8)
+        monkeypatch.chdir(tmp_path)
+        assert ingest_dir(os.path.join("a", "sf0.1"), 8) == ingest_dir(a, 8)
+
+    def test_same_basename_datasets_read_their_own_ingest(self, spark, tmp_path):
+        """Two sources named alike must not share the ingest cache: the
+        second one would silently be served the first one's rows."""
+        import pyarrow.parquet as pq
+
+        from scdataset_spark.catalog import ensure_ingested, ingest_dir, ingest_parts
+
+        full = pq.read_table(os.path.join(SF_DIR_SMALL, "lineitem.parquet"))
+        srcs = {n: tmp_path / side / "sf0.1" for side, n in (("a", 100), ("b", 250))}
+        outs = [ingest_dir(str(d), ingest_parts(spark)) for d in srcs.values()]
+        try:
+            for n, d in srcs.items():
+                d.mkdir(parents=True)
+                pq.write_table(full.slice(0, n), str(d / "lineitem.parquet"))
+                ensure_ingested(spark, str(d), tables=("lineitem",))
+            for n, d in srcs.items():
+                assert load_table(spark, "lineitem", str(d)).count() == n
+        finally:
+            for out in outs:
+                shutil.rmtree(out, ignore_errors=True)
