@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scdataset_spark.session import input_probe
+
 TABLES = (
     "region",
     "nation",
@@ -133,23 +135,13 @@ def ingest_parts(spark: SparkSession) -> int:
 TARGET_INGEST_FILE_BYTES = 3 << 20
 
 
-def _src_bytes(sf_dir: str, name: str) -> int:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if not f.startswith((".", "_"))
-        )
-    return os.path.getsize(path)
-
-
-def table_ingest_parts(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Per-table ingested file count: bytes-scaled, session-capped."""
-    cap = ingest_parts(spark)
-    try:
-        nbytes = _src_bytes(sf_dir, name)
-    except OSError:
+def table_ingest_parts(df: DataFrame) -> int:
+    """Per-table ingested file count: bytes-scaled from the source
+    frame's input files, session-capped (the cap when the bytes are
+    unknown)."""
+    cap = ingest_parts(df.sparkSession)
+    nbytes = input_probe(df)[1]
+    if nbytes is None:
         return cap
     return max(1, min(cap, -(-nbytes // TARGET_INGEST_FILE_BYTES)))
 
@@ -230,11 +222,11 @@ def ensure_ingested(
         out = os.path.join(ingest_dir(sf_dir, parts), f"{name}.parquet")
         if os.path.exists(os.path.join(out, "_SUCCESS")):
             return
-        t_parts = table_ingest_parts(spark, sf_dir, name)
+        df = load_table(spark, name, sf_dir, with_row_id=True, use_ingested=False)
+        t_parts = table_ingest_parts(df)
         if name == "lineitem" and slices > 1:
             _ingest_lineitem_sliced(spark, sf_dir, out, t_parts, slices)
             return
-        df = load_table(spark, name, sf_dir, with_row_id=True, use_ingested=False)
         (
             df.repartitionByRange(t_parts, "row_id")
             .sortWithinPartitions("row_id")

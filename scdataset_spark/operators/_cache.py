@@ -15,6 +15,8 @@ import threading
 
 from pyspark.sql import DataFrame
 
+from scdataset_spark.session import _cluster_width, input_probe
+
 _CACHE: list[DataFrame] = []
 # 8 covers the bench's banded-frame query mix without eviction churn
 # (round-5 ran more banded queries than the bound of 4 could hold);
@@ -126,20 +128,6 @@ def persist_bounded(df: DataFrame) -> DataFrame:
     return df
 
 
-def _cluster_width(spark) -> int:
-    """Target parallelism for widening.  Classic sessions read
-    ``defaultParallelism``; Spark Connect has no SparkContext, so fall
-    back to the shuffle-partition setting (which a deployment sizes to
-    the cluster), then a fixed floor."""
-    try:
-        return max(8, spark.sparkContext.defaultParallelism)
-    except Exception:  # Spark Connect
-        try:
-            return max(8, int(spark.conf.get("spark.sql.shuffle.partitions")))
-        except Exception:
-            return 32
-
-
 def _conf_bytes(spark, key: str, default: int) -> int:
     """A Spark byte-valued conf ('128MB', '134217728b', plain int)."""
     try:
@@ -158,33 +146,6 @@ def _conf_bytes(spark, key: str, default: int) -> int:
         return default
 
 
-def _estimate_packed_partitions(spark, files: list[str]) -> int | None:
-    """Estimate how many FilePartitions the scan will pack ``files``
-    into, driver-side, without building an RDD.  Spark bin-packs files
-    into splits of ``maxPartitionBytes``, charging ``openCostInBytes``
-    per file, so the estimate is
-    ``ceil((total_bytes + n_files * openCost) / maxPartitionBytes)`` —
-    a raw file COUNT would over-estimate exactly in the many-small-files
-    regime where bin-packing collapses parallelism.  Returns ``None``
-    when any file is not statable from the driver (remote object
-    store)."""
-    import os
-    from urllib.parse import urlparse
-
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(p.path)
-        except OSError:
-            return None
-    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
-    max_pb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-    return -(-(total + len(files) * open_cost) // max_pb)
-
-
 def widen_if_narrow(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to cluster width ONLY when it is narrower —
     the guard matters in both directions.  Few-split inputs (small
@@ -197,10 +158,12 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
 
     Narrowness probes, cheapest sufficient one wins:
 
-    1. file-backed lineage with driver-statable files: estimate the
-       packed FilePartition count from actual bytes and the bin-packing
-       confs (``_estimate_packed_partitions``) — exact enough on both
-       sides, never builds an RDD.  (A raw ``len(inputFiles())``
+    1. file-backed lineage with driver-statable files
+       (``session.input_probe`` knows their bytes): estimate the packed
+       FilePartition count the way Spark bin-packs files into splits
+       of ``maxPartitionBytes``, charging ``openCostInBytes`` per file —
+       ``ceil((bytes + files * openCost) / maxPartitionBytes)``, exact
+       enough on both sides, never builds an RDD.  (A raw file-count
        shortcut is NOT trusted alone: Spark packs many small files into
        few FilePartitions, which is precisely the narrow regime this
        function exists to fix.)
@@ -214,17 +177,16 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
        call this feed heavy per-row compute, where staying narrow is
        the expensive failure mode and one extra shuffle of a frame
        that was secretly wide is the cheap one."""
-    width = _cluster_width(df.sparkSession)
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file-backed lineage
-        files = None
-    if files:
-        est = _estimate_packed_partitions(df.sparkSession, files)
-        if est is not None:
-            return df.repartition(width) if est < width else df
-        if len(files) >= 8 * width:
-            return df
+    spark = df.sparkSession
+    width = _cluster_width(df)
+    n_files, nbytes = input_probe(df)
+    if nbytes is not None:
+        open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
+        max_pb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
+        est = -(-(nbytes + n_files * open_cost) // max_pb)
+        return df.repartition(width) if est < width else df
+    if n_files >= 8 * width:
+        return df
     try:
         narrow = df.rdd.getNumPartitions() < width
     except Exception:  # Spark Connect: no RDD access

@@ -22,6 +22,7 @@ from pyspark.sql import Window
 
 from scdataset_spark.operators._cache import persist_bounded
 from scdataset_spark.plans.seeds import mix_sql
+from scdataset_spark.session import input_probe, python_stage_partitions
 
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -69,27 +70,6 @@ def cosine_norm_expr(a: str, b: str, na: str, nb: str, digits: int = 4) -> F.Col
 TWO_PHASE_MIN_BYTES = 64 << 20
 
 
-def _input_file_bytes(df: DataFrame) -> int | None:
-    """Total bytes of the frame's (local-filesystem) input files —
-    driver-side, no Spark job; None when there is no file lineage."""
-    import os as _os
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-        if not files:
-            return None
-        total = 0
-        for f in files:
-            p = urlparse(f)
-            if p.scheme not in ("", "file"):
-                return None
-            total += _os.path.getsize(p.path)
-        return total
-    except Exception:
-        return None
-
-
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -97,13 +77,12 @@ def brute_force_topk(
     query_id: str = "q_id",
     cand_id: str = "c_id",
     vec: str = "embedding",
-    two_phase: bool | None = None,
 ) -> DataFrame:
     """Exact top-k: broadcast the (small) query set against the
     candidate stream; rank by rounded cosine with id tiebreak so the
     top-k frontier is engine-deterministic.
 
-    ``two_phase=True`` ranks through the salted exact top-k
+    Large corpora rank through the salted exact top-k
     (:func:`~scdataset_spark.operators.skew.per_group_top_k`): a plain
     ``row_number() OVER (PARTITION BY q_id)`` funnels each query's
     ENTIRE scored candidate list — the whole corpus — through one
@@ -111,14 +90,13 @@ def brute_force_topk(
     construction.  The salted form keeps per-reducer volume at
     ~n/salts and re-ranks only ``salts·k`` survivors per query; the
     result is identical (exact top-k is closed under per-salt top-k
-    union).  ``False`` keeps the single-window shape for small corpora.
-    ``None`` (default, r16) picks by the candidate frame's input-file
-    bytes (``TWO_PHASE_MIN_BYTES``) — lazy, physical-only, and safe:
-    frames with no file lineage take the two-phase scale shape.
+    union).  Small corpora keep the single-window shape.  The choice
+    reads the candidate frame's input bytes (``session.input_probe``
+    against ``TWO_PHASE_MIN_BYTES``) — lazy, physical-only, and safe:
+    unknown bytes take the two-phase scale shape.
     """
-    if two_phase is None:
-        nbytes = _input_file_bytes(candidates)
-        two_phase = nbytes is None or nbytes >= TWO_PHASE_MIN_BYTES
+    nbytes = input_probe(candidates)[1]
+    two_phase = nbytes is None or nbytes >= TWO_PHASE_MIN_BYTES
     q = queries.select(
         F.col(query_id), F.col(vec).alias("_qv"), norm_col(vec).alias("_qn")
     )
@@ -434,8 +412,6 @@ def _streamed_bucket_gram(
     # collapse the small (id, key, float32-vec) rows to a handful of
     # post-shuffle partitions, and this stage's cost is per-bucket
     # Python/Gram work, not bytes — a user-specified count is exempt
-    from scdataset_spark.session import python_stage_partitions
-
     return (
         rows.repartition(python_stage_partitions(rows), *[F.col(k) for k in key_cols])
         .sortWithinPartitions(*key_cols, id_col)
@@ -1572,8 +1548,6 @@ def semantic_dedup_fast(
     # coalescing of the grouping exchange would idle most cores; the
     # matching-count keyed repartition satisfies the groupBy's
     # distribution requirement, so no second exchange is added
-    from scdataset_spark.session import python_stage_partitions
-
     n_parts = python_stage_partitions(assigned)
     if max_cell is None:
         return (

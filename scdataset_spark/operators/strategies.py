@@ -24,8 +24,11 @@ the full table through a single-partition global window**:
   mix keys, cumulative block starts are broadcast-joined back, and
   ``pos = block_start + offset_in_block``.  The big table is only ever
   hash-partitioned and locally sorted.
-- cumulative weights for inverse-CDF sampling use the bucketed running
-  sum (``with_running_sum``).
+- cumulative weights for inverse-CDF sampling are a bucketed running
+  sum inlined in ``_weighted_draws``: per-bucket weight totals become
+  broadcast offsets and the running sum stays bucket-local (buckets
+  are ``row_id div chunk`` when the input bytes are known, min/max
+  range buckets otherwise).
 
 Counts needed by the math (n, total weight) are scalar aggregates
 broadcast back via crossJoin — Catalyst plans them as a broadcast
@@ -40,7 +43,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scdataset_spark.plans.seeds import MIX_MOD, mix_sql
-from scdataset_spark.plans.plan import with_pos, with_running_sum
+from scdataset_spark.plans.plan import with_pos
+from scdataset_spark.session import input_probe, python_stage_partitions
 
 POS_BUCKETS = 64  # buckets for distributed row numbering / running sums
 
@@ -219,28 +223,6 @@ BLOCK_META_WINDOW_MAX = 4_000_000
 _EST_MIN_BYTES_PER_ROW = 16
 
 
-def _est_block_count(df: DataFrame, block_size: int) -> int | None:
-    """Upper-bound estimate of n/block_size from the frame's input file
-    bytes — no Spark job.  None when the frame has no (local-filesystem)
-    file lineage."""
-    import os as _os
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-        if not files:
-            return None
-        total = 0
-        for f in files:
-            p = urlparse(f)
-            if p.scheme not in ("", "file"):
-                return None
-            total += _os.path.getsize(p.path)
-        return total // _EST_MIN_BYTES_PER_ROW // block_size
-    except Exception:
-        return None
-
-
 def _block_permute_pos(out: DataFrame, block_size: int, s: int) -> DataFrame:
     """Final position of a block permutation WITHOUT a global window on
     the data: order only the block *metadata* (n/block_size rows) by its
@@ -279,8 +261,11 @@ def _block_permute_pos(out: DataFrame, block_size: int, s: int) -> DataFrame:
     global-window shape in tests/test_optimization_r16.py)."""
     out = out.withColumn("block_id", F.expr(f"pos0 div {block_size}"))
     n_agg = out.agg(F.count(F.lit(1)).alias("_n"))
-    est_blocks = _est_block_count(out, block_size)
-    if est_blocks is not None and est_blocks <= BLOCK_META_WINDOW_MAX:
+    nbytes = input_probe(out)[1]
+    if (
+        nbytes is not None
+        and nbytes // _EST_MIN_BYTES_PER_ROW // block_size <= BLOCK_META_WINDOW_MAX
+    ):
         blocks = n_agg.select(
             "_n",
             F.explode(
@@ -310,11 +295,7 @@ def _block_permute_pos(out: DataFrame, block_size: int, s: int) -> DataFrame:
             )
             .drop("pos0", "_bstart")
         )
-    spark = out.sparkSession
-    try:
-        gen_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        gen_parts = spark.sparkContext.defaultParallelism
+    gen_parts = python_stage_partitions(out)
     # level 1: one row per BLOCK_META_CHUNK-sized chunk of block ids,
     # spread with an explicit partition count (the chunk rows are a few
     # bytes each, so AQE's byte-based coalescing would re-serialize the
@@ -459,8 +440,9 @@ class BlockWeightedSampling(SamplingStrategy):
             F.ceil(F.col(self.weight_col).cast("double") * self.weight_scale).cast("bigint")
         )
         base = df.withColumn("_wi", wint).where(F.col("_wi") > 0).select("row_id", "_wi")
-        est = _est_block_count(df, 1)  # ≈ row-count upper bound, driver-side
-        if est is not None:
+        nbytes = input_probe(df)[1]
+        if nbytes is not None:
+            est = nbytes // _EST_MIN_BYTES_PER_ROW  # ≈ row-count upper bound
             # r16 SINGLE-SCAN shape (VERDICT r15 task 5): the bucket
             # expression is meta-independent — ``row_id div chunk`` with
             # ``chunk`` from the driver-side file-bytes estimate — so the

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from scdataset_spark.session import _cluster_width, input_probe
+
 
 def adaptive_rank_buckets(
     df: DataFrame,
@@ -49,26 +51,10 @@ def adaptive_rank_buckets(
     buckets per core constant.  Clamped to [floor, cap]: the floor
     keeps small inputs at the measured-good 64, the cap bounds the
     broadcast-offsets frame (cap rows) and the stats agg."""
-    import os as _os
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-        total = 0
-        for f in files:
-            p = urlparse(f)
-            if p.scheme not in ("", "file"):
-                raise OSError(f)
-            total += _os.path.getsize(p.path)
-        if files:
-            return int(min(cap, max(floor, -(-total // target_bytes))))
-    except Exception:
-        pass
-    try:
-        width = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect
-        width = 32
-    return int(min(cap, max(floor, 4 * width)))
+    nbytes = input_probe(df)[1]
+    if nbytes is not None:
+        return int(min(cap, max(floor, -(-nbytes // target_bytes))))
+    return int(min(cap, max(floor, 4 * _cluster_width(df))))
 
 
 def bucketed_rank(
@@ -91,34 +77,10 @@ def bucketed_rank(
 
     Shared by ``with_pos``, the strategies' drop-key ranking, and the
     lineitem ingest numbering — one implementation, one set of
-    boundary-condition bugs.
+    boundary-condition bugs: it is :func:`grouped_bucketed_rank` with
+    no group columns.
     """
-    stats = df.agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
-    b = df.crossJoin(F.broadcast(stats)).withColumn(
-        "_bucket",
-        F.least(
-            F.lit(buckets - 1),
-            (
-                (F.col(bucket_col) - F.col("_lo"))
-                * buckets
-                / (F.col("_hi") - F.col("_lo") + 1)
-            ).cast("bigint"),
-        ),
-    )
-    counts = b.groupBy("_bucket").count()
-    w_off = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "_offset", F.coalesce(F.sum("count").over(w_off), F.lit(0))
-    ).drop("count")
-    sort_cols = [
-        F.col(c).asc() if d == "asc" else F.col(c).desc() for c, d in order
-    ]
-    w_in = Window.partitionBy("_bucket").orderBy(*sort_cols)
-    return (
-        b.join(F.broadcast(offsets), "_bucket")
-        .withColumn(out_col, F.row_number().over(w_in) - F.lit(1) + F.col("_offset"))
-        .drop("_bucket", "_offset", "_lo", "_hi")
-    )
+    return grouped_bucketed_rank(df, [], bucket_col, order, out_col, buckets)
 
 
 def grouped_bucketed_rank(

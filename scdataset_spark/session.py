@@ -10,6 +10,7 @@ date semantics match the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 
@@ -82,3 +83,45 @@ def python_stage_partitions(df) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+def _cluster_width(df) -> int:
+    """Target parallelism for widening and width-scaled physical counts.
+    Classic sessions read ``defaultParallelism``; Spark Connect has no
+    SparkContext, so fall back to the shuffle-partition setting (which
+    a deployment sizes to the cluster), then a fixed floor."""
+    try:
+        return max(8, df.sparkSession.sparkContext.defaultParallelism)
+    except Exception:  # Spark Connect
+        try:
+            return max(8, python_stage_partitions(df))
+        except Exception:
+            return 32
+
+
+def input_probe(df) -> tuple[int, int | None]:
+    """``(file count, total bytes)`` of the frame's input files — THE
+    size estimate behind every size-gated physical shape, driver-side
+    and without a Spark job.
+
+    One ``inputFiles()`` call (distinct files over all scan leaves).
+    The bytes are ``None`` unless every file is on the local filesystem
+    and statable: no file lineage, a non-``file:`` scheme (object
+    stores) or an ``OSError`` all give ``None``, and every gate reads
+    ``None`` as "take the scale shape" — the safe posture when the size
+    is unknown.  The count is reported either way (``widen_if_narrow``
+    trusts a large remote file count on its own)."""
+    try:
+        files = df.inputFiles()
+    except Exception:  # no file-backed lineage to list
+        return 0, None
+    total = 0
+    for f in files:
+        p = urlparse(f)
+        if p.scheme not in ("", "file"):
+            return len(files), None
+        try:
+            total += os.path.getsize(unquote(p.path))
+        except OSError:
+            return len(files), None
+    return len(files), (total if files else None)

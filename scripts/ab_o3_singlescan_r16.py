@@ -40,7 +40,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from scdataset_spark.catalog import ensure_ingested, load_table  # noqa: E402
 from scdataset_spark.operators._cache import persist_bounded  # noqa: E402
 from scdataset_spark.plans.seeds import mix_sql  # noqa: E402
-from scdataset_spark.session import get_spark  # noqa: E402
+from scdataset_spark.session import get_spark, input_probe  # noqa: E402
 import scdataset_spark.operators.strategies as st  # noqa: E402
 
 SEED = 42
@@ -56,7 +56,8 @@ def weighted_draws_singlescan(df: DataFrame, s: int) -> DataFrame:
     wint = F.ceil(F.col("l_quantity").cast("double") * WEIGHT_SCALE).cast("bigint")
     base = df.withColumn("_wi", wint).where(F.col("_wi") > 0).select("row_id", "_wi")
     # meta-independent monotone bucketing: CHUNK from file bytes
-    est = st._est_block_count(df, 1) or 1_000_000  # ~rows upper bound
+    nbytes = input_probe(df)[1]
+    est = (nbytes or 0) // st._EST_MIN_BYTES_PER_ROW or 1_000_000  # ~rows upper bound
     chunk = max(1, est // st.POS_BUCKETS)
     b = base.withColumn("_bucket", F.expr(f"row_id div {chunk}"))
     bshuf = b.repartition("_bucket")

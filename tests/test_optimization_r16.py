@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from scdataset_spark.operators import strategies as st
+from scdataset_spark.session import input_probe
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -67,7 +68,7 @@ class TestBlockPermuteBucketedOffsets:
         base = spark.range(10_000).select(
             F.col("id").alias("row_id"), F.col("id").alias("pos0")
         )
-        assert st._est_block_count(base, 8) is None  # range() has no files
+        assert input_probe(base)[1] is None  # range() has no files
         plan = _plan(st._block_permute_pos(base, 8, s=1).drop("block_id"))
         # within-bucket window partitioned on _obkt, fed by its own
         # keyed exchange; the only remaining orderBy-window runs over
@@ -83,8 +84,9 @@ class TestBlockPermuteBucketedOffsets:
         from scdataset_spark.catalog import load_table
 
         li = load_table(spark, "lineitem", SF_DIR_SMALL)
-        est = st._est_block_count(li, 64)
-        assert est is not None and est <= st.BLOCK_META_WINDOW_MAX
+        nbytes = input_probe(li)[1]
+        assert nbytes is not None
+        assert nbytes // st._EST_MIN_BYTES_PER_ROW // 64 <= st.BLOCK_META_WINDOW_MAX
         base = li.withColumn("pos0", F.col("row_id"))
         plan = _plan(st._block_permute_pos(base, 64, s=1).drop("block_id"))
         assert "hashpartitioning(_obkt" not in plan
@@ -110,18 +112,18 @@ class TestWeightedDrawsSingleScan:
     def test_single_scan_equals_fused_meta_path(self, spark, monkeypatch):
         """The r16 meta-free bucketing (row_id div chunk, total from the
         persisted offsets frame) must draw the identical multiset as the
-        r15 fused-meta shape (forced via a None file estimate)."""
+        r15 fused-meta shape (forced via unknown input bytes)."""
         from scdataset_spark.catalog import load_table
 
         li = load_table(spark, "lineitem", SF_DIR_SMALL)
         strat = st.BlockWeightedSampling(
             block_size=16, weight_col="l_quantity", total_size=300, replace=True
         )
-        assert st._est_block_count(li, 1) is not None  # file-backed: new path
+        assert input_probe(li)[1] is not None  # file-backed: new path
         new_path = sorted(
             map(tuple, strat.plan(li, seed=5).select("row_id", "pos").collect())
         )
-        monkeypatch.setattr(st, "_est_block_count", lambda df, b: None)
+        monkeypatch.setattr(st, "input_probe", lambda df: (0, None))
         fused_meta = sorted(
             map(tuple, strat.plan(li, seed=5).select("row_id", "pos").collect())
         )
@@ -142,10 +144,10 @@ class TestWeightedDrawsSingleScan:
 
 
 class TestTopkShapeGate:
-    def test_small_corpus_takes_single_window(self, spark):
+    def test_small_corpus_takes_single_window(self, spark, monkeypatch):
         """File-backed candidates under TWO_PHASE_MIN_BYTES rank through
-        ONE per-query window (no salt column in the plan); forcing
-        two_phase gives identical rows (r16 A/B: single-window is
+        ONE per-query window (no salt column in the plan); forcing the
+        two-phase shape (threshold 0) gives identical rows (r16 A/B: single-window is
         30-40% faster at bench scales, two-phase is the >=100k-vector
         hot-group posture)."""
         import scdataset_spark.operators.similarity as sim
@@ -155,10 +157,11 @@ class TestTopkShapeGate:
         e = load_table(spark, "embeddings", SF_DIR_SMALL, with_row_id=False)
         q = e.where("vec_id < 3").select(F.col("vec_id").alias("q_id"), "embedding")
         c = e.select(F.col("vec_id").alias("c_id"), "embedding")
-        assert sim._input_file_bytes(c) is not None
+        assert input_probe(c)[1] is not None
         auto = sim.brute_force_topk(q, c, k=5)
         assert "_salt" not in _plan(auto)
-        forced = sim.brute_force_topk(q, c, k=5, two_phase=True)
+        monkeypatch.setattr(sim, "TWO_PHASE_MIN_BYTES", 0)
+        forced = sim.brute_force_topk(q, c, k=5)
         assert "_salt" in _plan(forced)
         assert sorted(map(tuple, auto.collect())) == sorted(
             map(tuple, forced.collect())
@@ -175,7 +178,7 @@ class TestTopkShapeGate:
             ).alias("embedding"),
         )
         q = vecs.where("c_id < 2").withColumnRenamed("c_id", "q_id")
-        assert sim._input_file_bytes(vecs) is None
+        assert input_probe(vecs)[1] is None
         assert "_salt" in _plan(sim.brute_force_topk(q, vecs, k=3))
 
 

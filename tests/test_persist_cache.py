@@ -134,11 +134,12 @@ class TestWidenIfNarrowConnectClean:
         from tests.conftest import SF_DIR_SMALL
 
         from scdataset_spark.catalog import load_table
+        from scdataset_spark.session import input_probe
 
         cust = load_table(spark, "customer", SF_DIR_SMALL, with_row_id=False)
         self._sever_classic_api(monkeypatch)
-        est = _cache._estimate_packed_partitions(spark, cust.inputFiles())
-        assert est is not None and est >= 1
+        n_files, nbytes = input_probe(cust)
+        assert n_files >= 1 and nbytes is not None
         out = _cache.widen_if_narrow(cust)
         assert out.count() == cust.count()
 

@@ -357,21 +357,18 @@ class TestUnigramLogprob:
 
 
 class TestBruteForceTopkTwoPhase:
-    def test_two_phase_matches_window_path(self, spark):
+    def test_two_phase_matches_window_path(self, spark, monkeypatch):
+        import scdataset_spark.operators.similarity as sim
         from scdataset_spark.catalog import load_table as lt
-        from scdataset_spark.operators.similarity import brute_force_topk
 
         e = lt(spark, "embeddings", SF_DIR_SMALL, with_row_id=False)
         q = e.where("vec_id < 7").select(F.col("vec_id").alias("q_id"), "embedding")
         c = e.select(F.col("vec_id").alias("c_id"), "embedding")
-        fast = {
-            tuple(r)
-            for r in brute_force_topk(q, c, k=5, two_phase=True).collect()
-        }
-        ref = {
-            tuple(r)
-            for r in brute_force_topk(q, c, k=5, two_phase=False).collect()
-        }
+        # both shapes forced through the size gate's threshold
+        monkeypatch.setattr(sim, "TWO_PHASE_MIN_BYTES", 0)
+        fast = {tuple(r) for r in sim.brute_force_topk(q, c, k=5).collect()}
+        monkeypatch.setattr(sim, "TWO_PHASE_MIN_BYTES", 1 << 62)
+        ref = {tuple(r) for r in sim.brute_force_topk(q, c, k=5).collect()}
         assert fast == ref
 
 
