@@ -489,8 +489,9 @@ class BlockWeightedSampling(SamplingStrategy):
                 F.sum("_wi").alias("_total"),
             )
             nb = POS_BUCKETS
-            # same bucket expression as plans.plan.with_running_sum — the
-            # running sum below is value-identical to it at any bucket count
+            # same bucket expression as plans.plan._bucketed_prefix — the
+            # running sum below is value-identical to its running-sum mode
+            # at any bucket count
             b = (
                 base.crossJoin(F.broadcast(meta))
                 .withColumn(

@@ -337,6 +337,79 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _curation_input(
+    df: DataFrame,
+    slim: DataFrame,
+    groups: list[str],
+    buckets: int | None,
+    n_rows: int | None,
+) -> tuple[DataFrame, int]:
+    """Shape resolution shared by the curation twins
+    (:func:`token_budget`, :func:`token_budget_by_source`,
+    :func:`quality_rank_by_source`): returns the frame to read and the
+    bucket count, ``0`` meaning the one-window oracle shape.
+
+    ``buckets=None`` resolves under the ``AUTO_SCALE_ROWS`` contract
+    (64 buckets at or past it, else 0) from the largest ``groups``
+    group's row count — the whole frame when ``groups`` is empty —
+    taken from ``n_rows`` or else probed on the persisted ``slim``
+    projection.  The bucketed shape reads ``slim`` through three plan
+    branches (stats row, per-bucket totals, final join), so it is
+    persisted first or an expensive upstream (tokenization, quality
+    scoring — measured 30-100 s a pass at sf1000d) re-runs per branch;
+    the probe runs on that persisted frame and so warms the cache the
+    shape then reads.  A ``0`` known without a probe reads ``df`` as is.
+    """
+    from scdataset_spark.operators._cache import persist_bounded
+    from scdataset_spark.operators.similarity import AUTO_SCALE_ROWS
+
+    def resolve(n: int) -> int:
+        return 64 if n >= AUTO_SCALE_ROWS else 0
+
+    if buckets is None and n_rows is not None:
+        buckets = resolve(int(n_rows))
+    if buckets == 0:
+        return df, 0
+    slim = persist_bounded(slim)
+    if buckets is None:
+        n = slim.groupBy(*groups).count().agg(F.max("count")).first()[0]
+        buckets = resolve(n or 0)
+    return slim, buckets
+
+
+def _token_budget(
+    df: DataFrame,
+    budget: int,
+    groups: list[str],
+    quality_col: str,
+    token_col: str,
+    id_col: str,
+    buckets: int | None,
+    n_rows: int | None,
+) -> DataFrame:
+    """:func:`token_budget` per ``groups`` (none: one global budget)."""
+    from scdataset_spark.plans.plan import _bucketed_prefix
+
+    slim = df.select(id_col, *groups, quality_col, token_col).withColumn(
+        "_negq", -F.col(quality_col)
+    )
+    src, buckets = _curation_input(df, slim, groups, buckets, n_rows)
+    out = [id_col, *groups, token_col, "cum_tokens"]
+    if buckets == 0:
+        w = (
+            Window.partitionBy(*groups)
+            .orderBy(F.col(quality_col).desc(), F.col(id_col))
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        ranked = src.withColumn("cum_tokens", F.sum(token_col).over(w))
+    else:
+        ranked = _bucketed_prefix(
+            src, groups, "_negq", [(quality_col, "desc"), (id_col, "asc")],
+            "cum_tokens", buckets, token_col,
+        )
+    return ranked.where(F.col("cum_tokens") <= budget).select(*out)
+
+
 def token_budget(
     df: DataFrame,
     budget: int,
@@ -358,69 +431,18 @@ def token_budget(
 
     Scale shape (the ``AUTO_SCALE_ROWS`` contract): ``buckets=0`` pins
     the exact single global window — one total-order sort, fine below
-    ~10^5 rows and the oracle-checked shape; ``buckets=k`` runs the
-    bucket-offset running sum (``plans.plan.with_running_sum``'s
-    pattern): the NEGATED integer quality is the leading order col and
-    the bucket key, so per-bucket partial sums (one k-row shuffle) give
-    each bucket its offset and the running sum is a window PARTITIONED
-    by bucket — no single-partition sort at any point.  Both shapes
-    produce identical rows (the sum is exact either way); ``None``
-    resolves from ``n_rows`` or one count.  At 100 TB the budget cutoff
-    also means whole low-quality buckets are dropped by the
-    ``cum_tokens <= budget`` filter right after their offset exceeds
-    the budget — only the boundary bucket's rows matter.
+    ~10^5 rows and the oracle-checked shape; ``buckets=k`` is
+    ``plans.plan._bucketed_prefix``'s running-sum mode bucketed on the
+    NEGATED integer quality — no single-partition sort at any point.
+    Both shapes produce identical rows (the sum is exact either way);
+    ``None`` resolves from ``n_rows`` or one count (see
+    :func:`_curation_input`).  At 100 TB the budget cutoff also means
+    whole low-quality buckets are dropped by the ``cum_tokens <= budget``
+    filter right after their offset exceeds the budget — only the
+    boundary bucket's rows matter.
     """
-    from scdataset_spark.operators.similarity import AUTO_SCALE_ROWS
-
-    if buckets is None:
-        n = int(n_rows) if n_rows is not None else df.count()
-        buckets = 64 if n >= AUTO_SCALE_ROWS else 0
-    out = [id_col, token_col, "cum_tokens"]
-    if buckets == 0:
-        w = Window.orderBy(F.col(quality_col).desc(), F.col(id_col)).rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        ranked = df.withColumn("cum_tokens", F.sum(token_col).over(w))
-        return ranked.where(F.col("cum_tokens") <= budget).select(*out)
-    from scdataset_spark.operators._cache import persist_bounded
-
-    # the bucketed shape branches three ways off the scored frame
-    # (stats row, per-bucket sums, final join); persist the NARROW
-    # projection once or an expensive upstream (tokenization, quality
-    # scoring) re-executes per branch — measured at sf1000d: each
-    # un-persisted branch re-ran a 30-100 s scoring pass
-    neg = persist_bounded(
-        df.select(id_col, quality_col, token_col).withColumn(
-            "_negq", -F.col(quality_col)
-        )
-    )
-    stats = neg.agg(F.min("_negq").alias("_lo"), F.max("_negq").alias("_hi"))
-    b = (
-        neg.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_bucket",
-            F.least(
-                F.lit(buckets - 1),
-                ((F.col("_negq") - F.col("_lo")) * buckets / (F.col("_hi") - F.col("_lo") + 1)).cast("bigint"),
-            ),
-        )
-        .drop("_lo", "_hi")
-    )
-    sums = b.groupBy("_bucket").agg(F.sum(token_col).alias("_bsum"))
-    w_off = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sums.withColumn(
-        "_offset", F.coalesce(F.sum("_bsum").over(w_off), F.lit(0))
-    ).drop("_bsum")
-    w_in = (
-        Window.partitionBy("_bucket")
-        .orderBy(F.col(quality_col).desc(), F.col(id_col))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        b.join(F.broadcast(offsets), "_bucket")
-        .withColumn("cum_tokens", F.sum(token_col).over(w_in) + F.col("_offset"))
-        .where(F.col("cum_tokens") <= budget)
-        .select(*out)
+    return _token_budget(
+        df, budget, [], quality_col, token_col, id_col, buckets, n_rows
     )
 
 
@@ -450,104 +472,16 @@ def token_budget_by_source(
     in parallel — the oracle-checked form, fine while no single source
     exceeds ~10^5 rows.  But a hot source (one language that is half a
     100 TB corpus) makes that window a single-reducer running sum over
-    the source's entire row set, so ``buckets=k`` applies
-    :func:`token_budget`'s bucket-offset machinery WITHIN each source:
-    the bucket key is ``(source, quality_bucket)`` (negated integer
-    quality, global min/max bounds broadcast from one stats row),
-    per-(source, bucket) partial sums are one coarse shuffle of
-    ~|sources|·k rows, offsets are a window over that TINY sums frame
-    partitioned by source, and the running sum is a window partitioned
-    by the composite key — the widest partition shrinks from
-    max-source-rows to max-source-rows/k, with no global sort anywhere.
-    Both shapes produce identical rows (the sum is exact either way);
-    ``None`` resolves from the MAX per-source row count (``n_rows``
-    skips the probe and is compared as that max).
+    the source's entire row set, so ``buckets=k`` runs
+    ``plans.plan._bucketed_prefix``'s running-sum mode grouped by
+    source and bucketed on the negated quality: the widest partition
+    shrinks from max-source-rows to max-source-rows/k, with no global
+    sort anywhere.  Both shapes produce identical rows (the sum is
+    exact either way); ``None`` resolves from the MAX per-source row
+    count (``n_rows`` skips the probe and is compared as that max).
     """
-    from scdataset_spark.operators._cache import persist_bounded
-    from scdataset_spark.operators.similarity import AUTO_SCALE_ROWS
-
-    # Build the slim persisted projection BEFORE any buckets=None probe:
-    # the per-source count probe otherwise executes the expensive
-    # upstream (tokenization, quality scoring — measured 30-100 s at
-    # sf1000d) one extra time on the unpersisted frame, the exact pass
-    # the persist exists to avoid.  The probe then WARMS the same cache
-    # every downstream branch reuses.
-    neg = None
-
-    def _neg():
-        nonlocal neg
-        if neg is None:
-            neg = persist_bounded(
-                df.select(id_col, source_col, quality_col, token_col)
-                .withColumn("_negq", -F.col(quality_col))
-            )
-        return neg
-
-    if buckets is None:
-        if n_rows is not None:
-            n = int(n_rows)
-        else:
-            n = (
-                _neg()
-                .groupBy(source_col)
-                .count()
-                .agg(F.max("count").alias("m"))
-                .collect()[0]["m"]
-                or 0
-            )
-        buckets = 64 if n >= AUTO_SCALE_ROWS else 0
-    out = [id_col, source_col, token_col, "cum_tokens"]
-    if buckets == 0:
-        # reuse the warmed projection when the probe built it; with an
-        # explicit buckets=0 nothing was persisted and df is used as-is
-        src = neg if neg is not None else df
-        w = (
-            Window.partitionBy(source_col)
-            .orderBy(F.col(quality_col).desc(), F.col(id_col))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return (
-            src.withColumn("cum_tokens", F.sum(token_col).over(w))
-            .where(F.col("cum_tokens") <= budget)
-            .select(*out)
-        )
-    # same three-branch persist rationale as token_budget above
-    neg = _neg()
-    stats = neg.agg(F.min("_negq").alias("_lo"), F.max("_negq").alias("_hi"))
-    b = (
-        neg.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_bucket",
-            F.least(
-                F.lit(buckets - 1),
-                (
-                    (F.col("_negq") - F.col("_lo"))
-                    * buckets
-                    / (F.col("_hi") - F.col("_lo") + 1)
-                ).cast("bigint"),
-            ),
-        )
-        .drop("_lo", "_hi")
-    )
-    sums = b.groupBy(source_col, "_bucket").agg(F.sum(token_col).alias("_bsum"))
-    w_off = (
-        Window.partitionBy(source_col)
-        .orderBy("_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sums.withColumn(
-        "_offset", F.coalesce(F.sum("_bsum").over(w_off), F.lit(0))
-    ).drop("_bsum")
-    w_in = (
-        Window.partitionBy(source_col, "_bucket")
-        .orderBy(F.col(quality_col).desc(), F.col(id_col))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        b.join(F.broadcast(offsets), [source_col, "_bucket"])
-        .withColumn("cum_tokens", F.sum(token_col).over(w_in) + F.col("_offset"))
-        .where(F.col("cum_tokens") <= budget)
-        .select(*out)
+    return _token_budget(
+        df, budget, [source_col], quality_col, token_col, id_col, buckets, n_rows
     )
 
 
@@ -575,91 +509,35 @@ def quality_rank_by_source(
     as the budget operators): ``buckets=0`` pins the exact one-window
     shape — ``percent_rank()`` partitioned by source — the
     oracle-checked form, single-reducer per source.  ``buckets=k``
-    computes the IDENTICAL ranks two-level: per-(source, quality-range
-    bucket) counts (one ~|sources|·k-row shuffle), offsets within
-    source over that tiny frame, ``row_number`` within the composite
-    partition, then ``pct = (rank-1)/(n_source-1)`` — the same IEEE
-    division ``percent_rank`` evaluates (the order key is total, so
-    rank == row_number and ties cannot diverge).  ``None`` resolves
-    from the MAX per-source count.
+    computes the IDENTICAL ranks two-level: the 0-based per-source rank
+    from ``plans.plan.grouped_bucketed_rank``, the per-source totals
+    from one aggregate of the persisted projection, then
+    ``pct = rank/(n_source-1)`` — the same IEEE division
+    ``percent_rank`` evaluates (the order key is total, so rank ==
+    row_number and ties cannot diverge).  ``None`` resolves from the
+    MAX per-source count (see :func:`_curation_input`).
     """
-    from scdataset_spark.operators._cache import persist_bounded
-    from scdataset_spark.operators.similarity import AUTO_SCALE_ROWS
+    from scdataset_spark.plans.plan import grouped_bucketed_rank
 
-    # slim persisted projection FIRST, so a buckets=None probe warms the
-    # same cache the ranking branches reuse instead of re-running the
-    # expensive scoring upstream once extra (same rationale as
-    # token_budget_by_source)
-    slim = None
-
-    def _slim():
-        nonlocal slim
-        if slim is None:
-            slim = persist_bounded(df.select(id_col, source_col, quality_col))
-        return slim
-
-    if buckets is None:
-        if n_rows is not None:
-            n = int(n_rows)
-        else:
-            n = (
-                _slim()
-                .groupBy(source_col)
-                .count()
-                .agg(F.max("count").alias("m"))
-                .collect()[0]["m"]
-                or 0
-            )
-        buckets = 64 if n >= AUTO_SCALE_ROWS else 0
+    slim = df.select(id_col, source_col, quality_col)
+    src, buckets = _curation_input(df, slim, [source_col], buckets, n_rows)
     out = [id_col, source_col, quality_col, "q_pct"]
     if buckets == 0:
-        src = slim if slim is not None else df
         w = Window.partitionBy(source_col).orderBy(
             F.col(quality_col), F.col(id_col)
         )
         return src.withColumn("q_pct", F.percent_rank().over(w)).select(*out)
-    slim = _slim()
-    stats = slim.agg(
-        F.min(quality_col).alias("_lo"), F.max(quality_col).alias("_hi")
+    ranked = grouped_bucketed_rank(
+        src, [source_col], quality_col,
+        [(quality_col, "asc"), (id_col, "asc")], "_rank", buckets,
     )
-    b = (
-        slim.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_bucket",
-            F.least(
-                F.lit(buckets - 1),
-                (
-                    (F.col(quality_col) - F.col("_lo"))
-                    * buckets
-                    / (F.col("_hi") - F.col("_lo") + 1)
-                ).cast("bigint"),
-            ),
-        )
-        .drop("_lo", "_hi")
-    )
-    counts = b.groupBy(source_col, "_bucket").count()
-    w_off = (
-        Window.partitionBy(source_col)
-        .orderBy("_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "_offset", F.coalesce(F.sum("count").over(w_off), F.lit(0))
-    ).drop("count")
-    # per-source totals fold out of the SAME tiny counts frame — a
-    # second full-corpus groupBy here would double the heavy shuffle
-    totals = counts.groupBy(source_col).agg(F.sum("count").alias("_n"))
-    w_in = Window.partitionBy(source_col, "_bucket").orderBy(
-        F.col(quality_col), F.col(id_col)
-    )
+    totals = src.groupBy(source_col).agg(F.count(F.lit(1)).alias("_n"))
     return (
-        b.join(F.broadcast(offsets), [source_col, "_bucket"])
-        .join(F.broadcast(totals), source_col)
-        .withColumn("_rank", F.row_number().over(w_in) + F.col("_offset"))
+        ranked.join(F.broadcast(totals), source_col)
         .withColumn(
             "q_pct",
             F.when(F.col("_n") == 1, F.lit(0.0)).otherwise(
-                (F.col("_rank") - 1) / (F.col("_n") - 1)
+                F.col("_rank") / (F.col("_n") - 1)
             ),
         )
         .select(*out)

@@ -57,55 +57,31 @@ def adaptive_rank_buckets(
     return int(min(cap, max(floor, 4 * _cluster_width(df))))
 
 
-def bucketed_rank(
-    df: DataFrame,
-    bucket_col: str,
-    order: list[tuple[str, str]],
-    out_col: str = "pos",
-    buckets: int = 64,
-) -> DataFrame:
-    """THE distributed exact-rank primitive: 0-based global rank by the
-    composite ``order`` spec (list of ``(column, "asc"|"desc")``)
-    WITHOUT a single-partition global window.
-
-    Rows are range-bucketed on ``bucket_col`` — which MUST be the
-    leading order column, ascending, so equal values share a bucket and
-    every tiebreak stays bucket-local — then per-bucket counts become
-    broadcast offsets and the numbering window runs within buckets.
-    One cheap stats agg + one tiny (``buckets``-row) window + one
-    broadcast join; the O(n) data is never globally sorted.
-
-    Shared by ``with_pos``, the strategies' drop-key ranking, and the
-    lineitem ingest numbering — one implementation, one set of
-    boundary-condition bugs: it is :func:`grouped_bucketed_rank` with
-    no group columns.
-    """
-    return grouped_bucketed_rank(df, [], bucket_col, order, out_col, buckets)
-
-
-def grouped_bucketed_rank(
+def _bucketed_prefix(
     df: DataFrame,
     group_cols: list[str],
     bucket_col: str,
     order: list[tuple[str, str]],
-    out_col: str = "pos",
-    buckets: int = 64,
+    out_col: str,
+    buckets: int,
+    value_col: str | None = None,
 ) -> DataFrame:
-    """Per-GROUP 0-based exact rank by ``order`` without a per-group
-    single-reducer window — the grouped sibling of
-    :func:`bucketed_rank`, sharing its contract: ``bucket_col`` must be
-    the leading order column, ascending, so equal values share a bucket
-    and every tiebreak stays bucket-local.
+    """THE bucket-offset prefix: an exact per-group prefix in ``order``
+    (list of ``(column, "asc"|"desc")``) WITHOUT a single-partition or
+    per-group single-reducer window.  ``value_col=None`` counts rows and
+    gives the 0-based rank; a value column gives its inclusive running
+    sum.
 
-    The plain ``row_number() OVER (PARTITION BY group ...)`` puts each
-    group's WHOLE extent through one reducer — the hot-stratum hazard a
-    viral source hits at corpus scale.  Here rows range-bucket on
-    ``bucket_col`` (global bounds — bucket boundaries need not align
-    with groups), per-(group, bucket) counts prefix-sum into offsets on
-    a tiny ``|groups|·buckets``-row frame, and the numbering window
-    runs within (group, bucket) — a hot group spreads over ``buckets``
-    tasks.  One stats agg + one tiny window + one broadcast join, same
-    as the global primitive.
+    Rows range-bucket on ``bucket_col`` between its global min and max
+    (bucket boundaries need not align with groups).  ``bucket_col``
+    ascending must agree with the leading ``order`` key — that column
+    ascending, or its negation descending — so equal keys share a
+    bucket and every tiebreak stays bucket-local; a null key lands in
+    the last bucket.  Per-(group, bucket) totals prefix-sum into offsets
+    on a tiny ``|groups|·buckets``-row frame, broadcast back, and the
+    window finishes within (group, bucket): one stats agg + one tiny
+    window + one broadcast join, the O(n) data never globally sorted,
+    and a hot group spreads over ``buckets`` tasks.
     """
     stats = df.agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
     b = df.crossJoin(F.broadcast(stats)).withColumn(
@@ -118,25 +94,70 @@ def grouped_bucketed_rank(
                 / (F.col("_hi") - F.col("_lo") + 1)
             ).cast("bigint"),
         ),
-    )
-    counts = b.groupBy(*group_cols, "_bucket").count()
+    ).drop("_lo", "_hi")
+    sort_cols = [
+        F.col(c).asc() if d == "asc" else F.col(c).desc() for c, d in order
+    ]
+    w_in = Window.partitionBy(*group_cols, "_bucket").orderBy(*sort_cols)
+    if value_col is None:
+        tot, total = "count", F.count(F.lit(1))
+        prefix = F.row_number().over(w_in) - F.lit(1)
+    else:
+        tot, total = "_bsum", F.sum(value_col)
+        prefix = F.sum(value_col).over(
+            w_in.rowsBetween(Window.unboundedPreceding, 0)
+        )
     w_off = (
         Window.partitionBy(*group_cols)
         .orderBy("_bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = counts.withColumn(
-        "_offset", F.coalesce(F.sum("count").over(w_off), F.lit(0))
-    ).drop("count")
-    sort_cols = [
-        F.col(c).asc() if d == "asc" else F.col(c).desc() for c, d in order
-    ]
-    w_in = Window.partitionBy(*group_cols, "_bucket").orderBy(*sort_cols)
+    offsets = (
+        b.groupBy(*group_cols, "_bucket")
+        .agg(total.alias(tot))
+        .withColumn("_offset", F.coalesce(F.sum(tot).over(w_off), F.lit(0)))
+        .drop(tot)
+    )
     return (
         b.join(F.broadcast(offsets), [*group_cols, "_bucket"])
-        .withColumn(out_col, F.row_number().over(w_in) - F.lit(1) + F.col("_offset"))
-        .drop("_bucket", "_offset", "_lo", "_hi")
+        .withColumn(out_col, prefix + F.col("_offset"))
+        .drop("_bucket", "_offset")
     )
+
+
+def bucketed_rank(
+    df: DataFrame,
+    bucket_col: str,
+    order: list[tuple[str, str]],
+    out_col: str = "pos",
+    buckets: int = 64,
+) -> DataFrame:
+    """THE distributed exact-rank primitive: 0-based global rank by the
+    composite ``order`` spec WITHOUT a single-partition global window —
+    :func:`_bucketed_prefix`'s rank mode with no group columns.
+    ``bucket_col`` MUST be the leading order column, ascending.
+
+    Shared by ``with_pos``, the strategies' drop-key ranking, and the
+    lineitem ingest numbering.
+    """
+    return _bucketed_prefix(df, [], bucket_col, order, out_col, buckets)
+
+
+def grouped_bucketed_rank(
+    df: DataFrame,
+    group_cols: list[str],
+    bucket_col: str,
+    order: list[tuple[str, str]],
+    out_col: str = "pos",
+    buckets: int = 64,
+) -> DataFrame:
+    """Per-GROUP 0-based exact rank by ``order`` — the grouped sibling of
+    :func:`bucketed_rank`, same contract.  The plain ``row_number() OVER
+    (PARTITION BY group ...)`` puts each group's WHOLE extent through
+    one reducer — the hot-stratum hazard a viral source hits at corpus
+    scale; :func:`_bucketed_prefix` spreads it over ``buckets`` tasks.
+    """
+    return _bucketed_prefix(df, group_cols, bucket_col, order, out_col, buckets)
 
 
 def with_pos(
@@ -170,29 +191,11 @@ def with_running_sum(
 ) -> DataFrame:
     """Distributed exact running sum of ``value_col`` in ``order_col``
     order (inclusive): the inverse-CDF sampler's cumulative weights (W2)
-    without a single-partition global window.
-
-    Same bucket-offset pattern as ``with_pos``: per-bucket partial sums
-    (one partial-agg shuffle of `buckets` rows), offsets via a window
-    over that tiny frame, broadcast back, then a partition-local running
-    sum inside each bucket.
+    without a single-partition global window — :func:`_bucketed_prefix`'s
+    running-sum mode with no group columns, bucketed on ``order_col``.
     """
-    stats = df.agg(F.min(order_col).alias("_lo"), F.max(order_col).alias("_hi"))
-    b = df.crossJoin(F.broadcast(stats)).withColumn(
-        "_bucket",
-        F.least(
-            F.lit(buckets - 1),
-            ((F.col(order_col) - F.col("_lo")) * buckets / (F.col("_hi") - F.col("_lo") + 1)).cast("bigint"),
-        ),
-    ).drop("_lo", "_hi")
-    sums = b.groupBy("_bucket").agg(F.sum(value_col).alias("_bsum"))
-    w_off = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sums.withColumn("_offset", F.coalesce(F.sum("_bsum").over(w_off), F.lit(0))).drop("_bsum")
-    w_in = Window.partitionBy("_bucket").orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        b.join(F.broadcast(offsets), "_bucket")
-        .withColumn(out, F.sum(value_col).over(w_in) + F.col("_offset"))
-        .drop("_bucket", "_offset")
+    return _bucketed_prefix(
+        df, [], order_col, [(order_col, "asc")], out, buckets, value_col
     )
 
 

@@ -273,6 +273,42 @@ class TestHookOrder:
         assert [r["pos"] for r in rows] == list(range(len(rows)))
 
 
+class TestHookCallsPerFetch:
+    @pytest.mark.xfail(
+        strict=True,
+        reason="iterate_batches' orderBy(pos) range-samples its child, the "
+        "hook stage, so every hook runs once for the sample and once "
+        "for the shuffle: 2 calls per fetch instead of 1",
+    )
+    def test_fetch_transform_runs_once_per_fetch(self, spark, tmp_path):
+        """The reference calls each hook once per fetch
+        (scdataset.py:523-558); a hook that reads an external store or
+        has side effects must not fire twice.  The hook runs on
+        executors, so it counts its calls by appending to a file."""
+        calls = str(tmp_path / "calls.txt")
+        planned = with_batches(
+            spark.range(640).selectExpr("id AS row_id", "id AS pos"),
+            batch_size=16,
+            fetch_factor=4,
+        )
+
+        def fetch_transform(pdf):
+            with open(calls, "a") as f:
+                f.write(f"{pdf['fetch_id'].iloc[0]}\n")
+            return pdf
+
+        out = run_hook_pipeline(
+            planned.select("row_id", "pos", "fetch_id"),
+            "row_id bigint, pos bigint, fetch_id bigint",
+            batch_size=16,
+            fetch_transform=fetch_transform,
+        )
+        batches = list(iterate_batches(out, 16, ["row_id"]))
+        assert np.concatenate([b["row_id"] for b in batches]).tolist() == list(range(640))
+        with open(calls) as f:
+            assert len(f.read().split()) == 640 // 64
+
+
 class TestSortBeforeFetch:
     def test_fetch_callback_sees_row_id_sorted_frame(self, spark):
         """O8/reference scdataset.py:224: the external-store fetch gets

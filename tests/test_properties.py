@@ -73,16 +73,20 @@ class TestPermutationProperty:
 
 
 class TestBucketedRankProperty:
-    """bucketed_rank is the primitive everything rests on — compare it
-    against the single-window reference on adversarial key sets
-    (duplicates, skew, negatives, tiny ranges)."""
+    """The bucket-offset prefix (``plans.plan._bucketed_prefix``) is the
+    primitive everything rests on — compare both its modes (0-based
+    rank, inclusive running sum), global and per group, against the
+    single-window reference on adversarial key sets (duplicates, skew,
+    negatives, tiny ranges)."""
 
     @given(
         keys=st.lists(st.integers(min_value=-1000, max_value=1000), min_size=1, max_size=300),
         buckets=st.sampled_from([1, 2, 7, 64]),
+        running_sum=st.booleans(),
+        grouped=st.booleans(),
     )
-    @settings(max_examples=12, deadline=None)
-    def test_matches_global_window(self, keys, buckets):
+    @settings(max_examples=20, deadline=None)
+    def test_matches_global_window(self, keys, buckets, running_sum, grouped):
         # no pytest fixture: hypothesis forbids function-scoped fixtures
         # across examples; grab the shared session directly
         import pandas as pd
@@ -90,21 +94,27 @@ class TestBucketedRankProperty:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        from scdataset_spark.plans.plan import bucketed_rank
+        from scdataset_spark.plans.plan import _bucketed_prefix
         from scdataset_spark.session import get_spark
 
         spark = get_spark("scdataset_spark_tests")
-        pdf = pd.DataFrame({"k": keys, "tb": list(range(len(keys)))})
+        tb = list(range(len(keys)))
+        pdf = pd.DataFrame(
+            {"k": keys, "tb": tb, "g": [i % 3 for i in tb], "v": [(i * 37) % 11 - 5 for i in tb]}
+        )
         df = spark.createDataFrame(pdf)
+        groups = ["g"] if grouped else []
+        value_col = "v" if running_sum else None
         got = {
             (r.k, r.tb): r.rk
-            for r in bucketed_rank(
-                df, "k", [("k", "asc"), ("tb", "desc")], out_col="rk", buckets=buckets
+            for r in _bucketed_prefix(
+                df, groups, "k", [("k", "asc"), ("tb", "desc")], "rk", buckets, value_col
             ).collect()
         }
-        w = Window.orderBy(F.col("k").asc(), F.col("tb").desc())
-        want = {
-            (r.k, r.tb): r.rk
-            for r in df.withColumn("rk", F.row_number().over(w) - 1).collect()
-        }
+        w = Window.partitionBy(*groups).orderBy(F.col("k").asc(), F.col("tb").desc())
+        if running_sum:
+            ref = F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0))
+        else:
+            ref = F.row_number().over(w) - 1
+        want = {(r.k, r.tb): r.rk for r in df.withColumn("rk", ref).collect()}
         assert got == want

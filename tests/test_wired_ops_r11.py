@@ -177,10 +177,13 @@ class TestTokenBudget:
             assert bucketed == glob, f"buckets={k}"
         assert glob  # non-trivial selection
 
-    def test_auto_resolution_flips_plan(self, spark):
+    def test_auto_resolution_flips_plan(self, spark, monkeypatch):
         """n_rows forced past AUTO_SCALE_ROWS -> the bucketed plan (the
         running-sum window is PARTITIONED by the quality bucket); small
-        n -> the pinned global-window plan; rows equal either way."""
+        n -> the pinned global-window plan; with neither, the count
+        probed on the slim projection resolves the same way; rows equal
+        either way."""
+        from scdataset_spark.operators import similarity
         from scdataset_spark.operators.textanalysis import token_budget
 
         scored = self._scored(spark)
@@ -188,9 +191,13 @@ class TestTokenBudget:
         small = token_budget(scored, 5000, n_rows=10)
         assert "_bucket" in _plan_str(big)
         assert "_bucket" not in _plan_str(small)
-        assert sorted(map(tuple, big.collect())) == sorted(
-            map(tuple, small.collect())
-        )
+        want = sorted(map(tuple, token_budget(scored, 5000, buckets=0).collect()))
+        assert sorted(map(tuple, big.collect())) == want
+        assert sorted(map(tuple, small.collect())) == want
+        monkeypatch.setattr(similarity, "AUTO_SCALE_ROWS", 10)
+        probed = token_budget(scored, 5000)
+        assert "_bucket" in _plan_str(probed)
+        assert sorted(map(tuple, probed.collect())) == want
 
     def test_budget_boundary(self, spark):
         """Every selected doc fits the budget; the next doc in quality
