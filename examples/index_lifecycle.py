@@ -41,7 +41,7 @@ leaves above 0.9 at the default n_probe=4 (BENCH_SCALE.md r12), i.e.
 rebuild well before serving quality is user-visible.
 
 Run: python examples/index_lifecycle.py   (defaults to sf0.01; CI runs
-``tests/test_index_maintenance_r13.py::TestLifecycleExample`` which
+``tests/test_index_maintenance.py::TestLifecycleExample`` which
 executes this exact loop end-to-end at sf0.01)
 
 Streaming entry points to the same loop: ``similarity.ann_ingest_batches``

@@ -32,7 +32,7 @@ write volume.  Quiescence is enforced, not assumed: compaction and
 deliveries take the same per-index maintenance lock.
 
 Run: python examples/ingest_index_lifecycle.py   (defaults to sf0.01;
-CI runs ``tests/test_maintenance_r14.py::TestIngestLifecycleExample``,
+CI runs ``tests/test_index_maintenance.py::TestIngestLifecycleExample``,
 which executes this exact loop end-to-end at sf0.01.)
 """
 

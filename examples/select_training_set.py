@@ -29,7 +29,7 @@ Run: python examples/select_training_set.py   (uses /root/testdata/sf0.001)
 Every step is a DataFrame operator with a DuckDB-checked twin in the
 query registry; this script only wires them together.  The test
 harness drives `run()` and asserts the trace invariants
-(tests/test_wired_ops_r15.py::TestSelectTrainingSetExample).
+(tests/test_curation.py::TestSelectTrainingSetExample).
 """
 
 from __future__ import annotations

@@ -513,7 +513,7 @@ def snapshot_diff(
     bucketed on the id it collapses to a zero-exchange merge — the
     documented layout for corpus version storage at 100 TB, pinned
     against the executed plan by
-    ``tests/test_maintenance_r14.py::TestSnapshotDiffBucketedShape``),
+    ``tests/test_quality.py::TestSnapshotDiffBucketedShape``),
     and a three-way CASE.  Output: ``(id_col, status)``."""
     def _sig(df: DataFrame) -> DataFrame:
         parts = []

@@ -223,7 +223,9 @@ BLOCK_META_WINDOW_MAX = 4_000_000
 _EST_MIN_BYTES_PER_ROW = 16
 
 
-def _block_permute_pos(out: DataFrame, block_size: int, s: int) -> DataFrame:
+def _block_permute_pos(
+    out: DataFrame, block_size: int, s: int, _row_bound: int | None = None
+) -> DataFrame:
     """Final position of a block permutation WITHOUT a global window on
     the data: order only the block *metadata* (n/block_size rows) by its
     mix keys, turn that into cumulative output offsets, and join back —
@@ -258,14 +260,18 @@ def _block_permute_pos(out: DataFrame, block_size: int, s: int) -> DataFrame:
     (see BLOCK_META_WINDOW_MAX).  Values are identical either way —
     buckets are ranges of the leading sort key, so every tiebreak
     stays bucket-local (pinned by value-equality tests vs the
-    global-window shape in tests/test_optimization_r16.py)."""
+    global-window shape in tests/test_optimization_r16.py).
+
+    ``_row_bound`` is a known row count of ``out`` (a weighted draw
+    count); without it the row count is estimated from the input
+    files, which for a drawn multiset are the source table's."""
     out = out.withColumn("block_id", F.expr(f"pos0 div {block_size}"))
     n_agg = out.agg(F.count(F.lit(1)).alias("_n"))
-    nbytes = input_probe(out)[1]
-    if (
-        nbytes is not None
-        and nbytes // _EST_MIN_BYTES_PER_ROW // block_size <= BLOCK_META_WINDOW_MAX
-    ):
+    n_rows = _row_bound
+    if n_rows is None:
+        nbytes = input_probe(out)[1]
+        n_rows = None if nbytes is None else nbytes // _EST_MIN_BYTES_PER_ROW
+    if n_rows is not None and n_rows // block_size <= BLOCK_META_WINDOW_MAX:
         blocks = n_agg.select(
             "_n",
             F.explode(
@@ -665,7 +671,9 @@ class BlockWeightedSampling(SamplingStrategy):
                 out.withColumn("pos", F.row_number().over(w_blk) - F.lit(1))
                 .drop("pos0", "_bkey")
             )
-        return _block_permute_pos(out, self.block_size, s + 500).drop("block_id")
+        return _block_permute_pos(
+            out, self.block_size, s + 500, _row_bound=self.total_size
+        ).drop("block_id")
 
 
 @dataclass

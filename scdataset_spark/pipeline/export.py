@@ -204,16 +204,18 @@ def write_arrow_fetches(
 
     The export runs EAGERLY (exactly once, results checkpointed) and
     stale ``fetch_*.arrow`` files from a previous export into the same
-    directory are removed first — a trainer globbing the directory sees
-    only this epoch's files.  Returns the materialized manifest
-    DataFrame (fetch_id, n_rows, path).
+    directory are removed first, with the ``fetch_*.arrow.tmp.*`` files
+    of attempts killed before their rename — a trainer globbing the
+    directory sees only this epoch's files.  Returns the materialized
+    manifest DataFrame (fetch_id, n_rows, path).
     """
     import glob
     import os
 
     os.makedirs(out_dir, exist_ok=True)
-    for stale in glob.glob(os.path.join(out_dir, "fetch_*.arrow")):
-        os.remove(stale)
+    for pattern in ("fetch_*.arrow", "fetch_*.arrow.tmp.*"):
+        for stale in glob.glob(os.path.join(out_dir, pattern)):
+            os.remove(stale)
 
     def write_fetch(pdf):
         # function-local import + def: pickled by value to the workers

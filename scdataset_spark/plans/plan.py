@@ -341,8 +341,9 @@ def exact_num_batches(
         raise ValueError("batch_size and fetch_factor must be positive")
     fetch_size = batch_size * fetch_factor
     num_fetches = (n + fetch_size - 1) // fetch_size
-    total = 0
-    for f in range(rank, num_fetches, world_size):
-        size = fetch_size if f < num_fetches - 1 else n - (num_fetches - 1) * fetch_size
-        total += size // batch_size if drop_last else (size + batch_size - 1) // batch_size
-    return total
+    owned = max(0, (num_fetches - rank + world_size - 1) // world_size)
+    if owned == 0 or (num_fetches - 1 - rank) % world_size != 0:
+        return owned * fetch_factor  # the rank does not own the last fetch
+    last = n - (num_fetches - 1) * fetch_size  # the last fetch, maybe partial
+    tail = last // batch_size if drop_last else (last + batch_size - 1) // batch_size
+    return (owned - 1) * fetch_factor + tail

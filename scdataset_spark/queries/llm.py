@@ -1689,7 +1689,7 @@ def sim_ann_ingest_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest = sim.ann_ingest_batches(path)
     # two deliveries with overlap: ids % 4 == 1 arrive twice and must
     # append once (deterministic direct calls — the availableNow twin
-    # runs in tests/test_index_maintenance_r13.py)
+    # runs in tests/test_index_maintenance.py)
     ingest(c.where("c_id % 4 in (1, 3)"), 0)
     ingest(c.where("c_id % 4 = 1"), 1)
     return sim.ann_ingest_consistency(spark, path)
@@ -2263,7 +2263,7 @@ def pipe_curation_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``streaming.events.unique_gate_batches`` (persisted key index)
     alongside the constraint gate for that contract.  Batch mode (this
     query) sees the whole corpus in one gate and has no such gap —
-    ``tests/test_maintenance_r15.py`` pins both behaviors
+    ``tests/test_curation.py`` pins both behaviors
     end-to-end."""
     from scdataset_spark.operators.quality import (
         check_constraints,

@@ -47,39 +47,47 @@ def duck():
 # suite, which stays the local pre-commit gate for operator internals.
 _SLOW_TESTS = frozenset([
     "test_asof_winnowing.py::TestAsofJoin::test_semantics",
+    "test_curation.py::TestGatedPipelineStreamingSemantics::test_cross_batch_dup_passes_per_batch_gate_and_fails_stateful",
+    "test_curation.py::TestSelectTrainingSetExample::test_selection_pipeline_end_to_end",
     "test_ddp_multiprocess.py::TestMultiProcessDDP::test_independent_processes_build_disjoint_exhaustive_shares",
     "test_ddp_multiprocess.py::TestMultiProcessDDP::test_sparkfree_file_consumers_cover_exactly_once",
     "test_exact_sums.py::TestLimbSums::test_cross_engine_and_partition_invariance",
     "test_exact_sums.py::TestLimbSums::test_matches_exact_decimal_reference",
-    "test_index_maintenance_r13.py::TestAnnIngestBatches::test_compaction_covers_the_sidecar",
-    "test_index_maintenance_r13.py::TestAnnIngestBatches::test_consistency_detects_crash_window_and_rebuild_repairs",
-    "test_index_maintenance_r13.py::TestAnnIngestBatches::test_streamed_ingest_equals_one_shot_append",
-    "test_index_maintenance_r13.py::TestCompactAnnIndex::test_ann_probe_identical_and_files_collapse",
-    "test_index_maintenance_r13.py::TestCompactAnnIndex::test_pq_probe_identical_and_archive_compacts",
-    "test_index_maintenance_r13.py::TestLifecycleExample::test_example_runs_end_to_end_at_sf001",
-    "test_index_maintenance_r13.py::TestNovelIngestBatches::test_compact_band_index_preserves_decisions",
-    "test_index_maintenance_r13.py::TestNovelIngestBatches::test_delivery2_deduped_against_delivery1_novels",
-    "test_index_maintenance_r13.py::TestNovelIngestBatches::test_replay_reports_same_novel_set",
-    "test_index_maintenance_r13.py::TestNovelIngestBatches::test_stream_equals_direct_calls",
-    "test_index_maintenance_r13.py::TestPqAdcAgreement::test_agreement_bounds_and_self_consistency",
-    "test_maintenance_r14.py::TestBatchTagMigration::test_compaction_normalizes_legacy_int32_band_index",
-    "test_maintenance_r14.py::TestIngestLifecycleExample::test_decide_loop_end_to_end",
-    "test_maintenance_r14.py::TestMaintenanceLock::test_band_compaction_refuses_during_delivery",
-    "test_maintenance_r14.py::TestNovelIngestRunId::test_fresh_checkpoint_batch0_dedups_against_prior_run",
-    "test_maintenance_r14.py::TestNovelIngestRunId::test_same_run_replay_still_self_excludes",
-    "test_maintenance_r14.py::TestSemanticIngestBatches::test_cumulative_screen_and_base_dedup",
-    "test_maintenance_r14.py::TestSemanticIngestBatches::test_fresh_run_batch0_sees_prior_history",
-    "test_maintenance_r14.py::TestSemanticIngestBatches::test_replay_reemits_identical_novels",
-    "test_maintenance_r14.py::TestSemanticIngestBatches::test_streamed_equals_direct",
-    "test_maintenance_r15.py::TestGatedPipelineStreamingSemantics::test_cross_batch_dup_passes_per_batch_gate_and_fails_stateful",
-    "test_maintenance_r15.py::TestLegacyDtypeEnforcement::test_ann_sidecar_refuses_pre_append",
-    "test_maintenance_r15.py::TestLegacyDtypeEnforcement::test_band_ingest_refuses_pre_append",
-    "test_maintenance_r15.py::TestLegacyRunIdWarning::test_band_ingest_warns_once_on_tag_collision",
-    "test_maintenance_r15.py::TestLegacyRunIdWarning::test_namespaced_ingest_never_warns",
-    "test_maintenance_r15.py::TestLegacyRunIdWarning::test_semantic_ingest_warns_on_tag_collision",
-    "test_maintenance_r15.py::TestSemanticIngestLockContract::test_compaction_refused_during_semantic_delivery",
-    "test_maintenance_r15.py::TestSemanticIngestLockContract::test_dead_owner_reclaim_through_semantic_verb",
-    "test_maintenance_r15.py::TestSemanticIngestLockContract::test_semantic_delivery_refused_during_compaction",
+    "test_index_maintenance.py::TestAnnIngestBatches::test_compaction_covers_the_sidecar",
+    "test_index_maintenance.py::TestAnnIngestBatches::test_consistency_detects_crash_window_and_rebuild_repairs",
+    "test_index_maintenance.py::TestAnnIngestBatches::test_streamed_ingest_equals_one_shot_append",
+    "test_index_maintenance.py::TestBatchTagMigration::test_compaction_normalizes_legacy_int32_band_index",
+    "test_index_maintenance.py::TestCellGroupLayout::test_grouped_dirs_probe_equals_inline",
+    "test_index_maintenance.py::TestCompactAnnIndex::test_ann_probe_identical_and_files_collapse",
+    "test_index_maintenance.py::TestCompactAnnIndex::test_pq_probe_identical_and_archive_compacts",
+    "test_index_maintenance.py::TestIngestLifecycleExample::test_decide_loop_end_to_end",
+    "test_index_maintenance.py::TestLegacyDtypeEnforcement::test_ann_sidecar_refuses_pre_append",
+    "test_index_maintenance.py::TestLegacyDtypeEnforcement::test_band_ingest_refuses_pre_append",
+    "test_index_maintenance.py::TestLegacyRunIdWarning::test_band_ingest_warns_once_on_tag_collision",
+    "test_index_maintenance.py::TestLegacyRunIdWarning::test_namespaced_ingest_never_warns",
+    "test_index_maintenance.py::TestLegacyRunIdWarning::test_semantic_ingest_warns_on_tag_collision",
+    "test_index_maintenance.py::TestLifecycleExample::test_example_runs_end_to_end_at_sf001",
+    "test_index_maintenance.py::TestMaintenanceLock::test_band_compaction_refuses_during_delivery",
+    "test_index_maintenance.py::TestNovelIngestBatches::test_compact_band_index_preserves_decisions",
+    "test_index_maintenance.py::TestNovelIngestBatches::test_delivery2_deduped_against_delivery1_novels",
+    "test_index_maintenance.py::TestNovelIngestBatches::test_replay_reports_same_novel_set",
+    "test_index_maintenance.py::TestNovelIngestBatches::test_stream_equals_direct_calls",
+    "test_index_maintenance.py::TestNovelIngestRunId::test_fresh_checkpoint_batch0_dedups_against_prior_run",
+    "test_index_maintenance.py::TestNovelIngestRunId::test_same_run_replay_still_self_excludes",
+    "test_index_maintenance.py::TestPersistedPqIndex::test_probe_equals_inline_pq_topk",
+    "test_index_maintenance.py::TestPqAdcAgreement::test_agreement_bounds_and_self_consistency",
+    "test_index_maintenance.py::TestPqIndexAppend::test_append_encodes_with_frozen_codebook_and_probes",
+    "test_index_maintenance.py::TestPqIndexAppend::test_append_engine_resolves_from_stored_cell_count",
+    "test_index_maintenance.py::TestProbeJoinFallback::test_large_query_batch_drops_driver_pushdown",
+    "test_index_maintenance.py::TestRebuildIndex::test_ann_rebuild_equals_fresh_build_on_union",
+    "test_index_maintenance.py::TestRebuildIndex::test_pq_rebuild_equals_fresh_build_on_union",
+    "test_index_maintenance.py::TestSemanticIngestBatches::test_cumulative_screen_and_base_dedup",
+    "test_index_maintenance.py::TestSemanticIngestBatches::test_fresh_run_batch0_sees_prior_history",
+    "test_index_maintenance.py::TestSemanticIngestBatches::test_replay_reemits_identical_novels",
+    "test_index_maintenance.py::TestSemanticIngestBatches::test_streamed_equals_direct",
+    "test_index_maintenance.py::TestSemanticIngestLockContract::test_compaction_refused_during_semantic_delivery",
+    "test_index_maintenance.py::TestSemanticIngestLockContract::test_dead_owner_reclaim_through_semantic_verb",
+    "test_index_maintenance.py::TestSemanticIngestLockContract::test_semantic_delivery_refused_during_compaction",
     "test_plan_shapes.py::test_embed_cosine_has_no_cartesian_product",
     "test_properties.py::TestBucketedRankProperty::test_matches_global_window",
     "test_properties.py::TestPermutationProperty::test_block_shuffle_is_permutation_across_seeds",
@@ -98,6 +106,7 @@ _SLOW_TESTS = frozenset([
     "test_skew_and_stateful.py::TestConnectedComponentsStar::test_seed_round_contraction_is_exact",
     "test_sources.py::TestSlicedIngest::test_sliced_ingest_matches_oneshot",
     "test_span_semantic_dedup.py::TestBandedMaxBucket::test_hot_bucket_cap_drops_saturated_band",
+    "test_span_semantic_dedup.py::TestNonDefaultIdCol::test_lsh_chain_respects_id_col",
     "test_span_semantic_dedup.py::TestSemanticDedupFast::test_fast_equals_exact_on_planted_corpus",
     "test_span_semantic_dedup.py::TestSemanticDedupFast::test_routing_tie_break_on_duplicate_vectors",
     "test_span_semantic_dedup.py::TestSemanticDedupFast::test_two_level_routing_matches_flat_argmin",
@@ -117,21 +126,12 @@ _SLOW_TESTS = frozenset([
     "test_wired_ops_r10.py::TestAutoScalePosture::test_big_corpus_defaults_take_fast_path",
     "test_wired_ops_r10.py::TestAutoScalePosture::test_remove_spans_auto_picks_local_at_scale",
     "test_wired_ops_r10.py::TestAutoScalePosture::test_small_corpus_defaults_keep_exact_shape",
-    "test_wired_ops_r11.py::TestCellGroupLayout::test_grouped_dirs_probe_equals_inline",
     "test_wired_ops_r11.py::TestIvfAutoCells::test_blas_assign_equals_hof_at_forced_scale",
-    "test_wired_ops_r11.py::TestNonDefaultIdCol::test_lsh_chain_respects_id_col",
-    "test_wired_ops_r11.py::TestPersistedPqIndex::test_probe_equals_inline_pq_topk",
     "test_wired_ops_r11.py::TestRoutedAssignment::test_ivf_probe_identical_through_routing_flip",
-    "test_wired_ops_r12.py::TestPqIndexAppend::test_append_encodes_with_frozen_codebook_and_probes",
-    "test_wired_ops_r12.py::TestPqIndexAppend::test_append_engine_resolves_from_stored_cell_count",
-    "test_wired_ops_r12.py::TestProbeJoinFallback::test_large_query_batch_drops_driver_pushdown",
-    "test_wired_ops_r12.py::TestRebuildIndex::test_ann_rebuild_equals_fresh_build_on_union",
-    "test_wired_ops_r12.py::TestRebuildIndex::test_pq_rebuild_equals_fresh_build_on_union",
     "test_wired_ops_r15.py::TestCurriculumOrder::test_deterministic_and_seed_sensitive",
     "test_wired_ops_r15.py::TestMmrTopk::test_lambda_one_reduces_to_plain_topk",
     "test_wired_ops_r15.py::TestMmrTopk::test_mmr_diversifies_where_topk_duplicates",
     "test_wired_ops_r15.py::TestMmrTopk::test_pick_ranks_and_determinism",
-    "test_wired_ops_r15.py::TestSelectTrainingSetExample::test_selection_pipeline_end_to_end",
 ])
 
 

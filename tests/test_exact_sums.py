@@ -71,3 +71,39 @@ class TestLimbSums:
         r = total - q * 10**8
         want = float(q) + float(r) / 1e8
         assert got == want
+
+
+class TestLsumRecombinationGuard:
+    def test_guard_raises_instead_of_wrapping(self, spark):
+        """A top limb past the BIGINT recombination range must raise —
+        silent wrap is a cross-engine divergence (DuckDB runs the same
+        sum in HUGEINT).  1.1e8 rows of x=9.2e10 put l2 at ~1.01e15,
+        past the 9.2e14 guard."""
+        from scdataset_spark.plans.exact import lsum_cols, lsum_out
+
+        df = spark.range(0, 110_000_000, 1, 8).selectExpr(
+            "CAST(92000000000.0 AS DOUBLE) AS x"
+        )
+        agg = df.agg(*lsum_cols("x", "t")).selectExpr(lsum_out("t", "s"))
+        with pytest.raises(Exception, match="lsum_out: top limb"):
+            agg.collect()
+
+    def test_below_guard_still_exact(self, spark):
+        from scdataset_spark.plans.exact import lsum_cols, lsum_out
+
+        df = spark.range(0, 1_000, 1, 4).selectExpr(
+            "CAST(id AS DOUBLE) + 0.25 AS x"
+        )
+        got = (
+            df.agg(*lsum_cols("x", "t")).selectExpr(lsum_out("t", "s")).first()["s"]
+        )
+        assert got == 999 * 1000 / 2 + 0.25 * 1000
+
+    def test_null_group_passes_through(self, spark):
+        from scdataset_spark.plans.exact import lsum_cols, lsum_out
+
+        df = spark.range(0, 10).selectExpr("CAST(NULL AS DOUBLE) AS x")
+        got = (
+            df.agg(*lsum_cols("x", "t")).selectExpr(lsum_out("t", "s")).first()["s"]
+        )
+        assert got is None

@@ -19,23 +19,17 @@ from __future__ import annotations
 import re
 
 import pytest
-from pyspark.sql import Window
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, Window
 
 from scdataset_spark.catalog import ensure_ingested, load_table
 from scdataset_spark.operators import strategies as st
+from scdataset_spark.operators.strategies import Streaming
+from scdataset_spark.pipeline.hooks import run_hook_pipeline
+from scdataset_spark.plans.plan import with_batches
 from scdataset_spark.queries import REGISTRY
+
+from tests._helpers import collect_pos, plan_text
 from tests.conftest import SF_DIR_SMALL
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def _collect_pos(df):
-    return sorted((r["row_id"], r["pos"]) for r in df.collect())
 
 
 class TestBlockPermuteCountStar:
@@ -47,12 +41,12 @@ class TestBlockPermuteCountStar:
         base = spark.range(n).select(
             (F.col("id") * 7).alias("row_id"), F.col("id").alias("pos0")
         )
-        got = _collect_pos(
+        got = collect_pos(
             _block_permute_pos(base, block, s=1234).drop("block_id")
         )
         ref = base.withColumn("_bk", F.expr(mix_sql(f"pos0 div {block}", 1234, "spark")))
         w = Window.orderBy("_bk", "pos0")
-        want = _collect_pos(ref.withColumn("pos", F.row_number().over(w) - F.lit(1)))
+        want = collect_pos(ref.withColumn("pos", F.row_number().over(w) - F.lit(1)))
         assert got == want
 
     def test_empty_frame(self, spark):
@@ -94,7 +88,7 @@ class TestHookPipelineParallelism:
         n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # the explicit repartition is user-specified: AQE must not
         # coalesce it below the configured parallelism
-        assert f"REPARTITION_BY_NUM" in _plan(out) or out.rdd.getNumPartitions() == n_conf
+        assert f"REPARTITION_BY_NUM" in plan_text(out) or out.rdd.getNumPartitions() == n_conf
 
 
 class TestIngestedServing:
@@ -134,7 +128,7 @@ class TestNoFactPayloadBroadcast:
     )
     def test_lineitem_payload_never_builds_a_broadcast(self, spark, name):
         df = REGISTRY[name].fn(spark, SF_DIR_SMALL)
-        plan = _plan(df)
+        plan = plan_text(df)
         bad = [
             m.group(1)
             for m in re.finditer(

@@ -15,22 +15,14 @@ optimization fixed stay fixed.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Window
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, Window
 
+from scdataset_spark.catalog import load_table
 from scdataset_spark.operators import strategies as st
 from scdataset_spark.session import input_probe
+
+from tests._helpers import collect_pos, plan_text
 from tests.conftest import SF_DIR_SMALL
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def _collect_pos(df):
-    return sorted((r["row_id"], r["pos"]) for r in df.collect())
 
 
 class TestBlockPermuteBucketedOffsets:
@@ -41,7 +33,7 @@ class TestBlockPermuteBucketedOffsets:
             "_bk", F.expr(mix_sql(f"pos0 div {block}", s, "spark"))
         )
         w = Window.orderBy("_bk", "pos0")
-        return _collect_pos(
+        return collect_pos(
             ref.withColumn("pos", F.row_number().over(w) - F.lit(1))
         )
 
@@ -55,7 +47,7 @@ class TestBlockPermuteBucketedOffsets:
         base = spark.range(n).select(
             (F.col("id") * 3).alias("row_id"), F.col("id").alias("pos0")
         )
-        got = _collect_pos(
+        got = collect_pos(
             st._block_permute_pos(base, block, s=4321).drop("block_id")
         )
         assert got == self._reference(base, block, s=4321)
@@ -69,7 +61,7 @@ class TestBlockPermuteBucketedOffsets:
             F.col("id").alias("row_id"), F.col("id").alias("pos0")
         )
         assert input_probe(base)[1] is None  # range() has no files
-        plan = _plan(st._block_permute_pos(base, 8, s=1).drop("block_id"))
+        plan = plan_text(st._block_permute_pos(base, 8, s=1).drop("block_id"))
         # within-bucket window partitioned on _obkt, fed by its own
         # keyed exchange; the only remaining orderBy-window runs over
         # the <= BLOCK_OFFSET_BUCKETS-row per-bucket sums frame
@@ -88,7 +80,7 @@ class TestBlockPermuteBucketedOffsets:
         assert nbytes is not None
         assert nbytes // st._EST_MIN_BYTES_PER_ROW // 64 <= st.BLOCK_META_WINDOW_MAX
         base = li.withColumn("pos0", F.col("row_id"))
-        plan = _plan(st._block_permute_pos(base, 64, s=1).drop("block_id"))
+        plan = plan_text(st._block_permute_pos(base, 64, s=1).drop("block_id"))
         assert "hashpartitioning(_obkt" not in plan
 
     def test_scale_path_equals_window_path_on_file_backed_frame(
@@ -98,14 +90,39 @@ class TestBlockPermuteBucketedOffsets:
 
         li = load_table(spark, "lineitem", SF_DIR_SMALL).select("row_id")
         base = li.withColumn("pos0", F.col("row_id"))
-        window_shape = _collect_pos(
+        window_shape = collect_pos(
             st._block_permute_pos(base, 32, s=99).drop("block_id")
         )
         monkeypatch.setattr(st, "BLOCK_META_WINDOW_MAX", -1)
-        scale_shape = _collect_pos(
+        scale_shape = collect_pos(
             st._block_permute_pos(base, 32, s=99).drop("block_id")
         )
         assert window_shape == scale_shape
+
+    def test_weighted_gate_sized_from_draw_count(self, spark, monkeypatch, tmp_path):
+        """The weighted path sizes the blocks frame from its draw count,
+        not from the source table's bytes: many draws from a small
+        table take the scale shape, with the same positions."""
+        path = str(tmp_path / "small")
+        spark.range(100).select(
+            F.col("id").alias("row_id"), (F.col("id") % 5 + 1).alias("w")
+        ).write.parquet(path)
+        small = spark.read.parquet(path)
+        block, draws = 4, 2000
+        table_blocks = input_probe(small)[1] // st._EST_MIN_BYTES_PER_ROW // block
+        assert table_blocks < draws // block
+        strat = st.BlockWeightedSampling(
+            block_size=block, weight_col="w", total_size=draws, replace=True
+        )
+        monkeypatch.setattr(st, "DIRECT_PERMUTE_MAX", 0)
+        monkeypatch.setattr(st, "BLOCK_META_WINDOW_MAX", 10**9)
+        window_shape = collect_pos(strat.plan(small, seed=3))
+        monkeypatch.setattr(
+            st, "BLOCK_META_WINDOW_MAX", (table_blocks + draws // block) // 2
+        )
+        planned = strat.plan(small, seed=3)
+        assert "_obkt" in plan_text(planned)
+        assert collect_pos(planned) == window_shape
 
 
 class TestWeightedDrawsSingleScan:
@@ -139,7 +156,7 @@ class TestWeightedDrawsSingleScan:
         strat = st.BlockWeightedSampling(
             block_size=16, weight_col="l_quantity", total_size=300, replace=True
         )
-        plan = _plan(strat.plan(li, seed=5))
+        plan = plan_text(strat.plan(li, seed=5))
         assert "_lo" not in plan and "_hi" not in plan
 
 
@@ -159,10 +176,10 @@ class TestTopkShapeGate:
         c = e.select(F.col("vec_id").alias("c_id"), "embedding")
         assert input_probe(c)[1] is not None
         auto = sim.brute_force_topk(q, c, k=5)
-        assert "_salt" not in _plan(auto)
+        assert "_salt" not in plan_text(auto)
         monkeypatch.setattr(sim, "TWO_PHASE_MIN_BYTES", 0)
         forced = sim.brute_force_topk(q, c, k=5)
-        assert "_salt" in _plan(forced)
+        assert "_salt" in plan_text(forced)
         assert sorted(map(tuple, auto.collect())) == sorted(
             map(tuple, forced.collect())
         )
@@ -179,7 +196,7 @@ class TestTopkShapeGate:
         )
         q = vecs.where("c_id < 2").withColumnRenamed("c_id", "q_id")
         assert input_probe(vecs)[1] is None
-        assert "_salt" in _plan(sim.brute_force_topk(q, vecs, k=3))
+        assert "_salt" in plan_text(sim.brute_force_topk(q, vecs, k=3))
 
 
 class TestSimilarityPythonStagePartitions:
@@ -196,7 +213,7 @@ class TestSimilarityPythonStagePartitions:
             emb, id_col="vec_id", vec="v", threshold=0.5,
             bands=2, rows_per_band=4, dim=8,
         )
-        assert "REPARTITION_BY_NUM" in _plan(out)
+        assert "REPARTITION_BY_NUM" in plan_text(out)
 
     def test_dominance_stage_keeps_configured_partitions(self, spark):
         import scdataset_spark.operators.similarity as sim
@@ -210,7 +227,7 @@ class TestSimilarityPythonStagePartitions:
         out = sim.semantic_dedup_fast(
             emb, id_col="vec_id", vec="v", threshold=0.98, n_rows=64
         )
-        assert "REPARTITION_BY_NUM" in _plan(out)
+        assert "REPARTITION_BY_NUM" in plan_text(out)
 
 
 class TestDropLastTopK:
@@ -240,7 +257,7 @@ class TestDropLastTopK:
         w_b = Window.orderBy(
             F.expr(mix_sql(f"pos0 div {block}", seed, "spark")), F.col("pos0")
         )
-        return _collect_pos(
+        return collect_pos(
             kept.withColumn("pos", F.row_number().over(w_b) - F.lit(1)).select(
                 "row_id", "pos"
             )
@@ -257,7 +274,7 @@ class TestDropLastTopK:
     )
     def test_topk_drop_equals_global_window_reference(self, spark, n, block):
         base = spark.range(n).select(F.col("id").alias("row_id"))
-        got = _collect_pos(
+        got = collect_pos(
             st.BlockShuffling(block_size=block, drop_last=True, assume_dense=True)
             .plan(base, seed=7)
             .select("row_id", "pos")
@@ -271,7 +288,7 @@ class TestDropLastTopK:
         from scdataset_spark.catalog import load_table
 
         li = load_table(spark, "lineitem", SF_DIR_SMALL)
-        plan = _plan(
+        plan = plan_text(
             st.BlockShuffling(block_size=64, drop_last=True, assume_dense=True)
             .plan(li, seed=7)
             .select("row_id", "pos")

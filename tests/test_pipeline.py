@@ -9,7 +9,6 @@ import sys
 
 import numpy as np
 import pytest
-
 from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
@@ -18,6 +17,7 @@ from scdataset_spark.pipeline.export import iterate_batches
 from scdataset_spark.pipeline.hooks import run_hook_pipeline
 from scdataset_spark.pipeline.multiindexable import MultiIndexable
 from scdataset_spark.plans.plan import with_batches
+
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -391,6 +391,24 @@ class TestArrowExport:
             assert rid == sorted(rid)  # Streaming: pos order == row_id order
             total += t.num_rows
         assert total == li.count()
+
+    def test_export_sweeps_orphaned_temp_files(self, spark, tmp_path):
+        """A write attempt killed between its temp write and its rename
+        leaves ``fetch_*.arrow.tmp.<uuid>``; the next export removes it."""
+        from scdataset_spark.pipeline.export import write_arrow_fetches
+
+        out = tmp_path / "arrow_epoch"
+        out.mkdir()
+        stale = out / "fetch_00000000.arrow.tmp.0123456789abcdef"
+        stale.write_bytes(b"partial")
+        planned = with_batches(
+            Streaming().plan(spark.range(40).withColumnRenamed("id", "row_id"), seed=1),
+            batch_size=8,
+            fetch_factor=2,
+        )
+        write_arrow_fetches(planned, str(out), columns=["row_id"])
+        assert not stale.exists()
+        assert not list(out.glob("*.tmp.*"))
 
 
 class TestShuffleWithinFetch:

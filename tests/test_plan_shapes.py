@@ -6,19 +6,16 @@ regressions that would only show up at scale.
 
 from __future__ import annotations
 
+import re
+
 from scdataset_spark.queries import REGISTRY
-from tests.conftest import SF_DIR
+
+from tests._helpers import assert_no_jobs, plan_text
+from tests.conftest import SF_DIR, SF_DIR_SMALL
 
 
 def _plan(spark, name: str) -> str:
-    import contextlib
-    import io
-
-    df = REGISTRY[name].fn(spark, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return plan_text(REGISTRY[name].fn(spark, SF_DIR))
 
 
 def test_q6_pushdown_and_pruning(spark):
@@ -41,15 +38,9 @@ def test_q5_broadcasts_dimensions(spark):
 
 def test_scan_filter_stays_in_codegen(spark):
     # simple-mode explain marks whole-stage-codegen stages with "*(n)"
-    import contextlib
-    import io
-
     df = REGISTRY["q1_pricing_summary"].fn(spark, SF_DIR)
     df.collect()  # AQE only shows the final (codegen-annotated) plan post-run
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain()
-    plan = buf.getvalue()
+    plan = plan_text(df, "simple")
     assert "*(" in plan
     assert "BatchEvalPython" not in plan
 
@@ -77,19 +68,16 @@ def test_block_shuffle_drop_last_plans_lazily(spark):
     from scdataset_spark.operators.strategies import BlockShuffling
 
     li = load_table(spark, "lineitem", SF_DIR)
-    sc = spark.sparkContext
-    group = "lazy-plan-check"
-    sc.setJobGroup(group, "plan construction must be job-free")
-    try:
-        planned = BlockShuffling(block_size=64, drop_last=True, assume_dense=True).plan(
+    planned = assert_no_jobs(
+        spark.sparkContext,
+        "lazy-plan-check",
+        lambda: BlockShuffling(block_size=64, drop_last=True, assume_dense=True).plan(
             li, seed=7
-        )
-        assert "pos" in planned.columns
-        # schema hygiene: internal helper columns must not leak
-        assert "block_id" not in planned.columns and "pos0" not in planned.columns
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        ),
+    )
+    assert "pos" in planned.columns
+    # schema hygiene: internal helper columns must not leak
+    assert "block_id" not in planned.columns and "pos0" not in planned.columns
 
 
 def test_embed_cosine_has_no_cartesian_product(spark):
@@ -380,25 +368,16 @@ def test_stratified_sample_plans_lazily_with_broadcast_quotas(spark):
     from scdataset_spark.operators.strategies import StratifiedSampling
 
     cust = load_table(spark, "customer", SF_DIR)
-    sc = spark.sparkContext
-    group = "stratified-lazy-check"
-    sc.setJobGroup(group, "plan construction must be job-free")
-    try:
-        planned = StratifiedSampling(
+    planned = assert_no_jobs(
+        spark.sparkContext,
+        "stratified-lazy-check",
+        lambda: StratifiedSampling(
             stratum_col="c_mktsegment", fraction_ppm=150_000
-        ).plan(cust, seed=7)
-        assert "pos" in planned.columns
-        assert "_srnk" not in planned.columns and "_q" not in planned.columns
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        planned.explain("formatted")
-    plan = buf.getvalue()
+        ).plan(cust, seed=7),
+    )
+    assert "pos" in planned.columns
+    assert "_srnk" not in planned.columns and "_q" not in planned.columns
+    plan = plan_text(planned)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 

@@ -70,13 +70,13 @@ LIBRARY_ONLY = {
     "partitioned append) — non-idempotent by design (every call grows "
     "the index), so it cannot be a rerunnable registered query; "
     "assignment contract + probe-visibility pinned in "
-    "tests/test_wired_ops_r11.py::TestPersistedAnnIndex",
+    "tests/test_index_maintenance.py::TestPersistedAnnIndex",
     "append_to_pq_index": "incremental maintenance of the persisted "
     "IVF-PQ layout (encode with the FROZEN stored codebook, assign "
     "with the FROZEN stored centroids, partitioned append of codes + "
     "archive) — non-idempotent by design like its IVF sibling; "
     "encode contract + probe-visibility pinned in "
-    "tests/test_wired_ops_r12.py::TestPqIndexAppend",
+    "tests/test_index_maintenance.py::TestPqIndexAppend",
     "assign_cells_routed": "bound-pruned two-level EXACT assignment "
     "shared by semantic_dedup_fast and the IVF builds past ROUTE_CELLS "
     "centroids (the flat X@C.T is O(n*k) — the measured r11 build "
@@ -125,7 +125,7 @@ LIBRARY_ONLY = {
     "like its gate/ANN siblings, so it cannot be a rerunnable "
     "registered query; decision preservation across the compaction "
     "boundary + crash-safe swap pinned in "
-    "tests/test_index_maintenance_r13.py::TestNovelIngestBatches",
+    "tests/test_index_maintenance.py::TestNovelIngestBatches",
     "running_user_stats": "applyInPandasWithState op; rows-only check "
     "by design (stateful streaming is not SQL-expressible)",
     "capped_sessions_stateful": "stateful twin of ev_session_capped",

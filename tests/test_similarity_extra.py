@@ -5,15 +5,15 @@ from __future__ import annotations
 import os
 
 import pytest
-
 from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
 from scdataset_spark.operators.similarity import brute_force_topk, ivf_topk
-from scdataset_spark.operators.strategies import BlockWeightedSampling, attach_weights
+from scdataset_spark.operators.strategies import attach_weights, Streaming
 from scdataset_spark.pipeline.export import write_epoch_plan
-from scdataset_spark.operators.strategies import Streaming
 from scdataset_spark.plans.plan import with_batches
+
+from tests._helpers import assert_no_jobs
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -207,15 +207,12 @@ class TestAttachWeights:
         weights = spark.range(3).select(
             F.col("id").alias("pos"), F.lit(1.0).alias("w")
         )
-        sc = spark.sparkContext
-        group = "attach-weights-lazy-check"
-        sc.setJobGroup(group, "plan construction must be job-free")
-        try:
-            planned = attach_weights(sub, weights, scope="subset")
-            assert "w" in planned.columns
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        planned = assert_no_jobs(
+            spark.sparkContext,
+            "attach-weights-lazy-check",
+            lambda: attach_weights(sub, weights, scope="subset"),
+        )
+        assert "w" in planned.columns
 
     def test_subset_scope_positional_alignment(self, spark):
         cust = load_table(spark, "customer", SF_DIR_SMALL)

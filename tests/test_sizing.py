@@ -16,13 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from scdataset_spark.session import _cluster_width, input_probe
+from tests._helpers import plan_text
 from tests.conftest import SF_DIR_SMALL
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def test_local_bytes_match_file_sizes(spark, tmp_path):
@@ -64,16 +59,16 @@ def test_unstatable_inputs_take_the_scale_shapes(spark, monkeypatch, case):
     assert input_probe(li) == (n, None)
 
     base = li.withColumn("pos0", F.col("row_id"))
-    assert "hashpartitioning(_obkt" in _plan(st._block_permute_pos(base, 64, s=1))
+    assert "hashpartitioning(_obkt" in plan_text(st._block_permute_pos(base, 64, s=1))
 
     draws = st.BlockWeightedSampling(
         block_size=16, weight_col="l_quantity", total_size=300, replace=True
     ).plan(li, seed=5)
-    assert "_lo" in _plan(draws)  # the fused-meta shape
+    assert "_lo" in plan_text(draws)  # the fused-meta shape
 
     q = emb.where("vec_id < 3").select(F.col("vec_id").alias("q_id"), "embedding")
     c = emb.select(F.col("vec_id").alias("c_id"), "embedding")
-    assert "_salt" in _plan(sim.brute_force_topk(q, c, k=5))
+    assert "_salt" in plan_text(sim.brute_force_topk(q, c, k=5))
 
     assert adaptive_rank_buckets(li) == min(4096, max(64, 4 * _cluster_width(li)))
     assert widen_if_narrow(li) is li

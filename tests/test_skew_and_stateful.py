@@ -12,6 +12,7 @@ from scdataset_spark.catalog import load_table
 from scdataset_spark.operators.dedup import with_shingles
 from scdataset_spark.operators.skew import cap_hot_tokens, salted_count, write_bucketed
 from scdataset_spark.plans.plan import exact_num_batches
+from tests._helpers import plan_text
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -121,17 +122,11 @@ class TestSkew:
         a = spark.table("b_orders")
         b = spark.table("b_lineitem")
         joined = a.join(b, a.o_orderkey == b.l_orderkey)
-        import contextlib
-        import io
-
         # force the shuffle-join path (tiny test tables would broadcast)
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                joined.explain()
-            plan = buf.getvalue()
+            plan = plan_text(joined, "simple")
             # co-located buckets: sort-merge join with NO Exchange
             assert "SortMergeJoin" in plan
             assert "Exchange hashpartitioning" not in plan

@@ -7,7 +7,6 @@ tolerance bands, class-balance bands, len==execution invariants.
 from __future__ import annotations
 
 import pytest
-
 from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
@@ -17,7 +16,13 @@ from scdataset_spark.operators.strategies import (
     ClassBalancedSampling,
     Streaming,
 )
-from scdataset_spark.plans.plan import ddp_filter, exact_num_batches, with_batches, with_pos
+from scdataset_spark.plans.plan import (
+    ddp_filter,
+    exact_num_batches,
+    with_batches,
+    with_pos,
+)
+
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -164,6 +169,28 @@ class TestExactLen:
         for i in range(world):
             for j in range(i + 1, world):
                 assert not parts[i] & parts[j]
+
+    def test_closed_form_equals_per_fetch_count(self):
+        """The closed form equals the per-fetch loop it replaced, over
+        every small configuration and every rank."""
+
+        def per_fetch(n, bs, ff, drop, world, rank):
+            fetch = bs * ff
+            n_fetches = (n + fetch - 1) // fetch
+            total = 0
+            for f in range(rank, n_fetches, world):
+                size = fetch if f < n_fetches - 1 else n - (n_fetches - 1) * fetch
+                total += size // bs if drop else (size + bs - 1) // bs
+            return total
+
+        for n in range(151):
+            for bs in range(1, 6):
+                for ff in range(1, 5):
+                    for drop in (False, True):
+                        for world in range(1, 5):
+                            for rank in range(world):
+                                args = (n, bs, ff, drop, world, rank)
+                                assert exact_num_batches(*args) == per_fetch(*args), args
 
 
 class TestScalablePos:

@@ -1,0 +1,91 @@
+"""Repository tooling, without Spark: the slow-lane list in
+``tests/conftest.py`` and the summary of the A/B runner
+``scripts/ab.py``."""
+
+from __future__ import annotations
+
+import ast
+import functools
+import importlib.util
+import os
+
+from tests.conftest import _SLOW_TESTS
+
+TESTS = os.path.dirname(os.path.abspath(__file__))
+
+
+@functools.cache
+def _test_ids(path: str) -> frozenset[str]:
+    """``test`` and ``Class::test`` for every test ``path`` defines."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    ids = set()
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("test"):
+            ids.add(node.name)
+        elif isinstance(node, ast.ClassDef):
+            ids.update(
+                f"{node.name}::{m.name}"
+                for m in node.body
+                if isinstance(m, ast.FunctionDef) and m.name.startswith("test")
+            )
+    return frozenset(ids)
+
+
+def test_slow_lane_entries_name_existing_tests():
+    """A stale entry would silently move its test into the default lane."""
+    stale = []
+    for entry in sorted(_SLOW_TESTS):
+        file, _, test = entry.partition("::")
+        path = os.path.join(TESTS, file)
+        if not os.path.isfile(path) or test not in _test_ids(path):
+            stale.append(entry)
+    assert not stale
+
+
+def _ab():
+    path = os.path.join(os.path.dirname(TESTS), "scripts", "ab.py")
+    spec = importlib.util.spec_from_file_location("ab", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _summary(base, change, better="higher", bound=0.24):
+    runs = [
+        {"side": side, "workload": "w", "seed": seed,
+         "result": {"metrics": {"m": {"value": v, "unit": "1/s"}}}}
+        for side, values in (("base", base), ("change", change))
+        for seed, v in enumerate(values, 1)
+    ]  # fmt: skip
+    (row,) = _ab().summarize(runs, [{"name": "m", "better": better, "bound": bound}])
+    return row
+
+
+class TestAbSummary:
+    def test_ties_count_for_neither_side(self):
+        row = _summary([10, 20, 30, 40], [10, 21, 29, 40])
+        assert (row["wins"], row["pairs"]) == (1, 4)
+        assert _summary([10, 20, 30, 40], [10, 21, 29, 40], better="lower")["wins"] == 1
+
+    def test_better_direction_flips_wins_and_worse(self):
+        base = [100 + i for i in range(10)]
+        change = [50 + i for i in range(10)]
+        higher = _summary(base, change, better="higher")
+        assert (higher["wins"], higher["verdict"]) == (0, "worse")
+        lower = _summary(base, change, better="lower")
+        assert (lower["wins"], lower["verdict"]) == (10, "gain")
+        assert higher["ratio"] == lower["ratio"] == 54.5 / 104.5
+
+    def test_nine_of_ten_inside_base_iqr_is_not_gain(self):
+        base = [100 + 10 * i for i in range(10)]  # IQR 45
+        change = [b + 1 for b in base[:9]] + [base[9] - 1]
+        row = _summary(base, change, bound=0.5)
+        assert row["wins"] == 9
+        assert row["verdict"] == "same"
+
+    def test_base_iqr_wider_than_bound_is_unresolved(self):
+        base = [50, 150] * 5  # IQR 100 on a median of 100
+        assert _summary(base, list(base))["verdict"] == "unresolved"
+        # unless every change run beats every base run
+        assert _summary(base, [151] * 10)["verdict"] == "same"

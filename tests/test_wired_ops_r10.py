@@ -14,20 +14,20 @@
 
 from __future__ import annotations
 
-import contextlib
-import io
+import re
 
+import numpy as np
+from pyspark.sql import functions as F
+
+from scdataset_spark.catalog import load_table
 from scdataset_spark.operators.dedup import (
     duplicate_span_coverage,
     remove_duplicate_spans,
 )
+from scdataset_spark.queries import REGISTRY
 
-
-def _plan_str(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests._helpers import plan_text
+from tests.conftest import SF_DIR, SF_DIR_SMALL
 
 
 class TestShortDocGramGuard:
@@ -137,14 +137,14 @@ class TestAutoScalePosture:
             c, id_col="vec_id", vec_col="v", threshold=0.98,
             out_dim=16, n_rows=10_000_000,
         )
-        plan = _plan_str(auto_big)
+        plan = plan_text(auto_big)
         assert "MapInPandas" in plan  # vectorized projection + local Gram
         oracle_shape = projected_bucket_pairs(
             c, id_col="vec_id", vec_col="v", threshold=0.98,
             out_dim=16, verify_local=False, max_bucket=None,
             vectorized_projection=False,
         )
-        assert "MapInPandas" not in _plan_str(oracle_shape)
+        assert "MapInPandas" not in plan_text(oracle_shape)
         got = {(r.id_a, r.id_b) for r in auto_big.collect()}
         want = {(r.id_a, r.id_b) for r in oracle_shape.collect()}
         assert got == want and want  # same pairs, and some exist
@@ -161,7 +161,7 @@ class TestAutoScalePosture:
         auto_small = projected_bucket_pairs(
             c, id_col="vec_id", vec_col="v", threshold=0.98, out_dim=16,
         )  # triggers the resolution count; small -> exact shape
-        assert "MapInPandas" not in _plan_str(auto_small)
+        assert "MapInPandas" not in plan_text(auto_small)
         pinned = projected_bucket_pairs(
             c, id_col="vec_id", vec_col="v", threshold=0.98,
             out_dim=16, verify_local=False, max_bucket=None,
@@ -179,15 +179,15 @@ class TestAutoScalePosture:
         ]
         df = spark.createDataFrame(docs, "doc_id bigint, text string")
         auto_big = remove_duplicate_spans(df, k=5, n_rows=10_000_000)
-        assert "MapInPandas" in _plan_str(auto_big)  # Arrow mask rebuild
+        assert "MapInPandas" in plan_text(auto_big)  # Arrow mask rebuild
         rel = remove_duplicate_spans(df, k=5, rebuild="relational")
-        assert "MapInPandas" not in _plan_str(rel)
+        assert "MapInPandas" not in plan_text(rel)
         assert sorted(map(tuple, auto_big.collect())) == sorted(
             map(tuple, rel.collect())
         )
         # below the threshold (the resolution count itself): relational
         auto_small = remove_duplicate_spans(df, k=5)
-        assert "MapInPandas" not in _plan_str(auto_small)
+        assert "MapInPandas" not in plan_text(auto_small)
 
 
 class TestHotCellGuard:
@@ -426,8 +426,8 @@ class TestProductQuantization:
         assert hof == blas
         # auto resolution: n_rows forced large -> the BLAS mapInPandas plan
         auto_big = pq_encode(e, n_rows=10_000_000)
-        assert "MapInPandas" in _plan_str(auto_big)
-        assert "MapInPandas" not in _plan_str(pq_encode(e, vectorized=False))
+        assert "MapInPandas" in plan_text(auto_big)
+        assert "MapInPandas" not in plan_text(pq_encode(e, vectorized=False))
 
     def test_vectorized_assign_matches_hof(self, spark):
         """The BLAS cell assignment must return the identical IVF-PQ
@@ -526,7 +526,7 @@ class TestRound10PlanShapes:
         from scdataset_spark.queries import REGISTRY
         from tests.conftest import SF_DIR
 
-        plan = _plan_str(REGISTRY["sim_pq_ann"].fn(spark, SF_DIR))
+        plan = plan_text(REGISTRY["sim_pq_ann"].fn(spark, SF_DIR))
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
@@ -534,7 +534,7 @@ class TestRound10PlanShapes:
         from scdataset_spark.queries import REGISTRY
         from tests.conftest import SF_DIR
 
-        plan = _plan_str(REGISTRY["pipe_curation_gated"].fn(spark, SF_DIR))
+        plan = plan_text(REGISTRY["pipe_curation_gated"].fn(spark, SF_DIR))
         assert "CartesianProduct" not in plan
         # the 1-row gate summary rides a broadcast onto the curated rows
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
@@ -543,7 +543,7 @@ class TestRound10PlanShapes:
         from scdataset_spark.queries import REGISTRY
         from tests.conftest import SF_DIR
 
-        plan = _plan_str(REGISTRY["o22_component_split"].fn(spark, SF_DIR))
+        plan = plan_text(REGISTRY["o22_component_split"].fn(spark, SF_DIR))
         assert "CartesianProduct" not in plan
 
 
@@ -582,7 +582,7 @@ class TestProfileDrift:
         from scdataset_spark.queries import REGISTRY
         from tests.conftest import SF_DIR
 
-        plan = _plan_str(REGISTRY["dq_profile_drift"].fn(spark, SF_DIR))
+        plan = plan_text(REGISTRY["dq_profile_drift"].fn(spark, SF_DIR))
         assert "CartesianProduct" not in plan
         import re
 

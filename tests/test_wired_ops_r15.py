@@ -11,17 +11,14 @@
 
 from __future__ import annotations
 
-import contextlib
-import io
-
+import pytest
 from pyspark.sql import functions as F
 
+from scdataset_spark.catalog import load_table
+from scdataset_spark.operators.similarity import brute_force_topk
 
-def _plan_str(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests._helpers import plan_text
+from tests.conftest import SF_DIR, SF_DIR_SMALL
 
 
 class TestNgramDiversity:
@@ -103,7 +100,7 @@ class TestDsirSelect:
     def test_topk_is_take_ordered_not_global_sort(self, spark):
         from scdataset_spark.ml import dsir_logratio
 
-        plan = _plan_str(dsir_logratio(self._docs(spark), "lang = 'en'", k=5))
+        plan = plan_text(dsir_logratio(self._docs(spark), "lang = 'en'", k=5))
         assert "TakeOrderedAndProject" in plan
         # the limit must not materialize a full global Sort stage
         assert "Sort [" not in plan.split("TakeOrderedAndProject")[0]
@@ -478,30 +475,3 @@ class TestUnimaxBudget:
 
         with pytest.raises(ValueError, match="budget >= 0"):
             unimax_budget(self._docs(spark), budget=-1)
-
-
-class TestSelectTrainingSetExample:
-    def test_selection_pipeline_end_to_end(self, spark):
-        """examples/select_training_set.py composes the round-15 family
-        (drift gate -> gopher -> DSIR -> diversity -> unimax ->
-        curriculum -> MMR); the trace invariants pin each stage."""
-        import importlib.util
-        import os
-
-        spec = importlib.util.spec_from_file_location(
-            "select_training_set",
-            os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                "examples", "select_training_set.py",
-            ),
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        trace = mod.run(spark, "/root/testdata/sf0.001", log=lambda *_: None)
-        assert trace["total_psi"] <= mod.PSI_THRESHOLD
-        assert trace["n_docs"] >= trace["n_gopher"] >= trace["n_selected"] > 0
-        assert trace["n_selected"] <= mod.SELECT_K
-        assert trace["budget_total"] <= mod.BUDGET
-        assert trace["diversity_sources"] > 0 and trace["min_distinct_1"] > 0
-        assert trace["curriculum_rows"] == trace["n_selected"]
-        assert trace["mmr_rows"] == 8  # 2 queries x k=4, diversified

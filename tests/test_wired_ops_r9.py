@@ -7,29 +7,23 @@ from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
+from scdataset_spark.operators.dedup import (
+    duplicate_span_coverage,
+    remove_duplicate_spans,
+)
 from scdataset_spark.operators.quality import distribution_drift, volume_anomalies
 from scdataset_spark.operators.similarity import random_projection
-from scdataset_spark.operators.strategies import Streaming, mixture_plan
+from scdataset_spark.operators.strategies import mixture_plan, Streaming
 from scdataset_spark.operators.textanalysis import chunk_documents
 from scdataset_spark.plans.plan import with_batches
+
+from tests._helpers import assert_no_jobs
 from tests.conftest import SF_DIR_SMALL
-
-
-def _assert_no_jobs(sc, group, fn):
-    """Run ``fn`` inside a job group and pin that it scheduled NO job —
-    the lazy-plan-construction contract (same pattern as
-    test_subset_scope_plan_construction_runs_no_job)."""
-    sc.setJobGroup(group, "plan construction must be job-free")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    return out
 
 
 class TestChunkDocuments:
@@ -96,7 +90,7 @@ class TestMixturePlan:
 
     def test_plan_construction_runs_no_job(self, spark):
         docs = load_table(spark, "documents", SF_DIR_SMALL, with_row_id=False)
-        _assert_no_jobs(
+        assert_no_jobs(
             spark.sparkContext,
             "mixture-plan-lazy",
             lambda: mixture_plan(docs, {"src0": 500_000, "src1": 500_000}),
@@ -196,7 +190,7 @@ class TestBatchPlanJobFree:
         # algebra; only exact_num_batches' closed form (pure Python) or
         # an explicit action may run anything
         li = load_table(spark, "lineitem", SF_DIR_SMALL)
-        _assert_no_jobs(
+        assert_no_jobs(
             spark.sparkContext,
             "o12-batch-plan-lazy",
             lambda: with_batches(
