@@ -7,15 +7,20 @@ Three export paths:
   DataLoader-yield analogue, for single-consumer training loops.  The
   frame is sorted on ``order_col`` and streamed one partition at a
   time (``toLocalIterator`` with prefetch — nothing is collected
-  whole).  Partitions cross to the driver as Arrow record batches: a
-  ``mapInArrow`` stage writes each sorted record batch as one Arrow
-  IPC blob, the driver reads it with ``pyarrow.ipc`` and decodes each
-  numeric column to numpy once per record batch.  Batches are
-  contiguous slices of those arrays; a remainder carries across
-  record-batch and partition edges.  Other columns (strings, nulls,
-  arrays, ...) are built per batch from their Python values.  The
-  arrays keep the dtypes ``np.array`` gives a ``collect()`` row's
-  values (see the function doc) and are writable.
+  whole).  The exact frame ``hooks.run_hook_pipeline`` returns is
+  already in ``pos`` order partition by partition (fetch order, each
+  fetch ``pos``-sorted; see that module's doc), so with
+  ``order_col="pos"`` it streams without the sort: no range exchange,
+  no sampling job that would run the hooks a second time, and the
+  first batch arrives when the first partition is done.  Partitions
+  cross to the driver as Arrow record batches: a ``mapInArrow`` stage
+  writes each record batch as one Arrow IPC blob, the driver reads it
+  with ``pyarrow.ipc`` and decodes each numeric column to numpy once
+  per record batch.  Batches are contiguous slices of those arrays; a
+  remainder carries across record-batch and partition edges.  Other
+  columns (strings, nulls, arrays, ...) are built per batch from their
+  Python values.  The arrays keep the dtypes ``np.array`` gives a
+  ``collect()`` row's values (see the function doc) and are writable.
 
 - ``write_epoch_plan``: the scale path.  Materializes one epoch as
   parquet partitioned by ``fetch_id`` with rows sorted by ``pos``
@@ -67,14 +72,21 @@ def iterate_batches(
 
     The frame streams one partition at a time (``toLocalIterator`` with
     prefetch); each partition crosses as Arrow record batches (see the
-    module doc).  Columns must be types Spark can hand to Arrow;
-    ``batch_size`` must be at least 1."""
+    module doc).  It is sorted on ``order_col`` first, except when
+    ``order_col`` is ``"pos"`` and ``planned`` is the very object
+    ``run_hook_pipeline`` returned: its partitions are already in
+    ``pos`` order, so it streams as it is.  Any frame derived from it
+    (``.where``, ``.select``, a join) is sorted.  The unsorted stream
+    checks its ``pos`` order as it goes and raises ``ValueError`` if a
+    hook changed ``pos`` against the fetch order.  Columns must be types
+    Spark can hand to Arrow; ``batch_size`` must be at least 1."""
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     names = list(dict.fromkeys(columns))
-    ship = names or [order_col]
-    df = planned.select(*dict.fromkeys([order_col, *ship])).orderBy(order_col).select(*ship)
+    df, unsorted = _streamed(planned, order_col, names or [order_col])
     fields = df.schema.fields
+    k = df.columns.index("pos") if unsorted else None
+    last = -np.inf
 
     def to_ipc(batches):
         # function-local import + def: pickled by value to the workers
@@ -93,6 +105,14 @@ def iterate_batches(
     for row in df.mapInArrow(to_ipc, "ipc binary").toLocalIterator(prefetchPartitions=True):
         rb = pa.ipc.open_stream(pa.py_buffer(row[0])).read_next_batch()
         cols = [(a, _numeric(a)) for a in rb.columns]
+        if unsorted:
+            p = cols[k][1]
+            if p is None or p[0] < last or (p[1:] < p[:-1]).any():
+                raise ValueError(
+                    "run_hook_pipeline's output is not in pos order: a hook "
+                    "changed pos, or fetch_id does not grow with pos"
+                )
+            last = p[-1]
         lo, n = 0, rb.num_rows
         while lo < n:
             take = min(batch_size - held, n - lo)
@@ -104,6 +124,25 @@ def iterate_batches(
                 seg, held = [], 0
     if seg and not drop_last:
         yield _assemble(seg, names, fields)
+
+
+def _streamed(
+    planned: DataFrame, order_col: str, ship: list[str]
+) -> tuple[DataFrame, bool]:
+    """The frame ``iterate_batches`` streams, ``ship`` in ``order_col``
+    order partition by partition, and whether it streams unsorted.  It
+    is sorted unless it is the exact object ``run_hook_pipeline``
+    returned and the order is its ``pos`` (a private marker on that
+    object, not on its plan).  Unsorted, ``pos`` also rides along, last
+    when not shipped, so the driver can check the order it relies on."""
+    if (
+        order_col == "pos"
+        and vars(planned).get("_partitions_in_pos_order", False)
+        and "pos" in planned.columns
+    ):
+        return planned.select(*dict.fromkeys([*ship, "pos"])), True
+    keep = dict.fromkeys([order_col, *ship])
+    return planned.select(*keep).orderBy(order_col).select(*ship), False
 
 
 def _numeric(arr: pa.Array) -> np.ndarray | None:

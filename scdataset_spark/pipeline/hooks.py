@@ -18,6 +18,18 @@ task; reference O14 worker splitting is subsumed).
 
 ``fetch_callback`` (T1 — the raw read) is Spark's own columnar scan; a
 custom source belongs in ``sources/``, not here.
+
+Partition order: the stage's input is partitioned once by range on
+``fetch_id`` (``plans.plan._fetch_ordered``; a ``with_batches`` window
+already did it, and then no second exchange is added).  So every fetch
+is one group of one partition, groups run in ascending ``fetch_id``
+within a partition, and partition ``i`` holds only fetches below those
+of partition ``i + 1``.  Each fetch's output leaves the stage sorted by
+``pos`` when ``pos`` is an output column, even if a hook reordered it.
+With ``with_batches``' ``fetch_id = pos div fetch_size`` (hooks keeping
+each row's ``pos``), the output in partition order is therefore in
+``pos`` order, and ``export.iterate_batches`` streams it without a
+global sort, which would run every hook a second time to sample it.
 """
 
 from __future__ import annotations
@@ -27,6 +39,8 @@ from collections.abc import Callable
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from scdataset_spark.plans.plan import _fetch_ordered, _is_fetch_ordered
 
 
 def run_hook_pipeline(
@@ -61,7 +75,18 @@ def run_hook_pipeline(
     Returns a DataFrame with ``output_schema``; the hooks see pandas
     frames sorted by ``pos`` (the strategy's yield order), matching the
     reference contract that hooks observe fetch/batch order
-    (``docs/source/transforms.rst:39-63``).
+    (``docs/source/transforms.rst:39-63``).  Each hook runs once per
+    fetch.
+
+    The input is range-partitioned on ``fetch_id`` unless Spark's plan
+    shows it already is (see the module doc); the returned frame's
+    partitions hold its fetches in ascending ``fetch_id``, each sorted
+    by ``pos`` when the output has ``pos``.  ``iterate_batches(...,
+    order_col="pos")`` streams exactly this returned object in that
+    order with no sort; a frame derived from it is sorted as usual.
+    That order is ``pos`` order when ``fetch_id`` grows with ``pos``
+    (``with_batches`` builds it so) and the hooks keep each row's
+    ``pos``; the stream checks this and raises if it does not hold.
     """
 
     def _in_pos_order(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -73,6 +98,12 @@ def run_hook_pipeline(
         return pdf.sort_values("pos", ignore_index=True)
 
     def process_fetch(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = run_hooks(pdf)
+        # the stage's partition-order contract: a fetch leaves in pos
+        # order even when a hook reordered it
+        return _in_pos_order(out) if "pos" in out.columns else out
+
+    def run_hooks(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         if fetch_callback is not None:
@@ -121,20 +152,11 @@ def run_hook_pipeline(
             return pdf.iloc[0:0]
         return pd.concat(out, ignore_index=True)
 
-    # r15 (guide §2.2/§4): AQE's partition coalescing targets BYTES, so
-    # the small plan rows (~24 MB at sf0.1) collapse to a handful of
-    # post-shuffle partitions — and the Python hook stage, whose cost is
-    # per-ROW user code rather than bytes, runs on a third of the cores
-    # (measured: 11/32 tasks, full query 0.99 s vs 0.70 s fixed).  An
-    # explicit user-specified partition count is exempt from AQE
-    # coalescing; size it from spark.sql.shuffle.partitions so the same
-    # code follows the deployment's parallelism knob at cluster scale.
-    # (shared helper handles the non-numeric conf case, e.g. "auto")
-    from scdataset_spark.session import python_stage_partitions
-
-    n_parts = python_stage_partitions(planned)
-    return (
-        planned.repartition(n_parts, "fetch_id")
-        .groupBy("fetch_id")
-        .applyInPandas(process_fetch, schema=output_schema)
-    )
+    # the explicit partition count of the fetch-ordered exchange keeps
+    # AQE's byte-based coalescing from putting this per-ROW Python stage
+    # on a few cores (measured at sf0.1: 11/32 tasks, 0.99 s vs 0.70 s)
+    if not _is_fetch_ordered(planned):
+        planned = _fetch_ordered(planned)
+    out = planned.groupBy("fetch_id").applyInPandas(process_fetch, schema=output_schema)
+    out._partitions_in_pos_order = True  # this object only; see iterate_batches
+    return out

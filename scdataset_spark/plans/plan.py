@@ -28,7 +28,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from scdataset_spark.session import _cluster_width, input_probe
+from scdataset_spark.session import _cluster_width, input_probe, python_stage_partitions
 
 
 def adaptive_rank_buckets(
@@ -199,6 +199,49 @@ def with_running_sum(
     )
 
 
+def _fetch_ordered(df: DataFrame) -> DataFrame:
+    """THE fetch-ordered exchange of an epoch: range on ``fetch_id``
+    with the Python-stage partition count.  Every fetch lands in one
+    partition and partition ``i`` holds only fetches below those of
+    partition ``i + 1``, so the ``with_batches`` windows and the hook
+    stage's ``groupBy(fetch_id)`` add no exchange of their own, and the
+    hook output streams in fetch order.  The explicit count keeps AQE
+    from coalescing the Python stage onto a few cores (see
+    ``session.python_stage_partitions``); where AQE does merge range
+    partitions it merges adjacent ones, in order."""
+    return df.repartitionByRange(python_stage_partitions(df), "fetch_id")
+
+
+def _is_fetch_ordered(df: DataFrame) -> bool:
+    """True when Spark's planned output partitioning of ``df`` is the
+    one :func:`_fetch_ordered` builds: range, ascending, on the very
+    ``fetch_id`` attribute ``df`` outputs (not merely a column of that
+    name), with the Python-stage count.  Planning ``df`` costs driver
+    time (about 80 ms for the benchmark's epoch plan on 4 cores) and
+    runs no job.  False under Spark Connect, which has no JVM plan to
+    ask."""
+    try:
+        plan = df._jdf.queryExecution().sparkPlan()
+    except AttributeError:  # Spark Connect
+        return False
+    part = plan.outputPartitioning()
+    if (
+        part.getClass().getSimpleName() != "RangePartitioning"
+        or part.numPartitions() != python_stage_partitions(df)
+        or part.ordering().length() != 1
+    ):
+        return False
+    key = part.ordering().head()
+    out = plan.output()
+    attrs = [out.apply(i) for i in range(out.length())]
+    fetch = [a for a in attrs if a.name() == "fetch_id"]
+    return (
+        len(fetch) == 1
+        and key.direction().toString() == "Ascending"
+        and key.child().semanticEquals(fetch[0])
+    )
+
+
 def with_batches(
     plan: DataFrame,
     batch_size: int,
@@ -228,14 +271,19 @@ def with_batches(
     - ``drop_last`` drops the trailing *partial* batch of each fetch
       (reference per-fetch semantics, ``scdataset.py:544-545``): a batch
       survives iff it is full OR it is not the last batch of its fetch.
-      Implemented as a window count per (fetch_id, batch_id) — a cheap
-      partial aggregate; no extra shuffle beyond the plan's own
-      partitioning when the frame is already partitioned by fetch.
+      Implemented as a window count per (fetch_id, batch_id).
+
+    Either window first partitions the frame once by
+    :func:`_fetch_ordered` (range on ``fetch_id``); both windows and a
+    following ``run_hook_pipeline`` reuse that one exchange.  Without a
+    window the result adds no exchange at all.
     """
     from scdataset_spark.plans.seeds import mix_sql
 
     fetch_size = batch_size * fetch_factor
     out = plan.withColumn("fetch_id", F.expr(f"{pos_col} div {fetch_size}"))
+    if shuffle_within_fetch or drop_last:
+        out = _fetch_ordered(out)
     if shuffle_within_fetch:
         w = Window.partitionBy("fetch_id").orderBy(
             F.expr(mix_sql(pos_col, seed, "spark")), F.col(pos_col)

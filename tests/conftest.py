@@ -88,6 +88,7 @@ _SLOW_TESTS = frozenset([
     "test_index_maintenance.py::TestSemanticIngestLockContract::test_compaction_refused_during_semantic_delivery",
     "test_index_maintenance.py::TestSemanticIngestLockContract::test_dead_owner_reclaim_through_semantic_verb",
     "test_index_maintenance.py::TestSemanticIngestLockContract::test_semantic_delivery_refused_during_compaction",
+    "test_pipeline.py::TestRetryDeterminism::test_failed_hook_attempts_give_the_clean_batches",
     "test_plan_shapes.py::test_embed_cosine_has_no_cartesian_product",
     "test_properties.py::TestBucketedRankProperty::test_matches_global_window",
     "test_properties.py::TestPermutationProperty::test_block_shuffle_is_permutation_across_seeds",

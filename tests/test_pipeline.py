@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -13,11 +14,13 @@ from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
 from scdataset_spark.operators.strategies import BlockShuffling, Streaming
-from scdataset_spark.pipeline.export import iterate_batches
+from scdataset_spark.pipeline.export import _streamed, iterate_batches
 from scdataset_spark.pipeline.hooks import run_hook_pipeline
 from scdataset_spark.pipeline.multiindexable import MultiIndexable
-from scdataset_spark.plans.plan import with_batches
+from scdataset_spark.plans.plan import _is_fetch_ordered, with_batches
+from scdataset_spark.session import python_stage_partitions
 
+from tests._helpers import assert_no_jobs, plan_text
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -274,23 +277,23 @@ class TestHookOrder:
 
 
 class TestHookCallsPerFetch:
-    @pytest.mark.xfail(
-        strict=True,
-        reason="iterate_batches' orderBy(pos) range-samples its child, the "
-        "hook stage, so every hook runs once for the sample and once "
-        "for the shuffle: 2 calls per fetch instead of 1",
-    )
-    def test_fetch_transform_runs_once_per_fetch(self, spark, tmp_path):
+    @pytest.mark.parametrize("shuffle", [False, True])
+    def test_fetch_transform_runs_once_per_fetch(self, spark, tmp_path, shuffle):
         """The reference calls each hook once per fetch
         (scdataset.py:523-558); a hook that reads an external store or
         has side effects must not fire twice.  The hook runs on
-        executors, so it counts its calls by appending to a file."""
+        executors, so it counts its calls by appending to a file.  With
+        ``shuffle_within_fetch`` the hook stage reuses the window's
+        exchange."""
         calls = str(tmp_path / "calls.txt")
         planned = with_batches(
             spark.range(640).selectExpr("id AS row_id", "id AS pos"),
             batch_size=16,
             fetch_factor=4,
-        )
+            shuffle_within_fetch=shuffle,
+            seed=3,
+        ).select("row_id", "pos", "fetch_id")
+        want = [r["row_id"] for r in planned.orderBy("pos").collect()]
 
         def fetch_transform(pdf):
             with open(calls, "a") as f:
@@ -298,15 +301,194 @@ class TestHookCallsPerFetch:
             return pdf
 
         out = run_hook_pipeline(
-            planned.select("row_id", "pos", "fetch_id"),
+            planned,
             "row_id bigint, pos bigint, fetch_id bigint",
             batch_size=16,
             fetch_transform=fetch_transform,
         )
         batches = list(iterate_batches(out, 16, ["row_id"]))
-        assert np.concatenate([b["row_id"] for b in batches]).tolist() == list(range(640))
+        assert np.concatenate([b["row_id"] for b in batches]).tolist() == want
+        assert (want == list(range(640))) != shuffle
         with open(calls) as f:
-            assert len(f.read().split()) == 640 // 64
+            assert sorted(map(int, f.read().split())) == list(range(640 // 64))
+
+
+def _scrambled(spark, n):
+    """``n`` rows whose ``pos`` is a permutation of ``row_id``, so pos
+    order and row order differ."""
+    return spark.range(n, numPartitions=3).selectExpr(
+        "id AS row_id", f"(id * 7919) % {n} AS pos"
+    )
+
+
+class TestFetchOrderedStream:
+    """``iterate_batches`` streams ``run_hook_pipeline``'s own output
+    without a sort.  Each frame derived from it keeps the sort, and a
+    hook that reorders its fetch cannot break the stream's pos order."""
+
+    @staticmethod
+    def _hooked(spark, **hooks):
+        planned = with_batches(
+            _scrambled(spark, 640), batch_size=16, fetch_factor=4,
+            shuffle_within_fetch=True, seed=3,
+        ).select("row_id", "pos", "fetch_id")
+        out = run_hook_pipeline(
+            planned, "row_id bigint, pos bigint, fetch_id bigint", batch_size=16, **hooks
+        )
+        return planned, out
+
+    def test_iterate_path_has_one_range_exchange(self, spark):
+        """One full-data exchange, range on ``fetch_id``, shared by the
+        window and the hook stage; none above the Python stage.  Building
+        the hook stage, partition check included, runs no job."""
+        _, out = assert_no_jobs(
+            spark.sparkContext, "fetch_ordered_plan", lambda: self._hooked(spark)
+        )
+        plan = plan_text(_streamed(out, "pos", ["row_id"])[0])
+        exchanges = re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)$", plan, re.M)
+        assert len(exchanges) == 1, exchanges
+        assert re.match(r"rangepartitioning\(fetch_id#\d+L ASC NULLS FIRST, \d+\)", exchanges[0])
+        tree = plan.split("\n\n")[0].splitlines()
+        stage = next(i for i, line in enumerate(tree) if "FlatMapGroupsInPandas" in line)
+        assert not [line for line in tree[:stage] if "Exchange" in line]
+
+    @pytest.mark.parametrize("derive", ["where", "repartition"])
+    def test_derived_frame_is_sorted(self, spark, derive):
+        planned, out = self._hooked(spark)
+        derived = out.where("row_id % 3 != 0") if derive == "where" else out.repartition(3)
+        assert "rangepartitioning(pos" in plan_text(_streamed(derived, "pos", ["row_id"])[0])
+        want = list(_row_reference(derived, 16, ["pos", "row_id"]))
+        _assert_same_batches(want, list(iterate_batches(derived, 16, ["pos", "row_id"])))
+        assert (np.diff(np.concatenate([b["pos"] for b in want])) > 0).all()
+
+    @pytest.mark.parametrize("hook", ["fetch_transform", "batch_transform"])
+    def test_reordering_hook_keeps_pos_order(self, spark, hook):
+        planned, out = self._hooked(spark, **{hook: lambda pdf: pdf.iloc[::-1]})
+        assert vars(out)["_partitions_in_pos_order"]
+        want = list(_row_reference(planned, 16, ["pos", "row_id"]))
+        _assert_same_batches(want, list(iterate_batches(out, 16, ["pos", "row_id"])))
+
+    def test_hook_that_breaks_pos_order_raises(self, spark):
+        """The unsorted stream checks the order it relies on: a hook
+        that rewrites ``pos`` against the fetch order gets an error,
+        not silently misordered batches."""
+        _, out = self._hooked(spark, fetch_transform=lambda pdf: pdf.assign(pos=-pdf["pos"]))
+        with pytest.raises(ValueError, match="not in pos order"):
+            list(iterate_batches(out, 16, ["row_id"]))
+
+
+class TestFetchOrderedCheck:
+    def test_tracks_attribute_direction_and_count(self, spark):
+        """The check the hook stage uses to skip its own exchange."""
+        n = python_stage_partitions(spark.range(1))
+        planned = with_batches(
+            _scrambled(spark, 640), batch_size=16, fetch_factor=4, shuffle_within_fetch=True
+        )
+        assert _is_fetch_ordered(planned)
+        assert _is_fetch_ordered(planned.select("pos", "fetch_id").where("pos > 3"))
+        # the same name on other values, another order, another count,
+        # and a frame with no window at all
+        assert not _is_fetch_ordered(planned.withColumn("fetch_id", -F.col("fetch_id")))
+        base = with_batches(_scrambled(spark, 640), batch_size=16, fetch_factor=4)
+        assert not _is_fetch_ordered(base)
+        assert not _is_fetch_ordered(base.repartitionByRange(n, F.col("fetch_id").desc()))
+        assert not _is_fetch_ordered(base.repartitionByRange(n + 1, "fetch_id"))
+        assert _is_fetch_ordered(base.repartitionByRange(n, "fetch_id"))
+        # a range on another column, renamed to fetch_id
+        other = base.repartitionByRange(n, "batch_id").drop("fetch_id")
+        assert not _is_fetch_ordered(other.withColumnRenamed("batch_pos", "fetch_id"))
+
+
+class TestRetryDeterminism:
+    def test_failed_hook_attempts_give_the_clean_batches(self, tmp_path):
+        """Every first attempt of the hook stage raises and is retried;
+        the batches and their order must equal a clean run's, on both
+        input shapes.  Runs in a child process on ``local[2,2]`` (two
+        attempts per task), so the shared session keeps its master."""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark import TaskContext
+from scdataset_spark.operators.strategies import BlockShuffling
+from scdataset_spark.pipeline.export import iterate_batches
+from scdataset_spark.pipeline.hooks import run_hook_pipeline
+from scdataset_spark.plans.plan import with_batches
+from scdataset_spark.session import get_spark
+spark = get_spark("retry_determinism", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("OFF")
+rows = spark.range(0, 3000, numPartitions=3).selectExpr("id AS row_id", "id * 0.5 AS v")
+
+def flaky(pdf):
+    if TaskContext.get().attemptNumber() == 0:
+        with open({str(tmp_path / "failed.txt")!r}, "a") as f:
+            f.write(str(shuffle) + "\\n")
+        raise RuntimeError("first attempt fails")
+    return pdf
+
+out = {{"master": spark.sparkContext.master}}
+for shuffle in (False, True):
+    planned = with_batches(
+        BlockShuffling(block_size=16, assume_dense=True).plan(rows, seed=3),
+        32, fetch_factor=4, shuffle_within_fetch=shuffle, seed=5,
+    ).select("row_id", "pos", "fetch_id", "v")
+    out[f"want-{{shuffle}}"] = [r["row_id"] for r in planned.orderBy("pos").collect()]
+    for name, hook in (("clean", None), ("flaky", flaky)):
+        hooked = run_hook_pipeline(
+            planned, "row_id bigint, pos bigint, fetch_id bigint, v double",
+            batch_size=32, fetch_transform=hook,
+        )
+        out[f"{{name}}-{{shuffle}}"] = [
+            [b["row_id"].tolist(), b["v"].tolist()] for b in iterate_batches(hooked, 32, ["row_id", "v"])
+        ]
+print(json.dumps(out))
+spark.stop()
+"""
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_MASTER="local[2,2]")
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=str(tmp_path),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert out["master"] == "local[2,2]"
+        failed = (tmp_path / "failed.txt").read_text().split()
+        assert {"False", "True"} <= set(failed)
+        for shuffle in ("False", "True"):
+            clean, flaky = out[f"clean-{shuffle}"], out[f"flaky-{shuffle}"]
+            assert flaky == clean
+            assert [len(b[0]) for b in clean] == [32] * (3000 // 32) + [3000 % 32]
+            assert sum((b[0] for b in clean), []) == out[f"want-{shuffle}"]
+
+
+class TestHookPipelineParallelism:
+    def test_python_stage_keeps_configured_partitions(self, spark):
+        """On both input shapes, with and without a ``with_batches``
+        window, the Python stage runs behind the explicit-count range
+        exchange, which AQE does not coalesce."""
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        base = Streaming(assume_dense=True).plan(li, seed=1).select("row_id", "pos", "l_quantity")
+        n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        for shuffle in (False, True):
+            planned = with_batches(
+                base, batch_size=16, fetch_factor=16, shuffle_within_fetch=shuffle
+            )
+            out = run_hook_pipeline(
+                planned,
+                "row_id bigint, pos bigint, fetch_id bigint, l_quantity double",
+                batch_size=16,
+            )
+            exchange = (
+                rf"rangepartitioning\(fetch_id#\d+L ASC NULLS FIRST, {n_conf}\), "
+                "REPARTITION_BY_NUM"
+            )
+            assert len(re.findall(exchange, plan_text(out))) == 1
+            assert out.rdd.getNumPartitions() == n_conf
 
 
 class TestSortBeforeFetch:

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from scdataset_spark.queries import REGISTRY
 
 from tests._helpers import assert_no_jobs, plan_text
@@ -426,3 +428,30 @@ def test_projected_ann_no_cartesian(spark):
     candidates only.  No cross product anywhere."""
     plan = _plan(spark, "sim_projected_ann")
     assert "CartesianProduct" not in plan
+
+
+FACT_PAYLOAD = re.compile(r"\bl_(quantity|extendedprice|discount|tax)")
+
+
+class TestNoFactPayloadBroadcast:
+    @pytest.mark.parametrize(
+        "name",
+        [
+            "q5_local_supplier_volume",
+            "q10_returned_revenue",
+            "q11_important_stock",
+            "q18_large_orders",
+            "g6_batch_normalize",
+        ],
+    )
+    def test_lineitem_payload_never_builds_a_broadcast(self, spark, name):
+        df = REGISTRY[name].fn(spark, SF_DIR_SMALL)
+        plan = plan_text(df)
+        bad = [
+            m.group(1)
+            for m in re.finditer(
+                r"\(\d+\) BroadcastExchange\nInput(?: \[\d+\])?: \[([^\]]*)\]", plan
+            )
+            if FACT_PAYLOAD.search(m.group(1))
+        ]
+        assert not bad, f"{name} broadcasts lineitem payload: {bad}"

@@ -11,7 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from scdataset_spark.catalog import load_table
+from scdataset_spark.catalog import ensure_ingested, load_table
 from scdataset_spark.operators.multimodal import decode_images, frame_sample_plan, with_fake_image
 from scdataset_spark.operators.strategies import Streaming
 from scdataset_spark.pipeline.hooks import run_hook_pipeline
@@ -373,3 +373,24 @@ class TestIngestCacheKey:
         finally:
             for out in outs:
                 shutil.rmtree(out, ignore_errors=True)
+
+
+class TestIngestedServing:
+    def test_no_row_id_read_matches_raw(self, spark):
+        ensure_ingested(spark, SF_DIR_SMALL)
+        raw = load_table(spark, "lineitem", SF_DIR_SMALL, with_row_id=False, use_ingested=False)
+        served = load_table(spark, "lineitem", SF_DIR_SMALL, with_row_id=False)
+        assert served.columns == raw.columns
+        assert served.count() == raw.count()
+        a = sorted(map(tuple, raw.select("l_orderkey", "l_linenumber", "l_extendedprice").collect()))
+        b = sorted(map(tuple, served.select("l_orderkey", "l_linenumber", "l_extendedprice").collect()))
+        assert a == b
+
+    def test_events_types_survive_ingest(self, spark):
+        ensure_ingested(spark, SF_DIR_SMALL)
+        raw = load_table(spark, "events", SF_DIR_SMALL, with_row_id=False, use_ingested=False)
+        served = load_table(spark, "events", SF_DIR_SMALL, with_row_id=False)
+        assert dict(served.dtypes)["ts"] == dict(raw.dtypes)["ts"]
+        assert served.agg(F.min("ts"), F.max("ts")).collect() == raw.agg(
+            F.min("ts"), F.max("ts")
+        ).collect()

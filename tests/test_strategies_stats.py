@@ -7,9 +7,11 @@ tolerance bands, class-balance bands, len==execution invariants.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
+from scdataset_spark.operators import strategies as st
 from scdataset_spark.operators.strategies import (
     BlockShuffling,
     BlockWeightedSampling,
@@ -23,6 +25,7 @@ from scdataset_spark.plans.plan import (
     with_pos,
 )
 
+from tests._helpers import collect_pos
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -263,3 +266,41 @@ class TestMixtureSampling:
             MixtureSampling(source_col="source")
         with pytest.raises(ValueError, match="positive"):
             MixtureSampling(source_col="source", proportions_ppm={"a": -1})
+
+
+class TestBlockPermuteCountStar:
+    @pytest.mark.parametrize("n,block", [(100, 8), (96, 8), (1, 8), (5, 64)])
+    def test_matches_global_window_reference(self, spark, n, block):
+        from scdataset_spark.operators.strategies import _block_permute_pos
+        from scdataset_spark.plans.seeds import mix_sql
+
+        base = spark.range(n).select(
+            (F.col("id") * 7).alias("row_id"), F.col("id").alias("pos0")
+        )
+        got = collect_pos(
+            _block_permute_pos(base, block, s=1234).drop("block_id")
+        )
+        ref = base.withColumn("_bk", F.expr(mix_sql(f"pos0 div {block}", 1234, "spark")))
+        w = Window.orderBy("_bk", "pos0")
+        want = collect_pos(ref.withColumn("pos", F.row_number().over(w) - F.lit(1)))
+        assert got == want
+
+    def test_empty_frame(self, spark):
+        from scdataset_spark.operators.strategies import _block_permute_pos
+
+        base = spark.range(0).select(
+            F.col("id").alias("row_id"), F.col("id").alias("pos0")
+        )
+        assert _block_permute_pos(base, 8, s=1).count() == 0
+
+
+class TestDirectPermuteEquivalence:
+    def test_direct_equals_metadata_path(self, spark, monkeypatch):
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        strat = BlockWeightedSampling(
+            block_size=16, weight_col="l_quantity", total_size=200, replace=True
+        )
+        direct = sorted(map(tuple, strat.plan(li, seed=7).select("row_id", "pos").collect()))
+        monkeypatch.setattr(st, "DIRECT_PERMUTE_MAX", 0)  # force metadata path
+        meta = sorted(map(tuple, strat.plan(li, seed=7).select("row_id", "pos").collect()))
+        assert direct == meta
