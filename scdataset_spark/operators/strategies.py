@@ -24,11 +24,12 @@ the full table through a single-partition global window**:
   mix keys, cumulative block starts are broadcast-joined back, and
   ``pos = block_start + offset_in_block``.  The big table is only ever
   hash-partitioned and locally sorted.
-- cumulative weights for inverse-CDF sampling are a bucketed running
-  sum inlined in ``_weighted_draws``: per-bucket weight totals become
-  broadcast offsets and the running sum stays bucket-local (buckets
-  are ``row_id div chunk`` when the input bytes are known, min/max
-  range buckets otherwise).
+- cumulative weights for inverse-CDF sampling are the running-sum
+  mode of ``plans.plan._bucketed_prefix``, the one bucket-offset
+  prefix: per-bucket weight totals become broadcast offsets and the
+  running sum stays bucket-local (``_weighted_draws`` buckets on
+  ``row_id div chunk`` when the input bytes are known, min/max range
+  buckets otherwise).
 
 Counts needed by the math (n, total weight) are scalar aggregates
 broadcast back via crossJoin — Catalyst plans them as a broadcast
@@ -43,7 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scdataset_spark.plans.seeds import MIX_MOD, mix_sql
-from scdataset_spark.plans.plan import with_pos
+from scdataset_spark.plans.plan import _bucketed_prefix, with_pos
 from scdataset_spark.session import input_probe, python_stage_partitions
 
 POS_BUCKETS = 64  # buckets for distributed row numbering / running sums
@@ -216,16 +217,14 @@ BLOCK_OFFSET_BUCKETS = 1024
 # chunked-generation + bucketed-running-sum shape takes over.  The
 # estimate is driver-side (input file bytes over a deliberately LOW
 # bytes/row so the scale shape kicks in early); frames with no file
-# information use the scale shape — the safe posture.  Like
-# DIRECT_PERMUTE_MAX this is a plan-time physical choice: both shapes
-# are value-identical (pinned in tests/test_optimization_r16.py).
+# information use the scale shape — the safe posture.  This is a
+# plan-time physical choice: both shapes are value-identical (pinned in
+# tests/test_strategies_stats.py).
 BLOCK_META_WINDOW_MAX = 4_000_000
 _EST_MIN_BYTES_PER_ROW = 16
 
 
-def _block_permute_pos(
-    out: DataFrame, block_size: int, s: int, _row_bound: int | None = None
-) -> DataFrame:
+def _block_permute_pos(out: DataFrame, block_size: int, s: int) -> DataFrame:
     """Final position of a block permutation WITHOUT a global window on
     the data: order only the block *metadata* (n/block_size rows) by its
     mix keys, turn that into cumulative output offsets, and join back —
@@ -249,85 +248,61 @@ def _block_permute_pos(
     blocks the frame itself goes scale-safe — generation becomes a
     TWO-LEVEL explode (chunk ids spread over the cluster with an
     explicit partition count, then ≤ ``BLOCK_META_CHUNK`` blocks per
-    chunk task), and the exclusive running sum over (mix key,
-    block_id) order uses the bucketed offsets pattern shared with
-    ``with_running_sum`` instead of a single-partition global window:
-    per-bucket sums hang off ONE explicit ``repartition("_obkt")``
-    exchange (reused by the within-bucket window), bucket offsets ride
-    a ``BLOCK_OFFSET_BUCKETS``-row broadcast.  Below the threshold the
-    single-window shape stays — the distributed shape's 3 extra
-    exchanges measured 2-4x the whole query's warm time at sf0.1/sf1
-    (see BLOCK_META_WINDOW_MAX).  Values are identical either way —
-    buckets are ranges of the leading sort key, so every tiebreak
-    stays bucket-local (pinned by value-equality tests vs the
-    global-window shape in tests/test_optimization_r16.py).
-
-    ``_row_bound`` is a known row count of ``out`` (a weighted draw
-    count); without it the row count is estimated from the input
-    files, which for a drawn multiset are the source table's."""
+    chunk task), and the exclusive block start is
+    :func:`~scdataset_spark.plans.plan._bucketed_prefix`'s running sum
+    of the block sizes in (mix key, block_id) order, bucketed on the
+    static mix-key range ``_bkey * BLOCK_OFFSET_BUCKETS div MIX_MOD``,
+    minus the block's own size.  Below the threshold the single-window
+    shape stays — the distributed shape's 3 extra exchanges measured
+    2-4x the whole query's warm time at sf0.1/sf1 (see
+    BLOCK_META_WINDOW_MAX).  Values are identical either way — buckets
+    are ranges of the leading sort key, so every tiebreak stays
+    bucket-local (pinned by value-equality tests vs the global-window
+    shape in tests/test_strategies_stats.py)."""
     out = out.withColumn("block_id", F.expr(f"pos0 div {block_size}"))
     n_agg = out.agg(F.count(F.lit(1)).alias("_n"))
-    n_rows = _row_bound
-    if n_rows is None:
-        nbytes = input_probe(out)[1]
-        n_rows = None if nbytes is None else nbytes // _EST_MIN_BYTES_PER_ROW
-    if n_rows is not None and n_rows // block_size <= BLOCK_META_WINDOW_MAX:
+    nbytes = input_probe(out)[1]
+    small = (
+        nbytes is not None
+        and nbytes // _EST_MIN_BYTES_PER_ROW // block_size <= BLOCK_META_WINDOW_MAX
+    )
+    last_block = f"(_n - 1) div {block_size}"
+    if small:
         blocks = n_agg.select(
+            "_n",
+            F.explode(F.sequence(F.lit(0).cast("bigint"), F.expr(last_block))).alias(
+                "block_id"
+            ),
+        )
+    else:
+        # level 1: one row per BLOCK_META_CHUNK-sized chunk of block ids,
+        # spread with an explicit partition count (the chunk rows are a
+        # few bytes each, so AQE's byte-based coalescing would
+        # re-serialize the generation onto one task)
+        chunks = n_agg.select(
             "_n",
             F.explode(
                 F.sequence(
-                    F.lit(0).cast("bigint"), F.expr(f"(_n - 1) div {block_size}")
+                    F.lit(0).cast("bigint"),
+                    F.expr(f"({last_block}) div {BLOCK_META_CHUNK}"),
+                )
+            ).alias("_chunk"),
+        ).repartition(python_stage_partitions(out), "_chunk")
+        # level 2: the chunk's block ids
+        blocks = chunks.select(
+            "_n",
+            F.explode(
+                F.sequence(
+                    F.col("_chunk") * BLOCK_META_CHUNK,
+                    F.least(
+                        F.expr(last_block),
+                        (F.col("_chunk") + 1) * BLOCK_META_CHUNK - 1,
+                    ),
                 )
             ).alias("block_id"),
-        ).withColumn(
-            "_bn",
-            F.least(
-                F.lit(block_size).cast("bigint"),
-                F.col("_n") - F.col("block_id") * block_size,
-            ),
-        ).drop("_n")
-        blocks = blocks.withColumn("_bkey", F.expr(mix_sql("block_id", s, "spark")))
-        w = Window.orderBy("_bkey", "block_id").rowsBetween(
-            Window.unboundedPreceding, -1
         )
-        blocks = blocks.withColumn(
-            "_bstart", F.coalesce(F.sum("_bn").over(w), F.lit(0))
-        )
-        return (
-            out.join(blocks.select("block_id", "_bstart"), "block_id")
-            .withColumn(
-                "pos",
-                F.col("_bstart") + F.col("pos0") - F.col("block_id") * block_size,
-            )
-            .drop("pos0", "_bstart")
-        )
-    gen_parts = python_stage_partitions(out)
-    # level 1: one row per BLOCK_META_CHUNK-sized chunk of block ids,
-    # spread with an explicit partition count (the chunk rows are a few
-    # bytes each, so AQE's byte-based coalescing would re-serialize the
-    # generation onto one task)
-    chunks = n_agg.select(
-        "_n",
-        F.explode(
-            F.sequence(
-                F.lit(0).cast("bigint"),
-                F.expr(f"((_n - 1) div {block_size}) div {BLOCK_META_CHUNK}"),
-            )
-        ).alias("_chunk"),
-    ).repartition(gen_parts, "_chunk")
-    # level 2: the chunk's block ids + their exact sizes (closed form)
-    blocks = chunks.select(
-        "_n",
-        F.explode(
-            F.sequence(
-                F.col("_chunk") * BLOCK_META_CHUNK,
-                F.least(
-                    F.expr(f"(_n - 1) div {block_size}"),
-                    (F.col("_chunk") + 1) * BLOCK_META_CHUNK - 1,
-                ),
-            )
-        ).alias("block_id"),
-    ).withColumn(
+    # each block's exact size (closed form) and its mix key
+    blocks = blocks.withColumn(
         "_bn",
         F.least(
             F.lit(block_size).cast("bigint"),
@@ -335,28 +310,22 @@ def _block_permute_pos(
         ),
     ).drop("_n")
     blocks = blocks.withColumn("_bkey", F.expr(mix_sql("block_id", s, "spark")))
-    # bucketed exclusive running sum of _bn in (_bkey, block_id) order:
-    # range-bucket on the uniform mix key with STATIC bounds (no stats
-    # agg; _bkey < MIX_MOD so _obkt < BLOCK_OFFSET_BUCKETS, and the
-    # product stays ~2^41 — no overflow)
-    nb = BLOCK_OFFSET_BUCKETS
-    blocks = blocks.withColumn("_obkt", F.expr(f"_bkey * {nb} div {MIX_MOD}"))
-    bshuf = blocks.repartition("_obkt")
-    sums = bshuf.groupBy("_obkt").agg(F.sum("_bn").alias("_bsum"))
-    w_off = Window.orderBy("_obkt").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sums.withColumn(
-        "_ooff", F.coalesce(F.sum("_bsum").over(w_off), F.lit(0))
-    ).drop("_bsum")
-    w_in = (
-        Window.partitionBy("_obkt")
-        .orderBy("_bkey", "block_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    blocks = (
-        bshuf.withColumn("_bloc", F.coalesce(F.sum("_bn").over(w_in), F.lit(0)))
-        .join(F.broadcast(offsets), "_obkt")
-        .withColumn("_bstart", F.col("_bloc") + F.col("_ooff"))
-    )
+    if small:
+        w = Window.orderBy("_bkey", "block_id").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        blocks = blocks.withColumn(
+            "_bstart", F.coalesce(F.sum("_bn").over(w), F.lit(0))
+        )
+    else:
+        # _bkey < MIX_MOD, so the static bucket stays below
+        # BLOCK_OFFSET_BUCKETS and the product ~2^41 (no overflow)
+        nb = BLOCK_OFFSET_BUCKETS
+        blocks, _ = _bucketed_prefix(
+            blocks, [], "_bkey", [("_bkey", "asc"), ("block_id", "asc")],
+            "_bstart", nb, "_bn", bucket=F.expr(f"_bkey * {nb} div {MIX_MOD}"),
+        )
+        blocks = blocks.withColumn("_bstart", F.col("_bstart") - F.col("_bn"))
     return (
         out.join(blocks.select("block_id", "_bstart"), "block_id")
         .withColumn(
@@ -373,15 +342,6 @@ def _block_permute_pos(
 # shuffled hash join is the right plan anyway (both sides are genuinely
 # large).
 BROADCAST_DRAWS_MAX = 2_000_000
-
-# Largest draw count for which the drawn multiset's block permutation is
-# done as a second sort inside the single partition the pos0 window
-# already established (two in-partition sorts, zero extra exchanges).
-# A drawn row is three BIGINTs, so 2M rows is ~50 MB in one task —
-# comfortable; beyond it the metadata-join path (_block_permute_pos)
-# keeps the permutation distributed.
-DIRECT_PERMUTE_MAX = 2_000_000
-
 
 @dataclass
 class BlockWeightedSampling(SamplingStrategy):
@@ -446,96 +406,32 @@ class BlockWeightedSampling(SamplingStrategy):
             F.ceil(F.col(self.weight_col).cast("double") * self.weight_scale).cast("bigint")
         )
         base = df.withColumn("_wi", wint).where(F.col("_wi") > 0).select("row_id", "_wi")
+        # The CDF is _bucketed_prefix's running sum of _wi in row_id
+        # order.  With the input bytes known, buckets are
+        # ``row_id div chunk`` with ``chunk`` from the driver-side
+        # estimate: no min/max stats scan and no crossJoin of it onto
+        # every data row (r16, VERDICT r15 task 5: 1.35->0.58 s at sf0.1,
+        # 2.10->0.68 s at sf1, artifacts/r16/ab_o3_singlescan_*.jsonl),
+        # and a bucket holds at most ``chunk`` rows even for a clustered
+        # row_id subset.  Otherwise min/max range buckets.  Bucketing is
+        # a PHYSICAL knob: any monotone map of row_id gives the identical
+        # running sum.  The total is the sum of the bucket totals on the
+        # persisted 64-to-65k-row offsets frame (NOT the measured-slower
+        # cum persist of r14, which cached the full data frame).
+        from scdataset_spark.operators._cache import persist_bounded
+
         nbytes = input_probe(df)[1]
+        nb, bucket = POS_BUCKETS, None
         if nbytes is not None:
             est = nbytes // _EST_MIN_BYTES_PER_ROW  # ≈ row-count upper bound
-            # r16 SINGLE-SCAN shape (VERDICT r15 task 5): the bucket
-            # expression is meta-independent — ``row_id div chunk`` with
-            # ``chunk`` from the driver-side file-bytes estimate — so the
-            # fused min/max/total meta scan AND the broadcast-nested-loop
-            # crossJoin that attached it to every data row both disappear.
-            # The CDF total instead derives from the (persisted, tiny)
-            # per-bucket offsets frame.  Bucketing is a PHYSICAL knob:
-            # any monotone map of row_id yields the identical running
-            # sum (the A/B asserted full result equality, then measured
-            # 1.35->0.58 s at sf0.1 and 2.10->0.68 s at sf1 —
-            # artifacts/r16/ab_o3_singlescan_*.jsonl).  Per-bucket volume
-            # is bounded by ``chunk`` rows by construction, even for
-            # pathologically clustered row_id subsets.  (Persisting the
-            # 64-to-65k-row offsets frame is NOT the measured-slower cum
-            # persist of r14 — that cached the full data frame.)
             nb = min(65536, max(POS_BUCKETS, est // CDF_BUCKET_ROWS))
-            chunk = max(1, est // nb)
-            from scdataset_spark.operators._cache import persist_bounded
-
-            b = base.withColumn("_bucket", F.expr(f"row_id div {chunk}"))
-            bshuf = b.repartition("_bucket")
-            sums = bshuf.groupBy("_bucket").agg(F.sum("_wi").alias("_bsum"))
-            w_off = Window.orderBy("_bucket").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            offsets = persist_bounded(
-                sums.withColumn(
-                    "_offset", F.coalesce(F.sum("_bsum").over(w_off), F.lit(0))
-                )
-            )
-            total = offsets.agg(
-                F.max(F.col("_offset") + F.col("_bsum")).alias("_total")
-            )
-            off_join = offsets.select("_bucket", "_offset")
-        else:
-            # Fallback for frames with no file lineage: the r15 fused-meta
-            # shape — ONE scalar agg (min/max/total) whose
-            # BroadcastExchange is canonically identical at every use
-            # site, so ReuseExchange serves the bucket bounds, the draw
-            # targets and the interval-bucket width from one computation.
-            meta = base.agg(
-                F.min("row_id").alias("_lo"),
-                F.max("row_id").alias("_hi"),
-                F.sum("_wi").alias("_total"),
-            )
-            nb = POS_BUCKETS
-            # same bucket expression as plans.plan._bucketed_prefix — the
-            # running sum below is value-identical to its running-sum mode
-            # at any bucket count
-            b = (
-                base.crossJoin(F.broadcast(meta))
-                .withColumn(
-                    "_bucket",
-                    F.least(
-                        F.lit(nb - 1),
-                        (
-                            (F.col("row_id") - F.col("_lo"))
-                            * nb
-                            / (F.col("_hi") - F.col("_lo") + 1)
-                        ).cast("bigint"),
-                    ),
-                )
-                .select("row_id", "_wi", "_bucket")
-            )
-            # ONE explicit exchange feeds BOTH the per-bucket totals agg
-            # and the within-bucket running-sum window (r15, guide §2.4)
-            bshuf = b.repartition("_bucket")
-            sums = bshuf.groupBy("_bucket").agg(F.sum("_wi").alias("_bsum"))
-            w_off = Window.orderBy("_bucket").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            offsets = sums.withColumn(
-                "_offset", F.coalesce(F.sum("_bsum").over(w_off), F.lit(0))
-            ).drop("_bsum")
-            total = meta  # carries _total; broadcast reused at every site
-            off_join = offsets
-        w_in = (
-            Window.partitionBy("_bucket")
-            .orderBy("row_id")
-            .rowsBetween(Window.unboundedPreceding, 0)
+            bucket = F.expr(f"row_id div {max(1, est // nb)}")
+        cum, offsets = _bucketed_prefix(
+            base, [], "row_id", [("row_id", "asc")], "hi", nb, "_wi", bucket=bucket
         )
-        cum = (
-            bshuf.withColumn("_ws", F.sum("_wi").over(w_in))
-            .join(F.broadcast(off_join), "_bucket")
-            .withColumn("hi", F.col("_ws") + F.col("_offset"))
-            .withColumn("lo", F.col("hi") - F.col("_wi"))
-            .select("row_id", "lo", "hi")
+        total = persist_bounded(offsets).agg(F.sum("_btot").alias("_total"))
+        cum = cum.withColumn("lo", F.col("hi") - F.col("_wi")).select(
+            "row_id", "lo", "hi"
         )
         draws = spark.range(self.total_size).withColumnRenamed("id", "draw_id")
         # 62-bit target: one mix() only covers [0, 2^31) — with scaled
@@ -648,32 +544,23 @@ class BlockWeightedSampling(SamplingStrategy):
         # sort drawn multiset by row_id (reference sorts before block
         # shuffle for locality), then block-shuffle with a second seed.
         # The drawn set is total_size rows (orders of magnitude smaller
-        # than the table) — a plain window on (row_id, draw_id) is fine
-        # here.
+        # than the table): a plain window on (row_id, draw_id) puts it in
+        # ONE partition, and the block permutation is a second sort in
+        # that partition — row_number() OVER (ORDER BY mix(block), pos0)
+        # — with no new exchange.  Blocks are contiguous runs of pos0, so
+        # ORDER BY (_bkey, pos0) == ORDER BY (_bkey, block_id, pos0), the
+        # exact oracle ordering.  (The metadata-join permutation measured
+        # no faster above 2M draws, artifacts/pr11/README.md.)
         w_pos = Window.orderBy("row_id", "draw_id")
         out = drawn.withColumn("pos0", F.row_number().over(w_pos) - F.lit(1))
-        if self.total_size <= DIRECT_PERMUTE_MAX:
-            # r15 (guide §2.4): the drawn set is already in ONE partition
-            # after the pos0 window, so the block permutation is a second
-            # in-partition sort — row_number() OVER (ORDER BY mix(block),
-            # pos0) — with NO new exchange.  Equivalent to the
-            # metadata-join path because blocks are contiguous runs of
-            # pos0: ORDER BY (_bkey, pos0) == ORDER BY (_bkey, block_id,
-            # pos0), the exact oracle ordering.  The metadata path (below)
-            # remains for draw counts too large for a one-partition sort;
-            # total_size is a static plan parameter, so the choice is
-            # made at plan time, like BROADCAST_DRAWS_MAX.
-            out = out.withColumn(
-                "_bkey", F.expr(mix_sql(f"pos0 div {self.block_size}", s + 500, "spark"))
-            )
-            w_blk = Window.orderBy("_bkey", "pos0")
-            return (
-                out.withColumn("pos", F.row_number().over(w_blk) - F.lit(1))
-                .drop("pos0", "_bkey")
-            )
-        return _block_permute_pos(
-            out, self.block_size, s + 500, _row_bound=self.total_size
-        ).drop("block_id")
+        out = out.withColumn(
+            "_bkey", F.expr(mix_sql(f"pos0 div {self.block_size}", s + 500, "spark"))
+        )
+        w_blk = Window.orderBy("_bkey", "pos0")
+        return (
+            out.withColumn("pos", F.row_number().over(w_blk) - F.lit(1))
+            .drop("pos0", "_bkey")
+        )
 
 
 @dataclass

@@ -403,7 +403,7 @@ def _token_budget(
         )
         ranked = src.withColumn("cum_tokens", F.sum(token_col).over(w))
     else:
-        ranked = _bucketed_prefix(
+        ranked, _ = _bucketed_prefix(
             src, groups, "_negq", [(quality_col, "desc"), (id_col, "asc")],
             "cum_tokens", buckets, token_col,
         )

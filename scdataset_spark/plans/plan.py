@@ -65,7 +65,8 @@ def _bucketed_prefix(
     out_col: str,
     buckets: int,
     value_col: str | None = None,
-) -> DataFrame:
+    bucket: Column | None = None,
+) -> tuple[DataFrame, DataFrame]:
     """THE bucket-offset prefix: an exact per-group prefix in ``order``
     (list of ``(column, "asc"|"desc")``) WITHOUT a single-partition or
     per-group single-reducer window.  ``value_col=None`` counts rows and
@@ -73,37 +74,51 @@ def _bucketed_prefix(
     sum.
 
     Rows range-bucket on ``bucket_col`` between its global min and max
-    (bucket boundaries need not align with groups).  ``bucket_col``
-    ascending must agree with the leading ``order`` key — that column
-    ascending, or its negation descending — so equal keys share a
-    bucket and every tiebreak stays bucket-local; a null key lands in
-    the last bucket.  Per-(group, bucket) totals prefix-sum into offsets
-    on a tiny ``|groups|·buckets``-row frame, broadcast back, and the
-    window finishes within (group, bucket): one stats agg + one tiny
-    window + one broadcast join, the O(n) data never globally sorted,
-    and a hot group spreads over ``buckets`` tasks.
+    (bucket boundaries need not align with groups), or take the
+    caller's bigint ``bucket`` expression, which must not decrease as
+    ``bucket_col`` grows (``row_id div chunk``, a static range of a
+    uniform key) and needs no stats agg.  ``bucket_col`` ascending must
+    agree with the leading ``order`` key — that column ascending, or its
+    negation descending — so equal keys share a bucket and every
+    tiebreak stays bucket-local; a null key lands in the last range
+    bucket.  The data takes one ``repartition(groups, _bucket)`` and the
+    prefix finishes within (group, bucket) on it; per-(group, bucket)
+    totals (a map-side partial aggregate with its own tiny exchange)
+    prefix-sum into offsets on a ``|groups|·buckets``-row frame, and the
+    broadcast offsets join ABOVE the within-bucket window, so the data
+    shuffle never waits for them.  The O(n) data is never globally
+    sorted, and a hot group spreads over ``buckets`` tasks.
+
+    Returns ``(frame, offsets)``; ``offsets`` holds ``group_cols``,
+    ``_bucket``, the bucket's total ``_btot`` and its exclusive offset
+    ``_offset``, so a caller that needs a group's total sums ``_btot``
+    (persisting ``offsets`` first reuses it in the frame too: the cache
+    lookup runs when the frame is planned).
     """
-    stats = df.agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
-    b = df.crossJoin(F.broadcast(stats)).withColumn(
-        "_bucket",
-        F.least(
-            F.lit(buckets - 1),
-            (
-                (F.col(bucket_col) - F.col("_lo"))
-                * buckets
-                / (F.col("_hi") - F.col("_lo") + 1)
-            ).cast("bigint"),
-        ),
-    ).drop("_lo", "_hi")
+    if bucket is None:
+        stats = df.agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
+        b = df.crossJoin(F.broadcast(stats)).withColumn(
+            "_bucket",
+            F.least(
+                F.lit(buckets - 1),
+                (
+                    (F.col(bucket_col) - F.col("_lo"))
+                    * buckets
+                    / (F.col("_hi") - F.col("_lo") + 1)
+                ).cast("bigint"),
+            ),
+        ).drop("_lo", "_hi")
+    else:
+        b = df.withColumn("_bucket", bucket)
     sort_cols = [
         F.col(c).asc() if d == "asc" else F.col(c).desc() for c, d in order
     ]
     w_in = Window.partitionBy(*group_cols, "_bucket").orderBy(*sort_cols)
     if value_col is None:
-        tot, total = "count", F.count(F.lit(1))
+        total = F.count(F.lit(1))
         prefix = F.row_number().over(w_in) - F.lit(1)
     else:
-        tot, total = "_bsum", F.sum(value_col)
+        total = F.sum(value_col)
         prefix = F.sum(value_col).over(
             w_in.rowsBetween(Window.unboundedPreceding, 0)
         )
@@ -114,15 +129,17 @@ def _bucketed_prefix(
     )
     offsets = (
         b.groupBy(*group_cols, "_bucket")
-        .agg(total.alias(tot))
-        .withColumn("_offset", F.coalesce(F.sum(tot).over(w_off), F.lit(0)))
-        .drop(tot)
+        .agg(total.alias("_btot"))
+        .withColumn("_offset", F.coalesce(F.sum("_btot").over(w_off), F.lit(0)))
     )
-    return (
-        b.join(F.broadcast(offsets), [*group_cols, "_bucket"])
-        .withColumn(out_col, prefix + F.col("_offset"))
+    out = (
+        b.repartition(*group_cols, "_bucket")
+        .withColumn(out_col, prefix)
+        .join(F.broadcast(offsets.drop("_btot")), [*group_cols, "_bucket"])
+        .withColumn(out_col, F.col(out_col) + F.col("_offset"))
         .drop("_bucket", "_offset")
     )
+    return out, offsets
 
 
 def bucketed_rank(
@@ -140,7 +157,7 @@ def bucketed_rank(
     Shared by ``with_pos``, the strategies' drop-key ranking, and the
     lineitem ingest numbering.
     """
-    return _bucketed_prefix(df, [], bucket_col, order, out_col, buckets)
+    return _bucketed_prefix(df, [], bucket_col, order, out_col, buckets)[0]
 
 
 def grouped_bucketed_rank(
@@ -157,7 +174,7 @@ def grouped_bucketed_rank(
     one reducer — the hot-stratum hazard a viral source hits at corpus
     scale; :func:`_bucketed_prefix` spreads it over ``buckets`` tasks.
     """
-    return _bucketed_prefix(df, group_cols, bucket_col, order, out_col, buckets)
+    return _bucketed_prefix(df, group_cols, bucket_col, order, out_col, buckets)[0]
 
 
 def with_pos(
@@ -196,7 +213,7 @@ def with_running_sum(
     """
     return _bucketed_prefix(
         df, [], order_col, [(order_col, "asc")], out, buckets, value_col
-    )
+    )[0]
 
 
 def _fetch_ordered(df: DataFrame) -> DataFrame:

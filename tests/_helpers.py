@@ -10,6 +10,25 @@ def plan_text(df, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
+def plan_subtrees(df, marker: str) -> list[list[str]]:
+    """Each subtree of ``df``'s physical plan (``explain("simple")``)
+    whose root line contains ``marker``, as its lines: the root first,
+    then every deeper line below it."""
+    lines = plan_text(df, "simple").splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if marker in line:
+            j = i + 1
+            while j < len(lines) and depth(lines[j]) > depth(line):
+                j += 1
+            out.append(lines[i:j])
+    return out
+
+
 def assert_no_jobs(sc, group: str, fn):
     """Run ``fn`` inside job group ``group``, assert it scheduled no
     Spark job (the lazy plan-construction contract), and return its

@@ -12,7 +12,7 @@ import pytest
 
 from scdataset_spark.queries import REGISTRY
 
-from tests._helpers import assert_no_jobs, plan_text
+from tests._helpers import assert_no_jobs, plan_subtrees, plan_text
 from tests.conftest import SF_DIR, SF_DIR_SMALL
 
 
@@ -428,6 +428,27 @@ def test_projected_ann_no_cartesian(spark):
     candidates only.  No cross product anywhere."""
     plan = _plan(spark, "sim_projected_ann")
     assert "CartesianProduct" not in plan
+
+
+def test_bucketed_rank_shuffles_before_the_offsets_broadcast(spark):
+    """``bucketed_rank``'s full-data exchange is the explicit
+    ``repartition(_bucket)`` on its input: the broadcast offsets join
+    above the within-bucket window, so no offsets BroadcastHashJoin
+    sits below any ``_bucket`` exchange (the shuffle does not wait for
+    the offsets)."""
+    from scdataset_spark.catalog import load_table
+    from scdataset_spark.plans.plan import bucketed_rank
+
+    li = load_table(spark, "lineitem", SF_DIR_SMALL, with_row_id=False)
+    ranked = bucketed_rank(
+        li, "l_orderkey", [("l_orderkey", "asc"), ("l_linenumber", "asc")], "rid"
+    )
+    exchanges = plan_subtrees(ranked, "Exchange hashpartitioning(_bucket#")
+    assert exchanges
+    for sub in exchanges:
+        assert not any("BroadcastHashJoin" in line for line in sub), sub
+    assert any("REPARTITION_BY_COL" in sub[0] for sub in exchanges)
+    assert "BroadcastHashJoin" in plan_text(ranked)
 
 
 FACT_PAYLOAD = re.compile(r"\bl_(quantity|extendedprice|discount|tax)")

@@ -75,7 +75,8 @@ class TestPermutationProperty:
 class TestBucketedRankProperty:
     """The bucket-offset prefix (``plans.plan._bucketed_prefix``) is the
     primitive everything rests on — compare both its modes (0-based
-    rank, inclusive running sum), global and per group, against the
+    rank, inclusive running sum), global and per group, on min/max range
+    buckets and on a caller's bucket expression, against the
     single-window reference on adversarial key sets (duplicates, skew,
     negatives, tiny ranges)."""
 
@@ -84,9 +85,10 @@ class TestBucketedRankProperty:
         buckets=st.sampled_from([1, 2, 7, 64]),
         running_sum=st.booleans(),
         grouped=st.booleans(),
+        bucket_div=st.sampled_from([None, 1, 7, 300, 5000]),
     )
     @settings(max_examples=20, deadline=None)
-    def test_matches_global_window(self, keys, buckets, running_sum, grouped):
+    def test_matches_global_window(self, keys, buckets, running_sum, grouped, bucket_div):
         # no pytest fixture: hypothesis forbids function-scoped fixtures
         # across examples; grab the shared session directly
         import pandas as pd
@@ -105,12 +107,13 @@ class TestBucketedRankProperty:
         df = spark.createDataFrame(pdf)
         groups = ["g"] if grouped else []
         value_col = "v" if running_sum else None
-        got = {
-            (r.k, r.tb): r.rk
-            for r in _bucketed_prefix(
-                df, groups, "k", [("k", "asc"), ("tb", "desc")], "rk", buckets, value_col
-            ).collect()
-        }
+        # None: min/max range buckets; else a caller's monotone bucket
+        bucket = None if bucket_div is None else F.expr(f"(k + 1000) div {bucket_div}")
+        ranked, offsets = _bucketed_prefix(
+            df, groups, "k", [("k", "asc"), ("tb", "desc")], "rk", buckets, value_col,
+            bucket=bucket,
+        )
+        got = {(r.k, r.tb): r.rk for r in ranked.collect()}
         w = Window.partitionBy(*groups).orderBy(F.col("k").asc(), F.col("tb").desc())
         if running_sum:
             ref = F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -118,3 +121,14 @@ class TestBucketedRankProperty:
             ref = F.row_number().over(w) - 1
         want = {(r.k, r.tb): r.rk for r in df.withColumn("rk", ref).collect()}
         assert got == want
+        # the offsets' bucket totals sum to each group's total
+        total = F.count(F.lit(1)) if value_col is None else F.sum(value_col)
+        got_tot = {
+            tuple(r[c] for c in groups): r["t"]
+            for r in offsets.groupBy(*groups).agg(F.sum("_btot").alias("t")).collect()
+        }
+        want_tot = {
+            tuple(r[c] for c in groups): r["t"]
+            for r in df.groupBy(*groups).agg(total.alias("t")).collect()
+        }
+        assert got_tot == want_tot

@@ -13,7 +13,9 @@ from scdataset_spark.operators.strategies import attach_weights, Streaming
 from scdataset_spark.pipeline.export import write_epoch_plan
 from scdataset_spark.plans.plan import with_batches
 
-from tests._helpers import assert_no_jobs
+from scdataset_spark.session import input_probe
+
+from tests._helpers import assert_no_jobs, plan_text
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -437,3 +439,73 @@ class TestProjectedMaxBucket:
             ).count()
             assert full == 10, (local, full)  # C(5,2) identical vectors
             assert capped == 0, (local, capped)
+
+
+class TestTopkShapeGate:
+    def test_small_corpus_takes_single_window(self, spark, monkeypatch):
+        """File-backed candidates under TWO_PHASE_MIN_BYTES rank through
+        ONE per-query window (no salt column in the plan); forcing the
+        two-phase shape (threshold 0) gives identical rows (r16 A/B: single-window is
+        30-40% faster at bench scales, two-phase is the >=100k-vector
+        hot-group posture)."""
+        import scdataset_spark.operators.similarity as sim
+        from scdataset_spark.catalog import load_table
+        from pyspark.sql import functions as F
+
+        e = load_table(spark, "embeddings", SF_DIR_SMALL, with_row_id=False)
+        q = e.where("vec_id < 3").select(F.col("vec_id").alias("q_id"), "embedding")
+        c = e.select(F.col("vec_id").alias("c_id"), "embedding")
+        assert input_probe(c)[1] is not None
+        auto = sim.brute_force_topk(q, c, k=5)
+        assert "_salt" not in plan_text(auto)
+        monkeypatch.setattr(sim, "TWO_PHASE_MIN_BYTES", 0)
+        forced = sim.brute_force_topk(q, c, k=5)
+        assert "_salt" in plan_text(forced)
+        assert sorted(map(tuple, auto.collect())) == sorted(
+            map(tuple, forced.collect())
+        )
+
+    def test_no_file_lineage_takes_scale_shape(self, spark):
+        import scdataset_spark.operators.similarity as sim
+        from pyspark.sql import functions as F
+
+        vecs = spark.range(32).select(
+            F.col("id").alias("c_id"),
+            F.expr(
+                "transform(sequence(1, 8), i -> CAST(id % (i + 1) AS DOUBLE))"
+            ).alias("embedding"),
+        )
+        q = vecs.where("c_id < 2").withColumnRenamed("c_id", "q_id")
+        assert input_probe(vecs)[1] is None
+        assert "_salt" in plan_text(sim.brute_force_topk(q, vecs, k=3))
+
+
+class TestSimilarityPythonStagePartitions:
+    def test_gram_stage_keeps_configured_partitions(self, spark):
+        import scdataset_spark.operators.similarity as sim
+
+        emb = spark.range(64).select(
+            F.col("id").alias("vec_id"),
+            F.expr(
+                "transform(sequence(1, 8), i -> CAST(id % (i + 1) AS DOUBLE))"
+            ).alias("v"),
+        )
+        out = sim.embed_cosine_pairs_fast(
+            emb, id_col="vec_id", vec="v", threshold=0.5,
+            bands=2, rows_per_band=4, dim=8,
+        )
+        assert "REPARTITION_BY_NUM" in plan_text(out)
+
+    def test_dominance_stage_keeps_configured_partitions(self, spark):
+        import scdataset_spark.operators.similarity as sim
+
+        emb = spark.range(64).select(
+            F.col("id").alias("vec_id"),
+            F.expr(
+                "transform(sequence(1, 8), i -> CAST(id % (i + 1) AS DOUBLE))"
+            ).alias("v"),
+        )
+        out = sim.semantic_dedup_fast(
+            emb, id_col="vec_id", vec="v", threshold=0.98, n_rows=64
+        )
+        assert "REPARTITION_BY_NUM" in plan_text(out)

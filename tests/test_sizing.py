@@ -59,12 +59,13 @@ def test_unstatable_inputs_take_the_scale_shapes(spark, monkeypatch, case):
     assert input_probe(li) == (n, None)
 
     base = li.withColumn("pos0", F.col("row_id"))
-    assert "hashpartitioning(_obkt" in plan_text(st._block_permute_pos(base, 64, s=1))
+    # the blocks' running sum takes a keyed exchange on the mix-key bucket
+    assert "hashpartitioning(_bucket" in plan_text(st._block_permute_pos(base, 64, s=1))
 
     draws = st.BlockWeightedSampling(
         block_size=16, weight_col="l_quantity", total_size=300, replace=True
     ).plan(li, seed=5)
-    assert "_lo" in plan_text(draws)  # the fused-meta shape
+    assert "_lo" in plan_text(draws)  # min/max range buckets
 
     q = emb.where("vec_id < 3").select(F.col("vec_id").alias("q_id"), "embedding")
     c = emb.select(F.col("vec_id").alias("c_id"), "embedding")

@@ -6,6 +6,8 @@ tolerance bands, class-balance bands, len==execution invariants.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -24,8 +26,11 @@ from scdataset_spark.plans.plan import (
     with_batches,
     with_pos,
 )
+from scdataset_spark.plans.seeds import MIX_MOD
 
-from tests._helpers import collect_pos
+from scdataset_spark.session import input_probe
+
+from tests._helpers import collect_pos, plan_subtrees, plan_text
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -294,13 +299,182 @@ class TestBlockPermuteCountStar:
         assert _block_permute_pos(base, 8, s=1).count() == 0
 
 
-class TestDirectPermuteEquivalence:
-    def test_direct_equals_metadata_path(self, spark, monkeypatch):
-        li = load_table(spark, "lineitem", SF_DIR_SMALL)
-        strat = BlockWeightedSampling(
-            block_size=16, weight_col="l_quantity", total_size=200, replace=True
+class TestBlockPermuteBucketedOffsets:
+    def _reference(self, base, block, s):
+        from scdataset_spark.plans.seeds import mix_sql
+
+        ref = base.withColumn(
+            "_bk", F.expr(mix_sql(f"pos0 div {block}", s, "spark"))
         )
-        direct = sorted(map(tuple, strat.plan(li, seed=7).select("row_id", "pos").collect()))
-        monkeypatch.setattr(st, "DIRECT_PERMUTE_MAX", 0)  # force metadata path
-        meta = sorted(map(tuple, strat.plan(li, seed=7).select("row_id", "pos").collect()))
-        assert direct == meta
+        w = Window.orderBy("_bk", "pos0")
+        return collect_pos(
+            ref.withColumn("pos", F.row_number().over(w) - F.lit(1))
+        )
+
+    @pytest.mark.parametrize("n,block", [(1000, 4), (997, 4), (64, 64)])
+    def test_forced_chunk_and_bucket_boundaries(self, spark, monkeypatch, n, block):
+        """Tiny chunk size + tiny bucket count force every boundary the
+        scale path crosses; values must equal the global-window form."""
+        monkeypatch.setattr(st, "BLOCK_META_CHUNK", 16)
+        monkeypatch.setattr(st, "BLOCK_OFFSET_BUCKETS", 7)
+        monkeypatch.setattr(st, "BLOCK_META_WINDOW_MAX", -1)
+        base = spark.range(n).select(
+            (F.col("id") * 3).alias("row_id"), F.col("id").alias("pos0")
+        )
+        got = collect_pos(
+            st._block_permute_pos(base, block, s=4321).drop("block_id")
+        )
+        assert got == self._reference(base, block, s=4321)
+
+    def test_blocks_offsets_window_is_bucketed_past_threshold(self, spark):
+        """Past BLOCK_META_WINDOW_MAX (here: no file lineage, which
+        resolves to the safe scale shape) the running sum over the
+        blocks frame must be partitioned by the mix-key range bucket,
+        not a single-partition global window (VERDICT r15 task 6)."""
+        base = spark.range(10_000).select(
+            F.col("id").alias("row_id"), F.col("id").alias("pos0")
+        )
+        assert input_probe(base)[1] is None  # range() has no files
+        planned = st._block_permute_pos(base, 8, s=1).drop("block_id")
+        plan = plan_text(planned, "simple")
+        # the bucket is the static mix-key range, and the within-bucket
+        # running sum of the block sizes is partitioned on it, fed by
+        # its own keyed exchange
+        assert re.search(
+            rf"\(_bkey#\d+L \* {st.BLOCK_OFFSET_BUCKETS}\) div {MIX_MOD}\) AS _bucket#",
+            plan,
+        )
+        assert re.search(r"Window \[sum\(_bn#\d+L\) windowspecdefinition\(_bucket#", plan)
+        keyed = plan_subtrees(planned, "Exchange hashpartitioning(_bucket#")
+        assert any("REPARTITION_BY_COL" in sub[0] for sub in keyed)
+        # the only single-partition exchanges feed aggregates (the
+        # count-star scalar, the <= BLOCK_OFFSET_BUCKETS-row per-bucket
+        # totals), never a window over the blocks frame
+        singles = plan_subtrees(planned, "Exchange SinglePartition")
+        assert singles
+        for sub in singles:
+            assert "HashAggregate" in sub[1], sub[:2]
+
+    def test_file_backed_small_frame_keeps_single_window(self, spark):
+        """Below the threshold (tiny file-backed frame) the cheap
+        single-window shape must remain — the scale shape's extra
+        exchanges measured 2-4x the whole query at sf0.1
+        (artifacts/r16/ab_blockpermute_*.jsonl)."""
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        nbytes = input_probe(li)[1]
+        assert nbytes is not None
+        assert nbytes // st._EST_MIN_BYTES_PER_ROW // 64 <= st.BLOCK_META_WINDOW_MAX
+        base = li.withColumn("pos0", F.col("row_id"))
+        plan = plan_text(st._block_permute_pos(base, 64, s=1).drop("block_id"))
+        assert "hashpartitioning(_bucket" not in plan
+
+    def test_scale_path_equals_window_path_on_file_backed_frame(
+        self, spark, monkeypatch
+    ):
+        li = load_table(spark, "lineitem", SF_DIR_SMALL).select("row_id")
+        base = li.withColumn("pos0", F.col("row_id"))
+        window_shape = collect_pos(
+            st._block_permute_pos(base, 32, s=99).drop("block_id")
+        )
+        monkeypatch.setattr(st, "BLOCK_META_WINDOW_MAX", -1)
+        scale_shape = collect_pos(
+            st._block_permute_pos(base, 32, s=99).drop("block_id")
+        )
+        assert window_shape == scale_shape
+
+
+class TestWeightedDrawsSingleScan:
+    def test_single_scan_equals_fused_meta_path(self, spark, monkeypatch):
+        """The meta-free bucketing (row_id div chunk) must draw the
+        identical multiset as the min/max range buckets (forced via
+        unknown input bytes); both take the total from the persisted
+        offsets frame."""
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        strat = st.BlockWeightedSampling(
+            block_size=16, weight_col="l_quantity", total_size=300, replace=True
+        )
+        assert input_probe(li)[1] is not None  # file-backed: new path
+        new_path = sorted(
+            map(tuple, strat.plan(li, seed=5).select("row_id", "pos").collect())
+        )
+        monkeypatch.setattr(st, "input_probe", lambda df: (0, None))
+        fused_meta = sorted(
+            map(tuple, strat.plan(li, seed=5).select("row_id", "pos").collect())
+        )
+        assert new_path == fused_meta
+
+    def test_single_scan_has_no_meta_crossjoin(self, spark):
+        """The data side must not be crossJoined against a broadcast
+        meta anymore: no BroadcastNestedLoopJoin above the lineitem
+        scan in the draws plan."""
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        strat = st.BlockWeightedSampling(
+            block_size=16, weight_col="l_quantity", total_size=300, replace=True
+        )
+        plan = plan_text(strat.plan(li, seed=5))
+        assert "_lo" not in plan and "_hi" not in plan
+
+
+class TestDropLastTopK:
+    """drop_last's k = n % block_size rows come from a sort-LIMIT
+    top-(block_size-1) candidate pass + arithmetic re-rank, replacing
+    two full bucketed global ranks — values must equal the global-window
+    reference at every remainder edge (k = 0, 0 < k < block, k = n)."""
+
+    def _reference(self, spark, n, block, seed):
+        from scdataset_spark.plans.seeds import mix_sql
+
+        p = spark.range(n).select(
+            F.col("id").alias("row_id"), F.col("id").alias("pos0")
+        )
+        k = n % block
+        w_d = Window.orderBy(
+            F.expr(mix_sql("pos0", seed + 1, "spark")).desc(),
+            F.col("pos0").asc(),
+        )
+        kept = (
+            p.withColumn("_drnk", F.row_number().over(w_d))
+            .where(F.col("_drnk") > k)
+            .drop("_drnk")
+        )
+        w_p = Window.orderBy("row_id")
+        kept = kept.withColumn("pos0", F.row_number().over(w_p) - F.lit(1))
+        w_b = Window.orderBy(
+            F.expr(mix_sql(f"pos0 div {block}", seed, "spark")), F.col("pos0")
+        )
+        return collect_pos(
+            kept.withColumn("pos", F.row_number().over(w_b) - F.lit(1)).select(
+                "row_id", "pos"
+            )
+        )
+
+    @pytest.mark.parametrize(
+        "n,block",
+        [
+            (1000, 64),  # k = 40: the generic drop
+            (1024, 64),  # k = 0: nothing drops
+            (37, 64),    # k = n: the whole partial block drops
+            (1000, 1),   # k always 0 at block 1 (limit(0) candidate set)
+        ],
+    )
+    def test_topk_drop_equals_global_window_reference(self, spark, n, block):
+        base = spark.range(n).select(F.col("id").alias("row_id"))
+        got = collect_pos(
+            st.BlockShuffling(block_size=block, drop_last=True, assume_dense=True)
+            .plan(base, seed=7)
+            .select("row_id", "pos")
+        )
+        assert got == self._reference(spark, n, block, seed=7)
+
+    def test_drop_path_has_no_full_data_rank(self, spark):
+        """The drop set must come from TakeOrderedAndProject; the
+        pre-r16 full bucketed ranks keyed their data exchanges on
+        _bucket — neither may reappear."""
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        plan = plan_text(
+            st.BlockShuffling(block_size=64, drop_last=True, assume_dense=True)
+            .plan(li, seed=7)
+            .select("row_id", "pos")
+        )
+        assert "TakeOrderedAndProject" in plan
+        assert "hashpartitioning(_bucket" not in plan
