@@ -73,15 +73,13 @@ def estimate_sample_bytes_measured(
     is *measured*, not schema-guessed; :func:`estimate_row_bytes` stays
     the zero-hook fast path.
 
-    Driver-side by design: 16 rows, exactly like the reference.  The
-    hook order here is intentionally a copy of
-    ``pipeline/hooks.py::run_hook_pipeline`` — the two cannot share one
-    callable because the pipeline's copy must stay function-local to
-    pickle by value into executors; ``tests/test_autoconfig.py`` pins
-    them together with an output-parity check.
+    Driver-side by design: 16 rows, exactly like the reference, run
+    as one fetch of one batch through ``pipeline.hooks.fetch_hooks``,
+    the function the pipeline ships to its executors.
     """
     import numpy as np
-    import pandas as pd  # noqa: F401  (hooks receive pandas frames)
+
+    from scdataset_spark.pipeline.hooks import fetch_hooks
 
     if n_samples <= 0:
         raise ValueError(f"n_samples must be positive, got {n_samples}")
@@ -90,14 +88,9 @@ def estimate_sample_bytes_measured(
         return 0.0
     if "pos" not in pdf.columns:
         pdf = pdf.assign(pos=np.arange(len(pdf), dtype=np.int64))
-    if fetch_callback is not None:
-        pdf = fetch_callback(pdf)
-    if fetch_transform is not None:
-        pdf = fetch_transform(pdf)
-    if batch_callback is not None:
-        pdf = batch_callback(pdf, np.arange(len(pdf)))
-    if batch_transform is not None:
-        pdf = batch_transform(pdf)
+    pdf = fetch_hooks(
+        len(pdf), fetch_callback, fetch_transform, batch_callback, batch_transform
+    )(pdf)
     return float(pdf.memory_usage(deep=True, index=False).sum()) / len(pdf)
 
 

@@ -197,19 +197,26 @@ def ensure_ingested(
     row_id so fetch-ordered scans are sequential I/O.
 
     ``slices > 1`` bounds the ingest's SCRATCH footprint: the one-shot
-    numbering shuffles the entire table through local disk at once
-    (shuffle write + window spill + range-repartition concurrently —
-    measured: the sf100 ingest, 600 M rows, exhausted a 53 GB scratch
-    volume under lz4), while the chunked path numbers each leading-key
-    range independently — per-slice shuffle ≈ 1/slices of the data,
-    reclaimed between jobs — and stitches exact global row_ids from one
-    cheap per-slice count pass.  Correct because ``l_orderkey`` is the
-    LEADING order column: every row of slice i sorts before every row
-    of slice i+1, so slice-local ranks + cumulative slice counts equal
-    the global rank.  At 100 TB this is the only viable shape: ingest
-    scratch scales with the slice, not the dataset.
+    numbering shuffles the whole table through local disk at once
+    (measured: the sf100 ingest, 600 M rows, exhausted a 53 GB scratch
+    volume under lz4), while slices number one leading-key range per
+    job (per-slice shuffle ≈ 1/slices of the data, reclaimed between
+    jobs) and stitch exact global row_ids from one per-slice count pass.
+    Correct because ``l_orderkey`` is the LEADING order column, so
+    slice-local ranks + cumulative slice counts equal the global rank.
+
+    Every table and slice count has one write body (:func:`_ingest`):
+    each chunk is sorted on ``row_id`` into a private staging directory
+    inside the cache, and ONE ``os.rename`` publishes the table.  A
+    crashed ingest leaves nothing where :func:`load_table` looks; of two
+    concurrent ingests the first rename wins and the other discards its
+    (equal) copy.  Pool workers keep the caller's job group.
     """
-    parts = ingest_parts(spark)
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    root = ingest_dir(sf_dir, ingest_parts(spark))
     # set every session conf the per-table reads depend on ONCE, before
     # any thread plans a read (r16, ADVICE r15): load_table mutates
     # session-global confs (timeZone, nanosAsLong), which is an
@@ -217,57 +224,70 @@ def ensure_ingested(
     # thread pool
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    def _ingest_one(name: str) -> None:
-        out = os.path.join(ingest_dir(sf_dir, parts), f"{name}.parquet")
-        if os.path.exists(os.path.join(out, "_SUCCESS")):
-            return
-        df = load_table(spark, name, sf_dir, with_row_id=True, use_ingested=False)
-        t_parts = table_ingest_parts(df)
-        if name == "lineitem" and slices > 1:
-            _ingest_lineitem_sliced(spark, sf_dir, out, t_parts, slices)
-            return
-        (
-            df.repartitionByRange(t_parts, "row_id")
-            .sortWithinPartitions("row_id")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-
     missing = [
-        n
-        for n in tables
-        if not os.path.exists(
-            os.path.join(ingest_dir(sf_dir, parts), f"{n}.parquet", "_SUCCESS")
-        )
+        n for n in tables
+        if not os.path.exists(os.path.join(root, f"{n}.parquet", "_SUCCESS"))
     ]
-    if len(missing) > 1:
-        # independent writes overlap (guide §2.6): the small tables'
-        # jobs back-fill executors idled by the lineitem numbering tail
-        from concurrent.futures import ThreadPoolExecutor
+    if not missing:
+        return
+    # independent writes overlap (guide §2.6): the small tables' jobs
+    # back-fill executors idled by the lineitem numbering tail
+    ingest = inheritable_thread_target(spark)(
+        lambda name: _ingest(spark, sf_dir, root, name, slices)
+    )
+    with ThreadPoolExecutor(max_workers=min(3, len(missing))) as pool:
+        list(pool.map(ingest, missing))
 
-        with ThreadPoolExecutor(max_workers=min(3, len(missing))) as pool:
-            list(pool.map(_ingest_one, missing))
-    else:
-        for name in missing:
-            _ingest_one(name)
 
-
-def _ingest_lineitem_sliced(
-    spark: SparkSession, sf_dir: str, out: str, parts: int, slices: int
-) -> None:
-    """Bounded-scratch lineitem ingest (see :func:`ensure_ingested`).
-
-    Slice boundaries are uniform ``l_orderkey`` ranges (driver-side
-    min/max probe); per-slice row counts come from ONE grouped scan and
-    become driver-side cumulative offsets.  Each slice job filters the
-    source (predicate pushed to the parquet scan), numbers with the
-    same ``bucketed_rank`` primitive, adds its offset, and writes to a
-    staging dir; part-files are renamed into the final layout and
-    ``_SUCCESS`` is only created after the LAST slice lands, so a
-    partial (crashed) ingest is never mistaken for a complete one."""
+def _ingest(spark: SparkSession, sf_dir: str, root: str, name: str, slices: int) -> None:
+    """Write every chunk of ``name`` (the table, or its numbered slices)
+    range-partitioned and sorted on ``row_id`` into a private staging
+    directory under ``root``, part-files prefixed so that file-name
+    order is row-id order, then publish it as ``<name>.parquet``."""
     import shutil
+    import uuid
 
+    df = load_table(spark, name, sf_dir, with_row_id=True, use_ingested=False)
+    parts = table_ingest_parts(df)
+    chunks = [("", df)]
+    if name == "lineitem" and slices > 1:
+        chunks, parts = _lineitem_slices(spark, sf_dir, slices), max(1, parts // slices)
+    staging = os.path.join(root, f"_staging-{name}-{uuid.uuid4().hex}")
+    out = os.path.join(root, f"{name}.parquet")
+    try:
+        for i, (prefix, chunk) in enumerate(chunks):
+            written = os.path.join(staging, f"_chunk{i}")
+            (
+                chunk.repartitionByRange(parts, "row_id")
+                .sortWithinPartitions("row_id")
+                .write.parquet(written)
+            )
+            for f in os.listdir(written):
+                if f.startswith("part-"):
+                    os.rename(os.path.join(written, f), os.path.join(staging, prefix + f))
+            shutil.rmtree(written)
+        with open(os.path.join(staging, "_SUCCESS"), "w"):
+            pass
+        if not os.path.exists(os.path.join(out, "_SUCCESS")):
+            # same filesystem, so atomic; a non-empty target (another
+            # writer published first) refuses it and that copy stands
+            shutil.rmtree(out, ignore_errors=True)  # a leftover without _SUCCESS
+            try:
+                os.rename(staging, out)
+            except OSError:
+                if not os.path.exists(os.path.join(out, "_SUCCESS")):
+                    raise
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _lineitem_slices(spark: SparkSession, sf_dir: str, slices: int):
+    """Bounded-scratch lineitem chunks (see :func:`ensure_ingested`):
+    ``(file-name prefix, numbered slice)`` pairs in row-id order.
+    Slices are uniform ``l_orderkey`` ranges (driver-side min/max
+    probe); ONE grouped count scan gives their cumulative offsets.
+    Each slice filters the source (pushed to the scan), numbers with
+    ``bucketed_rank`` and adds its offset; empty slices are skipped."""
     src = load_table(spark, "lineitem", sf_dir, with_row_id=False, use_ingested=False)
     lo, hi = src.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     span = int(hi) - int(lo) + 1
@@ -279,36 +299,14 @@ def _ingest_lineitem_sliced(
         (r["_s"], r["n"])
         for r in src.groupBy(slice_expr.alias("_s")).agg(F.count(F.lit(1)).alias("n")).collect()
     )
-    offsets, acc = {}, 0
+    offset = 0
     for s in range(slices):
-        offsets[s] = acc
-        acc += counts.get(s, 0)
-    staging = out + "._staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    slice_parts = max(1, parts // slices)
-    for s in range(slices):
-        if counts.get(s, 0) == 0:
-            continue
-        chunk = src.where(slice_expr == s)
-        numbered = _lineitem_row_id(chunk).withColumn(
-            "row_id", F.col("row_id") + F.lit(offsets[s])
-        )
-        (
-            numbered.repartitionByRange(slice_parts, "row_id")
-            .sortWithinPartitions("row_id")
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        for f in sorted(os.listdir(staging)):
-            if f.startswith("part-"):
-                os.rename(
-                    os.path.join(staging, f), os.path.join(out, f"slice{s:04d}-{f}")
-                )
-        shutil.rmtree(staging, ignore_errors=True)
-    with open(os.path.join(out, "_SUCCESS"), "w"):
-        pass
+        if counts.get(s, 0):
+            numbered = _lineitem_row_id(src.where(slice_expr == s)).withColumn(
+                "row_id", F.col("row_id") + F.lit(offset)
+            )
+            yield f"slice{s:04d}-", numbered
+            offset += counts[s]
 
 
 # Opt-in co-located join layout (sf_dir, table) -> managed bucketed

@@ -558,7 +558,7 @@ class BlockWeightedSampling(SamplingStrategy):
         )
         w_blk = Window.orderBy("_bkey", "pos0")
         return (
-            out.withColumn("pos", F.row_number().over(w_blk) - F.lit(1))
+            out.withColumn("pos", (F.row_number().over(w_blk) - F.lit(1)).cast("bigint"))
             .drop("pos0", "_bkey")
         )
 

@@ -517,7 +517,7 @@ def quality_rank_by_source(
     row_number and ties cannot diverge).  ``None`` resolves from the
     MAX per-source count (see :func:`_curation_input`).
     """
-    from scdataset_spark.plans.plan import grouped_bucketed_rank
+    from scdataset_spark.plans.plan import _join_groups, grouped_bucketed_rank
 
     slim = df.select(id_col, source_col, quality_col)
     src, buckets = _curation_input(df, slim, [source_col], buckets, n_rows)
@@ -533,7 +533,7 @@ def quality_rank_by_source(
     )
     totals = src.groupBy(source_col).agg(F.count(F.lit(1)).alias("_n"))
     return (
-        ranked.join(F.broadcast(totals), source_col)
+        _join_groups(ranked, totals, [source_col])
         .withColumn(
             "q_pct",
             F.when(F.col("_n") == 1, F.lit(0.0)).otherwise(

@@ -5,12 +5,12 @@ Three export paths:
 - ``iterate_batches``: driver-side iterator yielding exact
   ``batch_size`` dicts of numpy arrays in plan order — the reference's
   DataLoader-yield analogue, for single-consumer training loops.  The
-  frame is sorted on ``order_col`` and streamed one partition at a
+  frame is sorted on ``pos`` and streamed one partition at a
   time (``toLocalIterator`` with prefetch — nothing is collected
   whole).  The exact frame ``hooks.run_hook_pipeline`` returns is
   already in ``pos`` order partition by partition (fetch order, each
-  fetch ``pos``-sorted; see that module's doc), so with
-  ``order_col="pos"`` it streams without the sort: no range exchange,
+  fetch ``pos``-sorted; see that module's doc), so it streams without
+  the sort: no range exchange,
   no sampling job that would run the hooks a second time, and the
   first batch arrives when the first partition is done.  Partitions
   cross to the driver as Arrow record batches: a ``mapInArrow`` stage
@@ -52,16 +52,15 @@ def iterate_batches(
     planned: DataFrame,
     batch_size: int,
     columns: list[str],
-    order_col: str = "pos",
     drop_last: bool = False,
 ) -> Iterator[dict[str, np.ndarray]]:
-    """Yield dicts of numpy arrays in ``order_col`` order, exactly
+    """Yield dicts of numpy arrays in ``pos`` order, exactly
     ``batch_size`` rows per batch; only the final global partial batch
     may be shorter, and ``drop_last`` drops it.  (``with_batches``'
     ``drop_last`` instead drops each fetch's partial batch.)
 
-    Keys are ``columns`` (duplicates collapse; ``order_col`` may be one
-    of them).  Each value is the array ``np.array(values)`` would build
+    Keys are ``columns`` (duplicates collapse; ``pos`` may be one of
+    them).  Each value is the array ``np.array(values)`` would build
     from the batch's Python values, as a ``collect()`` row gives them:
     integral columns are ``int64``, floating ``float64``, boolean
     ``bool``, strings ``<U<longest in the batch>``, equal-length arrays
@@ -72,10 +71,9 @@ def iterate_batches(
 
     The frame streams one partition at a time (``toLocalIterator`` with
     prefetch); each partition crosses as Arrow record batches (see the
-    module doc).  It is sorted on ``order_col`` first, except when
-    ``order_col`` is ``"pos"`` and ``planned`` is the very object
-    ``run_hook_pipeline`` returned: its partitions are already in
-    ``pos`` order, so it streams as it is.  Any frame derived from it
+    module doc).  It is sorted on ``pos`` first, except when ``planned``
+    is the very object ``run_hook_pipeline`` returned: its partitions
+    are already in ``pos`` order, so it streams as it is.  Any frame derived from it
     (``.where``, ``.select``, a join) is sorted.  The unsorted stream
     checks its ``pos`` order as it goes and raises ``ValueError`` if a
     hook changed ``pos`` against the fetch order.  Columns must be types
@@ -83,7 +81,7 @@ def iterate_batches(
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     names = list(dict.fromkeys(columns))
-    df, unsorted = _streamed(planned, order_col, names or [order_col])
+    df, unsorted = _streamed(planned, names or ["pos"])
     fields = df.schema.fields
     k = df.columns.index("pos") if unsorted else None
     last = -np.inf
@@ -126,23 +124,17 @@ def iterate_batches(
         yield _assemble(seg, names, fields)
 
 
-def _streamed(
-    planned: DataFrame, order_col: str, ship: list[str]
-) -> tuple[DataFrame, bool]:
-    """The frame ``iterate_batches`` streams, ``ship`` in ``order_col``
-    order partition by partition, and whether it streams unsorted.  It
-    is sorted unless it is the exact object ``run_hook_pipeline``
-    returned and the order is its ``pos`` (a private marker on that
-    object, not on its plan).  Unsorted, ``pos`` also rides along, last
-    when not shipped, so the driver can check the order it relies on."""
-    if (
-        order_col == "pos"
-        and vars(planned).get("_partitions_in_pos_order", False)
-        and "pos" in planned.columns
-    ):
+def _streamed(planned: DataFrame, ship: list[str]) -> tuple[DataFrame, bool]:
+    """The frame ``iterate_batches`` streams, ``ship`` in ``pos`` order
+    partition by partition, and whether it streams unsorted.  It is
+    sorted unless it is the exact object ``run_hook_pipeline`` returned
+    (a private marker on that object, not on its plan).  Unsorted,
+    ``pos`` also rides along, last when not shipped, so the driver can
+    check the order it relies on."""
+    if vars(planned).get("_partitions_in_pos_order", False) and "pos" in planned.columns:
         return planned.select(*dict.fromkeys([*ship, "pos"])), True
-    keep = dict.fromkeys([order_col, *ship])
-    return planned.select(*keep).orderBy(order_col).select(*ship), False
+    keep = dict.fromkeys(["pos", *ship])
+    return planned.select(*keep).orderBy("pos").select(*ship), False
 
 
 def _numeric(arr: pa.Array) -> np.ndarray | None:
@@ -231,7 +223,6 @@ def write_arrow_fetches(
     planned: DataFrame,
     out_dir: str,
     columns: list[str],
-    order_col: str = "pos",
 ) -> DataFrame:
     """Arrow-IPC export: one ``fetch_{id}.arrow`` stream file per fetch,
     rows pos-sorted inside — the zero-copy trainer hand-off (torch/JAX
@@ -265,7 +256,7 @@ def write_arrow_fetches(
         import pyarrow as pa
         import pyarrow.ipc as ipc
 
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
+        pdf = pdf.sort_values("pos").reset_index(drop=True)
         fetch_id = int(pdf["fetch_id"].iloc[0])
         path = os.path.join(out_dir, f"fetch_{fetch_id:08d}.arrow")
         table = pa.Table.from_pandas(pdf[out_cols], preserve_index=False)
@@ -279,9 +270,9 @@ def write_arrow_fetches(
             {"fetch_id": [fetch_id], "n_rows": [len(pdf)], "path": [path]}
         )
 
-    # dedupe: callers may list order_col/fetch_id among columns
+    # dedupe: callers may list pos/fetch_id among columns
     out_cols = list(dict.fromkeys(columns))
-    sel = list(dict.fromkeys(["fetch_id", order_col, *columns]))
+    sel = list(dict.fromkeys(["fetch_id", "pos", *columns]))
     manifest = planned.select(*sel).groupBy("fetch_id").applyInPandas(
         write_fetch, schema="fetch_id bigint, n_rows bigint, path string"
     )

@@ -133,13 +133,33 @@ def _bucketed_prefix(
         .withColumn("_offset", F.coalesce(F.sum("_btot").over(w_off), F.lit(0)))
     )
     out = (
-        b.repartition(*group_cols, "_bucket")
-        .withColumn(out_col, prefix)
-        .join(F.broadcast(offsets.drop("_btot")), [*group_cols, "_bucket"])
+        _join_groups(
+            b.repartition(*group_cols, "_bucket").withColumn(out_col, prefix),
+            offsets.drop("_btot"),
+            group_cols,
+            ("_bucket",),
+        )
         .withColumn(out_col, F.col(out_col) + F.col("_offset"))
         .drop("_bucket", "_offset")
     )
     return out, offsets
+
+
+def _join_groups(
+    df: DataFrame, small: DataFrame, group_cols: list[str], keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Broadcast-join the per-group frame ``small`` onto ``df`` on
+    ``group_cols`` NULL-SAFELY (a null group is one group, as in a
+    window's ``PARTITION BY``) and on ``keys`` by plain equality; the
+    join columns appear once, as ``df``'s.  With no group columns it is
+    the plain ``USING`` join on ``keys``."""
+    if not group_cols:
+        return df.join(F.broadcast(small), list(keys))
+    on = [*group_cols, *keys]
+    right = F.broadcast(small.withColumnsRenamed({c: f"_jr_{c}" for c in on}))
+    cond = [F.col(c).eqNullSafe(F.col(f"_jr_{c}")) for c in group_cols]
+    cond += [F.col(c) == F.col(f"_jr_{c}") for c in keys]
+    return df.join(right, cond).drop(*[f"_jr_{c}" for c in on])
 
 
 def bucketed_rank(

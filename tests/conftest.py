@@ -99,8 +99,10 @@ _SLOW_TESTS = frozenset([
     "test_similarity_extra.py::TestEmbedCosinePairsFast::test_vectorized_and_fold_signatures_agree",
     "test_similarity_extra.py::TestIVF::test_deterministic_given_seed",
     "test_similarity_extra.py::TestIVF::test_recall_vs_brute_force",
+    "test_similarity_extra.py::TestIvfAutoCells::test_blas_assign_equals_hof_at_forced_scale",
     "test_similarity_extra.py::TestProjectedAnnPairs::test_local_verify_matches_join_verify",
     "test_similarity_extra.py::TestProjectedMaxBucket::test_saturated_bucket_is_screened",
+    "test_similarity_extra.py::TestRoutedAssignment::test_ivf_probe_identical_through_routing_flip",
     "test_skew_and_stateful.py::TestCappedSessionsStateful::test_closed_chunks_match_batch_twin_across_restarts",
     "test_skew_and_stateful.py::TestConnectedComponentsStar::test_path_graph_1k_within_default_cap",
     "test_skew_and_stateful.py::TestConnectedComponentsStar::test_random_graph_matches_propagation",
@@ -127,8 +129,6 @@ _SLOW_TESTS = frozenset([
     "test_wired_ops_r10.py::TestAutoScalePosture::test_big_corpus_defaults_take_fast_path",
     "test_wired_ops_r10.py::TestAutoScalePosture::test_remove_spans_auto_picks_local_at_scale",
     "test_wired_ops_r10.py::TestAutoScalePosture::test_small_corpus_defaults_keep_exact_shape",
-    "test_wired_ops_r11.py::TestIvfAutoCells::test_blas_assign_equals_hof_at_forced_scale",
-    "test_wired_ops_r11.py::TestRoutedAssignment::test_ivf_probe_identical_through_routing_flip",
     "test_wired_ops_r15.py::TestCurriculumOrder::test_deterministic_and_seed_sensitive",
     "test_wired_ops_r15.py::TestMmrTopk::test_lambda_one_reduces_to_plain_topk",
     "test_wired_ops_r15.py::TestMmrTopk::test_mmr_diversifies_where_topk_duplicates",

@@ -81,6 +81,41 @@ class TestTokenBudgetPerSourceBucketed:
         assert "_bucket" not in plan_text(auto)
 
 
+class TestNullGroups:
+    def test_bucketed_shapes_keep_null_group_rows(self, spark):
+        """A null group key is one group, as in the window shapes'
+        PARTITION BY: the bucketed rank, budget and calibration keep its
+        rows with the window shapes' values."""
+        from pyspark.sql import Window
+
+        from scdataset_spark.operators.textanalysis import (
+            quality_rank_by_source,
+            token_budget_by_source,
+        )
+        from scdataset_spark.plans.plan import grouped_bucketed_rank
+
+        df = spark.createDataFrame(
+            [(1, "en", 5, 10), (2, None, 7, 20), (3, None, 3, 30), (4, "en", 9, 40)],
+            "doc_id bigint, lang string, q_int bigint, n_tokens bigint",
+        )
+
+        def rows(frame):
+            return sorted(map(tuple, frame.collect()), key=repr)
+
+        order = [("q_int", "asc"), ("doc_id", "asc")]
+        w = Window.partitionBy("lang").orderBy("q_int", "doc_id")
+        window_rank = df.withColumn("r", F.row_number().over(w) - F.lit(1))
+        bucketed_rank = grouped_bucketed_rank(df, ["lang"], "q_int", order, "r", 4)
+        assert len(rows(bucketed_rank)) == 4
+        assert rows(bucketed_rank.select(*window_rank.columns)) == rows(window_rank)
+        for op in (
+            lambda b: token_budget_by_source(df, 1000, buckets=b),
+            lambda b: quality_rank_by_source(df, buckets=b),
+        ):
+            want = rows(op(0))
+            assert len(want) == 4 and rows(op(4)) == want
+
+
 class TestQualityRankBySource:
     def _scored(self, spark):
         from scdataset_spark.operators import textanalysis as tx
@@ -261,3 +296,98 @@ class TestGatedPipelineStreamingSemantics:
         }
         uniq = [r for n, r in rep.items() if "unique" in n][0]
         assert not uniq.passed and uniq.violations == 1
+
+
+class TestTokenBudget:
+    def _scored(self, spark):
+        from scdataset_spark.operators import textanalysis as tx
+
+        docs = load_table(spark, "documents", SF_DIR_SMALL, with_row_id=False)
+        toks = tx.with_stop_counts(docs).select("doc_id", "n_tokens", "n_stop")
+        return toks.withColumn("q_int", F.expr(tx.Q_INT_EXPR))
+
+    def test_bucketed_equals_global_window(self, spark):
+        """The bucketed quality-keyed running sum must produce the exact
+        rows of the single global window (same order key, same exact
+        integer sums) — the posture changes the plan, not the result."""
+        from scdataset_spark.operators.textanalysis import token_budget
+
+        scored = self._scored(spark)
+        glob = sorted(map(tuple, token_budget(scored, 5000, buckets=0).collect()))
+        for k in (4, 16, 64):
+            bucketed = sorted(
+                map(tuple, token_budget(scored, 5000, buckets=k).collect())
+            )
+            assert bucketed == glob, f"buckets={k}"
+        assert glob  # non-trivial selection
+
+    def test_auto_resolution_flips_plan(self, spark, monkeypatch):
+        """n_rows forced past AUTO_SCALE_ROWS -> the bucketed plan (the
+        running-sum window is PARTITIONED by the quality bucket); small
+        n -> the pinned global-window plan; with neither, the count
+        probed on the slim projection resolves the same way; rows equal
+        either way."""
+        from scdataset_spark.operators import similarity
+        from scdataset_spark.operators.textanalysis import token_budget
+
+        scored = self._scored(spark)
+        big = token_budget(scored, 5000, n_rows=10_000_000)
+        small = token_budget(scored, 5000, n_rows=10)
+        assert "_bucket" in plan_text(big)
+        assert "_bucket" not in plan_text(small)
+        want = sorted(map(tuple, token_budget(scored, 5000, buckets=0).collect()))
+        assert sorted(map(tuple, big.collect())) == want
+        assert sorted(map(tuple, small.collect())) == want
+        monkeypatch.setattr(similarity, "AUTO_SCALE_ROWS", 10)
+        probed = token_budget(scored, 5000)
+        assert "_bucket" in plan_text(probed)
+        assert sorted(map(tuple, probed.collect())) == want
+
+    def test_budget_boundary(self, spark):
+        """Every selected doc fits the budget; the next doc in quality
+        order would overflow it (the cutoff is tight)."""
+        from scdataset_spark.operators.textanalysis import token_budget
+
+        scored = self._scored(spark)
+        picked = token_budget(scored, 5000, buckets=16).collect()
+        assert max(r["cum_tokens"] for r in picked) <= 5000
+        taken = {r["doc_id"] for r in picked}
+        total = sum(r["n_tokens"] for r in picked)
+        rest = scored.where(~F.col("doc_id").isin(taken)).collect()
+        if rest:  # the best unpicked doc must not fit
+            best_left = min(
+                rest, key=lambda r: (-r["q_int"], r["doc_id"])
+            )
+            assert total + best_left["n_tokens"] > 5000
+
+
+class TestTokenBudgetPerSource:
+    def test_equals_per_source_token_budget(self, spark):
+        """token_budget_by_source must equal token_budget run on each
+        source slice independently (same order key, same cutoff) —
+        the partitioned window IS per-source curation."""
+        from scdataset_spark.operators import textanalysis as tx
+        from scdataset_spark.operators.textanalysis import (
+            token_budget,
+            token_budget_by_source,
+        )
+
+        docs = load_table(spark, "documents", SF_DIR_SMALL, with_row_id=False)
+        toks = tx.with_stop_counts(docs).select(
+            "doc_id", "lang", "n_tokens", "n_stop"
+        )
+        scored = toks.withColumn("q_int", F.expr(tx.Q_INT_EXPR))
+        got = {
+            (r["lang"], r["doc_id"]): (r["n_tokens"], r["cum_tokens"])
+            for r in token_budget_by_source(scored, 2000, source_col="lang").collect()
+        }
+        langs = [r[0] for r in scored.select("lang").distinct().collect()]
+        assert len(langs) > 1
+        expected = {}
+        for lang in langs:
+            sl = scored.where(F.col("lang") == lang)
+            for r in token_budget(sl, 2000, buckets=0).collect():
+                expected[(lang, r["doc_id"])] = (r["n_tokens"], r["cum_tokens"])
+        assert got == expected and got
+        # every source contributes (no starvation by a global budget)
+        assert {k[0] for k in got} == set(langs)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from scdataset_spark.catalog import load_table
 from scdataset_spark.operators.strategies import BlockShuffling, Streaming
 from scdataset_spark.pipeline.export import _streamed, iterate_batches
-from scdataset_spark.pipeline.hooks import run_hook_pipeline
+from scdataset_spark.pipeline.hooks import fetch_hooks, run_hook_pipeline
 from scdataset_spark.pipeline.multiindexable import MultiIndexable
 from scdataset_spark.plans.plan import _is_fetch_ordered, with_batches
 from scdataset_spark.session import python_stage_partitions
@@ -177,17 +177,25 @@ class TestExport:
     def test_fresh_process_foreign_cwd(self, tmp_path):
         """Executor-side code must pickle by value: run from a directory
         where the package is importable only through the driver's
-        sys.path, as a user script would."""
+        sys.path, as a user script would — for the iterate stream and
+        for the hook stage's per-fetch function."""
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         script = f"""
 import json, sys
 sys.path.insert(0, {repo!r})
 from scdataset_spark.session import get_spark
 from scdataset_spark.pipeline.export import iterate_batches
+from scdataset_spark.pipeline.hooks import run_hook_pipeline
 spark = get_spark("fresh_process_iterate", shuffle_partitions=2)
 df = spark.range(0, 100, numPartitions=3).selectExpr("99 - id AS pos", "id AS v")
 out = [b["v"].tolist() for b in iterate_batches(df, 32, ["v"])]
-print(json.dumps(out))
+hooked = run_hook_pipeline(
+    df.selectExpr("pos", "v", "pos div 32 AS fetch_id"),
+    "pos bigint, v bigint, fetch_id bigint",
+    32,
+    fetch_transform=lambda p: p.assign(v=-p["v"]),
+)
+print(json.dumps([out, [b["v"].tolist() for b in iterate_batches(hooked, 32, ["v"])]]))
 spark.stop()
 """
         env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -201,9 +209,11 @@ spark.stop()
             timeout=300,
         )
         assert proc.returncode == 0, proc.stderr[-3000:]
-        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        out, hooked = json.loads(proc.stdout.strip().splitlines()[-1])
         assert [len(b) for b in out] == [32, 32, 32, 4]
         assert sum(out, []) == list(range(99, -1, -1))
+        assert [len(b) for b in hooked] == [32, 32, 32, 4]
+        assert sum(hooked, []) == list(range(-99, 1))
 
 
 class TestHookOrder:
@@ -344,7 +354,7 @@ class TestFetchOrderedStream:
         _, out = assert_no_jobs(
             spark.sparkContext, "fetch_ordered_plan", lambda: self._hooked(spark)
         )
-        plan = plan_text(_streamed(out, "pos", ["row_id"])[0])
+        plan = plan_text(_streamed(out, ["row_id"])[0])
         exchanges = re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)$", plan, re.M)
         assert len(exchanges) == 1, exchanges
         assert re.match(r"rangepartitioning\(fetch_id#\d+L ASC NULLS FIRST, \d+\)", exchanges[0])
@@ -356,7 +366,7 @@ class TestFetchOrderedStream:
     def test_derived_frame_is_sorted(self, spark, derive):
         planned, out = self._hooked(spark)
         derived = out.where("row_id % 3 != 0") if derive == "where" else out.repartition(3)
-        assert "rangepartitioning(pos" in plan_text(_streamed(derived, "pos", ["row_id"])[0])
+        assert "rangepartitioning(pos" in plan_text(_streamed(derived, ["row_id"])[0])
         want = list(_row_reference(derived, 16, ["pos", "row_id"]))
         _assert_same_batches(want, list(iterate_batches(derived, 16, ["pos", "row_id"])))
         assert (np.diff(np.concatenate([b["pos"] for b in want])) > 0).all()
@@ -520,6 +530,13 @@ class TestSortBeforeFetch:
         assert all(r["fetched"] == 2 * r["row_id"] for r in rows)
         # output order is the strategy's pos order, not fetch order
         assert [r["pos"] for r in rows] == sorted(r["pos"] for r in rows)
+
+    def test_fetch_callback_without_row_id_raises(self):
+        import pandas as pd
+
+        process = fetch_hooks(4, fetch_callback=lambda pdf: pdf)
+        with pytest.raises(ValueError, match="row_id"):
+            process(pd.DataFrame({"pos": [1, 0], "fetch_id": [0, 0]}))
 
 
 class TestHookDropLast:

@@ -15,7 +15,7 @@ from scdataset_spark.plans.plan import with_batches
 
 from scdataset_spark.session import input_probe
 
-from tests._helpers import assert_no_jobs, plan_text
+from tests._helpers import assert_no_jobs, cand_queries, cands, plan_text
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -509,3 +509,174 @@ class TestSimilarityPythonStagePartitions:
             emb, id_col="vec_id", vec="v", threshold=0.98, n_rows=64
         )
         assert "REPARTITION_BY_NUM" in plan_text(out)
+
+
+class TestIvfAutoCells:
+    def test_resolver_math(self):
+        from scdataset_spark.operators.similarity import (
+            IVF_CELL_BUDGET,
+            _resolve_ivf_cells,
+        )
+
+        # explicit pin passes through untouched, no count triggered
+        assert _resolve_ivf_cells(8, None, None) == (8, None)
+        # auto: small corpus floors at 8 cells
+        assert _resolve_ivf_cells(None, None, 4_000) == (8, 4_000)
+        # auto: production corpus scales ~n/4500
+        n = 10_000_000
+        cells, n_out = _resolve_ivf_cells(None, None, n)
+        assert cells == n // IVF_CELL_BUDGET == 2222 and n_out == n
+
+    def test_ivf_auto_cells(self, spark):
+        """Forced n_rows=10M on a tiny fixture must flip BOTH auto
+        knobs — the cell count (2222 seeded centroids requested; the
+        4 k-vector fixture caps what limit() returns, but the resolved
+        k exceeds every fixed default) and the BLAS assignment
+        (MapInPandas in the plan) — while the pinned oracle shape
+        keeps the lazy HOF plan."""
+        from scdataset_spark.operators.similarity import ivf_seeded_topk
+
+        q, c = cand_queries(spark, SF_DIR_SMALL, 10), cands(spark, SF_DIR_SMALL)
+        auto_big = ivf_seeded_topk(q, c, k=3, seed=11, n_rows=10_000_000)
+        assert "MapInPandas" in plan_text(auto_big)
+        pinned = ivf_seeded_topk(
+            q, c, k=3, n_clusters=8, seed=11, vectorized_assign=False
+        )
+        assert "MapInPandas" not in plan_text(pinned)
+
+    def test_auto_small_equals_pinned_oracle_shape(self, spark):
+        """At fixture scale the auto default resolves to the floor (8
+        cells, HOF assign) — byte-identical rows to the explicit
+        oracle pin, so the registered query's values ARE the default
+        path's values at small n."""
+        from scdataset_spark.operators.similarity import ivf_seeded_topk
+
+        q, c = cand_queries(spark, SF_DIR_SMALL, 10), cands(spark, SF_DIR_SMALL)
+        auto = sorted(map(tuple, ivf_seeded_topk(q, c, k=3, seed=11).collect()))
+        pinned = sorted(
+            map(
+                tuple,
+                ivf_seeded_topk(
+                    q, c, k=3, n_clusters=8, seed=11, vectorized_assign=False
+                ).collect(),
+            )
+        )
+        assert auto == pinned and auto
+
+    def test_blas_assign_equals_hof_at_forced_scale(self, spark):
+        """The defaults-at-scale run (big n_rows -> scaled cells + BLAS
+        assign) must return the same rows as the HOF argmin pinned to
+        the SAME resolved cell count — the posture flip changes the
+        physical plan, never the result."""
+        from scdataset_spark.operators.similarity import (
+            _resolve_ivf_cells,
+            ivf_seeded_topk,
+        )
+
+        q, c = cand_queries(spark, SF_DIR_SMALL, 10), cands(spark, SF_DIR_SMALL)
+        cells, _ = _resolve_ivf_cells(None, None, 10_000_000)
+        auto = sorted(
+            map(tuple, ivf_seeded_topk(q, c, k=3, seed=11, n_rows=10_000_000).collect())
+        )
+        hof = sorted(
+            map(
+                tuple,
+                ivf_seeded_topk(
+                    q, c, k=3, n_clusters=cells, seed=11, vectorized_assign=False
+                ).collect(),
+            )
+        )
+        assert auto == hof and auto
+
+    def test_pq_topk_auto_cells(self, spark):
+        """pq_topk's n_clusters=None resolves under the same contract:
+        forced-big n_rows flips cells + both BLAS twins (MapInPandas
+        appears); result equals the run with every knob pinned to the
+        resolved values."""
+        from scdataset_spark.operators.similarity import (
+            _resolve_ivf_cells,
+            pq_topk,
+        )
+
+        q, c = cand_queries(spark, SF_DIR_SMALL, 10), cands(spark, SF_DIR_SMALL)
+        cells, _ = _resolve_ivf_cells(None, None, 10_000_000)
+        auto_df = pq_topk(q, c, k=3, refine=3, seed=11, n_rows=10_000_000)
+        assert "MapInPandas" in plan_text(auto_df)
+        auto = sorted(map(tuple, auto_df.collect()))
+        pinned = sorted(
+            map(
+                tuple,
+                pq_topk(
+                    q, c, k=3, refine=3, n_clusters=cells, seed=11,
+                    vectorized_encode=True, vectorized_assign=True,
+                ).collect(),
+            )
+        )
+        assert auto == pinned and auto
+
+    def test_ivf_topk_auto_cells_floor(self, spark):
+        """The MLlib-KMeans variant shares the resolver: auto at
+        fixture scale = the 8-cell floor, equal to an explicit 8-cell
+        run (KMeans is seeded, so same cells -> same result)."""
+        from scdataset_spark.operators.similarity import ivf_topk
+
+        q, c = cand_queries(spark, SF_DIR_SMALL, 10), cands(spark, SF_DIR_SMALL)
+        auto = sorted(map(tuple, ivf_topk(q, c, k=3, seed=11).collect()))
+        pinned = sorted(
+            map(tuple, ivf_topk(q, c, k=3, n_clusters=8, seed=11).collect())
+        )
+        assert auto == pinned and auto
+
+
+class TestRoutedAssignment:
+    def test_routed_equals_flat_blas_at_large_cell_count(self, spark):
+        """Past ROUTE_CELLS the vectorized assignment flips to the
+        bound-pruned routed search (shared with semantic_dedup_fast);
+        it must agree with the flat BLAS argmin on every row (exact by
+        the triangle-inequality bound, same lowest-index tie rule)."""
+        from scdataset_spark.operators.similarity import (
+            assign_cells_routed,
+            assign_nearest_cell_blas,
+            seeded_centroids,
+        )
+
+        c = cands(spark, SF_DIR_SMALL)
+        cent = seeded_centroids(c, 600, 11, "c_id", "embedding")
+        src = c.select("c_id", F.col("embedding").alias("_v"))
+        routed = {
+            r["c_id"]: r["_cell"]
+            for r in assign_cells_routed(
+                src, cent, "c_id", "_v", 512, out_col="_cell"
+            ).collect()
+        }
+        flat = {
+            r["c_id"]: r["_cell"]
+            for r in assign_nearest_cell_blas(src, cent, "c_id", "_v").collect()
+        }
+        assert routed == flat and len(routed) == c.count()
+
+    def test_ivf_probe_identical_through_routing_flip(self, spark):
+        """ivf_seeded_topk at 600 cells: the routed vectorized
+        assignment must produce the same top-k as the HOF argmin
+        pinned to the same cells — the build-side engine choice never
+        changes the answer."""
+        from scdataset_spark.operators.similarity import ivf_seeded_topk
+
+        q, c = cand_queries(spark, SF_DIR_SMALL, 10), cands(spark, SF_DIR_SMALL)
+        routed = sorted(
+            map(
+                tuple,
+                ivf_seeded_topk(
+                    q, c, k=3, n_clusters=600, seed=11, vectorized_assign=True
+                ).collect(),
+            )
+        )
+        hof = sorted(
+            map(
+                tuple,
+                ivf_seeded_topk(
+                    q, c, k=3, n_clusters=600, seed=11, vectorized_assign=False
+                ).collect(),
+            )
+        )
+        assert routed == hof and routed

@@ -394,3 +394,89 @@ class TestIngestedServing:
         assert served.agg(F.min("ts"), F.max("ts")).collect() == raw.agg(
             F.min("ts"), F.max("ts")
         ).collect()
+
+
+class TestIngestPublish:
+    """The ingest stages every chunk privately and publishes the table
+    with one rename: no partial or doubled table is ever served."""
+
+    @staticmethod
+    def _rows(df):
+        return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+    def test_concurrent_ingests_serve_one_table(self, spark, tmp_path, monkeypatch):
+        import threading
+
+        import scdataset_spark.catalog as cat
+
+        monkeypatch.setattr(
+            cat, "ingest_dir", lambda sf_dir, parts=None: str(tmp_path / "ingest")
+        )
+        # both callers pass the _SUCCESS check before either one writes
+        both_checked = threading.Barrier(2, timeout=120)
+        parts = cat.table_ingest_parts
+
+        def parts_after_both_checked(df):
+            both_checked.wait()
+            return parts(df)
+
+        monkeypatch.setattr(cat, "table_ingest_parts", parts_after_both_checked)
+        errors = []
+
+        def ingest():
+            try:
+                cat.ensure_ingested(spark, SF_DIR_SMALL, tables=("lineitem",))
+            except Exception as e:  # noqa: BLE001 - reported below
+                errors.append(e)
+
+        threads = [threading.Thread(target=ingest) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+        assert not any(t.is_alive() for t in threads) and errors == []
+        assert os.listdir(tmp_path / "ingest") == ["lineitem.parquet"]
+        served = spark.read.parquet(str(tmp_path / "ingest" / "lineitem.parquet"))
+        oneshot = load_table(spark, "lineitem", SF_DIR_SMALL, use_ingested=False)
+        assert self._rows(served) == self._rows(oneshot)
+
+    def test_failed_slice_leaves_nothing_served(self, spark, tmp_path, monkeypatch):
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        import scdataset_spark.catalog as cat
+
+        root = tmp_path / "ingest"
+        monkeypatch.setattr(cat, "ingest_dir", lambda sf_dir, parts=None: str(root))
+        write, calls = DataFrameWriter.parquet, []
+
+        def second_write_fails(self, *args, **kwargs):
+            calls.append(args)
+            if len(calls) == 2:
+                raise RuntimeError("injected failure in the second slice")
+            return write(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", second_write_fails)
+        with pytest.raises(RuntimeError, match="injected"):
+            cat.ensure_ingested(spark, SF_DIR_SMALL, tables=("lineitem",), slices=4)
+        assert not os.path.exists(root / "lineitem.parquet")
+        assert os.listdir(root) == []  # the staging copy is gone too
+        cat.ensure_ingested(spark, SF_DIR_SMALL, tables=("lineitem",), slices=4)
+        served = load_table(spark, "lineitem", SF_DIR_SMALL)
+        oneshot = load_table(spark, "lineitem", SF_DIR_SMALL, use_ingested=False)
+        assert self._rows(served) == self._rows(oneshot)
+
+    def test_pooled_ingest_keeps_the_job_group(self, spark, tmp_path, monkeypatch):
+        import scdataset_spark.catalog as cat
+
+        monkeypatch.setattr(
+            cat, "ingest_dir", lambda sf_dir, parts=None: str(tmp_path / "ingest")
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("ingest-job-group-probe", "pooled ingest")
+        try:
+            cat.ensure_ingested(spark, SF_DIR_SMALL, tables=("orders", "events"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc.setLocalProperty("spark.job.interruptOnCancel", None)
+        assert sc.statusTracker().getJobIdsForGroup("ingest-job-group-probe")

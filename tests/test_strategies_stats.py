@@ -117,6 +117,41 @@ class TestWeightedSampling:
         assert per_round.where(F.col("count") > 1).count() == 0
 
 
+class TestPosType:
+    def test_every_strategy_plans_bigint_pos(self, spark):
+        """One ``pos`` type for every strategy: consumers union, join
+        and compare plans from different strategies."""
+        from scdataset_spark.operators.strategies import MixtureSampling, StratifiedSampling
+
+        cust = load_table(spark, "customer", SF_DIR_SMALL).withColumn(
+            "w", (F.col("c_custkey") % 7 + 1).cast("double")
+        )
+        docs = load_table(spark, "documents", SF_DIR_SMALL)
+        plans = {
+            "streaming": Streaming().plan(cust, seed=1),
+            "block_shuffling": BlockShuffling(block_size=16).plan(cust, seed=1),
+            "weighted": BlockWeightedSampling(
+                block_size=16, weight_col="w", total_size=64
+            ).plan(cust, seed=1),
+            "weighted_no_replace": BlockWeightedSampling(
+                block_size=16, weight_col="w", total_size=64, replace=False, sampling_size=32
+            ).plan(cust, seed=1),
+            "class_balanced": ClassBalancedSampling(
+                label_col="c_mktsegment", block_size=16, total_size=64
+            ).plan(cust, seed=1),
+            "mixture": MixtureSampling(
+                source_col="source", proportions_ppm={"src0": 600_000, "src1": 400_000},
+                block_size=16, total_size=64,
+            ).plan(docs, seed=1),
+            "stratified": StratifiedSampling(
+                stratum_col="c_mktsegment", fraction_ppm=500_000
+            ).plan(cust, seed=1),
+        }
+        assert {k: dict(p.dtypes)["pos"] for k, p in plans.items()} == {
+            k: "bigint" for k in plans
+        }
+
+
 class TestClassBalanced:
     def test_balance_band(self, spark):
         """Sampled class ratio ≈ uniform within [0.8, 1.2]× the ideal
