@@ -5,21 +5,33 @@ Three export paths:
 - ``iterate_batches``: driver-side iterator yielding exact
   ``batch_size`` dicts of numpy arrays in plan order — the reference's
   DataLoader-yield analogue, for single-consumer training loops.  The
-  frame is sorted on ``pos`` and streamed one partition at a
-  time (``toLocalIterator`` with prefetch — nothing is collected
-  whole).  The exact frame ``hooks.run_hook_pipeline`` returns is
-  already in ``pos`` order partition by partition (fetch order, each
-  fetch ``pos``-sorted; see that module's doc), so it streams without
-  the sort: no range exchange,
-  no sampling job that would run the hooks a second time, and the
-  first batch arrives when the first partition is done.  Partitions
-  cross to the driver as Arrow record batches: a ``mapInArrow`` stage
-  writes each record batch as one Arrow IPC blob, the driver reads it
-  with ``pyarrow.ipc`` and decodes each numeric column to numpy once
-  per record batch.  Batches are contiguous slices of those arrays; a
-  remainder carries across record-batch and partition edges.  Other
-  columns (strings, nulls, arrays, ...) are built per batch from their
-  Python values.  The arrays keep the dtypes ``np.array`` gives a
+  frame is sorted on ``pos`` and streamed partition by partition,
+  nothing collected whole.  The exact frame ``hooks.run_hook_pipeline``
+  returns is already in ``pos`` order partition by partition (fetch
+  order, each fetch ``pos``-sorted; see that module's doc), so it
+  streams without the sort: no range exchange, no sampling job that
+  would run the hooks a second time, and the first batch arrives when
+  the first partition is done.
+  Both frames cross to the driver through one transport: the JVM
+  encodes each partition as Arrow record batches
+  (``toArrowBatchRdd``), one single-partition job fetches it, and up to
+  ``session._cluster_width`` of those jobs run at once from a driver
+  thread pool — the reference's ``num_workers`` DataLoader workers
+  fetching ahead.  Partitions are handed out strictly in partition
+  order, so the driver holds at most that many fetched partitions ahead
+  of the one it is handing out (the reference likewise caps its
+  prefetch buffer by RAM).  The pool threads keep the caller's job
+  group; the jobs run outside any SQL execution, so they carry no
+  ``spark.sql.execution.id`` (count them by job group).  Closing the
+  iterator cancels the jobs still running.  Spark Connect has no JVM
+  frame: there a ``mapInArrow`` stage writes each record batch as one
+  Arrow IPC blob and ``toLocalIterator`` streams one partition at a
+  time with one prefetched.
+  The driver decodes each numeric column to numpy once per record
+  batch.  Batches are contiguous slices of those arrays; a remainder
+  carries across record-batch and partition edges.  Other columns
+  (strings, nulls, arrays, ...) are built per batch from their Python
+  values.  The arrays keep the dtypes ``np.array`` gives a
   ``collect()`` row's values (see the function doc) and are writable.
 
 - ``write_epoch_plan``: the scale path.  Materializes one epoch as
@@ -38,7 +50,11 @@ dependency of the engine.
 
 from __future__ import annotations
 
+import uuid
+from collections import deque
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor, wait
+from contextlib import closing
 
 import numpy as np
 import pyarrow as pa
@@ -46,6 +62,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.types import StructField, StructType
+
+from scdataset_spark.session import _cluster_width
 
 
 def iterate_batches(
@@ -69,11 +87,17 @@ def iterate_batches(
     ``None``.  Every array is writable and no two batches share memory:
     a caller may mutate a batch in place without touching another.
 
-    The frame streams one partition at a time (``toLocalIterator`` with
-    prefetch); each partition crosses as Arrow record batches (see the
-    module doc).  It is sorted on ``pos`` first, except when ``planned``
-    is the very object ``run_hook_pipeline`` returned: its partitions
-    are already in ``pos`` order, so it streams as it is.  Any frame derived from it
+    The frame streams partition by partition in partition order, up to
+    ``session._cluster_width`` single-partition jobs in flight; each
+    partition crosses as JVM-encoded Arrow record batches (see the
+    module doc).  The driver holds at most that many fetched partitions
+    besides the one it is handing out.  The jobs keep the caller's job
+    group but carry no SQL execution id; closing the iterator cancels
+    the ones still running.  On Spark Connect the frame streams one
+    partition at a time through a ``mapInArrow`` IPC stage instead.
+    It is sorted on ``pos`` first, except when ``planned`` is the very
+    object ``run_hook_pipeline`` returned: its partitions are already in
+    ``pos`` order, so it streams as it is.  Any frame derived from it
     (``.where``, ``.select``, a join) is sorted.  The unsorted stream
     checks its ``pos`` order as it goes and raises ``ValueError`` if a
     hook changed ``pos`` against the fetch order.  Columns must be types
@@ -85,6 +109,105 @@ def iterate_batches(
     fields = df.schema.fields
     k = df.columns.index("pos") if unsorted else None
     last = -np.inf
+
+    seg: list[tuple[list, int, int]] = []  # ([(arrow, numeric)] per column, lo, hi)
+    held = 0
+    with closing(_arrow_partitions(df)) as stream:
+        for rb in stream:
+            if not rb.num_rows:
+                continue
+            cols = [(a, _numeric(a)) for a in rb.columns]
+            if unsorted:
+                p = cols[k][1]
+                if p is None or p[0] < last or (p[1:] < p[:-1]).any():
+                    raise ValueError(
+                        "run_hook_pipeline's output is not in pos order: a hook "
+                        "changed pos, or fetch_id does not grow with pos"
+                    )
+                last = p[-1]
+            lo, n = 0, rb.num_rows
+            while lo < n:
+                take = min(batch_size - held, n - lo)
+                seg.append((cols, lo, lo + take))
+                held += take
+                lo += take
+                if held == batch_size:
+                    yield _assemble(seg, names, fields)
+                    seg, held = [], 0
+    if seg and not drop_last:
+        yield _assemble(seg, names, fields)
+
+
+def _arrow_partitions(df: DataFrame) -> Iterator[pa.RecordBatch]:
+    """``df``'s Arrow record batches, partition after partition in
+    partition order: THE driver transport of ``iterate_batches``.
+
+    The JVM encodes each partition (``toArrowBatchRdd``); one
+    single-partition job per partition fetches its frames, run from a
+    thread pool with up to ``width = _cluster_width(df)`` jobs in
+    flight.  Partition ``i + width`` is submitted when partition ``i``
+    is handed out, so the driver holds at most ``width`` fetched
+    partitions besides the current one.  The pool is built at the first
+    ``next()``, so its threads take the job group current then.  Every
+    job carries one private job tag; closing the stream cancels the jobs
+    still running and joins the pool.
+
+    Spark Connect has no JVM frame (no ``_jdf``): there the batches come
+    from :func:`_ipc_partitions`."""
+    try:
+        jdf = df._jdf
+    except AttributeError:  # Spark Connect
+        yield from _ipc_partitions(df)
+        return
+    from pyspark import inheritable_thread_target
+    from pyspark.core.rdd import _load_from_socket
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    # the schema pyspark's own toArrow decodes the JVM's batches with
+    schema = to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
+    )
+    jrdd = jdf.toArrowBatchRdd().toJavaRDD()
+    n = jrdd.getNumPartitions()
+    width = min(_cluster_width(df), n)
+    if not width:
+        return
+    tag = f"iterate_batches-{uuid.uuid4().hex}"
+
+    @inheritable_thread_target(spark)
+    def fetch(i: int) -> list[bytes]:
+        sc.addJobTag(tag)
+        sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, [i])
+        return list(_load_from_socket(sock, NoOpSerializer()))
+
+    pool = ThreadPoolExecutor(max_workers=width, thread_name_prefix="iterate_batches")
+    pending = deque(pool.submit(fetch, i) for i in range(width))
+    try:
+        for i in range(n):
+            frames = pending.popleft().result()
+            if i + width < n:
+                pending.append(pool.submit(fetch, i + width))
+            for frame in frames:
+                yield pa.ipc.read_record_batch(pa.py_buffer(frame), schema)
+    finally:
+        # a job submitted just after a cancel escapes it: repeat until
+        # every outstanding fetch has ended
+        while not all(f.done() for f in pending):
+            sc.cancelJobsWithTag(tag)
+            wait(pending, timeout=0.1)
+        pool.shutdown()
+
+
+def _ipc_partitions(df: DataFrame) -> Iterator[pa.RecordBatch]:
+    """``df``'s record batches for a session without a JVM frame (Spark
+    Connect): a ``mapInArrow`` stage writes each one as an Arrow IPC
+    blob, and ``toLocalIterator`` streams one partition at a time with
+    one prefetched."""
 
     def to_ipc(batches):
         # function-local import + def: pickled by value to the workers
@@ -98,30 +221,8 @@ def iterate_batches(
                 blob = pa.array([sink.getvalue().to_pybytes()], pa.binary())
                 yield pa.RecordBatch.from_arrays([blob], ["ipc"])
 
-    seg: list[tuple[list, int, int]] = []  # ([(arrow, numeric)] per column, lo, hi)
-    held = 0
     for row in df.mapInArrow(to_ipc, "ipc binary").toLocalIterator(prefetchPartitions=True):
-        rb = pa.ipc.open_stream(pa.py_buffer(row[0])).read_next_batch()
-        cols = [(a, _numeric(a)) for a in rb.columns]
-        if unsorted:
-            p = cols[k][1]
-            if p is None or p[0] < last or (p[1:] < p[:-1]).any():
-                raise ValueError(
-                    "run_hook_pipeline's output is not in pos order: a hook "
-                    "changed pos, or fetch_id does not grow with pos"
-                )
-            last = p[-1]
-        lo, n = 0, rb.num_rows
-        while lo < n:
-            take = min(batch_size - held, n - lo)
-            seg.append((cols, lo, lo + take))
-            held += take
-            lo += take
-            if held == batch_size:
-                yield _assemble(seg, names, fields)
-                seg, held = [], 0
-    if seg and not drop_last:
-        yield _assemble(seg, names, fields)
+        yield pa.ipc.open_stream(pa.py_buffer(row[0])).read_next_batch()
 
 
 def _streamed(planned: DataFrame, ship: list[str]) -> tuple[DataFrame, bool]:

@@ -151,13 +151,20 @@ def _join_groups(
     """Broadcast-join the per-group frame ``small`` onto ``df`` on
     ``group_cols`` NULL-SAFELY (a null group is one group, as in a
     window's ``PARTITION BY``) and on ``keys`` by plain equality; the
-    join columns appear once, as ``df``'s.  With no group columns it is
-    the plain ``USING`` join on ``keys``."""
+    join columns appear once, as ``df``'s.  A group column that is not
+    nullable in ``df`` joins by plain equality too: with no null on the
+    left, the inner join keeps the same rows without the null-safe
+    ``(coalesce, isnull)`` key pair.  With no group columns it is the
+    plain ``USING`` join on ``keys``."""
     if not group_cols:
         return df.join(F.broadcast(small), list(keys))
     on = [*group_cols, *keys]
     right = F.broadcast(small.withColumnsRenamed({c: f"_jr_{c}" for c in on}))
-    cond = [F.col(c).eqNullSafe(F.col(f"_jr_{c}")) for c in group_cols]
+    cond = [
+        F.col(c).eqNullSafe(F.col(f"_jr_{c}")) if df.schema[c].nullable
+        else F.col(c) == F.col(f"_jr_{c}")
+        for c in group_cols
+    ]
     cond += [F.col(c) == F.col(f"_jr_{c}") for c in keys]
     return df.join(right, cond).drop(*[f"_jr_{c}" for c in on])
 

@@ -43,13 +43,36 @@ from scdataset_spark.queries import quality  # noqa: F401,E402
 # parametrized DuckDB mirror), so external staleness bounds re-CHECK
 # latency, not untested surface.
 # Names and semantics are frozen; only iteration order changes.
+_PLAN_CHANGED = [
+    # --- physical plan changed since the last external check: the hook
+    # stage's fetch-ordered exchange (t_hook_pipeline, o11, o12, o18), the
+    # weighted strategies' bigint ``pos`` cast (o3-o6, o16), the grouped
+    # bucket-offset joins (null-safe only on nullable group columns); the
+    # two dedup queries are carried over from the round-13 cohort ---
+    "t_hook_pipeline",
+    "o11_drop_last_batches",
+    "o12_exact_len",
+    "o18_fetch_shuffle",
+    "o3_weighted_replace",
+    "o4_weighted_noreplace",
+    "o5_subset_weighted",
+    "o6_class_balanced",
+    "o16_mixture_sample",
+    "tx_token_budget_per_source_bucketed",
+    "tx_quality_rank_by_source_bucketed",
+    "o23_interleave",
+    "tx_curriculum_order",
+    "dd_minhash_lsh",
+    "dd_exact_groups",
+]
+
 _SWEEP_PRIORITY = [
+    *_PLAN_CHANGED,
     # --- physical plan changed in round 16 (similarity Python-stage partitioning, block-permute offsets scale path, weighted-draws single scan, bytes-gated top-k shape) — external check invalidated; q3 rides along for the r15 drift-closure re-check ---
     "dd_embed_cosine_fast",
     "o1_block_shuffle",
     "o9_epoch_reshuffle",
     "o15_block_shuffle_droplast",
-    "o3_weighted_replace",
     "q3_shipping_priority",
     "sim_topk_cosine",
     "sim_ivf_recall",
@@ -59,12 +82,8 @@ _SWEEP_PRIORITY = [
     "q11_important_stock",
     "q18_large_orders",
     "g6_batch_normalize",
-    "o4_weighted_noreplace",
-    "o5_subset_weighted",
     "o5_positional_weights",
-    "o6_class_balanced",
     "o7_smoothed_weights",
-    "o16_mixture_sample",
     "o17_temperature_mixture",
     "o19_stratified_sample",
     # --- last externally checked in round 12 — 4 rounds stale, at the rotation ceiling ---
@@ -93,7 +112,6 @@ _SWEEP_PRIORITY = [
     "dd_simhash",
     "o2_buffer_shuffle",
     "o10_batch_plan",
-    "o11_drop_last_batches",
     # --- last externally checked in round 13 ---
     "sim_ivf_index_compacted",
     "sim_pq_adc_agreement",
@@ -180,7 +198,6 @@ _SWEEP_PRIORITY = [
     "tx_vocabulary",
     "o21_split_assign",
     "dq_drift",
-    "o23_interleave",
     "dd_ngram_decontam",
     "j_full_outer_nation_activity",
     "tx_length_buckets",
@@ -188,18 +205,14 @@ _SWEEP_PRIORITY = [
     "o26_unimax_budget",
     "tx_gopher_rules",
     "dq_embedding_drift",
-    "tx_curriculum_order",
     "tx_distinct_ngrams",
     "tx_dsir_select",
     "q5_local_supplier_volume",
     "s1_streaming_scan",
     "s2_subset_split",
-    "o12_exact_len",
     "g7_approx_sketches",
     "q21_waiting_supplier",
     "tx_quality_score",
-    "dd_exact_groups",
-    "dd_minhash_lsh",
     "dd_simhash_pairs",
     "dd_decontamination",
     "dd_components",
@@ -211,17 +224,13 @@ _SWEEP_PRIORITY = [
     "mm_multimodal_zip",
     "tx_normalize",
     "tx_pii_scrub",
-    "tx_token_budget_per_source_bucketed",
     "sim_ivf_index_stats",
     "sim_ivf_index_rebuild",
     "tx_quality_rank_by_source",
-    "tx_quality_rank_by_source_bucketed",
     "pipe_curation",
     "ev_tumbling_window",
     "dd_components_star",
-    "o18_fetch_shuffle",
     "dd_incremental_novel",
-    "t_hook_pipeline",
     "src_custom_datasource",
     "s4_sparse_densify",
     "s3_anndata_ingest",

@@ -4,9 +4,11 @@ pipeline's streaming semantics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
+from scdataset_spark.operators.textanalysis import chunk_documents
 
 from tests._helpers import plan_text
 from tests.conftest import SF_DIR, SF_DIR_SMALL
@@ -114,6 +116,29 @@ class TestNullGroups:
         ):
             want = rows(op(0))
             assert len(want) == 4 and rows(op(4)) == want
+
+    def test_non_nullable_group_joins_without_coalesce(self, spark):
+        """Only a nullable group column needs the null-safe join's
+        ``(coalesce, isnull)`` key pair; a non-nullable one joins its
+        offsets by plain equality, with the same rows."""
+        from pyspark.sql import Window
+
+        from scdataset_spark.plans.plan import grouped_bucketed_rank
+
+        base = spark.range(0, 40, numPartitions=2).selectExpr("id", "id & 3 AS g")
+        order = [("id", "asc")]
+        window = Window.partitionBy("g").orderBy("id")
+        for df, nullable in (
+            (base, False),
+            (base.withColumn("g", F.when(F.col("id") > 1, F.col("g"))), True),
+        ):
+            assert df.schema["g"].nullable == nullable
+            ranked = grouped_bucketed_rank(df, ["g"], "id", order, "r", 4)
+            assert ("coalesce(g" in plan_text(ranked)) == nullable
+            want = df.withColumn("r", F.row_number().over(window) - F.lit(1))
+            assert sorted(map(tuple, ranked.select(*want.columns).collect()), key=repr) == (
+                sorted(map(tuple, want.collect()), key=repr)
+            )
 
 
 class TestQualityRankBySource:
@@ -391,3 +416,35 @@ class TestTokenBudgetPerSource:
         assert got == expected and got
         # every source contributes (no starvation by a global budget)
         assert {k[0] for k in got} == set(langs)
+
+
+class TestChunkDocuments:
+    def test_exact_chunks_and_overlap(self, spark):
+        df = spark.createDataFrame([(1, "abcdefghij")], "doc_id bigint, text string")
+        rows = {r.chunk_id: r for r in chunk_documents(df, size=4, stride=3).collect()}
+        assert [rows[i].chunk_text for i in sorted(rows)] == ["abcd", "defg", "ghij", "j"]
+        assert rows[3].chunk_len == 1
+
+    def test_every_doc_yields_at_least_one_chunk(self, spark):
+        df = spark.createDataFrame([(1, ""), (2, "x")], "doc_id bigint, text string")
+        out = chunk_documents(df, size=5, stride=5).collect()
+        assert sorted((r.doc_id, r.chunk_id) for r in out) == [(1, 0), (2, 0)]
+
+    def test_chunks_cover_text_exactly(self, spark):
+        # last chunk's end offset == document length, for every doc
+        docs = load_table(spark, "documents", SF_DIR_SMALL, with_row_id=False)
+        out = chunk_documents(docs.select("doc_id", "text"), size=120, stride=90)
+        cover = out.groupBy("doc_id").agg(
+            F.max(F.col("chunk_id") * 90 + F.col("chunk_len")).alias("cover")
+        )
+        joined = cover.join(
+            docs.select("doc_id", F.length("text").alias("n")), "doc_id"
+        )
+        assert joined.where(F.col("cover") != F.col("n")).count() == 0
+
+    def test_validation(self, spark):
+        df = spark.createDataFrame([(1, "x")], "doc_id bigint, text string")
+        with pytest.raises(ValueError):
+            chunk_documents(df, size=0)
+        with pytest.raises(ValueError):
+            chunk_documents(df, stride=0)

@@ -27,10 +27,13 @@ ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle)
 # selects them for a cheap local smoke between driver rounds.  (The
 # full parametrized suite below already runs every oracle query; the
 # marker is a fast subset, not the gate.)
-from scdataset_spark.queries import _SWEEP_PRIORITY
+# The plan-changed head of the priority runs on top of those 50: a
+# query that moves to the head joins the smoke without pushing the
+# stalest names behind it out of the default lane.
+from scdataset_spark.queries import _PLAN_CHANGED, _SWEEP_PRIORITY
 
-STALE_COHORT = set(
-    [n for n in _SWEEP_PRIORITY if REGISTRY[n].oracle][:50]
+STALE_COHORT = set(_PLAN_CHANGED) | set(
+    [n for n in _SWEEP_PRIORITY if REGISTRY[n].oracle and n not in _PLAN_CHANGED][:50]
 )
 
 ORACLE_PARAMS = [

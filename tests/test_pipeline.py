@@ -164,6 +164,33 @@ class TestExport:
             assert len(dtypes["s"]) > 1 and all(d.startswith("<U") for d in dtypes["s"])
         assert len(got[-1]["big"]) == (16 if drop_last else 1000 % 16)
 
+    @pytest.mark.parametrize("large_var_types", [False, True])
+    def test_temporal_decimal_binary_match_row_reference(self, spark, large_var_types):
+        """Dates, timestamps, decimals, binaries and strings (some null)
+        decode to the row iterator's values; with large var types on,
+        the driver must decode against the large string and binary
+        layouts the batches were written with."""
+        key = "spark.sql.execution.arrow.useLargeVarTypes"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, str(large_var_types).lower())
+        try:
+            df = spark.range(0, 300, numPartitions=3).selectExpr(
+                "(id * 7919) % 300 AS pos",
+                "date_add(DATE'2020-02-27', CAST(id AS INT)) AS d",
+                "timestamp_micros(1582761600000000 + id * 3600000123) AS ts",
+                "CAST(id * 1.25 - 100 AS DECIMAL(12,2)) AS dec",
+                "CASE WHEN id % 13 = 0 THEN NULL"
+                " ELSE CAST(repeat('xy', CAST(id % 4 AS INT)) AS BINARY) END AS bin",
+                "CASE WHEN id % 17 = 0 THEN NULL ELSE concat('s', id) END AS s",
+            )
+            cols = ["d", "ts", "dec", "bin", "s", "pos"]
+            want = list(_row_reference(df, 16, cols))
+            got = list(iterate_batches(df, 16, cols))
+        finally:
+            spark.conf.set(key, saved)
+        _assert_same_batches(want, got)
+        assert sum(len(b["pos"]) for b in got) == 300
+
     def test_empty_frame(self, contract_frame):
         empty = contract_frame.where("big < -1000")
         cols = ["big", "s", "arr"]
@@ -385,6 +412,143 @@ class TestFetchOrderedStream:
         _, out = self._hooked(spark, fetch_transform=lambda pdf: pdf.assign(pos=-pdf["pos"]))
         with pytest.raises(ValueError, match="not in pos order"):
             list(iterate_batches(out, 16, ["row_id"]))
+
+
+def _partition_log(tmp_path):
+    """A hook that appends ``partition start end`` per fetch to a file
+    in ``tmp_path``, sleeping ``delay(fetch_id)`` seconds first, and
+    a reader of that log: ``{partition: (first start, last end)}``."""
+    log = str(tmp_path / "fetches.txt")
+
+    def hook(delay):
+        def fetch_transform(pdf):
+            import time
+
+            from pyspark import TaskContext
+
+            t0 = time.time()
+            time.sleep(delay(int(pdf["fetch_id"].iloc[0])))
+            with open(log, "a") as f:
+                f.write(f"{TaskContext.get().partitionId()} {t0} {time.time()}\n")
+            return pdf
+
+        return fetch_transform
+
+    def spans():
+        out: dict[int, tuple[float, float]] = {}
+        if os.path.exists(log):
+            with open(log) as f:
+                for line in f:
+                    p, t0, t1 = line.split()
+                    lo, hi = out.get(int(p), (float(t0), float(t1)))
+                    out[int(p)] = (min(lo, float(t0)), max(hi, float(t1)))
+        return out
+
+    return hook, spans
+
+
+class TestArrowTransport:
+    """The driver transport: JVM-encoded Arrow partitions fetched by
+    single-partition jobs, up to ``_cluster_width`` in flight, handed
+    out in partition order, cancelled on close."""
+
+    @staticmethod
+    def _hooked(spark, fetch_transform, n=2560):
+        planned = with_batches(
+            _scrambled(spark, n), batch_size=16, fetch_factor=4
+        ).select("row_id", "pos", "fetch_id")
+        out = run_hook_pipeline(
+            planned, "row_id bigint, pos bigint, fetch_id bigint", batch_size=16,
+            fetch_transform=fetch_transform,
+        )
+        return planned, out
+
+    def test_slow_first_partition_still_yields_first(self, spark, tmp_path):
+        hook, spans = _partition_log(tmp_path)
+        planned, out = self._hooked(spark, hook(lambda fetch: 2.0 if fetch == 0 else 0.0))
+        got = list(iterate_batches(out, 16, ["pos", "row_id"]))
+        # partition 0 finished last, yet its rows came first
+        done = spans()
+        assert max(done, key=lambda p: done[p][1]) == 0
+        _assert_same_batches(list(_row_reference(planned, 16, ["pos", "row_id"])), got)
+
+    def test_in_flight_jobs_bounded_by_cluster_width(self, spark, tmp_path, monkeypatch):
+        import time
+
+        from scdataset_spark.pipeline import export
+
+        monkeypatch.setattr(export, "_cluster_width", lambda df: 2)
+        hook, spans = _partition_log(tmp_path)
+        planned, out = self._hooked(spark, hook(lambda fetch: 0.05))
+        assert out.rdd.getNumPartitions() > 3
+        stream = iterate_batches(out, 16, ["pos", "row_id"])
+        got = [next(stream)]
+        time.sleep(2)
+        # partition 0 handed out: partitions 1 and 2 may run, no others
+        assert set(spans()) <= {0, 1, 2}
+        got += list(stream)
+        done = sorted(spans().values())
+        assert len(done) == out.rdd.getNumPartitions()
+        for i, (start, _) in enumerate(done):
+            assert sum(t0 <= start < t1 for t0, t1 in done[:i]) < 2
+        _assert_same_batches(list(_row_reference(planned, 16, ["pos", "row_id"])), got)
+
+    def test_close_cancels_outstanding_jobs(self, spark, tmp_path):
+        import threading
+        import time
+
+        hook, _ = _partition_log(tmp_path)
+        _, out = self._hooked(spark, hook(lambda fetch: 60.0 if fetch >= 10 else 0.0))
+        sc = spark.sparkContext
+        sc.setJobGroup("iterate_close", "close cancels the partition jobs")
+        before = set(threading.enumerate())
+        try:
+            stream = iterate_batches(out, 16, ["row_id"])
+            assert len(next(stream)["row_id"]) == 16
+            t0 = time.time()
+            stream.close()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert time.time() - t0 < 20
+        assert not [
+            t for t in set(threading.enumerate()) - before if t.name.startswith("iterate_batches")
+        ]
+        tracker = sc.statusTracker()
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup("iterate_close")]
+        assert [j for j in jobs if j.status == "FAILED"]
+        assert not [j for j in jobs if j.status == "RUNNING"]
+
+    def test_forced_connect_fallback_yields_identical_batches(
+        self, spark, contract_frame, monkeypatch
+    ):
+        """A frame without ``_jdf`` (Spark Connect) takes the
+        ``mapInArrow`` IPC path, and gives the same batches."""
+        from scdataset_spark.pipeline import export
+
+        _, hooked = self._hooked(spark, None, n=640)
+        cases = [(contract_frame, ["big", "dbl", "s", "ni", "arr"]), (hooked, ["pos", "row_id"])]
+        want = [list(iterate_batches(df, 16, cols)) for df, cols in cases]
+
+        class NoJvmFrame:
+            def __init__(self, df):
+                self._df = df
+
+            def __getattr__(self, name):
+                if name == "_jdf":
+                    raise AttributeError(name)
+                return getattr(self._df, name)
+
+        streamed, ipc, calls = export._streamed, export._ipc_partitions, []
+
+        def no_jvm(*args):
+            df, unsorted = streamed(*args)
+            return NoJvmFrame(df), unsorted
+
+        monkeypatch.setattr(export, "_streamed", no_jvm)
+        monkeypatch.setattr(export, "_ipc_partitions", lambda df: calls.append(df) or ipc(df))
+        for (df, cols), w in zip(cases, want):
+            _assert_same_batches(w, list(iterate_batches(df, 16, cols)))
+        assert len(calls) == len(cases)
 
 
 class TestFetchOrderedCheck:
@@ -670,3 +834,21 @@ class TestShuffleWithinFetch:
                              shuffle_within_fetch=True, seed=6)
         assert one.collect() == two.collect()
         assert one.collect() != other.collect()
+
+
+class TestBatchPlanJobFree:
+    def test_with_batches_plan_construction_runs_no_job(self, spark):
+        # O12's posture: building the fetch/batch plan is pure plan
+        # algebra; only exact_num_batches' closed form (pure Python) or
+        # an explicit action may run anything
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        assert_no_jobs(
+            spark.sparkContext,
+            "o12-batch-plan-lazy",
+            lambda: with_batches(
+                Streaming(assume_dense=True).plan(li, seed=42),
+                batch_size=32,
+                fetch_factor=16,
+                drop_last=True,
+            ),
+        )

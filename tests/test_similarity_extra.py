@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
-from scdataset_spark.operators.similarity import brute_force_topk, ivf_topk
+from scdataset_spark.operators.similarity import brute_force_topk, ivf_topk, random_projection
 from scdataset_spark.operators.strategies import attach_weights, Streaming
 from scdataset_spark.pipeline.export import write_epoch_plan
 from scdataset_spark.plans.plan import with_batches
@@ -680,3 +680,40 @@ class TestRoutedAssignment:
             )
         )
         assert routed == hof and routed
+
+
+class TestRandomProjection:
+    def test_shape_and_determinism(self, spark):
+        emb = load_table(spark, "embeddings", SF_DIR_SMALL, with_row_id=False).limit(10)
+        out = random_projection(emb, out_dim=4).collect()
+        assert len(out) == 40
+        assert {r.dim_id for r in out} == {0, 1, 2, 3}
+        again = random_projection(emb, out_dim=4).collect()
+        assert sorted(map(tuple, out)) == sorted(map(tuple, again))
+        other = random_projection(emb, out_dim=4, seed=99).collect()
+        assert sorted(map(tuple, out)) != sorted(map(tuple, other))
+
+    def test_matches_numpy_recompute(self, spark):
+        import numpy as np
+
+        from scdataset_spark.plans.seeds import mix_py
+
+        emb = load_table(spark, "embeddings", SF_DIR_SMALL, with_row_id=False).limit(5)
+        rows = emb.collect()
+        got = {
+            (r.vec_id, r.dim_id): r.value
+            for r in random_projection(emb, out_dim=8).collect()
+        }
+        for r in rows:
+            v = np.array(r.embedding, dtype=np.float64)
+            for j in range(8):
+                signs = np.array(
+                    [
+                        1.0 if mix_py((i - 1) * 8 + j, 5) % 2 == 0 else -1.0
+                        for i in range(1, 65)
+                    ]
+                )
+                expect = float(np.sum(np.round(signs * v, 8)))
+                # np.round is banker's vs SQL HALF_UP: per-term drift
+                # <= 1e-8, 64 terms -> 1e-6 envelope
+                assert got[(r.vec_id, j)] == pytest.approx(expect, abs=1e-6)

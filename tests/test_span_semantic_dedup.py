@@ -284,3 +284,59 @@ class TestNonDefaultIdCol:
             map(tuple, cross_split_contamination(renamed, id_col="my_id").collect())
         )
         assert ren_rep == base_rep and base_rep
+
+
+class TestRemoveDuplicateSpans:
+    def test_hand_computed_removals(self, spark):
+        from scdataset_spark.operators.dedup import remove_duplicate_spans
+
+        docs = [
+            (1, "A B C D E F u1 u2 u3"),   # shares 6-token prefix with 2
+            (2, "A B C D E F v1 v2 v3"),
+            (3, "X1 X2 X3 X4 X5 X6 X7"),   # exact twin of 4
+            (4, "X1 X2 X3 X4 X5 X6 X7"),
+            (5, "w1 w2 w3 w4 w5 w6"),      # fully unique
+        ]
+        df = spark.createDataFrame(docs, "doc_id bigint, text string")
+        out = {r.doc_id: r for r in remove_duplicate_spans(df, k=5).collect()}
+        # grams at positions 1-2 are shared between docs 1/2 -> tokens
+        # 1..6 covered, unique tails survive
+        assert (out[1].removed_tokens, out[1].clean_text) == (6, "u1 u2 u3")
+        assert (out[2].removed_tokens, out[2].clean_text) == (6, "v1 v2 v3")
+        # exact twins: every position covered, docs survive as empty
+        assert (out[3].removed_tokens, out[3].clean_text) == (7, "")
+        assert (out[4].removed_tokens, out[4].clean_text) == (7, "")
+        # unique doc untouched
+        assert (out[5].removed_tokens, out[5].clean_text) == (0, "w1 w2 w3 w4 w5 w6")
+        assert out[5].n_tokens == 6
+
+    def test_consistent_with_coverage_metric(self, spark):
+        """removed_tokens must equal duplicate_span_coverage's
+        covered_tokens on the same corpus — the transform and the
+        metric share one definition of 'covered'."""
+        from scdataset_spark.operators.dedup import (
+            duplicate_span_coverage,
+            remove_duplicate_spans,
+        )
+
+        docs = load_table(spark, "documents", SF_DIR_SMALL, with_row_id=False).select(
+            "doc_id", "text"
+        )
+        cov = {r.doc_id: r.covered_tokens for r in duplicate_span_coverage(docs, k=5).collect()}
+        rem = {r.doc_id: r.removed_tokens for r in remove_duplicate_spans(docs, k=5).collect()}
+        assert cov == rem
+
+    def test_local_rebuild_matches_relational(self, spark):
+        """rebuild='local' (broadcast dup-start metadata + Arrow mask —
+        the corpus text never shuffles) must be row-identical to the
+        relational path on every column."""
+        from scdataset_spark.operators.dedup import remove_duplicate_spans
+
+        docs = load_table(spark, "documents", SF_DIR_SMALL, with_row_id=False).select(
+            "doc_id", "text"
+        )
+        rel = sorted(map(tuple, remove_duplicate_spans(docs, k=5).collect()))
+        loc = sorted(map(tuple, remove_duplicate_spans(docs, k=5, rebuild="local").collect()))
+        assert rel == loc
+        with __import__("pytest").raises(ValueError, match="rebuild"):
+            remove_duplicate_spans(docs, rebuild="nope")

@@ -19,6 +19,7 @@ from scdataset_spark.operators.strategies import (
     BlockWeightedSampling,
     ClassBalancedSampling,
     Streaming,
+    mixture_plan,
 )
 from scdataset_spark.plans.plan import (
     ddp_filter,
@@ -30,7 +31,7 @@ from scdataset_spark.plans.seeds import MIX_MOD
 
 from scdataset_spark.session import input_probe
 
-from tests._helpers import collect_pos, plan_subtrees, plan_text
+from tests._helpers import assert_no_jobs, collect_pos, plan_subtrees, plan_text
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -513,3 +514,42 @@ class TestDropLastTopK:
         )
         assert "TakeOrderedAndProject" in plan
         assert "hashpartitioning(_bucket" not in plan
+
+
+class TestMixturePlan:
+    def test_exact_plan_values(self, spark):
+        data = [("web",)] * 8 + [("code",)] * 4 + [("math",)] * 1
+        df = spark.createDataFrame(data, "source string")
+        out = {
+            r.source: r
+            for r in mixture_plan(
+                df, {"web": 600_000, "code": 300_000, "math": 100_000}
+            ).collect()
+        }
+        # caps: web 13, code 13, math 10 -> T = 10
+        assert (out["web"].planned_rows, out["code"].planned_rows, out["math"].planned_rows) == (6, 3, 1)
+        assert out["math"].sample_ppm == 1_000_000
+        assert out["web"].sample_ppm == 750_000
+        assert out["code"].sample_ppm == 750_000
+        assert out["web"].n_rows == 8
+
+    def test_missing_source_raises_at_action(self, spark):
+        df = spark.createDataFrame([("web",)], "source string")
+        plan = mixture_plan(df, {"web": 500_000, "ghost": 500_000})  # lazy
+        with pytest.raises(Exception, match="no rows"):
+            plan.collect()
+
+    def test_validation(self, spark):
+        df = spark.createDataFrame([("web",)], "source string")
+        with pytest.raises(ValueError):
+            mixture_plan(df, {})
+        with pytest.raises(ValueError):
+            mixture_plan(df, {"web": 0})
+
+    def test_plan_construction_runs_no_job(self, spark):
+        docs = load_table(spark, "documents", SF_DIR_SMALL, with_row_id=False)
+        assert_no_jobs(
+            spark.sparkContext,
+            "mixture-plan-lazy",
+            lambda: mixture_plan(docs, {"src0": 500_000, "src1": 500_000}),
+        )
