@@ -834,21 +834,3 @@ class TestShuffleWithinFetch:
                              shuffle_within_fetch=True, seed=6)
         assert one.collect() == two.collect()
         assert one.collect() != other.collect()
-
-
-class TestBatchPlanJobFree:
-    def test_with_batches_plan_construction_runs_no_job(self, spark):
-        # O12's posture: building the fetch/batch plan is pure plan
-        # algebra; only exact_num_batches' closed form (pure Python) or
-        # an explicit action may run anything
-        li = load_table(spark, "lineitem", SF_DIR_SMALL)
-        assert_no_jobs(
-            spark.sparkContext,
-            "o12-batch-plan-lazy",
-            lambda: with_batches(
-                Streaming(assume_dense=True).plan(li, seed=42),
-                batch_size=32,
-                fetch_factor=16,
-                drop_last=True,
-            ),
-        )

@@ -3,8 +3,6 @@ per-group top-k, BM25."""
 
 from __future__ import annotations
 
-import datetime as dt
-
 import pytest
 from pyspark.sql import functions as F, Window
 
@@ -14,7 +12,6 @@ from scdataset_spark.operators.quality import (
     distribution_drift,
     numeric_outliers,
     profile_columns,
-    volume_anomalies,
 )
 from scdataset_spark.operators.skew import per_group_top_k
 from scdataset_spark.plans.seeds import mix_sql
@@ -665,53 +662,3 @@ class TestSnapshotDiff:
         docs = load_table(spark, "documents", SF_DIR, with_row_id=False)
         out = snapshot_diff(docs, docs)
         assert out.count() == 0  # identical snapshots diff to nothing
-
-
-class TestVolumeAnomalies:
-    def test_missing_day_is_gap_filled_and_flagged(self, spark):
-        rows = []
-        for d in range(13):
-            if d == 6:
-                continue  # the silently-skipped delivery day
-            for i in range(100 + d):
-                rows.append((dt.datetime(2024, 3, 1 + d, 8, 0, i % 60),))
-        df = spark.createDataFrame(rows, "ts timestamp")
-        out = {r.bucket_ts.day: r for r in volume_anomalies(df, "ts", bucket="day", k=3.5).collect()}
-        assert len(out) == 13  # gap day present, not invisible
-        gap = out[7]  # March 7 == d 6
-        assert gap.n_events == 0
-        assert gap.is_anomaly
-        assert all(not r.is_anomaly for d, r in out.items() if d != 7)
-
-    def test_constant_counts_yield_no_anomalies(self, spark):
-        rows = [
-            (dt.datetime(2024, 3, 1 + d, 8, 0, i),)
-            for d in range(5)
-            for i in range(10)
-        ]
-        df = spark.createDataFrame(rows, "ts timestamp")
-        out = volume_anomalies(df, "ts").collect()
-        # mad = 0 -> defined as no anomalies, robust_z NULL
-        assert all(not r.is_anomaly and r.robust_z is None for r in out)
-
-    def test_bucket_units_map_and_validate(self, spark):
-        """date_trunc spellings that are not interval units (quarter,
-        dd, mon) must still gap-fill correctly; garbage units raise
-        up front instead of parse-erroring at the first action."""
-        rows = [
-            (dt.datetime(2024, m, 15, 12, 0, 0),)
-            for m in (1, 2, 3, 7, 8, 9)  # Q2 entirely missing
-            for _ in range(5)
-        ]
-        df = spark.createDataFrame(rows, "ts timestamp")
-        out = {r.bucket_ts.month: r.n_events for r in volume_anomalies(df, "ts", bucket="quarter").collect()}
-        assert out == {1: 15, 4: 0, 7: 15}  # Q2 gap-filled with zero
-        with pytest.raises(ValueError, match="unsupported bucket"):
-            volume_anomalies(df, "ts", bucket="fortnight")
-
-    def test_drift_input_validation(self, spark):
-        ev = spark.createDataFrame([(1.0,)], "v double")
-        with pytest.raises(ValueError, match="hi must be > lo"):
-            distribution_drift(ev, ev, "v", 10.0, 10.0)
-        with pytest.raises(ValueError, match="n_buckets"):
-            distribution_drift(ev, ev, "v", 0.0, 1.0, n_buckets=0)
