@@ -9,8 +9,8 @@ is possible.
 - TF-IDF: MLlib ``HashingTF/IDF`` for pipelines (murmur3 buckets — not
   SQL-portable), and an expression-level exact TF-IDF
   (``tfidf_expression``) used for the oracle-checked query.
-- ``MinHashLSH`` / ``BucketedRandomProjectionLSH`` wrappers over the
-  embeddings table for ANN joins inside MLlib pipelines.
+- a ``BucketedRandomProjectionLSH`` wrapper over the embeddings table
+  for ANN joins inside MLlib pipelines.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ from pyspark.ml.feature import (
     BucketedRandomProjectionLSH,
     HashingTF,
     IDF,
-    MinHashLSH,
     StringIndexer,
     Tokenizer,
 )
@@ -175,16 +174,6 @@ def hashed_tfidf_pipeline(docs: DataFrame, text_col: str = "text", features: int
     tf = HashingTF(inputCol="_words", outputCol="_tf", numFeatures=features).transform(words)
     idf = IDF(inputCol="_tf", outputCol="tfidf_vec").fit(tf)
     return idf.transform(tf).drop("_words", "_tf")
-
-
-def minhash_lsh_pairs(
-    df: DataFrame, vec_col: str, threshold: float = 0.8, tables: int = 4, seed: int = 7
-):
-    """MLlib MinHashLSH similarity self-join (expects a sparse/binary
-    VectorUDT column)."""
-    mh = MinHashLSH(inputCol=vec_col, outputCol="_hashes", numHashTables=tables, seed=seed)
-    model = mh.fit(df)
-    return model.approxSimilarityJoin(df, df, threshold, distCol="jaccard_dist")
 
 
 def brp_lsh_neighbors(

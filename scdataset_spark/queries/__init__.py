@@ -44,20 +44,22 @@ from scdataset_spark.queries import quality  # noqa: F401,E402
 # latency, not untested surface.
 # Names and semantics are frozen; only iteration order changes.
 _PLAN_CHANGED = [
-    # --- physical plan changed since the last external check: the hook
-    # stage's fetch-ordered exchange (t_hook_pipeline, o11, o12, o18), the
-    # weighted strategies' bigint ``pos`` cast (o3-o6, o16), the grouped
-    # bucket-offset joins (null-safe only on nullable group columns); the
-    # two dedup queries are carried over from the round-13 cohort ---
+    # --- physical plan changed since the last external check: the
+    # with-replacement weighted draws' persisted, coalesced interval frame
+    # (o3, o5_subset, o6, o16), the hook stage's fetch-ordered exchange
+    # (t_hook_pipeline, o11, o12, o18), the weighted strategies' bigint
+    # ``pos`` cast (o3-o6, o16), the grouped bucket-offset joins (null-safe
+    # only on nullable group columns); the two dedup queries are carried
+    # over from the round-13 cohort ---
+    "o3_weighted_replace",
+    "o5_subset_weighted",
+    "o6_class_balanced",
+    "o16_mixture_sample",
     "t_hook_pipeline",
     "o11_drop_last_batches",
     "o12_exact_len",
     "o18_fetch_shuffle",
-    "o3_weighted_replace",
     "o4_weighted_noreplace",
-    "o5_subset_weighted",
-    "o6_class_balanced",
-    "o16_mixture_sample",
     "tx_token_budget_per_source_bucketed",
     "tx_quality_rank_by_source_bucketed",
     "o23_interleave",

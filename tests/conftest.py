@@ -116,6 +116,7 @@ _SLOW_TESTS = frozenset([
     "test_strategies_stats.py::TestBlockShuffling::test_drop_last_removes_remainder",
     "test_strategies_stats.py::TestBlockShuffling::test_full_coverage_exactly_once",
     "test_strategies_stats.py::TestBlockShuffling::test_seed_reproducible_and_divergent",
+    "test_strategies_stats.py::TestWeightedRetryDeterminism::test_failed_weight_attempts_give_the_clean_draws",
     "test_streaming.py::test_compact_unique_index_preserves_gate_semantics",
     "test_streaming.py::test_gate_index_files_are_key_sorted",
     "test_streaming.py::test_gate_probe_pushes_key_range_into_index_scan",

@@ -1,4 +1,5 @@
-"""MultiIndexable container, batch export, hook pipeline drop_last."""
+"""Job-free batch plans, MultiIndexable container, batch export, hook
+pipeline drop_last."""
 
 from __future__ import annotations
 
@@ -30,6 +31,24 @@ def zipped(spark):
     e = load_table(spark, "embeddings", SF_DIR_SMALL, with_row_id=False)
     df = d.join(e, d.doc_id == e.vec_id).select("row_id", "text", "embedding", "label")
     return df
+
+
+class TestBatchPlanJobFree:
+    def test_with_batches_plan_construction_runs_no_job(self, spark):
+        # O12's posture: building the fetch/batch plan is pure plan
+        # algebra; only exact_num_batches' closed form (pure Python) or
+        # an explicit action may run anything
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        assert_no_jobs(
+            spark.sparkContext,
+            "o12-batch-plan-lazy",
+            lambda: with_batches(
+                Streaming(assume_dense=True).plan(li, seed=42),
+                batch_size=32,
+                fetch_factor=16,
+                drop_last=True,
+            ),
+        )
 
 
 class TestMultiIndexable:

@@ -6,13 +6,18 @@ tolerance bands, class-balance bands, len==execution invariants.
 
 from __future__ import annotations
 
+import json
+import os
 import re
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from scdataset_spark.catalog import load_table
+from scdataset_spark.operators import _cache
 from scdataset_spark.operators import strategies as st
 from scdataset_spark.operators.strategies import (
     BlockShuffling,
@@ -27,9 +32,9 @@ from scdataset_spark.plans.plan import (
     with_batches,
     with_pos,
 )
+from scdataset_spark.pipeline.export import epoch_plans
 from scdataset_spark.plans.seeds import MIX_MOD
-
-from scdataset_spark.session import input_probe
+from scdataset_spark.session import input_probe, python_stage_partitions
 
 from tests._helpers import assert_no_jobs, collect_pos, plan_subtrees, plan_text
 from tests.conftest import SF_DIR_SMALL
@@ -449,6 +454,161 @@ class TestWeightedDrawsSingleScan:
         )
         plan = plan_text(strat.plan(li, seed=5))
         assert "_lo" not in plan and "_hi" not in plan
+
+
+_CDF_COLS = ["bucket", "row_id", "lo", "hi"]
+
+
+@pytest.fixture
+def cold_cache(spark):
+    """No cached frame and an empty persist registry, before and after."""
+    spark.catalog.clearCache()
+    _cache._CACHE.clear()
+    yield
+    spark.catalog.clearCache()
+    _cache._CACHE.clear()
+
+
+def _cdf_entries() -> list:
+    return [f for f in _cache._CACHE if f.columns == _CDF_COLS]
+
+
+class TestCachedCdf:
+    """The seed-independent interval frame of the weighted draws is
+    persisted once per input and probed by every later epoch."""
+
+    @staticmethod
+    def _balanced(label: str = "l_returnflag") -> ClassBalancedSampling:
+        return ClassBalancedSampling(label_col=label, block_size=16, total_size=500)
+
+    def test_later_epochs_run_fewer_jobs(self, spark, li, cold_cache):
+        """The CDF build is most of the first epoch's jobs; later epochs
+        only draw, probe and permute (at this size 16 jobs, then 4 each;
+        with only the offsets frame cached it was 16, then 9 each)."""
+        sc = spark.sparkContext
+        jobs = []
+        plans = epoch_plans(self._balanced(), li, seed=3)
+        for _ in range(3):
+            epoch, plan = next(plans)
+            group = f"cached-cdf-epoch-{epoch}"
+            sc.setJobGroup(group, "one weighted epoch")
+            try:
+                plan.select("row_id", "pos").collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert jobs[1] <= jobs[0] // 2 and jobs[2] == jobs[1], jobs
+
+    def test_registry_gains_one_cdf_entry(self, spark, li, cold_cache):
+        sizes = []
+        plans = epoch_plans(self._balanced(), li, seed=3)
+        for _ in range(3):
+            next(plans)[1].select("row_id", "pos").collect()
+            assert len(_cdf_entries()) == 1
+            sizes.append(len(_cache._CACHE))
+        assert sizes == [sizes[0]] * 3
+
+    def test_draws_equal_runs_without_cache(self, spark, li, cold_cache):
+        """Two inputs in turn (two label columns): every epoch draws what
+        a run that clears all caches first draws, so a cached CDF only
+        ever serves its own input."""
+
+        def run(clear: bool) -> list:
+            out = []
+            for label in ("l_returnflag", "l_linestatus"):
+                for epoch in range(2):
+                    if clear:
+                        spark.catalog.clearCache()
+                    plan = self._balanced(label).plan(li, seed=3, epoch=epoch)
+                    out.append(collect_pos(plan.select("row_id", "pos")))
+            return out
+
+        cached = run(clear=False)
+        assert run(clear=True) == cached
+        assert cached[0] != cached[2]  # the two inputs draw differently
+
+    def test_cached_partitions_follow_the_rule(self, spark, li, cold_cache, monkeypatch):
+        """At the test size the cache holds ``python_stage_partitions``
+        partitions; with the input bytes unknown it is not coalesced."""
+        self._balanced().plan(li, seed=3)
+        (cdf,) = _cdf_entries()
+        coalesce = re.compile(r"\bRepartition \d+, false")
+        assert coalesce.search(plan_text(cdf, "extended"))
+        assert cdf.rdd.getNumPartitions() == python_stage_partitions(li)
+        spark.catalog.clearCache()
+        _cache._CACHE.clear()
+        monkeypatch.setattr(st, "input_probe", lambda df: (0, None))
+        self._balanced().plan(li, seed=3)
+        (cdf,) = _cdf_entries()
+        assert not coalesce.search(plan_text(cdf, "extended"))
+        assert cdf.rdd.getNumPartitions() > python_stage_partitions(li)
+
+
+class TestWeightedRetryDeterminism:
+    def test_failed_weight_attempts_give_the_clean_draws(self, tmp_path):
+        """The weight column comes from a pandas UDF whose every first
+        attempt raises, so the CDF build's stage is retried; epochs 0
+        and 1 (the second one probes the cached CDF) must draw a clean
+        run's ``(row_id, pos)``.  Runs in a child process on
+        ``local[2,2]`` (two attempts per task), so the shared session
+        keeps its master."""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+import pandas as pd
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from scdataset_spark.operators.strategies import BlockWeightedSampling
+from scdataset_spark.pipeline.export import epoch_plans
+from scdataset_spark.session import get_spark
+spark = get_spark("weighted_retry_determinism", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("OFF")
+path = {str(tmp_path / "rows.parquet")!r}
+spark.range(0, 3000, numPartitions=3).selectExpr(
+    "id AS row_id", "(id * 7) % 13 + 1 AS q"
+).write.parquet(path)
+rows = spark.read.parquet(path)
+
+@F.pandas_udf("double")
+def clean(q: pd.Series) -> pd.Series:
+    return q.astype("float64")
+
+@F.pandas_udf("double")
+def flaky(q: pd.Series) -> pd.Series:
+    if TaskContext.get().attemptNumber() == 0:
+        with open({str(tmp_path / "failed.txt")!r}, "a") as f:
+            f.write("failed\\n")
+        raise RuntimeError("first attempt fails")
+    return q.astype("float64")
+
+out = {{"master": spark.sparkContext.master}}
+strategy = BlockWeightedSampling(block_size=16, weight_col="w", total_size=500)
+for name, udf in (("clean", clean), ("flaky", flaky)):
+    plans = epoch_plans(strategy, rows.withColumn("w", udf("q")), seed=3)
+    out[name] = [
+        sorted([r["row_id"], r["pos"]] for r in next(plans)[1].select("row_id", "pos").collect())
+        for _ in range(2)
+    ]
+print(json.dumps(out))
+spark.stop()
+"""
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_MASTER="local[2,2]")
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=str(tmp_path),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert out["master"] == "local[2,2]"
+        assert (tmp_path / "failed.txt").read_text().split()
+        assert out["flaky"] == out["clean"]
+        assert len(out["clean"][0]) == 500 and out["clean"][0] != out["clean"][1]
 
 
 class TestDropLastTopK:
