@@ -115,10 +115,7 @@ def ingest_parts(spark: SparkSession) -> int:
     if cached is not None:
         return cached
     parts = max(32, spark.sparkContext.defaultParallelism)
-    try:
-        spark._scdataset_ingest_parts = parts
-    except Exception:
-        pass  # exotic session proxies may reject attributes; just recompute
+    spark._scdataset_ingest_parts = parts
     return parts
 
 

@@ -13,15 +13,15 @@ from __future__ import annotations
 import os
 import threading
 
+from pyspark.errors import SparkNoSuchElementException
 from pyspark.sql import DataFrame
 
 from scdataset_spark.session import _cluster_width, input_probe
 
 _CACHE: list[DataFrame] = []
 # 8 covers the bench's banded-frame query mix without eviction churn
-# (round-5 ran more banded queries than the bound of 4 could hold);
-# env-overridable for A/B measurement
-_CACHE_MAX = int(os.environ.get("SPARK_GRAFT_CACHE_MAX", "8"))
+# (round-5 ran more banded queries than the bound of 4 could hold)
+_CACHE_MAX = 8
 # Bytes bound on TOTAL cached storage (memory + disk), swept lazily on
 # each registration: an entry count alone is the wrong unit at scale —
 # the sf100 audit measured 8 retained sf100-sized frames pinning the
@@ -31,16 +31,12 @@ _CACHE_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_MAX_BYTES", str(8 << 30
 _LOCK = threading.Lock()
 
 
-def _storage_bytes(spark) -> int | None:
+def _storage_bytes(spark) -> int:
     """Total bytes of ALL cached RDD storage in the app (registry
     entries, localCheckpoints, user persists) — the real pressure
-    signal.  Classic-API only; returns None under Spark Connect (the
-    sweep then falls back to the entry-count bound alone)."""
-    try:
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return sum(i.memSize() + i.diskSize() for i in infos)
-    except Exception:
-        return None
+    signal."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.memSize() + i.diskSize() for i in infos)
 
 
 def persist_bounded(df: DataFrame) -> DataFrame:
@@ -119,7 +115,7 @@ def persist_bounded(df: DataFrame) -> DataFrame:
         # including checkpoints, so under genuine pressure the registry
         # shrinks toward one entry and recompute replaces thrash.
         total = _storage_bytes(df.sparkSession)
-        while total is not None and total > _CACHE_MAX_BYTES and len(_CACHE) > 1:
+        while total > _CACHE_MAX_BYTES and len(_CACHE) > 1:
             victim = _CACHE.pop(0)
             victim.unpersist()  # inside the loop: the next probe must see it
             total = _storage_bytes(df.sparkSession)
@@ -131,8 +127,9 @@ def persist_bounded(df: DataFrame) -> DataFrame:
 def _conf_bytes(spark, key: str, default: int) -> int:
     """A Spark byte-valued conf ('128MB', '134217728b', plain int)."""
     try:
-        v = str(spark.conf.get(key)).strip().lower()
-    except Exception:
+        # get(key, default) would hide a registered conf's own default
+        v = spark.conf.get(key).strip().lower()
+    except SparkNoSuchElementException:  # neither set nor registered
         return default
     mult = 1
     for suf, m in (("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("b", 1)):
@@ -172,11 +169,7 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
        leaves cluster width; the 100 TB object-store path lands here
        and decides "already wide" from pure metadata.
     3. otherwise probe ``df.rdd.getNumPartitions()`` (exact, but plans
-       the frame into an RDD; pre-AQE view).  Under Spark Connect the
-       RDD API raises — then widen unconditionally: the operators that
-       call this feed heavy per-row compute, where staying narrow is
-       the expensive failure mode and one extra shuffle of a frame
-       that was secretly wide is the cheap one."""
+       the frame into an RDD; pre-AQE view)."""
     spark = df.sparkSession
     width = _cluster_width(df)
     n_files, nbytes = input_probe(df)
@@ -187,8 +180,4 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
         return df.repartition(width) if est < width else df
     if n_files >= 8 * width:
         return df
-    try:
-        narrow = df.rdd.getNumPartitions() < width
-    except Exception:  # Spark Connect: no RDD access
-        narrow = True
-    return df.repartition(width) if narrow else df
+    return df.repartition(width) if df.rdd.getNumPartitions() < width else df

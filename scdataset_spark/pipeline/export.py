@@ -23,10 +23,7 @@ Three export paths:
   prefetch buffer by RAM).  The pool threads keep the caller's job
   group; the jobs run outside any SQL execution, so they carry no
   ``spark.sql.execution.id`` (count them by job group).  Closing the
-  iterator cancels the jobs still running.  Spark Connect has no JVM
-  frame: there a ``mapInArrow`` stage writes each record batch as one
-  Arrow IPC blob and ``toLocalIterator`` streams one partition at a
-  time with one prefetched.
+  iterator cancels the jobs still running.
   The driver decodes each numeric column to numpy once per record
   batch.  Batches are contiguous slices of those arrays; a remainder
   carries across record-batch and partition edges.  Other columns
@@ -93,15 +90,14 @@ def iterate_batches(
     module doc).  The driver holds at most that many fetched partitions
     besides the one it is handing out.  The jobs keep the caller's job
     group but carry no SQL execution id; closing the iterator cancels
-    the ones still running.  On Spark Connect the frame streams one
-    partition at a time through a ``mapInArrow`` IPC stage instead.
-    It is sorted on ``pos`` first, except when ``planned`` is the very
-    object ``run_hook_pipeline`` returned: its partitions are already in
-    ``pos`` order, so it streams as it is.  Any frame derived from it
-    (``.where``, ``.select``, a join) is sorted.  The unsorted stream
-    checks its ``pos`` order as it goes and raises ``ValueError`` if a
-    hook changed ``pos`` against the fetch order.  Columns must be types
-    Spark can hand to Arrow; ``batch_size`` must be at least 1."""
+    the ones still running.  It is sorted on ``pos`` first, except when
+    ``planned`` is the very object ``run_hook_pipeline`` returned: its
+    partitions are already in ``pos`` order, so it streams as it is.
+    Any frame derived from it (``.where``, ``.select``, a join) is
+    sorted.  The unsorted stream checks its ``pos`` order as it goes
+    and raises ``ValueError`` if a hook changed ``pos`` against the
+    fetch order.  Columns must be types Spark can hand to Arrow;
+    ``batch_size`` must be at least 1."""
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     names = list(dict.fromkeys(columns))
@@ -150,15 +146,7 @@ def _arrow_partitions(df: DataFrame) -> Iterator[pa.RecordBatch]:
     partitions besides the current one.  The pool is built at the first
     ``next()``, so its threads take the job group current then.  Every
     job carries one private job tag; closing the stream cancels the jobs
-    still running and joins the pool.
-
-    Spark Connect has no JVM frame (no ``_jdf``): there the batches come
-    from :func:`_ipc_partitions`."""
-    try:
-        jdf = df._jdf
-    except AttributeError:  # Spark Connect
-        yield from _ipc_partitions(df)
-        return
+    still running and joins the pool."""
     from pyspark import inheritable_thread_target
     from pyspark.core.rdd import _load_from_socket
     from pyspark.serializers import NoOpSerializer
@@ -172,7 +160,7 @@ def _arrow_partitions(df: DataFrame) -> Iterator[pa.RecordBatch]:
         error_on_duplicated_field_names_in_struct=True,
         prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
     )
-    jrdd = jdf.toArrowBatchRdd().toJavaRDD()
+    jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
     n = jrdd.getNumPartitions()
     width = min(_cluster_width(df), n)
     if not width:
@@ -201,28 +189,6 @@ def _arrow_partitions(df: DataFrame) -> Iterator[pa.RecordBatch]:
             sc.cancelJobsWithTag(tag)
             wait(pending, timeout=0.1)
         pool.shutdown()
-
-
-def _ipc_partitions(df: DataFrame) -> Iterator[pa.RecordBatch]:
-    """``df``'s record batches for a session without a JVM frame (Spark
-    Connect): a ``mapInArrow`` stage writes each one as an Arrow IPC
-    blob, and ``toLocalIterator`` streams one partition at a time with
-    one prefetched."""
-
-    def to_ipc(batches):
-        # function-local import + def: pickled by value to the workers
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows:
-                sink = pa.BufferOutputStream()
-                with pa.ipc.new_stream(sink, rb.schema) as w:
-                    w.write_batch(rb)
-                blob = pa.array([sink.getvalue().to_pybytes()], pa.binary())
-                yield pa.RecordBatch.from_arrays([blob], ["ipc"])
-
-    for row in df.mapInArrow(to_ipc, "ipc binary").toLocalIterator(prefetchPartitions=True):
-        yield pa.ipc.open_stream(pa.py_buffer(row[0])).read_next_batch()
 
 
 def _streamed(planned: DataFrame, ship: list[str]) -> tuple[DataFrame, bool]:

@@ -262,12 +262,8 @@ def _is_fetch_ordered(df: DataFrame) -> bool:
     ``fetch_id`` attribute ``df`` outputs (not merely a column of that
     name), with the Python-stage count.  Planning ``df`` costs driver
     time (about 80 ms for the benchmark's epoch plan on 4 cores) and
-    runs no job.  False under Spark Connect, which has no JVM plan to
-    ask."""
-    try:
-        plan = df._jdf.queryExecution().sparkPlan()
-    except AttributeError:  # Spark Connect
-        return False
+    runs no job."""
+    plan = df._jdf.queryExecution().sparkPlan()
     part = plan.outputPartitioning()
     if (
         part.getClass().getSimpleName() != "RangePartitioning"

@@ -40,10 +40,7 @@ def src_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the oracle, which re-generates the identical rows in SQL."""
     from scdataset_spark.sources.synthetic_cells import build_datasource
 
-    try:
-        spark.dataSource.register(build_datasource())
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(build_datasource())  # re-registering is a no-op
     cells = (
         spark.read.format("synthetic_cells")
         .option("n_rows", 10000)

@@ -86,17 +86,9 @@ def python_stage_partitions(df) -> int:
 
 
 def _cluster_width(df) -> int:
-    """Target parallelism for widening and width-scaled physical counts.
-    Classic sessions read ``defaultParallelism``; Spark Connect has no
-    SparkContext, so fall back to the shuffle-partition setting (which
-    a deployment sizes to the cluster), then a fixed floor."""
-    try:
-        return max(8, df.sparkSession.sparkContext.defaultParallelism)
-    except Exception:  # Spark Connect
-        try:
-            return max(8, python_stage_partitions(df))
-        except Exception:
-            return 32
+    """Target parallelism for widening and width-scaled physical counts:
+    the session's ``defaultParallelism``, at least 8."""
+    return max(8, df.sparkSession.sparkContext.defaultParallelism)
 
 
 def input_probe(df) -> tuple[int, int | None]:

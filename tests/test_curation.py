@@ -1,6 +1,7 @@
-"""Curation operators: per-source token budgets, per-source quality
-ranking, the training-set selection example, and the gated curation
-pipeline's streaming semantics."""
+"""Curation operators: per-source token budgets (bucketed, pinned and
+UniMax), per-source quality ranking, n-gram diversity, the Gopher
+quality rules, the training-set selection example, and the gated
+curation pipeline's streaming semantics."""
 
 from __future__ import annotations
 
@@ -448,3 +449,127 @@ class TestChunkDocuments:
             chunk_documents(df, size=0)
         with pytest.raises(ValueError):
             chunk_documents(df, stride=0)
+
+
+class TestNgramDiversity:
+    def _df(self, spark, rows):
+        return spark.createDataFrame(rows, "source string, text string")
+
+    def test_exact_counts_tiny_fixture(self, spark):
+        from scdataset_spark.operators.textanalysis import ngram_diversity
+
+        # src a: "x y x" + "x y" -> tokens 5, distinct {x, y} = 2;
+        # bigrams: ("x y", "y x") + ("x y",) -> 3 total, distinct 2
+        df = self._df(spark, [("a", "x y x"), ("a", "x y")])
+        [r] = ngram_diversity(df).collect()
+        assert (r.n_docs, r.n_tokens, r.distinct_unigrams) == (2, 5, 2)
+        assert (r.n_bigrams, r.distinct_bigrams) == (3, 2)
+        assert r.distinct_1 == round(2 / 5, 6)
+        assert r.distinct_2 == round(2 / 3, 6)
+
+    def test_one_token_docs_have_no_bigrams(self, spark):
+        from scdataset_spark.operators.textanalysis import ngram_diversity
+
+        df = self._df(spark, [("solo", "x"), ("solo", "y")])
+        [r] = ngram_diversity(df).collect()
+        assert (r.n_tokens, r.n_bigrams, r.distinct_bigrams) == (2, 0, 0)
+        assert r.distinct_2 is None  # no /0, NULL by contract
+        assert r.distinct_1 == 1.0
+
+    def test_template_collapse_is_visible(self, spark):
+        """A source scraping one template scores lower distinct-2 than a
+        diverse source of the same size — the metric's whole point."""
+        from scdataset_spark.operators.textanalysis import ngram_diversity
+
+        rows = [("tmpl", "the same boilerplate text here")] * 20 + [
+            ("varied", f"doc {i} token{i} talks about topic{i * 7 % 13}")
+            for i in range(20)
+        ]
+        out = {
+            r.source: r for r in ngram_diversity(self._df(spark, rows)).collect()
+        }
+        assert out["tmpl"].distinct_2 < out["varied"].distinct_2
+        assert out["tmpl"].distinct_1 < out["varied"].distinct_1
+
+
+class TestGopherRules:
+    def test_each_rule_fires_on_its_violation(self, spark):
+        from scdataset_spark.operators.textanalysis import with_gopher_flags
+
+        good = "the quick brown fox jumps over a lazy dog " * 6  # 60 words
+        rows = [
+            (1, good.strip()),
+            (2, "the a short doc"),  # word count < 50
+            (3, ("xx " * 60).strip()),  # no stop words
+            (4, (good + "#### ##### ###### " * 8).strip()),  # symbols
+            (5, ("the a " + "12345 " * 58).strip()),  # non-alpha words
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {r.doc_id: r for r in with_gopher_flags(df).collect()}
+        assert out[1].gopher_pass
+        assert not out[2].flag_word_count and not out[2].gopher_pass
+        assert not out[3].flag_stop_words and not out[3].gopher_pass
+        assert not out[4].flag_symbol_ratio and not out[4].gopher_pass
+        assert not out[5].flag_alpha_ratio and not out[5].gopher_pass
+
+    def test_fixture_exercises_both_branches(self, spark):
+        from scdataset_spark.catalog import load_table
+        from scdataset_spark.operators.textanalysis import with_gopher_flags
+
+        from tests.conftest import SF_DIR
+
+        docs = load_table(spark, "documents", SF_DIR, with_row_id=False)
+        out = with_gopher_flags(docs).select("flag_word_count", "gopher_pass").collect()
+        wc = {r.flag_word_count for r in out}
+        gp = {r.gopher_pass for r in out}
+        assert wc == {True, False} and gp == {True, False}
+
+
+class TestUnimaxBudget:
+    def _docs(self, spark):
+        rows = [
+            (i, f"s{j}", "tok " * (10 * (j + 1)))
+            for j in range(4)
+            for i in range(j * 10, j * 10 + 3)
+        ]
+        return spark.createDataFrame(
+            [(i, s, t.strip()) for i, s, t in rows],
+            "doc_id long, source string, text string",
+        )
+
+    def test_budget_conserved_and_caps_respected(self, spark):
+        from scdataset_spark.operators.textanalysis import unimax_budget
+
+        out = unimax_budget(self._docs(spark), budget=50, epochs=1).collect()
+        assert sum(r.budget_tokens for r in out) == 50
+        assert all(r.budget_tokens <= r.cap_tokens for r in out)
+        # water-fill: uncapped sources sit within 1 token of each other,
+        # and every capped source's cap is below every uncapped budget
+        un = [r.budget_tokens for r in out if not r.capped]
+        cap = [r.cap_tokens for r in out if r.capped]
+        assert un and max(un) - min(un) <= 1
+        assert not cap or max(cap) <= min(un)
+
+    def test_budget_above_total_caps_gives_everything(self, spark):
+        from scdataset_spark.operators.textanalysis import unimax_budget
+
+        out = unimax_budget(self._docs(spark), budget=10**9, epochs=2).collect()
+        assert all(r.capped for r in out)
+        assert all(r.budget_tokens == r.cap_tokens == 2 * r.n_tokens for r in out)
+
+    def test_epoch_cap_binds(self, spark):
+        from scdataset_spark.operators.textanalysis import unimax_budget
+
+        one = {r.source: r.budget_tokens
+               for r in unimax_budget(self._docs(spark), budget=10**9, epochs=1).collect()}
+        two = {r.source: r.budget_tokens
+               for r in unimax_budget(self._docs(spark), budget=10**9, epochs=2).collect()}
+        assert all(two[s] == 2 * one[s] for s in one)
+
+    def test_validation(self, spark):
+        import pytest
+
+        from scdataset_spark.operators.textanalysis import unimax_budget
+
+        with pytest.raises(ValueError, match="budget >= 0"):
+            unimax_budget(self._docs(spark), budget=-1)

@@ -84,60 +84,25 @@ def test_cross_session_entries_never_match(spark):
 
 
 class TestWidenIfNarrowConnectClean:
-    """widen_if_narrow must work with NO RDD/SparkContext access (the
-    Spark Connect surface): the file-bytes estimator or the
-    unconditional-widen fallback decides, never a hard failure."""
-
-    def _sever_classic_api(self, monkeypatch):
-        from pyspark.sql import DataFrame, SparkSession
-
-        def _no_rdd(self):
-            raise RuntimeError("RDD API unavailable (Spark Connect)")
-
-        def _no_sc(self):
-            raise RuntimeError("SparkContext unavailable (Spark Connect)")
-
-        monkeypatch.setattr(DataFrame, "rdd", property(_no_rdd))
-        monkeypatch.setattr(SparkSession, "sparkContext", property(_no_sc))
-
-    def test_in_memory_frame_widens_without_rdd(self, spark, monkeypatch):
-        self._sever_classic_api(monkeypatch)
-        df = spark.range(1000).selectExpr("id", "id * 2 AS v")
-        out = _cache.widen_if_narrow(df)
-        assert out.count() == 1000  # plans and runs with no RDD access
-
-    def test_jaccard_and_winnowing_run_without_rdd(self, spark, monkeypatch):
-        """The two operators that widen internally must stay
-        Connect-clean end to end."""
-        from scdataset_spark.operators.dedup import (
-            jaccard_pairs,
-            winnowing_fingerprints,
-            with_shingles,
-        )
-
-        self._sever_classic_api(monkeypatch)
-        _fresh()
-        docs = spark.createDataFrame(
-            [(i, "the quick brown fox jumps over the lazy dog " + ("alpha" if i % 2 else "beta"))
-             for i in range(30)],
-            ["doc_id", "text"],
-        )
-        pairs = jaccard_pairs(with_shingles(docs), threshold=0.5)
-        assert pairs.count() > 0
-        fps = winnowing_fingerprints(docs)
-        assert fps.count() > 0
-        _fresh()
+    """widen_if_narrow's byte estimator decides on its own: with the
+    RDD API severed, a statable file-backed frame never reaches the
+    ``df.rdd`` partition probe."""
 
     def test_file_backed_estimate_decides_without_rdd(self, spark, monkeypatch):
         """A small local parquet must take the byte-based estimator path
-        (est < width -> repartition) with the classic API severed."""
+        (est < width -> repartition) with ``DataFrame.rdd`` severed."""
+        from pyspark.sql import DataFrame
+
         from tests.conftest import SF_DIR_SMALL
 
         from scdataset_spark.catalog import load_table
         from scdataset_spark.session import input_probe
 
+        def _no_rdd(self):
+            raise RuntimeError("widen_if_narrow probed df.rdd")
+
         cust = load_table(spark, "customer", SF_DIR_SMALL, with_row_id=False)
-        self._sever_classic_api(monkeypatch)
+        monkeypatch.setattr(DataFrame, "rdd", property(_no_rdd))
         n_files, nbytes = input_probe(cust)
         assert n_files >= 1 and nbytes is not None
         out = _cache.widen_if_narrow(cust)
@@ -148,6 +113,12 @@ def test_conf_bytes_parses_spark_byte_strings(spark):
     assert _cache._conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 0) > 0
     # unknown key -> default
     assert _cache._conf_bytes(spark, "spark.graft.no.such.key", 7) == 7
+    # unparsable value -> default
+    spark.conf.set("spark.graft.bad.bytes", "lots")
+    try:
+        assert _cache._conf_bytes(spark, "spark.graft.bad.bytes", 5) == 5
+    finally:
+        spark.conf.unset("spark.graft.bad.bytes")
 
 
 def test_bytes_pressure_sweeps_oldest_entries(spark, monkeypatch):
@@ -166,17 +137,6 @@ def test_bytes_pressure_sweeps_oldest_entries(spark, monkeypatch):
     _cache.persist_bounded(spark.range(999).selectExpr("id AS pressure"))
     assert len(_cache._CACHE) == 1  # swept to the newest entry
     assert frames[0] not in _cache._CACHE
-    _fresh()
-
-
-def test_bytes_probe_none_keeps_count_bound_only(spark, monkeypatch):
-    """Spark Connect (no storage probe): the sweep degrades to the
-    entry-count bound without erroring."""
-    _fresh()
-    monkeypatch.setattr(_cache, "_storage_bytes", lambda s: None)
-    for i in range(3):
-        _cache.persist_bounded(spark.range(40 + i).selectExpr(f"id + {i} AS w"))
-    assert len(_cache._CACHE) == 3
     _fresh()
 
 

@@ -537,16 +537,13 @@ class TestArrowTransport:
         assert [j for j in jobs if j.status == "FAILED"]
         assert not [j for j in jobs if j.status == "RUNNING"]
 
-    def test_forced_connect_fallback_yields_identical_batches(
-        self, spark, contract_frame, monkeypatch
-    ):
-        """A frame without ``_jdf`` (Spark Connect) takes the
-        ``mapInArrow`` IPC path, and gives the same batches."""
-        from scdataset_spark.pipeline import export
+    def test_frame_without_jvm_raises(self, spark, monkeypatch):
+        """A frame without ``_jdf`` (what a Spark Connect frame is) gets
+        pyspark's ``JVM_ATTRIBUTE_NOT_SUPPORTED`` error from
+        ``iterate_batches``, not a stream by another route."""
+        from pyspark.errors import PySparkAttributeError
 
-        _, hooked = self._hooked(spark, None, n=640)
-        cases = [(contract_frame, ["big", "dbl", "s", "ni", "arr"]), (hooked, ["pos", "row_id"])]
-        want = [list(iterate_batches(df, 16, cols)) for df, cols in cases]
+        from scdataset_spark.pipeline import export
 
         class NoJvmFrame:
             def __init__(self, df):
@@ -554,20 +551,21 @@ class TestArrowTransport:
 
             def __getattr__(self, name):
                 if name == "_jdf":
-                    raise AttributeError(name)
+                    raise PySparkAttributeError(
+                        errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+                        messageParameters={"attr_name": name},
+                    )
                 return getattr(self._df, name)
 
-        streamed, ipc, calls = export._streamed, export._ipc_partitions, []
+        streamed = export._streamed
 
         def no_jvm(*args):
             df, unsorted = streamed(*args)
             return NoJvmFrame(df), unsorted
 
         monkeypatch.setattr(export, "_streamed", no_jvm)
-        monkeypatch.setattr(export, "_ipc_partitions", lambda df: calls.append(df) or ipc(df))
-        for (df, cols), w in zip(cases, want):
-            _assert_same_batches(w, list(iterate_batches(df, 16, cols)))
-        assert len(calls) == len(cases)
+        with pytest.raises(PySparkAttributeError, match="JVM_ATTRIBUTE_NOT_SUPPORTED"):
+            next(iterate_batches(spark.range(64).selectExpr("id AS pos"), 16, ["pos"]))
 
 
 class TestFetchOrderedCheck:

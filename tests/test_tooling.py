@@ -1,11 +1,13 @@
 """Repository tooling, without Spark: the slow-lane list in
-``tests/conftest.py`` and the summary of the A/B runner
-``scripts/ab.py``."""
+``tests/conftest.py``, the summary of the A/B runner ``scripts/ab.py``
+and the broad ``except`` handlers in ``scdataset_spark/``."""
 
 from __future__ import annotations
 
 import ast
+import collections
 import functools
+import glob
 import importlib.util
 import os
 
@@ -41,6 +43,40 @@ def test_slow_lane_entries_name_existing_tests():
         if not os.path.isfile(path) or test not in _test_ids(path):
             stale.append(entry)
     assert not stale
+
+
+def _broad_handlers(node: ast.AST, func: str | None = None):
+    """The enclosing function of every bare ``except:`` and ``except
+    Exception`` / ``BaseException`` handler (alone or in a tuple) under
+    ``node``."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        func = node.name
+    if isinstance(node, ast.ExceptHandler):
+        t = node.type
+        names = t.elts if isinstance(t, ast.Tuple) else [t]
+        if t is None or any(
+            getattr(n, "id", None) in ("Exception", "BaseException") for n in names
+        ):
+            yield func
+    for child in ast.iter_child_nodes(node):
+        yield from _broad_handlers(child, func)
+
+
+def test_broad_excepts_are_listed():
+    """A broad ``except`` turns a real error into a silent fall; the
+    only ones left handle errors from outside the program: a frame
+    without listable input files, and registry entries whose session
+    has stopped."""
+    pkg = os.path.join(os.path.dirname(TESTS), "scdataset_spark")
+    found = collections.Counter()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        module = os.path.relpath(path, pkg)[:-3].replace(os.sep, ".")
+        with open(path) as f:
+            found.update((module, func) for func in _broad_handlers(ast.parse(f.read())))
+    assert found == {
+        ("session", "input_probe"): 1,
+        ("operators._cache", "persist_bounded"): 2,
+    }
 
 
 def _ab():
