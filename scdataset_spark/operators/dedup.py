@@ -17,6 +17,11 @@ Five families, all shuffle-efficient by construction:
 - embedding cos  : near-dup by cosine similarity on the embeddings
                    table (see operators/similarity.py).
 
+Any of their pair graphs becomes dedup groups through
+``connected_components``: up to ``DRIVER_COMPONENTS_MAX_EDGES`` pairs
+are labelled on the driver with numpy, a larger graph by distributed
+large-star/small-star rounds (``connected_components_star``).
+
 Everything is built-in higher-order functions (split / transform /
 slice / array_distinct / explode) — JVM codegen, no Python UDFs — and
 has an exact DuckDB twin (md5 hex strings order identically everywhere).
@@ -688,121 +693,72 @@ def novel_documents_verified(
     )
 
 
+# Largest pair graph ``connected_components`` labels on the driver: 64 MB
+# of two bigint columns.  Labelling that many edges (disjoint stars of
+# five nodes, 4 cores) grew the driver's Python process by 555 MB and
+# took 2.7 s, where the star rounds took 30 s.
+DRIVER_COMPONENTS_MAX_EDGES = 4_000_000
+
+
+def _pair_frame(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The eagerly checkpointed ``(u, v)`` pairs, ``u >= v``.  The edge
+    lineage (LSH candidates, a cosine verify) runs once; every frame
+    both shapes derive reads this checkpoint."""
+    return edges.select(
+        F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
+        F.least(F.col(src_col), F.col(dst_col)).alias("v"),
+    ).localCheckpoint(eager=True)
+
+
+def _label_on_driver(spark, pairs) -> DataFrame:
+    """``(id, component)`` of an Arrow ``(u, v)`` table by
+    hook-and-shortcut: each round hooks the larger endpoint root of
+    every edge whose endpoints still differ onto the smaller one, then
+    pointer-jumps to flat trees.  Roots only ever move to smaller ids,
+    so a component's root is its minimum id."""
+    import numpy as np
+    import pyarrow as pa
+
+    u = pairs.column("u").to_numpy()
+    ids, inv = np.unique(np.concatenate([u, pairs.column("v").to_numpy()]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u) :]
+    lab = np.arange(len(ids))
+    while len(a):
+        lu, lv = lab[a], lab[b]
+        np.minimum.at(lab, np.maximum(lu, lv), np.minimum(lu, lv))
+        while not np.array_equal(jumped := lab[lab], lab):
+            lab = jumped
+        # an edge whose endpoints share a root keeps sharing it
+        open_ = lab[a] != lab[b]
+        a, b = a[open_], b[open_]
+    t = pairs.schema.field("u").type
+    return spark.createDataFrame(
+        pa.table({"id": pa.array(ids, type=t), "component": pa.array(ids[lab], type=t)})
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
-    max_iterations: int = 20,
 ) -> DataFrame:
-    """Connected components of the (undirected) near-dup pair graph by
-    iterative min-label propagation: every node starts labeled with its
-    own id; each round a node takes the min of its label and its
-    neighbors' labels; fixed point = component id = min node id in the
-    component.
-
+    """Connected components of the (undirected) near-dup pair graph:
+    ``(id, component)`` with component = the minimum node id reachable.
     This is the step that turns candidate PAIRS into dedup GROUPS (one
-    representative per component).  Near-dup graphs are dense
-    cliques-of-duplicates with tiny diameter, so rounds ≈ 2-3; each
-    round is one equi-join + one groupBy (both shuffle on node id) and
-    the per-round frame is ``localCheckpoint``-ed so the iterative
-    lineage never compounds.  Convergence is a (count, hash-sum)
-    signature fused with the checkpoint's materialization, CONFIRMED
-    exactly (changed-label join) on the round the signature first
-    repeats — so a hash-sum collision costs one extra probe, never a
-    wrong answer.
+    representative per component).
+
+    The pairs are checkpointed once, and up to
+    ``DRIVER_COMPONENTS_MAX_EDGES + 1`` of them come back as Arrow.  A
+    graph of at most that many edges is labelled on the driver
+    (:func:`_label_on_driver`: two jobs in all, any graph shape); a
+    larger one runs the distributed large-star/small-star rounds of
+    :func:`connected_components_star` on the checkpoint.
     """
-    # Materialize the edge list ONCE before deriving nodes and the
-    # undirected view: edges is typically an expensive lineage (LSH
-    # candidates + cosine verification) and without this checkpoint it
-    # is fully re-executed for each derived frame (measured: two extra
-    # verify passes per call at sf0.1).
-    edges = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    und = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # lazy: the initial signature aggregate below is this frame's first
-    # action and materializes the checkpoint in the same job
-    labels = nodes.withColumn("component", F.col("id")).localCheckpoint(eager=False)
-
-    def signature(frame: DataFrame):
-        # convergence probe fused with the lazy checkpoint's
-        # materialization (this aggregate is the frame's FIRST action —
-        # one Spark action per round, same posture as
-        # connected_components_star below): labels only ever DECREASE
-        # under min-propagation, so an unchanged (count, hash-sum)
-        # signature means a fixed point.  A decimal sum of xxhash64
-        # colliding between two DIFFERENT label frames is vanishingly
-        # unlikely (and label monotonicity removes the adversarial
-        # case: every change strictly lowers some component id).
-        row = frame.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("id", "component").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    prev_sig = signature(labels)
-    converged = False
-    for _ in range(max_iterations):
-        neigh = (
-            und.join(
-                labels.select(
-                    F.col("id").alias("dst"), F.col("component").alias("_nc")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("_nc").alias("_mn"))
-            .select(F.col("src").alias("id"), "_mn")
-        )
-        new_labels = (
-            labels.join(neigh, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_mn"), F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        sig = signature(new_labels)
-        prev_labels, labels = labels, new_labels
-        if sig == prev_sig:
-            # The signature is probabilistic (a decimal sum of xxhash64
-            # could in principle collide between two DIFFERENT label
-            # frames).  Promote the first equality to an EXACT check —
-            # one join on the two checkpointed, buckets-sized label
-            # frames, paid once per call — so a collision degrades to
-            # one wasted probe instead of silently wrong components.
-            changed = (
-                new_labels.alias("n")
-                .join(prev_labels.alias("p"), "id")
-                .where(F.col("n.component") != F.col("p.component"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                converged = True
-                break
-        prev_sig = sig
-    if not converged:
-        # partial labels are WRONG labels (distinct ids for one true
-        # component) — surface it instead of silently returning them
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            "iterations (graph diameter exceeds the cap).  Raise "
-            "max_iterations — rounds needed ≈ longest chain of near-dup "
-            "links, typically 2-3 for duplicate cliques — or, for "
-            "chain-shaped graphs, use connected_components_star "
-            "(large-star/small-star: O(log² n) rounds on any shape)"
-        )
-    return labels
+    raw = _pair_frame(edges, src_col, dst_col)
+    head = raw.limit(DRIVER_COMPONENTS_MAX_EDGES + 1).toArrow()
+    if head.num_rows <= DRIVER_COMPONENTS_MAX_EDGES:
+        return _label_on_driver(raw.sparkSession, head)
+    return _star_rounds(raw)
 
 
 def connected_components_star(
@@ -810,19 +766,19 @@ def connected_components_star(
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iterations: int = 30,
-    seed_rounds: int = 0,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14): converges in O(log² n) rounds on ANY graph
-    shape, vs O(diameter) for ``connected_components``'s min-label
-    propagation.
+    Beyond", SoCC'14): O(log² n) rounds on any graph shape.  Same
+    contract as :func:`connected_components`, which runs these rounds
+    for a pair graph too large for the driver; this entry point always
+    runs them.
+    """
+    return _star_rounds(_pair_frame(edges, src_col, dst_col), max_iterations)
 
-    Use this variant for chain-shaped graphs (long similarity chains,
-    temporal link graphs) where the diameter is unbounded; keep the
-    propagation default for near-dup cliques (diameter 2-3), whose 2-3
-    cheap rounds beat the star rounds' extra joins.  Same contract:
-    returns (id, component) with component = min node id reachable.
+
+def _star_rounds(raw: DataFrame, max_iterations: int = 30) -> DataFrame:
+    """The star rounds over checkpointed ``(u, v)`` pairs.
 
     Each round is two grouped-min joins on node id, and costs exactly
     ONE Spark action: the per-round edge frame is ``localCheckpoint``-ed
@@ -836,15 +792,8 @@ def connected_components_star(
     signature) on the round the signature first repeats, so a hash-sum
     collision costs one extra probe, never a wrong answer.
     """
-    # Materialize the (possibly expensive: LSH candidates + verify)
-    # edge lineage ONCE; nodes and the initial edge set both derive
-    # from this checkpoint instead of re-executing the lineage each.
-    raw = edges.select(
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
-        F.least(F.col(src_col), F.col(dst_col)).alias("v"),
-    ).localCheckpoint(eager=True)
-    # node set derived BEFORE dropping self-loops (matches
-    # connected_components: a self-loop-only node is its own component)
+    # node set derived BEFORE dropping self-loops: a self-loop-only
+    # node is its own component
     nodes = (
         raw.select(F.col("u").alias("id"))
         .unionByName(raw.select(F.col("v").alias("id")))
@@ -855,51 +804,6 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=False)
     )
-
-    # OPTIONAL exact graph contraction before the star loop: one
-    # min-label propagation round computes l(x) = min(x, min neighbor)
-    # and maps the edge set to {(x, l(x))} ∪ {(l(u), l(v))} —
-    # components are preserved ((x, l(x)) keeps x attached; mapped
-    # edges keep l(u) connected to l(v) through u-v), and every
-    # duplicate CLIQUE collapses to a star immediately.  Default OFF:
-    # the r8 A/B (BENCH_SCALE.md, cache-fair warm, solo sessions)
-    # measured the contraction winning at 62k docs (3.73 → 2.98 s),
-    # washing at 617k (6.34 → 6.07 s) and LOSING at 6.17 M
-    # (13.4 → 20.1 s) — the contraction's own two label joins +
-    # distinct grow linearly while the round it saves is bounded, so
-    # past ~1 M nodes the trade inverts.  The same A/B re-measured the
-    # r7 "10.6x for 10x docs" star scaling SOLO at 2.1x — the 10.6x
-    # was session-queue contamination, not round growth.
-    for _ in range(max(0, seed_rounds)):
-        und = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        lab = und.groupBy("u").agg(F.min("v").alias("_mn")).select(
-            "u", F.least(F.col("u"), F.col("_mn")).alias("l")
-        )
-        mapped = (
-            e.join(
-                lab.select(F.col("u").alias("_ju"), F.col("l").alias("_lu")),
-                F.col("u") == F.col("_ju"),
-            )
-            .join(
-                lab.select(F.col("u").alias("_jv"), F.col("l").alias("_lv")),
-                F.col("v") == F.col("_jv"),
-            )
-            .select(
-                F.greatest("_lu", "_lv").alias("u"),
-                F.least("_lu", "_lv").alias("v"),
-            )
-        )
-        self_edges = lab.select(
-            F.greatest("u", "l").alias("u"), F.least("u", "l").alias("v")
-        )
-        e = (
-            mapped.unionByName(self_edges)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
 
     def signature(frame: DataFrame):
         # this aggregate is the frame's FIRST action, so it doubles as
@@ -945,13 +849,12 @@ def connected_components_star(
         prev_e, e = e, small_star(large_star(e)).localCheckpoint(eager=False)
         new_sig = signature(e)
         if new_sig == sig:
-            # same posture as connected_components: promote the first
-            # signature equality to an EXACT set comparison (counts are
-            # already equal via the signature, so one-sided anti-join
-            # emptiness proves set equality — both frames are
-            # checkpointed, one cheap extra job per call).  A hash-sum
-            # collision degrades to one wasted probe, never wrong
-            # components.
+            # promote the first signature equality to an EXACT set
+            # comparison (counts are already equal via the signature,
+            # so one-sided anti-join emptiness proves set equality —
+            # both frames are checkpointed, one cheap extra job per
+            # call).  A hash-sum collision degrades to one wasted
+            # probe, never wrong components.
             changed = (
                 e.join(prev_e, ["u", "v"], "left_anti").limit(1).count()
             )
@@ -1475,8 +1378,9 @@ def component_split(
     stay their own singleton component, so the assignment reduces to
     the plain keyed stamp (`o21`) on a dup-free corpus.
 
-    Shape: the banded-LSH pair graph -> :func:`connected_components`
-    (both existing, short-key shuffles), a left join of the
+    Shape: the banded-LSH pair graph (a short-key shuffle) ->
+    :func:`connected_components` (labelled on the driver up to
+    ``DRIVER_COMPONENTS_MAX_EDGES`` pairs), a left join of the
     (tiny, dup-docs-only) component map onto the corpus, then the same
     engine-portable ``mix(key) % 1000`` 90/5/5 stamp as o21 — the
     oracle checks the EXACT assignment.  At 100 TB the component map is

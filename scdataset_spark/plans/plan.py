@@ -287,7 +287,6 @@ def with_batches(
     batch_size: int,
     fetch_factor: int = 16,
     drop_last: bool = False,
-    pos_col: str = "pos",
     shuffle_within_fetch: bool = False,
     seed: int = 42,
 ) -> DataFrame:
@@ -321,23 +320,22 @@ def with_batches(
     from scdataset_spark.plans.seeds import mix_sql
 
     fetch_size = batch_size * fetch_factor
-    out = plan.withColumn("fetch_id", F.expr(f"{pos_col} div {fetch_size}"))
+    out = plan.withColumn("fetch_id", F.expr(f"pos div {fetch_size}"))
     if shuffle_within_fetch or drop_last:
         out = _fetch_ordered(out)
     if shuffle_within_fetch:
         w = Window.partitionBy("fetch_id").orderBy(
-            F.expr(mix_sql(pos_col, seed, "spark")), F.col(pos_col)
+            F.expr(mix_sql("pos", seed, "spark")), F.col("pos")
         )
         out = out.withColumn(
-            pos_col,
+            "pos",
             (
                 F.col("fetch_id") * fetch_size + F.row_number().over(w) - 1
             ).cast("bigint"),
         )
-    p = F.col(pos_col)
     out = (
-        out.withColumn("batch_id", F.expr(f"{pos_col} div {batch_size}"))
-        .withColumn("batch_pos", (p % batch_size).cast("bigint"))
+        out.withColumn("batch_id", F.expr(f"pos div {batch_size}"))
+        .withColumn("batch_pos", (F.col("pos") % batch_size).cast("bigint"))
     )
     if drop_last:
         w = Window.partitionBy("fetch_id", "batch_id")

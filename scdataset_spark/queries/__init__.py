@@ -44,6 +44,16 @@ from scdataset_spark.queries import quality  # noqa: F401,E402
 # latency, not untested surface.
 # Names and semantics are frozen; only iteration order changes.
 _PLAN_CHANGED = [
+    # --- physical plan changed: connected components label a pair graph
+    # below the driver bound on the driver, so the component map is a
+    # local relation instead of the min-label propagation rounds ---
+    "dd_components",
+    "dd_dedup_corpus",
+    "dd_keep_best",
+    "dd_embed_components",
+    "pipe_curation",
+    "pipe_curation_gated",
+    "o22_component_split",
     # --- physical plan changed since the last external check: the
     # with-replacement weighted draws' persisted, coalesced interval frame
     # (o3, o5_subset, o6, o16), the hook stage's fetch-ordered exchange
@@ -131,11 +141,9 @@ _SWEEP_PRIORITY = [
     "q19_disjunctive_predicates",
     "q22_idle_wealthy_customers",
     "w5_running_revenue",
-    "pipe_curation_gated",
     "sim_pq_encode",
     "sim_pq_ann",
     "dd_edit_verified",
-    "o22_component_split",
     "dq_profile_drift",
     "dd_contamination_report",
     "dq_profile",
@@ -196,7 +204,6 @@ _SWEEP_PRIORITY = [
     "tx_repetition",
     "emb_quantize",
     "dd_embed_exact",
-    "dd_keep_best",
     "tx_vocabulary",
     "o21_split_assign",
     "dq_drift",
@@ -217,10 +224,7 @@ _SWEEP_PRIORITY = [
     "tx_quality_score",
     "dd_simhash_pairs",
     "dd_decontamination",
-    "dd_components",
-    "dd_dedup_corpus",
     "dd_embed_cosine",
-    "dd_embed_components",
     "sim_lsh_ann",
     "sim_ivf_ann",
     "mm_multimodal_zip",
@@ -229,7 +233,6 @@ _SWEEP_PRIORITY = [
     "sim_ivf_index_stats",
     "sim_ivf_index_rebuild",
     "tx_quality_rank_by_source",
-    "pipe_curation",
     "ev_tumbling_window",
     "dd_components_star",
     "dd_incremental_novel",

@@ -578,11 +578,11 @@ SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id
 @query("dd_components", survey_ref="§2.14 dedup", oracle=_components_oracle())
 def dd_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERING: connected components over the banded-LSH
-    candidate-pair graph by iterative min-label propagation
-    (``operators/dedup.py::connected_components``) — the step that
-    turns pairs into dedup groups.  The oracle computes exact
-    transitive closure with a recursive CTE, so parity proves the
-    distributed iteration converged to the true components."""
+    candidate-pair graph (``operators/dedup.py::connected_components``)
+    — the step that turns pairs into dedup groups.  This pair graph is
+    far below the driver bound, so it is labelled on the driver.  The
+    oracle computes exact transitive closure with a recursive CTE, so
+    parity proves the labelling found the true components."""
     c = dd.with_minhash(dd.with_shingles(corpus(spark, sf_dir)), num_hashes=12)
     edges = dd.lsh_candidate_pairs(c, num_hashes=12, bands=4)
     comp = dd.connected_components(edges)
@@ -592,11 +592,12 @@ def dd_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dd_components_star", survey_ref="§2.14 dedup", oracle=_components_oracle())
 def dd_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same pair graph, same exact-transitive-closure oracle, but
-    clustered with the alternating large-star/small-star algorithm
+    clustered with the alternating large-star/small-star rounds
     (``operators/dedup.py::connected_components_star``, Kiveris et al.
-    SoCC'14) — O(log² n) rounds on any graph shape, the variant a
-    pipeline picks when the similarity graph may contain long CHAINS
-    (propagation's O(diameter) rounds) rather than dup cliques."""
+    SoCC'14) — O(log² n) rounds on any graph shape, the distributed
+    shape ``connected_components`` runs for a pair graph above its
+    driver bound.  Calling the rounds directly keeps them under the
+    oracle at a size the driver would otherwise take."""
     c = dd.with_minhash(dd.with_shingles(corpus(spark, sf_dir)), num_hashes=12)
     edges = dd.lsh_candidate_pairs(c, num_hashes=12, bands=4)
     comp = dd.connected_components_star(edges)

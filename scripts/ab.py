@@ -10,7 +10,11 @@ or, without it, the working tree (tracked plus untracked-not-ignored
 files).  Both go into a temporary directory outside the repo.
 
 ``bench`` runs ``BENCHMARK.json``'s command with ``--trace 0`` over
-seeds 1..N; pair i runs the base first when i is odd.  Both sides run
+seeds 1..N; pair i runs the base first when i is odd.  Besides
+``BENCHMARK.json``'s workloads it runs ``curate_near_dedup``, which the
+same command knows but ``BENCHMARK.json`` leaves out for its run time
+(``perfbench/README.md``); its ``docs_per_s`` gets a verdict with the
+bound of ``samples_per_s``.  Both sides run
 the change side's instrument (the ``paths`` ``BENCHMARK.json`` lists),
 or the working tree's when the change predates the benchmark, so commits
 without a benchmark can be measured.  Each run is appended to ``--out``
@@ -21,8 +25,9 @@ pairs the change won, and a verdict (see ``verdict``).
 
 ``plans`` runs ``scripts/dump_plans.py`` in both trees, once for the
 headline queries and once more for the QUERY names if any, at
-``$SPARK_GRAFT_SF_DIR`` (default sf0.1), normalises expression ids and
-``plan_id``, prints ``same``/``DIFF`` per query and exits 1 on a DIFF.
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1), normalises expression ids,
+``plan_id`` and checkpoint RDD ids and call sites, prints
+``same``/``DIFF`` per query and exits 1 on a DIFF.
 """
 
 from __future__ import annotations
@@ -71,6 +76,15 @@ def trees(base: str, change: str | None, tmp: str) -> tuple[str, str]:
 
 
 # --- bench -------------------------------------------------------------------
+
+CURATION = "curate_near_dedup"
+
+
+def end_to_end(spec: dict) -> list[dict]:
+    """``BENCHMARK.json``'s end-to-end metrics plus the curation
+    workload's ``docs_per_s``, a throughput like ``samples_per_s``."""
+    (samples,) = [m for m in spec["end_to_end"] if m["name"] == "samples_per_s"]
+    return spec["end_to_end"] + [{**samples, "name": "docs_per_s"}]
 
 
 def install_instrument(base: str, change: str, tmp: str) -> dict:
@@ -192,10 +206,10 @@ def table(rows: list[dict]) -> str:
 def bench(args, tmp: str) -> int:
     base, change = trees(args.base, args.change, tmp)
     spec = install_instrument(base, change, tmp)
-    known = {w["name"] for w in spec["workloads"]}
+    known = {w["name"] for w in spec["workloads"]} | {CURATION}
     workloads = args.workloads.split(",")
     if unknown := [w for w in workloads if w not in known]:
-        sys.exit(f"unknown workloads {unknown}; BENCHMARK.json has {sorted(known)}")
+        sys.exit(f"unknown workloads {unknown}; known: {sorted(known)}")
     runs = []
     for wl in workloads:
         for seed in range(1, args.pairs + 1):
@@ -207,7 +221,7 @@ def bench(args, tmp: str) -> int:
                 if args.out:
                     with open(args.out, "a") as f:
                         f.write(json.dumps(runs[-1]) + "\n")
-    print(table(summarize(runs, spec["end_to_end"])))
+    print(table(summarize(runs, end_to_end(spec))))
     return 0
 
 
@@ -215,6 +229,11 @@ def bench(args, tmp: str) -> int:
 
 
 def normalise(plan: str) -> str:
+    """Drop the session state: expression ids, ``plan_id``, and the id
+    and call site of a checkpointed frame's RDD (``MapPartitionsRDD[N]
+    at localCheckpoint at SITE:0``, where both differ between two runs
+    of one tree, and SITE with what ran before in the process)."""
+    plan = re.sub(r"RDD\[[0-9]+\] at (\w+) at \S+:[0-9]+", r"RDD[] at \1", plan)
     return re.sub(r"plan_id=[0-9]+", "plan_id=", re.sub(r"#[0-9]+", "#", plan))
 
 
@@ -247,7 +266,7 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     sub = p.add_subparsers(dest="cmd", required=True)
     b = sub.add_parser("bench", help="benchmark pairs")
-    b.add_argument("--workloads", required=True, help="comma-separated BENCHMARK.json workloads")
+    b.add_argument("--workloads", required=True, help=f"comma-separated BENCHMARK.json workloads or {CURATION}")
     b.add_argument("--pairs", type=int, required=True)
     b.add_argument("--out", help="append each run to this JSONL file")
     q = sub.add_parser("plans", help="normalised plan diff")

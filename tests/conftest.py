@@ -105,8 +105,8 @@ _SLOW_TESTS = frozenset([
     "test_similarity_extra.py::TestRoutedAssignment::test_ivf_probe_identical_through_routing_flip",
     "test_skew_and_stateful.py::TestCappedSessionsStateful::test_closed_chunks_match_batch_twin_across_restarts",
     "test_skew_and_stateful.py::TestConnectedComponentsStar::test_path_graph_1k_within_default_cap",
-    "test_skew_and_stateful.py::TestConnectedComponentsStar::test_random_graph_matches_propagation",
-    "test_skew_and_stateful.py::TestConnectedComponentsStar::test_seed_round_contraction_is_exact",
+    "test_skew_and_stateful.py::TestConnectedComponentsStar::test_random_graph_matches_star",
+    "test_skew_and_stateful.py::TestDedupRetryDeterminism::test_failed_text_attempts_give_the_clean_components",
     "test_sources.py::TestSlicedIngest::test_sliced_ingest_matches_oneshot",
     "test_span_semantic_dedup.py::TestBandedMaxBucket::test_hot_bucket_cap_drops_saturated_band",
     "test_span_semantic_dedup.py::TestNonDefaultIdCol::test_lsh_chain_respects_id_col",

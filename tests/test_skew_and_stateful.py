@@ -3,6 +3,11 @@ hypothesis property tests for the plan closed forms."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -215,8 +220,8 @@ class TestClosedFormProperties:
 class TestConnectedComponents:
     def test_chain_clique_and_pair(self, spark):
         """A 5-node chain (worst diameter), a 4-clique, and an isolated
-        pair — components must be exact min-ids despite multi-hop
-        propagation."""
+        pair — components must be exact min-ids across multi-hop
+        chains."""
         from scdataset_spark.operators.dedup import connected_components
 
         edges = spark.createDataFrame(
@@ -237,34 +242,83 @@ class TestConnectedComponents:
         edges = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
         assert connected_components(edges).count() == 0
 
-    def test_nonconvergence_raises(self, spark):
-        """Hitting the iteration cap mid-propagation must raise, not
-        return partial (wrong) component labels."""
-        import pytest
+    def test_driver_shape_labels_shuffled_path(self, spark):
+        """A 1,000-node path whose ids are shuffled along it: diameter
+        999, and no id order to follow.  The driver shape must label
+        every node with the path minimum."""
+        import random
 
         from scdataset_spark.operators.dedup import connected_components
 
-        # 6-node chain: min-label needs ~5 rounds to reach the far end
+        ids = random.Random(18).sample(range(10_000, 20_000), 1000)
         edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(6)], "doc_a bigint, doc_b bigint"
+            list(zip(ids, ids[1:])), "doc_a bigint, doc_b bigint"
         )
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(edges, max_iterations=2)
-        # same graph converges fine with an adequate cap
-        comp = {
-            r.id: r.component
-            for r in connected_components(edges, max_iterations=10).collect()
-        }
-        assert set(comp.values()) == {0}
+        comp = {r.id: r.component for r in connected_components(edges).collect()}
+        assert comp == {i: min(ids) for i in ids}
+
+    def test_driver_labels_match_union_find(self, spark):
+        """The numpy hook-and-shortcut against a plain union-find on
+        seeded random graphs, sparse (long chains) to dense (one giant
+        component), with ids far apart."""
+        import random
+
+        import pyarrow as pa
+
+        from scdataset_spark.operators.dedup import _label_on_driver
+
+        def union_find(pairs):
+            parent = {}
+
+            def root(x):
+                while parent.setdefault(x, x) != x:
+                    x = parent[x]
+                return x
+
+            for u, v in pairs:
+                ru, rv = root(u), root(v)
+                parent[max(ru, rv)] = min(ru, rv)
+            return {x: root(x) for x in parent}
+
+        for seed, nodes, n_edges in ((1, 300, 150), (2, 300, 300), (3, 50, 400), (4, 1000, 999)):
+            rng = random.Random(seed)
+            ids = rng.sample(range(10**12), nodes)
+            pairs = [(rng.choice(ids), rng.choice(ids)) for _ in range(n_edges)]
+            table = pa.table({
+                "u": pa.array([max(p) for p in pairs], pa.int64()),
+                "v": pa.array([min(p) for p in pairs], pa.int64()),
+            })
+            got = {r.id: r.component for r in _label_on_driver(spark, table).collect()}
+            assert got == union_find(pairs), seed
+
+    def test_curation_sized_graph_runs_at_most_three_jobs(self, spark):
+        """A pair graph the size of the curation workload's (74 pairs,
+        cliques of 2-4 documents) is labelled on the driver: the edge
+        checkpoint and the bounded read, not a job per round."""
+        from scdataset_spark.operators.dedup import connected_components
+
+        raw = []
+        for base in range(0, 600, 20):
+            size = 2 + base // 20 % 3  # cliques of 2, 3 and 4
+            raw += [(base + i, base + j) for i in range(size) for j in range(i + 1, size)]
+        edges = spark.createDataFrame(raw[:74], "doc_a bigint, doc_b bigint")
+        sc = spark.sparkContext
+        sc.setJobGroup("components-curation-size", "connected_components")
+        try:
+            comp = {r.id: r.component for r in connected_components(edges).collect()}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("components-curation-size")
+        assert len(jobs) <= 3, len(jobs)
+        assert all(c == i // 20 * 20 for i, c in comp.items())
 
 
 class TestConnectedComponentsStar:
     def test_path_graph_1k_within_default_cap(self, spark):
-        """1000-node path graph — diameter 999, the shape min-label
-        propagation cannot finish within any reasonable round cap.  The
-        alternating large-star/small-star variant must converge within
-        its DEFAULT cap (O(log² n) rounds) and label every node with
-        the path minimum."""
+        """1000-node path graph — diameter 999.  The alternating
+        large-star/small-star rounds must converge within their DEFAULT
+        cap (O(log² n) rounds) and label every node with the path
+        minimum."""
         from scdataset_spark.operators.dedup import connected_components_star
 
         edges = spark.createDataFrame(
@@ -274,15 +328,26 @@ class TestConnectedComponentsStar:
         assert len(comp) == 1000
         assert set(comp.values()) == {0}
 
-    def test_matches_propagation_on_mixed_graph(self, spark):
-        """Star and propagation must agree exactly on a graph mixing a
-        chain, a clique, an isolated pair, duplicate and reversed
-        edges, and self-loops."""
-        from scdataset_spark.operators.dedup import (
-            connected_components,
-            connected_components_star,
-        )
+    @staticmethod
+    def _three_shapes(edges, monkeypatch) -> list[dict]:
+        """``(id → component)`` from the driver shape, from the star
+        rounds, and from ``connected_components`` with its driver bound
+        forced to 0 (the star rounds behind the same gate)."""
+        from scdataset_spark.operators import dedup
 
+        def labels(frame):
+            return {r.id: r.component for r in frame.collect()}
+
+        driver = labels(dedup.connected_components(edges))
+        star = labels(dedup.connected_components_star(edges))
+        monkeypatch.setattr(dedup, "DRIVER_COMPONENTS_MAX_EDGES", 0)
+        gated = labels(dedup.connected_components(edges))
+        return [driver, star, gated]
+
+    def test_driver_shape_matches_star_on_mixed_graph(self, spark, monkeypatch):
+        """The driver shape, the star rounds and the star rounds behind
+        the gate must agree exactly on a graph mixing a chain, a clique,
+        an isolated pair, duplicate and reversed edges, and self-loops."""
         raw = (
             [(10, 11), (11, 12), (12, 13), (13, 14)]
             + [(20, 21), (20, 22), (20, 23), (21, 22), (21, 23), (22, 23)]
@@ -290,10 +355,9 @@ class TestConnectedComponentsStar:
             + [(40, 40)]  # self-loop: contributes no edge; node drops out
         )
         edges = spark.createDataFrame(raw, "doc_a bigint, doc_b bigint")
-        star = {r.id: r.component for r in connected_components_star(edges).collect()}
-        prop = {r.id: r.component for r in connected_components(edges).collect()}
-        assert star == prop
-        assert star[40] == 40  # self-loop-only node is its own component
+        driver, star, gated = self._three_shapes(edges, monkeypatch)
+        assert driver == star == gated
+        assert driver[40] == 40  # self-loop-only node is its own component
 
     def test_empty_edges(self, spark):
         from scdataset_spark.operators.dedup import connected_components_star
@@ -333,81 +397,89 @@ class TestConnectedComponentsStar:
             f"in-loop checkpoints must be lazy, got {calls}"
         )
 
-    def test_random_graph_matches_propagation(self, spark):
-        """Seeded random sparse graph: both algorithms must produce the
-        identical (id → component) map."""
+    def test_random_graph_matches_star(self, spark, monkeypatch):
+        """Seeded random sparse graph, whose giant component has a
+        diameter above 20: the three shapes must produce the identical
+        (id → component) map."""
         import random
-
-        from scdataset_spark.operators.dedup import (
-            connected_components,
-            connected_components_star,
-        )
 
         rng = random.Random(7)
         raw = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
         raw = [(a, b) for a, b in raw if a != b]
         edges = spark.createDataFrame(raw, "doc_a bigint, doc_b bigint")
-        star = {r.id: r.component for r in connected_components_star(edges).collect()}
-        # this sparse graph's giant component has diameter > 20: the
-        # propagation baseline needs its cap raised, which is exactly
-        # the regime the star variant exists for (its DEFAULT cap held)
-        prop = {
-            r.id: r.component
-            for r in connected_components(edges, max_iterations=80).collect()
-        }
-        assert star == prop
+        driver, star, gated = self._three_shapes(edges, monkeypatch)
+        assert driver == star == gated
 
-    def test_seed_round_contraction_is_exact(self, spark):
-        """seed_rounds=1 (optional pre-star contraction) must produce
-        the identical (id -> component) map as the plain star loop on
-        a graph mixing chains, cliques, duplicates and self-loops."""
-        import random
 
-        from scdataset_spark.operators.dedup import connected_components_star
+class TestDedupRetryDeterminism:
+    def test_failed_text_attempts_give_the_clean_components(self, tmp_path):
+        """Half the corpus gets its text from a pandas UDF whose every
+        first attempt raises, so those tasks run twice while the other
+        half's run once; ``lsh_candidate_pairs`` ->
+        ``connected_components`` must give a clean run's ``(id,
+        component)`` set.  Each document's copy sits in the other half,
+        so a band hash that depended on the attempt would split the
+        pair.  Runs in a child process on ``local[2,2]`` (two attempts
+        per task), so the shared session keeps its master."""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+import pandas as pd
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from scdataset_spark.operators import dedup as dd
+from scdataset_spark.session import get_spark
+spark = get_spark("dedup_retry_determinism", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("OFF")
 
-        rng = random.Random(13)
-        raw = [(rng.randrange(150), rng.randrange(150)) for _ in range(120)]
-        raw += [(10, 11), (11, 12), (12, 13), (40, 40)]
-        edges = spark.createDataFrame(raw, "doc_a bigint, doc_b bigint")
-        plain = {
-            r.id: r.component
-            for r in connected_components_star(edges, seed_rounds=0).collect()
-        }
-        seeded = {
-            r.id: r.component
-            for r in connected_components_star(edges, seed_rounds=1).collect()
-        }
-        assert plain == seeded
+def text(doc_id: pd.Series) -> pd.Series:
+    # doc i and its copy 1000 + i share a text no other doc shares a token with
+    return doc_id.map(lambda i: " ".join(f"w{{(i % 1000) * 30 + k}}" for k in range(30)))
 
-    def test_propagation_one_action_per_round(self, spark, monkeypatch):
-        """Mirror of test_one_action_per_round for the PROPAGATION
-        variant (r7 verdict parity ask): only the raw edge-lineage
-        checkpoint is eager; the initial label frame and every in-loop
-        label frame are lazy, materialized by the fused (count,
-        hash-sum) convergence-signature aggregate — one action per
-        round, no separate changed-label join job."""
-        from scdataset_spark.operators.dedup import connected_components
+@F.pandas_udf("string")
+def text_of(doc_id: pd.Series) -> pd.Series:
+    return text(doc_id)
 
-        probe = spark.range(1)
-        cls = type(probe)
-        calls = []
-        orig = cls.localCheckpoint
+@F.pandas_udf("string")
+def flaky_text_of(doc_id: pd.Series) -> pd.Series:
+    if TaskContext.get().attemptNumber() == 0:
+        with open({str(tmp_path / "failed.txt")!r}, "a") as f:
+            f.write("failed\\n")
+        raise RuntimeError("first attempt fails")
+    return text(doc_id)
 
-        def recording(self, eager=True):
-            calls.append(eager)
-            return orig(self, eager=eager)
-
-        monkeypatch.setattr(cls, "localCheckpoint", recording)
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], "doc_a bigint, doc_b bigint"
+out = {{"master": spark.sparkContext.master}}
+for name, udf in (("clean", text_of), ("flaky", flaky_text_of)):
+    originals = spark.range(0, 60, numPartitions=2).select(F.col("id").alias("doc_id"))
+    copies = spark.range(1000, 1060, numPartitions=2).select(F.col("id").alias("doc_id"))
+    docs = originals.withColumn("text", udf("doc_id")).unionByName(
+        copies.withColumn("text", text_of("doc_id"))
+    )
+    sigs = dd.with_minhash(dd.with_shingles(docs), num_hashes=12)
+    comp = dd.connected_components(dd.lsh_candidate_pairs(sigs, num_hashes=12, bands=4))
+    out[name] = sorted([r["id"], r["component"]] for r in comp.collect())
+print(json.dumps(out))
+spark.stop()
+"""
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_MASTER="local[2,2]")
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=str(tmp_path),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
         )
-        comp = {r.id: r.component for r in connected_components(edges).collect()}
-        assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-        assert calls, "checkpointing disappeared entirely?"
-        assert calls[0] is True  # the raw edge-lineage materialization
-        assert all(e is False for e in calls[1:]), (
-            f"initial labels + in-loop checkpoints must be lazy, got {calls}"
-        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert out["master"] == "local[2,2]"
+        assert (tmp_path / "failed.txt").read_text().split()
+        assert out["flaky"] == out["clean"]
+        # every original pairs with its copy: 60 components of two
+        assert len(out["clean"]) == 120
+        assert all(c == i % 1000 for i, c in out["clean"])
 
 
 class TestCappedSessionsStateful:

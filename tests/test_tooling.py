@@ -9,6 +9,7 @@ import collections
 import functools
 import glob
 import importlib.util
+import json
 import os
 
 from tests.conftest import _SLOW_TESTS
@@ -125,3 +126,28 @@ class TestAbSummary:
         assert _summary(base, list(base))["verdict"] == "unresolved"
         # unless every change run beats every base run
         assert _summary(base, [151] * 10)["verdict"] == "same"
+
+    def test_curation_throughput_gets_the_samples_bound(self):
+        ab = _ab()
+        with open(os.path.join(os.path.dirname(TESTS), "BENCHMARK.json")) as f:
+            spec = json.load(f)
+        (samples,) = [m for m in spec["end_to_end"] if m["name"] == "samples_per_s"]
+        (docs,) = [m for m in ab.end_to_end(spec) if m["name"] == "docs_per_s"]
+        assert (docs["better"], docs["bound"]) == ("higher", samples["bound"])
+        runs = [
+            {"side": side, "workload": ab.CURATION, "seed": seed,
+             "result": {"metrics": {"setup_s": {"value": 1.0}, "docs_per_s": {"value": v}}}}
+            for side, v in (("base", 200.0), ("change", 100.0))
+            for seed in (1, 2)
+        ]  # fmt: skip
+        rows = {r["metric"]: r for r in ab.summarize(runs, ab.end_to_end(spec))}
+        assert sorted(rows) == ["docs_per_s", "setup_s"]
+        assert rows["docs_per_s"]["verdict"] == "worse"
+
+
+def test_plan_normalise_drops_session_counters():
+    ab = _ab()
+    a = "[u#12L], MapPartitionsRDD[103] at localCheckpoint at <unknown>:0, plan_id=7"
+    b = "[u#40L], MapPartitionsRDD[102] at localCheckpoint at NativeMethodAccessorImpl.java:0, plan_id=9"
+    assert ab.normalise(a) == ab.normalise(b)
+    assert ab.normalise(a) != ab.normalise(a.replace("u#", "v#"))
