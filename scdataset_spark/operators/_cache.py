@@ -39,6 +39,12 @@ def _storage_bytes(spark) -> int:
     return sum(i.memSize() + i.diskSize() for i in infos)
 
 
+def _is_cached(df: DataFrame) -> bool:
+    """Whether Spark's cache manager holds ``df``'s plan (a JVM read)."""
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
 def persist_bounded(df: DataFrame) -> DataFrame:
     """Persist ``df``, evicting the least-recently-registered frame
     beyond the bound.  Callers that need a longer lifetime own their own
@@ -61,11 +67,27 @@ def persist_bounded(df: DataFrame) -> DataFrame:
     them can evict a frame whose plan hasn't run yet — correctness is
     preserved (Spark recomputes the lineage), only the cache benefit is
     lost; keep construct→execute cycles short or persist explicitly for
-    longer lifetimes."""
+    longer lifetimes.
+
+    Identity fast path: a caller that kept the frame this function
+    returned (the weighted strategies' per-input memo) passes that very
+    object back, and an ``is`` match is checked before any
+    ``sameSemantics`` (each one canonicalizes both plans on the JVM).
+    The hit refreshes the entry to most-recent and re-persists it when
+    ``spark.catalog.clearCache()`` dropped its data — read from the
+    JVM's ``storageLevel``: pyspark's ``is_cached`` flag stays ``True``
+    through ``clearCache()``.  An entry evicted from the registry is
+    simply registered again below."""
     evict = []
     with _LOCK:  # one critical section: a concurrent double-miss would
         # re-create the duplicate-entry hazard this function exists to
         # prevent (sameSemantics/persist are cheap driver-side calls)
+        for i, old in enumerate(_CACHE):
+            if old is df:
+                _CACHE.append(_CACHE.pop(i))
+                if not _is_cached(df):
+                    df.persist()
+                return df
         for i, old in enumerate(_CACHE):
             try:
                 # the registry is process-global, not per-session: an
@@ -89,7 +111,7 @@ def persist_bounded(df: DataFrame) -> DataFrame:
                 # files.  Treat it as a miss: drop it and register the
                 # caller's freshly-resolved frame instead.
                 try:
-                    still_cached = old.storageLevel.useMemory or old.storageLevel.useDisk
+                    still_cached = _is_cached(old)
                 except Exception:
                     still_cached = False
                 if not still_cached:

@@ -33,7 +33,11 @@ the full table through a single-partition global window**:
   they are persisted (``persist_bounded``, coalesced to the cluster's
   width) and built once per input: every later epoch only draws,
   probes the cached intervals and permutes.  A one-shot weighted query
-  pays that cache build once.
+  pays that cache build once.  The weighted strategies also PLAN that
+  half once per input object (a one-slot memo per instance, ``_memo``):
+  a later ``plan()`` on the same object builds only the draws, the
+  probe join and the two permutation windows, and hands the memo's
+  persisted frames back through ``persist_bounded``'s identity path.
 
 Counts needed by the math (n, total weight) are scalar aggregates
 broadcast back via crossJoin — Catalyst plans them as a broadcast
@@ -42,7 +46,7 @@ nested-loop over a 1-row relation, never a driver collect.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -77,9 +81,40 @@ class SamplingStrategy:
 
     where: str | None = None
     assume_dense: bool = False
+    # The weighted strategies' one-slot memo of their seed-independent
+    # frames, keyed on the plan() input OBJECT and the field values:
+    # epoch_plans passes one object every epoch, so each later epoch
+    # plans only its draws.  A fresh instance (every oracle query) takes
+    # the full path; two threads racing on one instance only rebuild.
+    _memo: tuple | None = field(default=None, init=False, repr=False, compare=False)
 
     def _subset(self, df: DataFrame) -> DataFrame:
         return df.where(self.where) if self.where else df
+
+    def _fields(self) -> tuple:
+        return tuple(getattr(self, f.name) for f in fields(self) if f.init)
+
+    def _recall(self, df: DataFrame) -> tuple | None:
+        """The frames memoized for ``df`` under the current field
+        values, or None."""
+        memo = self._memo  # one read: another thread may replace it
+        if memo is not None and memo[0] is df and memo[1] == self._fields():
+            return memo[2:]
+        return None
+
+    def _remember(self, df: DataFrame, *frames) -> None:
+        self._memo = (df, self._fields(), *frames)
+
+    def _inner_plan(self, df: DataFrame, seed: int, epoch: int) -> DataFrame:
+        """Plan through the ``BlockWeightedSampling`` that ``_weigh(df)``
+        returns with its weighted input, both memoized per input object
+        (the inner instance memoizes its intervals on that input)."""
+        memo = self._recall(df)
+        if memo is None:
+            memo = self._weigh(df)
+            self._remember(df, *memo)
+        weighted, inner = memo
+        return inner.plan(weighted, seed=seed, epoch=epoch)
 
     def _pos0(self, df: DataFrame) -> DataFrame:
         """0-based rank of row_id.  With ``assume_dense`` (row_id is
@@ -127,6 +162,16 @@ class Streaming(SamplingStrategy):
         ).drop("pos0")
 
 
+# Largest block_size BlockShuffling(drop_last=True) accepts.  Its drop
+# set holds up to block_size-1 positions, ranked in one window, and each
+# kept row scans that array twice (array_contains and the filter count),
+# so the drop costs O(rows * dropped) interpreted comparisons.  o15's
+# shape at sf0.1 (600k rows, 4 cores), drop_last off -> on: block 256
+# (192 dropped) 0.9 -> 5.3 s, 4096 (1,984) 0.6 -> 23 s, 65536 (10,176)
+# 0.5 -> 114 s, 1M (every row) 0.5 s -> over 180 s.
+DROP_LAST_BLOCK_MAX = 4096
+
+
 @dataclass
 class BlockShuffling(SamplingStrategy):
     """O1/O15 — block shuffle (reference ``strategy.py:348-554``).
@@ -148,6 +193,12 @@ class BlockShuffling(SamplingStrategy):
     def __post_init__(self):
         if self.block_size <= 0:
             raise ValueError(f"block_size must be positive, got {self.block_size}")
+        if self.drop_last and self.block_size > DROP_LAST_BLOCK_MAX:
+            raise ValueError(
+                f"block_size {self.block_size} exceeds DROP_LAST_BLOCK_MAX="
+                f"{DROP_LAST_BLOCK_MAX} with drop_last=True: the drop costs "
+                "O(rows * block_size); use a smaller block or drop_last=False"
+            )
 
     def plan(self, df: DataFrame, seed: int = 42, epoch: int = 0) -> DataFrame:
         s = _seed_eff(seed, epoch)
@@ -347,6 +398,11 @@ def _block_permute_pos(out: DataFrame, block_size: int, s: int) -> DataFrame:
 # large).
 BROADCAST_DRAWS_MAX = 2_000_000
 
+# Width of one inverse-CDF interval bucket: the total weight over 1024
+# buckets, rounded up (an expression over the broadcast ``_total``).
+_BUCKET_W = "(_total + 1023) div 1024"
+
+
 @dataclass
 class BlockWeightedSampling(SamplingStrategy):
     """O3/O4 — weighted sampling, then sort + block shuffle
@@ -388,8 +444,21 @@ class BlockWeightedSampling(SamplingStrategy):
             # without-replacement draws need an explicit per-round size
             raise ValueError("sampling_size is required when replace=False")
 
-    def _weighted_draws(self, df: DataFrame, s: int) -> DataFrame:
-        spark = df.sparkSession
+    def _intervals(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """The inverse CDF's interval frame ``cum_b`` (persisted) and the
+        1-row ``total``: seed-independent, so built once per input
+        object.  A later call on the same object only hands the memo's
+        persisted frames back through ``persist_bounded``'s identity
+        path, which refreshes them and re-persists one that
+        ``clearCache()`` dropped."""
+        from scdataset_spark.operators._cache import persist_bounded
+
+        memo = self._recall(df)
+        if memo is not None:
+            cum_b, offsets, total = memo
+            persist_bounded(offsets)
+            return persist_bounded(cum_b), total
+        base = self._subset(df)
         # Exact-integer weights: ceil(w * scale).  For integer weight
         # columns this is exact; for float weights the quantization error
         # is 1/weight_scale.  Integer cumsums are what keep the inverse
@@ -409,7 +478,7 @@ class BlockWeightedSampling(SamplingStrategy):
         ).otherwise(
             F.ceil(F.col(self.weight_col).cast("double") * self.weight_scale).cast("bigint")
         )
-        base = df.withColumn("_wi", wint).where(F.col("_wi") > 0).select("row_id", "_wi")
+        wbase = base.withColumn("_wi", wint).where(F.col("_wi") > 0).select("row_id", "_wi")
         # The CDF is _bucketed_prefix's running sum of _wi in row_id
         # order.  With the input bytes known, buckets are
         # ``row_id div chunk`` with ``chunk`` from the driver-side
@@ -422,12 +491,11 @@ class BlockWeightedSampling(SamplingStrategy):
         # running sum.  The total is the sum of the bucket totals on the
         # persisted 64-to-65k-row offsets frame.  The interval frame is
         # persisted too (below): r14 measured such a persist slower on
-        # one-shot runs, where it only costs; across epochs it is built
-        # once (epoch_balanced_files 65k -> 81k samples/s, 11 -> 6 jobs
-        # per epoch on 4 cores), and a one-shot query pays the build.
-        from scdataset_spark.operators._cache import persist_bounded
-
-        nbytes = input_probe(df)[1]
+        # one-shot runs, where it only costs; across epochs its data is
+        # built once (epoch_balanced_files 65k -> 81k samples/s, 11 -> 6
+        # jobs per epoch on 4 cores), and a one-shot query pays the
+        # build.  The memo above also plans it once per input object.
+        nbytes = input_probe(base)[1]
         nb, bucket, parts = POS_BUCKETS, None, None
         if nbytes is not None:
             est = nbytes // _EST_MIN_BYTES_PER_ROW  # ≈ row-count upper bound
@@ -435,15 +503,47 @@ class BlockWeightedSampling(SamplingStrategy):
             bucket = F.expr(f"row_id div {max(1, est // nb)}")
             # cached-interval partitions: cluster width, raised so no
             # partition holds more than CDF_BUCKET_ROWS estimated rows
-            parts = max(python_stage_partitions(df), -(-est // CDF_BUCKET_ROWS))
+            parts = max(python_stage_partitions(base), -(-est // CDF_BUCKET_ROWS))
         cum, offsets = _bucketed_prefix(
-            base, [], "row_id", [("row_id", "asc")], "hi", nb, "_wi", bucket=bucket
+            wbase, [], "row_id", [("row_id", "asc")], "hi", nb, "_wi", bucket=bucket
         )
-        total = persist_bounded(offsets).agg(F.sum("_btot").alias("_total"))
+        offsets = persist_bounded(offsets)
+        total = offsets.agg(F.sum("_btot").alias("_total"))
         cum = cum.withColumn("lo", F.col("hi") - F.col("_wi")).select(
             "row_id", "lo", "hi"
         )
-        draws = spark.range(self.total_size).withColumnRenamed("id", "draw_id")
+        # Each [lo, hi) interval explodes to the integer buckets of width
+        # _BUCKET_W it overlaps (~1 per row under near-uniform weights),
+        # so the draws' range join becomes an equi-join on ``bucket`` + a
+        # residual range filter — never a nested loop.  All bucket math
+        # is integer `div`: cumulative totals can exceed 2^53, where
+        # double division would mis-bucket rows on one side and silently
+        # drop draws.
+        cum_b = (
+            cum.crossJoin(F.broadcast(total))
+            .withColumn("_w", F.expr(_BUCKET_W))
+            .withColumn(
+                "bucket",
+                F.explode(F.sequence(F.expr("lo div _w"), F.expr("(hi - 1) div _w"))),
+            )
+            .select("bucket", "row_id", "lo", "hi")
+        )
+        # Seed-independent, so persisted: a fresh instance (or a new
+        # input object) that plans an equal cum_b gets the registered
+        # entry back from persist_bounded's sameSemantics scan.  AQE
+        # does not coalesce a cached plan, so the count is explicit (else
+        # every epoch scans the _bucket exchange's initial partitions).
+        if parts is not None:
+            cum_b = cum_b.coalesce(parts)
+        cum_b = persist_bounded(cum_b)
+        self._remember(df, cum_b, offsets, total)
+        return cum_b, total
+
+    def _weighted_draws(self, df: DataFrame, s: int) -> DataFrame:
+        """The seeded half: ``total_size`` inverse-CDF draws probed
+        against the input's cached intervals."""
+        cum_b, total = self._intervals(df)
+        draws = df.sparkSession.range(self.total_size).withColumnRenamed("id", "draw_id")
         # 62-bit target: one mix() only covers [0, 2^31) — with scaled
         # integer weights the cumulative total easily exceeds that, and a
         # 31-bit target would only ever sample the low end of the CDF.
@@ -451,43 +551,18 @@ class BlockWeightedSampling(SamplingStrategy):
             f"(({mix_sql('draw_id', s, 'spark')}) * 2147483648 "
             f"+ ({mix_sql('draw_id', s + 1, 'spark')}))"
         )
-        draws = draws.crossJoin(F.broadcast(total)).withColumn(
-            "t", F.expr(t62) % F.col("_total")
-        )
-        # Bucketed interval join against the SAME broadcast total (its
-        # _total is the interval-bucket width input): each [lo, hi)
-        # interval explodes to the integer buckets it overlaps (~1 per
-        # row under near-uniform weights) and the range join becomes an
-        # equi-join on ``bucket`` + a residual range filter — never a
-        # nested loop.  All bucket math is integer `div`: cumulative
-        # totals can exceed 2^53, where double division would
-        # mis-bucket rows on one side and silently drop draws.
-        # Join strategy (VERDICT r14 task 4): with draws ≪ rows
-        # (total_size ≤ BROADCAST_DRAWS_MAX) the DRAWS side broadcasts
-        # so the exploded interval side streams map-side (measured
-        # ~2.3x on the join stage at sf0.1, BENCH_SCALE.md "r15 o3
-        # stage breakdown"); past it the shuffled hash join is right
+        # the SAME broadcast total gives the target range and the
+        # interval-bucket width.  Join strategy (VERDICT r14 task 4):
+        # with draws ≪ rows (total_size ≤ BROADCAST_DRAWS_MAX) the DRAWS
+        # side broadcasts so the exploded interval side streams map-side
+        # (measured ~2.3x on the join stage at sf0.1, BENCH_SCALE.md "r15
+        # o3 stage breakdown"); past it the shuffled hash join is right
         # anyway (both sides genuinely large).
-        nb2 = 1024
-        wexpr = f"(_total + {nb2 - 1}) div {nb2}"
-        cum_b = (
-            cum.crossJoin(F.broadcast(total))
-            .withColumn("_w", F.expr(wexpr))
-            .withColumn(
-                "bucket",
-                F.explode(F.sequence(F.expr("lo div _w"), F.expr("(hi - 1) div _w"))),
-            )
-            .select("bucket", "row_id", "lo", "hi")
-        )
-        # Seed-independent, so built once: every epoch plans the same
-        # cum_b and persist_bounded hands back the registered entry.  AQE
-        # does not coalesce a cached plan, so the count is explicit (else
-        # every epoch scans the _bucket exchange's initial partitions).
-        if parts is not None:
-            cum_b = cum_b.coalesce(parts)
-        cum_b = persist_bounded(cum_b)
-        draws_b = draws.withColumn("bucket", F.expr(f"t div ({wexpr})")).select(
-            "draw_id", "t", "bucket"
+        draws_b = (
+            draws.crossJoin(F.broadcast(total))
+            .withColumn("t", F.expr(t62) % F.col("_total"))
+            .withColumn("bucket", F.expr(f"t div ({_BUCKET_W})"))
+            .select("draw_id", "t", "bucket")
         )
         if self.total_size <= BROADCAST_DRAWS_MAX:
             joined = cum_b.join(F.broadcast(draws_b), "bucket")
@@ -553,11 +628,10 @@ class BlockWeightedSampling(SamplingStrategy):
 
     def plan(self, df: DataFrame, seed: int = 42, epoch: int = 0) -> DataFrame:
         s = _seed_eff(seed, epoch)
-        base = self._subset(df)
         drawn = (
-            self._weighted_draws(base, s)
+            self._weighted_draws(df, s)
             if self.replace
-            else self._reservoir_rounds(base, s)
+            else self._reservoir_rounds(self._subset(df), s)
         )
         # sort drawn multiset by row_id (reference sorts before block
         # shuffle for locality), then block-shuffle with a second seed.
@@ -608,6 +682,9 @@ class MixtureSampling(SamplingStrategy):
             raise ValueError("proportions must be positive")
 
     def plan(self, df: DataFrame, seed: int = 42, epoch: int = 0) -> DataFrame:
+        return self._inner_plan(df, seed, epoch)
+
+    def _weigh(self, df: DataFrame) -> tuple[DataFrame, BlockWeightedSampling]:
         spark = df.sparkSession
         base = self._subset(df)
         counts = base.groupBy(self.source_col).agg(F.count(F.lit(1)).alias("_cnt"))
@@ -653,7 +730,7 @@ class MixtureSampling(SamplingStrategy):
             sampling_size=self.sampling_size,
             weight_scale=1,
         )
-        return inner.plan(weighted, seed=seed, epoch=epoch)
+        return weighted, inner
 
 
 def mixture_plan(
@@ -806,6 +883,9 @@ class ClassBalancedSampling(SamplingStrategy):
     weight_scale: int = 1_000_000
 
     def plan(self, df: DataFrame, seed: int = 42, epoch: int = 0) -> DataFrame:
+        return self._inner_plan(df, seed, epoch)
+
+    def _weigh(self, df: DataFrame) -> tuple[DataFrame, BlockWeightedSampling]:
         base = self._subset(df)
         counts = base.groupBy(self.label_col).agg(F.count(F.lit(1)).alias("_cnt"))
         # floor(), not cast: Spark's double->bigint cast truncates while
@@ -824,7 +904,7 @@ class ClassBalancedSampling(SamplingStrategy):
             replace=self.replace,
             sampling_size=self.sampling_size,
         )
-        return inner.plan(weighted, seed=seed, epoch=epoch)
+        return weighted, inner
 
 
 @dataclass

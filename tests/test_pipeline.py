@@ -657,6 +657,95 @@ spark.stop()
             assert sum((b[0] for b in clean), []) == out[f"want-{shuffle}"]
 
 
+    def test_failed_writer_attempts_give_the_clean_files(self, tmp_path):
+        """Every ``write_arrow_fetches`` writer task fails its first
+        attempt after writing its tmp file: a ``sitecustomize`` on the
+        Python workers' ``PYTHONPATH`` makes ``os.replace`` of a
+        ``.tmp.`` file raise on attempt 0 while a flag file exists.  The
+        manifest (each fetch once) and the files' rows must equal a clean
+        run's.  Child process on ``local[2,2]``, as above."""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        flag, failed = str(tmp_path / "flaky.on"), str(tmp_path / "failed.txt")
+        site = tmp_path / "site"
+        site.mkdir()
+        (site / "sitecustomize.py").write_text(
+            f"""
+import os
+_replace = os.replace
+
+def _flaky_replace(src, dst, *args, **kwargs):
+    if ".tmp." in str(src) and os.path.exists({flag!r}):
+        from pyspark import TaskContext
+        if TaskContext.get() is not None and TaskContext.get().attemptNumber() == 0:
+            with open({failed!r}, "a") as f:
+                f.write(os.path.basename(dst) + "\\n")
+            raise RuntimeError("first attempt fails after its tmp write")
+    return _replace(src, dst, *args, **kwargs)
+
+os.replace = _flaky_replace
+"""
+        )
+        script = f"""
+import json, os, sys
+sys.path.insert(0, {repo!r})
+import pyarrow as pa
+import pyarrow.ipc as ipc
+from scdataset_spark.operators.strategies import BlockShuffling
+from scdataset_spark.pipeline.export import write_arrow_fetches
+from scdataset_spark.plans.plan import with_batches
+from scdataset_spark.session import get_spark
+spark = get_spark("writer_retry_determinism", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("OFF")
+rows = spark.range(0, 3000, numPartitions=3).selectExpr("id AS row_id", "CAST(id AS DOUBLE) * 0.5 AS v")
+planned = with_batches(
+    BlockShuffling(block_size=16, assume_dense=True).plan(rows, seed=3), 32, fetch_factor=4
+)
+out = {{"master": spark.sparkContext.master}}
+for name in ("clean", "flaky"):
+    if name == "flaky":
+        open({flag!r}, "w").close()
+    d = os.path.join({str(tmp_path)!r}, name)
+    manifest = write_arrow_fetches(planned, d, ["row_id", "pos", "v"]).collect()
+    files = {{}}
+    for r in manifest:
+        with pa.OSFile(r["path"], "rb") as f:
+            files[os.path.basename(r["path"])] = ipc.open_stream(f).read_all().to_pydict()
+    out[name] = {{
+        "manifest": sorted([r["fetch_id"], r["n_rows"], os.path.basename(r["path"])] for r in manifest),
+        "files": files,
+        "listing": sorted(os.listdir(d)),
+    }}
+print(json.dumps(out))
+spark.stop()
+"""
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env.update(
+            SPARK_GRAFT_CPUS="2", SPARK_GRAFT_MASTER="local[2,2]", PYTHONPATH=str(site)
+        )
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=str(tmp_path),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert out["master"] == "local[2,2]"
+        clean, flaky = out["clean"], out["flaky"]
+        assert open(failed).read().split()  # the flaky run did fail
+        # the failed attempts' tmp files stay behind (written, never renamed)
+        names = [m[2] for m in clean["manifest"]]
+        assert clean["listing"] == names
+        assert [f for f in flaky["listing"] if ".tmp." not in f] == names
+        assert len(flaky["listing"]) > len(names)
+        assert [m[0] for m in clean["manifest"]] == list(range(-(-3000 // 128)))
+        assert sum(m[1] for m in clean["manifest"]) == 3000
+        assert flaky["manifest"] == clean["manifest"]
+        assert flaky["files"] == clean["files"]
+
+
 class TestHookPipelineParallelism:
     def test_python_stage_keeps_configured_partitions(self, spark):
         """On both input shapes, with and without a ``with_batches``

@@ -23,10 +23,12 @@ from scdataset_spark.operators.strategies import (
     BlockShuffling,
     BlockWeightedSampling,
     ClassBalancedSampling,
+    MixtureSampling,
     Streaming,
     mixture_plan,
 )
 from scdataset_spark.plans.plan import (
+    _bucketed_prefix,
     ddp_filter,
     exact_num_batches,
     with_batches,
@@ -544,6 +546,115 @@ class TestCachedCdf:
         assert cdf.rdd.getNumPartitions() > python_stage_partitions(li)
 
 
+class TestWeightedPlanMemo:
+    """Each weighted strategy plans its seed-independent half once per
+    input object; a later epoch on that object builds only its draws."""
+
+    @staticmethod
+    def _cases(li):
+        weighted = li.withColumn("w", F.col("l_quantity"))
+        return {
+            "weighted": (
+                lambda: BlockWeightedSampling(block_size=16, weight_col="w", total_size=500),
+                weighted,
+            ),
+            "balanced": (
+                lambda: ClassBalancedSampling(
+                    label_col="l_returnflag", block_size=16, total_size=500
+                ),
+                li,
+            ),
+            "mixture": (
+                lambda: MixtureSampling(
+                    source_col="l_returnflag",
+                    proportions_ppm={"A": 500_000, "N": 300_000, "R": 200_000},
+                    block_size=16,
+                    total_size=500,
+                ),
+                li,
+            ),
+        }
+
+    @staticmethod
+    def _analyzed(df) -> str:
+        """The analyzed plan, expression and plan ids blanked."""
+        text = re.sub(r"#[0-9]+", "#", df._jdf.queryExecution().analyzed().toString())
+        return re.sub(r"plan_id=[0-9]+", "plan_id=", text)
+
+    @pytest.mark.parametrize("name", ["weighted", "balanced", "mixture"])
+    def test_epochs_equal_a_fresh_instance(self, spark, li, cold_cache, name):
+        make, df = self._cases(li)[name]
+        plans = epoch_plans(make(), df, seed=3)
+        for _ in range(3):
+            epoch, plan = next(plans)
+            fresh = make().plan(df, seed=3, epoch=epoch)
+            assert self._analyzed(plan) == self._analyzed(fresh), epoch
+            assert collect_pos(plan.select("row_id", "pos")) == collect_pos(
+                fresh.select("row_id", "pos")
+            ), epoch
+
+    def test_later_epoch_plans_only_its_draws(self, spark, li, cold_cache, monkeypatch):
+        """No bucketed prefix is planned and no registry entry added
+        after the first epoch."""
+        calls = []
+
+        def counted(*args, **kwargs):
+            calls.append(1)
+            return _bucketed_prefix(*args, **kwargs)
+
+        monkeypatch.setattr(st, "_bucketed_prefix", counted)
+        plans = epoch_plans(TestCachedCdf._balanced(), li, seed=3)
+        next(plans)[1].select("row_id", "pos").collect()
+        assert calls == [1]
+        entries = [id(f) for f in _cache._CACHE]
+        for _ in range(2):
+            next(plans)[1].select("row_id", "pos").collect()
+        assert calls == [1]
+        assert [id(f) for f in _cache._CACHE] == entries
+
+    def test_cleared_cache_is_persisted_again(self, spark, li, cold_cache):
+        """``clearCache()`` leaves pyspark's ``is_cached`` flag set; the
+        next epoch must still find the intervals uncached, persist them
+        again and draw what a fresh instance draws."""
+        plans = epoch_plans(TestCachedCdf._balanced(), li, seed=3)
+        next(plans)[1].select("row_id", "pos").collect()
+        spark.catalog.clearCache()
+        (cdf,) = _cdf_entries()
+        assert cdf.is_cached and not _cache._is_cached(cdf)
+        epoch, plan = next(plans)
+        got = collect_pos(plan.select("row_id", "pos"))
+        (again,) = _cdf_entries()
+        assert again is cdf and _cache._is_cached(cdf)
+        fresh = TestCachedCdf._balanced().plan(li, seed=3, epoch=epoch)
+        assert got == collect_pos(fresh.select("row_id", "pos"))
+
+    def test_two_inputs_on_one_instance(self, spark, li, cold_cache):
+        """Inputs with different weights, in turn on one instance: each
+        draws what a fresh instance draws on it."""
+        make = lambda: BlockWeightedSampling(block_size=16, weight_col="w", total_size=500)
+        inputs = [
+            li.withColumn("w", F.col("l_quantity")),
+            li.withColumn("w", F.col("l_linenumber") * F.col("l_linenumber")),
+        ]
+        shared = make()
+        got, want = [], []
+        for epoch in range(2):
+            for df in inputs:
+                got.append(collect_pos(shared.plan(df, seed=3, epoch=epoch).select("row_id", "pos")))
+                want.append(collect_pos(make().plan(df, seed=3, epoch=epoch).select("row_id", "pos")))
+        assert got == want
+        assert got[0] != got[1]
+
+    def test_changed_field_plans_again(self, spark, li, cold_cache):
+        """The memo is keyed on the field values too: a field changed
+        between epochs takes effect."""
+        strategy = TestCachedCdf._balanced()
+        plans = epoch_plans(strategy, li, seed=3)
+        assert next(plans)[1].count() == 500
+        strategy.total_size = 300
+        assert next(plans)[1].count() == 300
+
+
 class TestWeightedRetryDeterminism:
     def test_failed_weight_attempts_give_the_clean_draws(self, tmp_path):
         """The weight column comes from a pandas UDF whose every first
@@ -674,6 +785,12 @@ class TestDropLastTopK:
         )
         assert "TakeOrderedAndProject" in plan
         assert "hashpartitioning(_bucket" not in plan
+
+    def test_block_size_is_bounded(self):
+        st.BlockShuffling(block_size=st.DROP_LAST_BLOCK_MAX, drop_last=True)
+        st.BlockShuffling(block_size=st.DROP_LAST_BLOCK_MAX + 1)
+        with pytest.raises(ValueError, match="DROP_LAST_BLOCK_MAX"):
+            st.BlockShuffling(block_size=st.DROP_LAST_BLOCK_MAX + 1, drop_last=True)
 
 
 class TestMixturePlan:
