@@ -685,12 +685,24 @@ class MixtureSampling(SamplingStrategy):
         return self._inner_plan(df, seed, epoch)
 
     def _weigh(self, df: DataFrame) -> tuple[DataFrame, BlockWeightedSampling]:
-        spark = df.sparkSession
         base = self._subset(df)
         counts = base.groupBy(self.source_col).agg(F.count(F.lit(1)).alias("_cnt"))
-        prop = spark.createDataFrame(
-            list(self.proportions_ppm.items()),
-            f"{self.source_col} string, _ppm bigint",
+        # a literal relation, not createDataFrame(list): that is a new
+        # RDD on every call, so a fresh instance's interval and offsets
+        # frames would never match the registered ones and each would
+        # persist its own copies
+        prop = df.sparkSession.range(1).select(
+            F.inline(
+                F.array(
+                    *(
+                        F.struct(
+                            F.lit(s).cast("string").alias(self.source_col),
+                            F.lit(p).cast("bigint").alias("_ppm"),
+                        )
+                        for s, p in self.proportions_ppm.items()
+                    )
+                )
+            )
         )
         # a LISTED source whose integer weight floors to 0 would be
         # silently excluded — that is a configuration error (scale too

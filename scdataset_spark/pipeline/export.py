@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.types import StructField, StructType
 
+from scdataset_spark.pipeline.hooks import _zip_importer_pruner
 from scdataset_spark.session import _cluster_width
 
 
@@ -305,6 +306,10 @@ def write_arrow_fetches(
     of attempts killed before their rename — a trainer globbing the
     directory sees only this epoch's files.  Returns the materialized
     manifest DataFrame (fetch_id, n_rows, path).
+
+    The per-fetch writer first drops the Python worker's zip importers
+    (``hooks._zip_importer_pruner``), so the worker's next task does not
+    re-read ``pyspark.zip`` in its set-up.
     """
     import glob
     import os
@@ -314,8 +319,11 @@ def write_arrow_fetches(
         for stale in glob.glob(os.path.join(out_dir, pattern)):
             os.remove(stale)
 
+    prune_zip_importers = _zip_importer_pruner()
+
     def write_fetch(pdf):
         # function-local import + def: pickled by value to the workers
+        prune_zip_importers()
         import os
         import uuid
 

@@ -59,8 +59,9 @@ _PLAN_CHANGED = [
     # (o3, o5_subset, o6, o16), the hook stage's fetch-ordered exchange
     # (t_hook_pipeline, o11, o12, o18), the weighted strategies' bigint
     # ``pos`` cast (o3-o6, o16), the grouped bucket-offset joins (null-safe
-    # only on nullable group columns); the two dedup queries are carried
-    # over from the round-13 cohort ---
+    # only on nullable group columns), o16's proportions as a literal
+    # relation instead of a createDataFrame scan; the two dedup queries
+    # are carried over from the round-13 cohort ---
     "o3_weighted_replace",
     "o5_subset_weighted",
     "o6_class_balanced",

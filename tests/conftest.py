@@ -90,6 +90,8 @@ _SLOW_TESTS = frozenset([
     "test_index_maintenance.py::TestSemanticIngestLockContract::test_semantic_delivery_refused_during_compaction",
     "test_pipeline.py::TestRetryDeterminism::test_failed_hook_attempts_give_the_clean_batches",
     "test_pipeline.py::TestRetryDeterminism::test_failed_writer_attempts_give_the_clean_files",
+    "test_pipeline.py::TestWorkerZipImporters::test_later_import_resolves_from_the_zip",
+    "test_pipeline.py::TestWorkerZipImporters::test_second_task_sees_no_subpackage_importer",
     "test_plan_shapes.py::test_embed_cosine_has_no_cartesian_product",
     "test_properties.py::TestBucketedRankProperty::test_matches_global_window",
     "test_properties.py::TestPermutationProperty::test_block_shuffle_is_permutation_across_seeds",
@@ -117,6 +119,7 @@ _SLOW_TESTS = frozenset([
     "test_strategies_stats.py::TestBlockShuffling::test_drop_last_removes_remainder",
     "test_strategies_stats.py::TestBlockShuffling::test_full_coverage_exactly_once",
     "test_strategies_stats.py::TestBlockShuffling::test_seed_reproducible_and_divergent",
+    "test_strategies_stats.py::TestBlockShufflingRetryDeterminism::test_failed_input_attempts_give_the_clean_permutation",
     "test_strategies_stats.py::TestWeightedPlanMemo::test_epochs_equal_a_fresh_instance",
     "test_strategies_stats.py::TestWeightedRetryDeterminism::test_failed_weight_attempts_give_the_clean_draws",
     "test_streaming.py::test_compact_unique_index_preserves_gate_semantics",

@@ -746,6 +746,151 @@ spark.stop()
         assert flaky["files"] == clean["files"]
 
 
+_ZIP_PROBE_SITE = """
+import importlib, json, os, sys, zipimport
+
+_invalidate = importlib.invalidate_caches
+
+
+def _logged_invalidate():
+    zips = [f for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
+    with open({log!r}, "a") as f:
+        f.write(json.dumps({{
+            "pid": os.getpid(),
+            "sub": sum(1 for z in zips if z.prefix),
+            "top": sorted(os.path.basename(z.archive) for z in zips if not z.prefix),
+        }}) + "\\n")
+    _invalidate()
+
+
+importlib.invalidate_caches = _logged_invalidate
+"""
+
+_ZIP_PROBE_DRIVER = """
+import json, os, sys
+sys.path.insert(0, {repo!r})
+from scdataset_spark.operators.strategies import BlockShuffling
+from scdataset_spark.pipeline.export import iterate_batches, write_arrow_fetches
+from scdataset_spark.pipeline.hooks import run_hook_pipeline
+from scdataset_spark.plans.plan import with_batches
+from scdataset_spark.session import get_spark
+spark = get_spark("zip_importers", shuffle_partitions=1)
+spark.sparkContext.setLogLevel("OFF")
+log = {log!r}
+rows = spark.range(0, 512, numPartitions=1).selectExpr("id AS row_id", "id * 0.5 AS v")
+planned = with_batches(
+    BlockShuffling(block_size=16, assume_dense=True).plan(rows, seed=3), 64, fetch_factor=2
+).select("row_id", "pos", "fetch_id", "v")
+
+
+def mark(stage):
+    with open(log, "a") as f:
+        f.write(json.dumps({{"mark": stage}}) + "\\n")
+
+
+def where_pyspark(pdf):
+    import json, pyspark
+    with open({log!r}, "a") as f:
+        f.write(json.dumps({{"pyspark": pyspark.__file__}}) + "\\n")
+    return pdf
+
+
+def import_fresh(batches):
+    import json, sys
+    fresh = "pyspark.ml.stat" not in sys.modules
+    import pyspark.ml.stat
+    with open({log!r}, "a") as f:
+        f.write(json.dumps({{"fresh": fresh, "file": pyspark.ml.stat.__file__}}) + "\\n")
+    yield from batches
+
+
+for i in (1, 2):
+    mark(f"hooks-{{i}}")
+    hooked = run_hook_pipeline(
+        planned, "row_id bigint, pos bigint, fetch_id bigint, v double", 64,
+        fetch_transform=where_pyspark,
+    )
+    assert sum(len(b["v"]) for b in iterate_batches(hooked, 64, ["v"])) == 512
+mark("import")
+assert rows.mapInPandas(import_fresh, rows.schema).count() == 512
+for i in (1, 2):
+    mark(f"writer-{{i}}")
+    manifest = write_arrow_fetches(planned, os.path.join({out!r}, str(i)), ["row_id", "pos", "v"])
+    assert sum(r["n_rows"] for r in manifest.collect()) == 512
+spark.stop()
+"""
+
+
+class TestWorkerZipImporters:
+    """The hook stage and the fetch-file writer drop the Python worker's
+    zip importers, so the next task's set-up (PySpark's
+    ``importlib.invalidate_caches()``) re-reads no ``pyspark.zip``
+    directory.  One child process on ``local[1]`` (one reused worker)
+    runs two hook epochs, a ``mapInPandas`` that imports a pyspark
+    sub-module the worker has not imported (which brings sub-package
+    importers back), then two fetch-file exports; a ``sitecustomize``
+    on the workers' ``PYTHONPATH`` logs the zip importers each task's
+    set-up finds."""
+
+    @pytest.fixture(scope="class")
+    def worker_log(self, tmp_path_factory):
+        tmp = tmp_path_factory.mktemp("zip_importers")
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        log = str(tmp / "log.jsonl")
+        site = tmp / "site"
+        site.mkdir()
+        (site / "sitecustomize.py").write_text(_ZIP_PROBE_SITE.format(log=log))
+        script = _ZIP_PROBE_DRIVER.format(repo=repo, log=log, out=str(tmp))
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_MASTER="local[1]", PYTHONPATH=str(site))
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=str(tmp),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        stages: dict[str, list[dict]] = {}
+        stage = None
+        with open(log) as f:
+            for rec in map(json.loads, f):
+                if "mark" in rec:
+                    stage = rec["mark"]
+                elif stage is not None:
+                    stages.setdefault(stage, []).append(rec)
+        files = [r["pyspark"] for r in stages["hooks-1"] if "pyspark" in r]
+        if not files or ".zip" not in files[0]:
+            pytest.skip(f"the Python workers do not import pyspark from a zip: {files}")
+        return stages
+
+    @staticmethod
+    def _tasks(stages, stage):
+        return [r for r in stages[stage] if "sub" in r]
+
+    def test_second_task_sees_no_subpackage_importer(self, worker_log):
+        tasks = {s: self._tasks(worker_log, s) for s in worker_log}
+        assert len({t["pid"] for ts in tasks.values() for t in ts}) == 1  # one reused worker
+        # a stage's first task still finds what came before it ...
+        assert tasks["hooks-1"][0]["sub"] > 0 and tasks["writer-1"][0]["sub"] > 0
+        # ... and its own first task dropped them for the second
+        for stage in ("hooks-2", "writer-2"):
+            assert tasks[stage], stage
+            for t in tasks[stage]:
+                assert t["sub"] == 0, (stage, t)
+                assert "pyspark.zip" not in t["top"], (stage, t)
+
+    def test_later_import_resolves_from_the_zip(self, worker_log):
+        (imported,) = [r for r in worker_log["import"] if "fresh" in r]
+        assert imported["fresh"]
+        pyspark_file = next(r["pyspark"] for r in worker_log["hooks-1"] if "pyspark" in r)
+        archive = pyspark_file.split(".zip")[0] + ".zip"
+        assert imported["file"].startswith(archive + os.sep)
+        # the import ran in a task that started with the importers pruned
+        assert [t["sub"] for t in self._tasks(worker_log, "import")] == [0]
+
+
 class TestHookPipelineParallelism:
     def test_python_stage_keeps_configured_partitions(self, spark):
         """On both input shapes, with and without a ``with_batches``

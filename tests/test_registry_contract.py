@@ -85,7 +85,7 @@ LIBRARY_ONLY = {
     "assign_nearest_cell_blas": "BLAS mapInPandas twin of "
     "assign_nearest_cell, auto-selected past AUTO_SCALE_ROWS inside "
     "ivf_seeded_topk/pq_topk; pinned row-equal to the HOF argmin in "
-    "test_wired_ops_r10 (vectorized-assign parity) and "
+    "test_similarity_extra (vectorized-assign parity) and "
     "test_ivf_auto_cells",
     "SamplingStrategy": "abstract base of the checked strategies",
     "attach_weights": "internal step of o3/o5 weighted sampling",

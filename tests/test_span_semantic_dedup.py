@@ -340,3 +340,69 @@ class TestRemoveDuplicateSpans:
         assert rel == loc
         with __import__("pytest").raises(ValueError, match="rebuild"):
             remove_duplicate_spans(docs, rebuild="nope")
+
+
+class TestEditDistanceAndComponentSplit:
+    def test_edit_distance_hand_computed(self, spark):
+        from scdataset_spark.operators.dedup import edit_distance_pairs
+
+        base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+        docs = [
+            (1, base),
+            (2, base),                      # exact copy -> distance 0
+            (3, base.replace("delta", "delXa")),  # one char edit -> 1
+            (4, "completely different words that share nothing at all here ok"),
+        ]
+        df = spark.createDataFrame(docs, "doc_id bigint, text string")
+        out = {(r.doc_a, r.doc_b): r.edit_distance
+               for r in edit_distance_pairs(df, max_dist=40).collect()}
+        assert out[(1, 2)] == 0
+        assert out.get((1, 3)) == 1 and out.get((2, 3)) == 1
+        assert not any(4 in p for p in out)
+
+    def test_edit_distance_rejects_over_threshold(self, spark):
+        from scdataset_spark.operators.dedup import edit_distance_pairs
+
+        a = "one two three four five six seven eight nine ten"
+        # same token multiset, heavily reordered: high shingle overlap is
+        # impossible here, but a direct near-miss under max_dist=3 shows
+        # the verify bound rejecting a genuine LSH candidate
+        docs = [(1, a), (2, a + " extra trailing words appended")]
+        df = spark.createDataFrame(docs, "doc_id bigint, text string")
+        strict = edit_distance_pairs(df, max_dist=3).collect()
+        loose = edit_distance_pairs(df, max_dist=40).collect()
+        assert strict == [] and len(loose) == 1
+
+    def test_component_split_keeps_dups_together(self, spark):
+        from scdataset_spark.operators.dedup import component_split
+
+        base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+        docs = [
+            (1, base), (2, base), (3, base),          # one dup cluster
+            (10, "unrelated text block number ten with enough tokens here"),
+            (11, "another unrelated document with its own distinct words"),
+        ]
+        df = spark.createDataFrame(docs, "doc_id bigint, text string")
+        out = {r.doc_id: r for r in component_split(df, seed=77).collect()}
+        assert len(out) == 5  # every doc assigned exactly once
+        # the dup cluster shares one split key (the min id) and one split
+        assert {out[d].split_key for d in (1, 2, 3)} == {1}
+        assert len({out[d].split for d in (1, 2, 3)}) == 1
+        # singletons key on their own id
+        assert out[10].split_key == 10 and out[11].split_key == 11
+        assert all(out[d].split in ("train", "val", "test") for d in out)
+
+    def test_component_split_reduces_to_keyed_stamp_without_dups(self, spark):
+        from scdataset_spark.operators.dedup import component_split
+        from scdataset_spark.plans.seeds import mix_py
+
+        docs = [
+            (5, "first totally unique document body with many words inside"),
+            (6, "second body sharing no shingles with any other document"),
+        ]
+        df = spark.createDataFrame(docs, "doc_id bigint, text string")
+        out = {r.doc_id: r.split for r in component_split(df, seed=77).collect()}
+        for d in (5, 6):
+            b = mix_py(d, 77) % 1000
+            want = "train" if b < 900 else ("val" if b < 950 else "test")
+            assert out[d] == want

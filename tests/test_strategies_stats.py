@@ -645,6 +645,16 @@ class TestWeightedPlanMemo:
         assert got == want
         assert got[0] != got[1]
 
+    def test_fresh_mixture_instances_share_one_entry_pair(self, spark, li, cold_cache):
+        """The proportions are a literal relation, so a fresh
+        ``MixtureSampling`` on the same input plans the registered
+        interval and offsets frames again: one registry entry pair, not
+        one per instance."""
+        make, df = self._cases(li)["mixture"]
+        got = [collect_pos(make().plan(df, seed=3).select("row_id", "pos")) for _ in range(2)]
+        assert got[0] == got[1]
+        assert len(_cdf_entries()) == 1 and len(_cache._CACHE) == 2
+
     def test_changed_field_plans_again(self, spark, li, cold_cache):
         """The memo is keyed on the field values too: a field changed
         between epochs takes effect."""
@@ -720,6 +730,72 @@ spark.stop()
         assert (tmp_path / "failed.txt").read_text().split()
         assert out["flaky"] == out["clean"]
         assert len(out["clean"][0]) == 500 and out["clean"][0] != out["clean"][1]
+
+
+class TestBlockShufflingRetryDeterminism:
+    def test_failed_input_attempts_give_the_clean_permutation(self, tmp_path):
+        """The row ids come from a pandas UDF whose every first attempt
+        raises, so each stage that computes them is retried.  With
+        ``assume_dense`` and ``drop_last`` the drop keys are mixed in
+        those retried scan tasks; epochs 0 and 1 must still give a clean
+        run's ``(row_id, pos)``.  Child process on ``local[2,2]``, as
+        above."""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+import pandas as pd
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from scdataset_spark.operators.strategies import BlockShuffling
+from scdataset_spark.pipeline.export import epoch_plans
+from scdataset_spark.session import get_spark
+spark = get_spark("block_shuffle_retry_determinism", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("OFF")
+ids = spark.range(0, 3000, numPartitions=3)
+
+@F.pandas_udf("bigint")
+def clean(i: pd.Series) -> pd.Series:
+    return i
+
+@F.pandas_udf("bigint")
+def flaky(i: pd.Series) -> pd.Series:
+    if TaskContext.get().attemptNumber() == 0:
+        with open({str(tmp_path / "failed.txt")!r}, "a") as f:
+            f.write("failed\\n")
+        raise RuntimeError("first attempt fails")
+    return i
+
+out = {{"master": spark.sparkContext.master}}
+strategy = BlockShuffling(block_size=16, drop_last=True, assume_dense=True)
+for name, udf in (("clean", clean), ("flaky", flaky)):
+    plans = epoch_plans(strategy, ids.select(udf("id").alias("row_id")), seed=3)
+    out[name] = [
+        sorted([r["row_id"], r["pos"]] for r in next(plans)[1].select("row_id", "pos").collect())
+        for _ in range(2)
+    ]
+print(json.dumps(out))
+spark.stop()
+"""
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_MASTER="local[2,2]")
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=str(tmp_path),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert out["master"] == "local[2,2]"
+        assert (tmp_path / "failed.txt").read_text().split()
+        assert out["flaky"] == out["clean"]
+        kept = 3000 - 3000 % 16
+        for epoch in out["clean"]:
+            assert len(epoch) == kept and sorted(p for _, p in epoch) == list(range(kept))
+        assert out["clean"][0] != out["clean"][1]
 
 
 class TestDropLastTopK:
